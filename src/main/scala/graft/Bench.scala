@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main (driver contract): run every registered query against
   * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
@@ -13,10 +14,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_BENCH_ONLY=q_a,q_b → time just those queries (dev loop)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
+    val queries = RegistryRunner.select(only)
+    val sentinelQuery = RegistryRunner.select(Some("q_agg_pricing"))
     // The COMMITTED capture (full run, no BENCH_ONLY) defaults to
     // median-of-3: two rounds of single-shot captures (378.5 s r7, 327.7 s
     // r8 vs 192.1 s clean) were contaminated by concurrent machine load and
@@ -24,55 +25,34 @@ object Bench {
     // BENCH_ONLY run stays single-shot for loop speed.
     val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt.max(1))
       .getOrElse(if (only.isDefined) 1 else 3)
-    // engine session confs (bypass-merge writer, AQE coalesce floor,
-    // bloom-filter cap, …) live in ONE place so Bench/Verify/ProfileQuery/
-    // PlanDump all run the identical configuration — see
-    // GraftSession.localBuilder for the per-conf rationale
-    val spark = GraftSession.localBuilder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The six global windows in source are all over provably tiny
-    // post-aggregation frames (gated by PlanAuditSpec); WindowExec's
-    // "No Partition Defined" warning would flood the log hundreds of
-    // times and bury real warnings.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = RegistryRunner.session()
 
-    // the elapsed time is captured BEFORE the finally block runs, so cache
+    // the elapsed time is captured BEFORE the cache is cleared, so cache
     // cleanup is harness hygiene between queries, not billed work. (An
     // explicit System.gc() here was tried against r03's 13 s cross-query
     // outlier and REGRESSED every query ~2× — the forced full GC shrinks
     // the heap and the next query pays re-expansion; leave GC to the JVM.)
-    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def timeOnce(df: => DataFrame): Double = RegistryRunner.isolated(spark) {
       val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        -1.0
-      } finally spark.catalog.clearCache() // per-query isolation for persists
+      df.write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
     }
-
-    def run(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val ts = (1 to runs).map(_ => runOnce(name, fn))
-      if (ts.contains(-1.0)) -1.0
-      else ts.sorted.apply(ts.length / 2) // median (upper for even n)
-    }
+    def median(q: QueryDef): Double = // upper median for even n
+      (1 to runs).map(_ => timeOnce(q.build(spark, sfDir))).sorted.apply(runs / 2)
+    // a sentinel run that fails reads -1 and invalidates the capture
+    def sentinel(): Double = RegistryRunner.run(spark, sentinelQuery, "sentinel")(
+      q => timeOnce(q.build(spark, sfDir))).results.headOption.fold(-1.0)(_._2)
 
     // warm-up: JVM + codegen + parquet footer caches, plus the one-off
     // shared-shingle materialization (so its write is not billed to
     // whichever dedup query happens to touch it first)
-    SparkEntry.queries.get("q_agg_pricing").foreach(fn => run("warmup", fn))
+    RegistryRunner.run(spark, sentinelQuery, "warmup")(median)
     // first touch materializes BOTH shared tables (signatures build on the
     // distinct-gram table internally) outside any timed region — but its
     // cost is BILLED VISIBLY as shared_materialization_sec in the output
     // JSON (r15 verdict item: the dedup family's per-query numbers assume
     // this one-off is already paid; the field makes that self-describing)
-    val tShared = System.nanoTime()
-    graft.pipeline.TextPipeline.minhashSignatures(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    val sharedMaterializationSec = (System.nanoTime() - tShared) / 1e9
+    val sharedMaterializationSec = timeOnce(graft.pipeline.TextPipeline.minhashSignatures(spark, sfDir))
     // Settle before the timed loop: the minhash materialization is the
     // heaviest job in the run and its GC/cleaner residue billed 4.5× to
     // whichever query ran first two rounds running. One full GC HERE —
@@ -88,69 +68,62 @@ object Bench {
     // the same query is re-timed after the loop, and a >2× slowdown means
     // the machine ran concurrent work during the bench — the capture is
     // stamped contaminated:true so nobody triages phantom regressions.
-    val sentinelFn = SparkEntry.queries("q_agg_pricing")
-    val sentinelBefore = runOnce("warmup2", sentinelFn)
+    val sentinelBefore = sentinel()
     // The after/before ratio only detects contention that STARTS mid-run.
     // A window that is already contended at t0 passes it (r14: 341.5 s
     // capture, sentinel_before 2.06 s vs 1.1-1.5 s clean, contaminated:
     // false — every flagged "regression" refuted by isolated retimes).
     // So the capture also self-identifies as noisy when sentinel_before
-    // exceeds an absolute floor for this host, or 1.5x the previously
-    // committed capture's own sentinel_before.
-    val noisyFloor = sys.env.get("SPARK_GRAFT_SENTINEL_FLOOR")
-      .map(_.toDouble).getOrElse(1.7)
-    val committedSentinel: Option[Double] =
-      try {
-        val p = java.nio.file.Paths.get("bench_full_latest.json")
-        if (java.nio.file.Files.exists(p)) {
-          val txt = new String(java.nio.file.Files.readAllBytes(p),
-            java.nio.charset.StandardCharsets.UTF_8)
-          """"sentinel_before":([0-9.eE+-]+)""".r
-            .findFirstMatchIn(txt).map(_.group(1).toDouble)
-        } else None
-      } catch { case _: Throwable => None }
-    val noisyWindow = sentinelBefore > noisyFloor ||
-      committedSentinel.exists(s => s > 0 && sentinelBefore > 1.5 * s)
+    // exceeds 1.5x the committed capture's own — compared only when that
+    // capture ran on the same cores (sentinel times are per host, so a
+    // fixed floor flagged every run on a smaller machine).
+    def field(json: String, key: String): Option[Double] =
+      s""""$key":([0-9.eE+-]+)""".r.findFirstMatchIn(json).map(_.group(1).toDouble)
+    val baselineSentinel = scala.util.Try(Files.readString(Paths.get("bench_full_latest.json")))
+      .toOption.filter(field(_, "cpus").contains(RegistryRunner.cpus.toDouble))
+      .flatMap(field(_, "sentinel_before")).filter(_ > 0)
+    val noisyWindow = baselineSentinel.exists(s => sentinelBefore > 1.5 * s)
 
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) => name -> run(name, fn) }
+    val timed = RegistryRunner.run(spark, queries, "bench")(median)
 
-    val sentinelAfter = runOnce("sentinel", sentinelFn)
+    val sentinelAfter = sentinel()
     val contaminated = sentinelBefore > 0 && sentinelAfter > 2.0 * sentinelBefore
+    // `total` sums only the queries that finished, so without `valid` a
+    // failing query would read as a faster suite.
+    val valid = timed.failed.isEmpty && sentinelBefore > 0 && sentinelAfter > 0
+    val total = timed.results.map(_._2).sum
+    def str(s: String) = "\"" + s + "\""
+    // read while the session is live: the compact line is built after stop()
+    val fields = s""""valid":$valid,"failed":${timed.failed.map(str).mkString("[", ",", "]")},""" +
+      s""""contaminated":$contaminated,"noisy_window":$noisyWindow,"sentinel_before":$sentinelBefore,"sentinel_after":$sentinelAfter,"shared_materialization_sec":$sharedMaterializationSec,""" +
+      s""""cpus":${RegistryRunner.cpus},"parallelism":${spark.sparkContext.defaultParallelism},"shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
+      s""""xmx_mb":${Runtime.getRuntime.maxMemory >> 20},"jvm":${str(System.getProperty("java.runtime.version"))},""" +
+      s""""baseline":${str(baselineSentinel.fold("none")(_ => "bench_full_latest.json"))}"""
     // n_queries counts the entries in THIS json's queries map (the headline
     // line is a truncated view); n_total is the full run count.
-    def toJson(rs: Seq[(String, Double)], total: Double): String = {
-      val qs = rs.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${rs.length},"n_total":${results.length},"runs_per_query":$runs,"contaminated":$contaminated,"noisy_window":$noisyWindow,"sentinel_before":$sentinelBefore,"sentinel_after":$sentinelAfter,"shared_materialization_sec":$sharedMaterializationSec,"queries":$qs,"sf":"$sfDir"}"""
+    def toJson(rs: Seq[(String, Double)]): String = {
+      val qs = rs.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${rs.length},"n_total":${queries.length},"runs_per_query":$runs,$fields,"queries":$qs,"sf":${str(sfDir)}}"""
     }
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val json = toJson(results, total)
-    if (contaminated)
-      System.err.println(f"[bench] CONTAMINATED capture: sentinel $sentinelBefore%.2fs -> $sentinelAfter%.2fs (machine ran concurrent work)")
+    val json = toJson(timed.results)
+    if (!valid) System.err.println(s"[bench] INVALID capture: failed [${timed.failed.mkString(",")}], sentinel $sentinelBefore -> $sentinelAfter")
+    if (contaminated) System.err.println(f"[bench] CONTAMINATED capture: sentinel $sentinelBefore%.2fs -> $sentinelAfter%.2fs (machine ran concurrent work)")
     if (noisyWindow)
-      System.err.println(f"[bench] NOISY WINDOW: sentinel_before $sentinelBefore%.2fs exceeds floor $noisyFloor%.2fs" +
-        committedSentinel.map(s => f" or 1.5x committed $s%.2fs").getOrElse("") +
+      System.err.println(f"[bench] NOISY WINDOW: sentinel_before $sentinelBefore%.2fs exceeds 1.5x committed ${baselineSentinel.get}%.2fs" +
         " — window was contended before the run started; trust isolated retimes only")
     // The full per-query JSON goes to a repo file; stdout gets a COMPACT
-    // line (total + the 24 slowest queries + any failures) because the
+    // line (total, `failed` and the 24 slowest queries) because the
     // driver's stdout tail window truncates a 180-query line from the
     // FRONT, which breaks its JSON parse (BENCH_r05..r07 parsed:null).
     // The compact line carries exactly what a regression triage needs;
     // bench_full_latest.json remains the canonical capture.
-    val headline = (results.filter(_._2 < 0) ++
-      results.filter(_._2 >= 0).sortBy(-_._2).take(24)).sortBy(_._1)
+    val headline = timed.results.sortBy(-_._2).take(24).sortBy(_._1)
     // A BENCH_ONLY dev run must NOT masquerade as the full capture —
     // unless the caller names an explicit out file, it stays stdout-only.
-    try {
-      val defaultOut =
-        if (only.isDefined) null else "bench_full_latest.json"
-      val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)
-      if (out != null)
-      java.nio.file.Files.write(java.nio.file.Paths.get(out),
-        (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case e: Throwable =>
+    val out = sys.env.get("SPARK_GRAFT_BENCH_OUT")
+      .orElse(if (only.isDefined) None else Some("bench_full_latest.json"))
+    try out.foreach(o => Files.writeString(Paths.get(o), json + "\n"))
+    catch { case e: Throwable =>
       System.err.println(s"[bench] could not persist bench json: ${e.getMessage}")
     }
     // The compact JSON is printed as the LAST act of the process, AFTER
@@ -159,9 +132,10 @@ object Bench {
     // "[info] " prefix — both fixed in build.sbt: StdoutOutput forwards
     // the forked process's streams raw, showSuccess drops the trailer).
     // Nothing may be printed after this line; tools/parse_bench.py
-    // replicates a last-line JSON extraction as the pre-commit check.
+    // replicates a last-line JSON extraction as the pre-commit check. Hence
+    // exit 0 even on failures (sbt would print an error trailer after it).
     spark.stop()
-    println(toJson(headline, total))
+    println(toJson(headline))
     System.out.flush()
   }
 }

@@ -2,48 +2,38 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Library entry point: a SparkSession wired the way the engine expects —
-  * graft extensions (native st_intersects + bbox-prefilter rule), UTC
-  * session time zone, AQE on, and shuffle parallelism sized to the
-  * cluster instead of the 200 default.
+/** Library entry point and the ONE place that configures a session. The
+  * CLI, the registry mains, perfbench and the specs all build from [[conf]],
+  * so correctness, dumped plans and timings share one configuration.
   */
 object GraftSession {
 
+  /** Graft extensions (native st_intersects + bbox-prefilter rule), UTC,
+    * AQE, shuffle parallelism sized to the cluster instead of the 200
+    * default, and the tuned confs documented below. */
+  def conf(shufflePartitions: Int): Map[String, String] = Map(
+    "spark.sql.extensions" -> classOf[plans.GraftExtensions].getName,
+    TimeZone,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+    // TIMESTAMP(NANOS) parquet (e.g. the events table) is unreadable
+    // without this legacy flag, and parquet has no per-read option for
+    // it — set once at session construction (see Tables.events)
+    NanosAsLong,
+    "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> BloomFilterMaxBits,
+    "spark.shuffle.sort.bypassMergeThreshold" -> BypassMergeThreshold,
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> CoalesceMinPartitionSize,
+    "spark.ui.enabled" -> "false")
+
   def builder(master: String = "local[*]",
       shufflePartitions: Int = Runtime.getRuntime.availableProcessors()): SparkSession.Builder =
-    SparkSession.builder()
-      .master(master)
-      .config("spark.sql.extensions", classOf[plans.GraftExtensions].getName)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      // TIMESTAMP(NANOS) parquet (e.g. the events table) is unreadable
-      // without this legacy flag, and parquet has no per-read option for
-      // it — set once at session construction (see Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", BloomFilterMaxBits)
-      .config("spark.shuffle.sort.bypassMergeThreshold", BypassMergeThreshold)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        CoalesceMinPartitionSize)
+    SparkSession.builder().master(master).config(conf(shufflePartitions))
 
-  /** One shared local-session conf block for every driver-contract main
-    * (Bench, Verify) and dev tool (ProfileQuery, PlanDump): the engine's
-    * session confs live HERE so correctness always runs under the same
-    * configs as the bench and dumped plans are the benched plans (the
-    * r15 advice: PlanDump was missing two of them). `cpus` sizes both the
-    * master and shuffle parallelism per the driver contract. */
-  def localBuilder(cpus: String): SparkSession.Builder =
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", BloomFilterMaxBits)
-      .config("spark.shuffle.sort.bypassMergeThreshold", BypassMergeThreshold)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        CoalesceMinPartitionSize)
+  /** `local[cpus]` with shuffle parallelism to match. */
+  def localBuilder(cpus: String): SparkSession.Builder = builder(s"local[$cpus]", cpus.toInt)
+
+  private val TimeZone = "spark.sql.session.timeZone" -> "UTC"
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong" -> "true"
 
   /** AQE's partition coalescing floor, lowered 1m → 128k: with
     * parallelism-first coalescing the target size is
@@ -91,8 +81,7 @@ object GraftSession {
     * notebook session created elsewhere). */
   def attach(spark: SparkSession): SparkSession = {
     plans.GraftExtensions.register(spark)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Seq(TimeZone, NanosAsLong).foreach { case (k, v) => spark.conf.set(k, v) }
     spark
   }
 }

@@ -1,37 +1,26 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool (optimization rounds): dump `.explain("formatted")` for
   * registered queries to `<outDir>/<name>.txt` without executing them.
   * Args: <outDir> [q_a,q_b,...] — no list means every registered query.
-  * Session wiring mirrors Bench so the dumped plans are the benched plans.
+  * The session is the registry runner's, so the dumped plans are the
+  * benched plans. Exits 1, after dumping the rest, when any plan failed.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/plans")
-    val only = args.lift(1).map(_.split(',').map(_.trim).toSet)
+    val queries = RegistryRunner.select(args.lift(1))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // shared conf block — see GraftSession.localBuilder (r15 advice: this
-    // previously omitted the bypass-merge and coalesce-floor confs, so
-    // dumped plans could differ from benched plans under AQE)
-    val spark = GraftSession.localBuilder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = RegistryRunner.session()
     Files.createDirectories(Paths.get(outDir))
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-        try {
-          val plan = fn(spark, sfDir).queryExecution
-            .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-          Files.write(Paths.get(s"$outDir/$name.txt"),
-            plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        } catch { case e: Throwable =>
-          System.err.println(s"[plandump] $name failed: ${e.getMessage}")
-        } finally spark.catalog.clearCache()
-      }
+    val failed = RegistryRunner.run(spark, queries, "plandump") { q =>
+      Files.writeString(Paths.get(s"$outDir/${q.name}.txt"), q.build(spark, sfDir)
+        .queryExecution.explainString(ExplainMode.fromString("formatted")))
+    }.failed
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -17,9 +17,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Runner contract: a built plan may `persist()` intermediates that feed
   * several downstream branches (e.g. q_dedup_embedding's equality-class
   * reps). The plan is lazy, so the query function cannot unpersist them
-  * itself; the RUNNER must call `spark.catalog.clearCache()` after
-  * materializing each query (Verify and Bench both do, in their per-query
-  * `finally`) or cached blocks accumulate across a registry sweep.
+  * itself. [[RegistryRunner]] is the one place that runs registry queries
+  * and the one place that calls `spark.catalog.clearCache()` after each,
+  * so cached blocks do not accumulate across a sweep.
   */
 final case class QueryDef(
     name: String,
@@ -29,6 +29,4 @@ final case class QueryDef(
 object QueryDef {
   def sql(name: String, oracle: String)(build: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, build, Some(oracle))
-  def rowsOnly(name: String)(build: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, build, None)
 }

@@ -1,52 +1,33 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare. Exits 1, after writing
+  * everything else, when any query failed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shared conf block (GraftSession.localBuilder): correctness always
-    // runs under the exact configs the bench runs under. Verify-specific
-    // note — keep the default INT96 timestamp output: DuckDB reads INT96
-    // as a NAIVE timestamp (matching oracle literals), whereas INT64
-    // micros carry isAdjustedToUTC=true and come back as timestamptz
-    // (+00:00) — which would break every timestamp compare. The one INT96
-    // trap (pyarrow converts to ns, wrapping far-future values) is
-    // handled by keeping all emitted timestamps inside the ns range.
-    val spark = GraftSession.localBuilder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=q_a,q_b → dump just those queries (dev loop;
     // the driver never sets it, so the contract is unchanged)
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      finally spark.catalog.clearCache() // per-query isolation for persists
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val queries = RegistryRunner.select(sys.env.get("SPARK_GRAFT_VERIFY_ONLY"))
+    // Verify-specific note — keep the default INT96 timestamp output:
+    // DuckDB reads INT96 as a NAIVE timestamp (matching oracle literals),
+    // whereas INT64 micros carry isAdjustedToUTC=true and come back as
+    // timestamptz (+00:00) — which would break every timestamp compare.
+    // The one INT96 trap (pyarrow converts to ns, wrapping far-future
+    // values) is handled by keeping all emitted timestamps inside the ns
+    // range.
+    val spark = RegistryRunner.session()
+    new java.io.File(outDir).mkdirs()
+    val failed = RegistryRunner.run(spark, queries, "verify") { q =>
+      q.build(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/${q.name}")
+    }.failed
+    // a JSON encoder escapes ALL control chars: a tab or CR in builder-authored
+    // SQL would otherwise break json.load of this file and zero correctness.
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValueAsString(SparkEntry.oracleSql.asJava)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -69,7 +69,8 @@ object BboxPrefilterRule extends Rule[LogicalPlan] {
 }
 
 /** Session wiring. Two paths:
-  *   - config: `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
+  *   - config: `spark.sql.extensions=graft.plans.GraftExtensions`, which
+  *     GraftSession's conf block sets on every session it builds;
   *   - runtime: `GraftExtensions.register(spark)` on a live session.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.GeoFunctions
-import graft.plans.{GraftExtensions, SpatialExpressions}
+import graft.plans.SpatialExpressions
 import org.apache.spark.sql.functions._
 
 class SpatialPlanSpec extends SparkSpec {
@@ -34,8 +34,9 @@ class SpatialPlanSpec extends SparkSpec {
     assert(nat == udf && nat.nonEmpty)
   }
 
+  // the spec session is GraftSession's, so the extension is registered from
+  // construction; no test registers it by hand
   test("bbox prefilter rule rewrites the plan and pushes bbox to the scan") {
-    GraftExtensions.register(spark)
     // parquet-backed so the plan survives (LocalRelation gets constant-folded)
     val tmp = java.nio.file.Files.createTempDirectory("graft-frames").toString
     framesDf().write.mode("overwrite").parquet(tmp)
@@ -60,7 +61,6 @@ class SpatialPlanSpec extends SparkSpec {
   }
 
   test("st_intersects is callable from SQL after registration") {
-    GraftExtensions.register(spark)
     framesDf().createOrReplaceTempView("sframes")
     val n = spark.sql(
       "SELECT count(*) FROM sframes " +

@@ -22,7 +22,7 @@ def registry_names():
             if f.endswith(".scala"):
                 src = open(os.path.join(root, f)).read()
                 names |= set(re.findall(
-                    r'QueryDef\.(?:sql|rowsOnly)\(\s*\n?\s*"(q_\w+)"', src))
+                    r'QueryDef\.sql\(\s*\n?\s*"(q_\w+)"', src))
     return names
 
 

@@ -58,14 +58,14 @@ def main():
         print("FAIL: strict (last-line) and lenient (scan) parses disagree",
               file=sys.stderr)
         sys.exit(1)
-    for key in ("metric", "value", "unit", "queries", "sf"):
+    for key in ("metric", "value", "unit", "queries", "sf", "valid", "failed"):
         if key not in strict:
             print(f"FAIL: contract field {key!r} missing", file=sys.stderr)
             sys.exit(1)
-    bad = sorted(q for q, s in strict["queries"].items() if s < 0)
     print(f"OK: total={strict['value']:.1f}s n_total={strict.get('n_total')} "
-          f"n_in_line={len(strict['queries'])} failed={bad}")
-    sys.exit(2 if bad else 0)
+          f"n_in_line={len(strict['queries'])} valid={strict['valid']} "
+          f"failed={strict['failed']}")
+    sys.exit(0 if strict["valid"] else 2)
 
 
 if __name__ == "__main__":
