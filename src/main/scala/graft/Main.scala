@@ -2,7 +2,12 @@ package graft
 
 import graft.domain.{Catalog, CatalogBuild}
 import graft.functions.GeoFunctions
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 
 /** Command-line front door (the reference's `opera-db` CLI, cli.py:28-44),
@@ -20,6 +25,20 @@ import org.apache.spark.sql.functions._
   * int/double column predicates that parquet row-group stats can skip on.
   * Query results print as JSON lines (lookup/intersect/fetch-granules are
   * human-sized); fetch-bursts writes CSV, the reference's output format.
+  *
+  * Serving requests are tiny and their latency tracks the number of Spark
+  * jobs they launch, so each one is planned to launch as few as possible:
+  *   - every parquet input is read with the schema of its footer, read on
+  *     the driver ([[readParquet]]), so no read runs Spark's one-footer
+  *     schema-inference job;
+  *   - the frame-to-burst document is parsed on the driver (Catalog);
+  *   - [[printJson]] puts the row cap at the plan's root, so the collect is
+  *     a `CollectLimit` (or a `TakeOrderedAndProject` for sorted results)
+  *     instead of a limit behind a single-partition shuffle.
+  * Jobs per request (MainSpec pins them): `intersect` 1 (the scan);
+  * `lookup` at most 3 (two broadcasts and the one-partition scan-join-
+  * aggregate); `fetch-granules` at most 3 (the id broadcast, the distinct's
+  * shuffle map stage and the ordered take).
   */
 object Main {
 
@@ -65,18 +84,18 @@ object Main {
         (env.getMinX, env.getMinY, env.getMaxX, env.getMaxY))
         .select(col("fid"), col("epsg"), col("is_land"), col("orbit_pass")))
     case "fetch-bursts" :: bursts :: jsonZip :: fids :: start :: end :: outDir :: Nil =>
-      Catalog.fetchBursts(spark, spark.read.parquet(bursts), jsonZip,
+      Catalog.fetchBursts(spark, readParquet(spark, bursts), jsonZip,
           fids.split(',').map(_.trim.toLong).toSeq, start, end)
         .orderBy(col("burst_id_jpl"), col("sensing_time"))
         .coalesce(1).write.mode("overwrite").option("header", "true").csv(outDir)
     case "fetch-granules" :: bursts :: jsonZip :: fids :: start :: end :: Nil =>
-      printJson(Catalog.fetchGranules(spark, spark.read.parquet(bursts), jsonZip,
+      printJson(Catalog.fetchGranules(spark, readParquet(spark, bursts), jsonZip,
         fids.split(',').map(_.trim.toLong).toSeq, start, end))
     case _ => usage()
   }
 
   private def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name")
+    readParquet(spark, s"$dir/$name")
 
   private def frames(spark: SparkSession, dir: String): DataFrame =
     table(spark, dir, "frames")
@@ -93,7 +112,7 @@ object Main {
     def readWkt(p: String): String =
       new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)),
         java.nio.charset.StandardCharsets.UTF_8).trim
-    val r = CatalogBuild.build(spark.read.parquet(burstMap), readWkt(landWktFile))
+    val r = CatalogBuild.build(readParquet(spark, burstMap), readWkt(landWktFile))
     val framesNa = naWktFile match {
       case Some(p) =>
         val shapes = readWkt(p).split('\n').map(_.trim).filter(_.nonEmpty)
@@ -125,13 +144,49 @@ object Main {
   private[graft] def maxJsonRows: Int =
     sys.props.get("graft.cli.maxJsonRows").map(_.toInt).getOrElse(100000)
 
+  /** `spark.read.parquet(path)` with the data schema read from one footer on
+    * the driver: the footer Spark's own inference reads (the first leaf data
+    * file in path order; Spark writes no summary files), so the schema is
+    * the same and a missing column still fails analysis, but no
+    * schema-inference job runs. Partition columns are still discovered by
+    * Spark from the directory names. A path that is not an existing file or
+    * directory (a glob, a typo) goes to Spark unchanged. */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    // the names Spark's file index skips
+    def hidden(name: String) = (name.startsWith("_") && !name.contains("=")) ||
+      name.startsWith(".") || name.endsWith("._COPYING_")
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => hidden(c.getPath.getName)).flatMap(leaves)
+    val first = (if (fs.exists(root)) leaves(fs.getFileStatus(root)) else Nil)
+      .minByOption(_.getPath.toString)
+    first match {
+      case Some(f) =>
+        val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, meta),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
   /** Deterministic JSON-lines print: small serving results only. The
     * `limit(cap + 1)` bounds what ever reaches the driver, and the +1
     * sentinel row distinguishes "exactly at the cap" from "over it" so the
-    * failure is loud instead of a silent truncation. */
+    * failure is loud instead of a silent truncation. The rows are encoded
+    * with `to_json(struct(*))` (the generator and options `toJSON` uses, so
+    * the same bytes) before the limit, which leaves the limit at the plan's
+    * root: a `CollectLimit`, or a `TakeOrderedAndProject` over a sort,
+    * instead of a limit behind a single-partition shuffle. */
   private def printJson(df: DataFrame): Unit = {
     val cap = maxJsonRows
-    val rows = df.limit(cap + 1).toJSON.collect()
+    val rows = df.select(to_json(struct(col("*")))).limit(cap + 1)
+      .collect().map(_.getString(0))
     if (rows.length > cap)
       throw new IllegalArgumentException(
         s"result exceeds $cap rows — refusing to collect onto the " +

@@ -11,11 +11,15 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Optimizer rule automating the reference's hand-written two-stage spatial
   * plan (query_frame_db.py:85-121: "R-tree probe CTE + exact refine",
   * SURVEY.md §4): a `Filter(st_intersects(geom, <literal wkt>))` over a
-  * relation that carries bbox columns (`xmin`,`ymin`,`xmax`,`ymax`) is
-  * rewritten to
+  * relation that carries the geometry's degree bbox columns
+  * (`bb_xmin`,`bb_ymin`,`bb_xmax`,`bb_ymax`, as `Main create` writes them)
+  * is rewritten to
   *
-  *   Filter(xmin <= q.xmax && xmax >= q.xmin && ymin <= q.ymax &&
-  *          ymax >= q.ymin && st_intersects(geom, wkt))
+  *   Filter(bb_xmin <= q.xmax && bb_xmax >= q.xmin && bb_ymin <= q.ymax &&
+  *          bb_ymax >= q.ymin && st_intersects(geom, wkt))
+  *
+  * The rule does not key on `xmin..ymax`: on the catalog's frames those are
+  * the UTM-snapped bbox in metres, not the WKT's degrees.
   *
   * The added conjuncts are plain comparisons on top-level numeric columns,
   * which Catalyst then pushes into the parquet scan → row-group min/max
@@ -27,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object BboxPrefilterRule extends Rule[LogicalPlan] {
 
-  private val cols = Seq("xmin", "ymin", "xmax", "ymax")
+  private val cols = Seq("bb_xmin", "bb_ymin", "bb_xmax", "bb_ymax")
 
   private def bboxAttrs(plan: LogicalPlan): Option[Map[String, Attribute]] = {
     val byName = plan.output.groupBy(_.name.toLowerCase)
@@ -58,10 +62,10 @@ object BboxPrefilterRule extends Rule[LogicalPlan] {
             case _ => Literal(v)
           }
           val pre = And(
-            And(LessThanOrEqual(a("xmin"), ceilAs(env.getMaxX, a("xmin"))),
-              GreaterThanOrEqual(a("xmax"), litAs(math.floor(env.getMinX), a("xmax")))),
-            And(LessThanOrEqual(a("ymin"), ceilAs(env.getMaxY, a("ymin"))),
-              GreaterThanOrEqual(a("ymax"), litAs(math.floor(env.getMinY), a("ymax")))))
+            And(LessThanOrEqual(a("bb_xmin"), ceilAs(env.getMaxX, a("bb_xmin"))),
+              GreaterThanOrEqual(a("bb_xmax"), litAs(math.floor(env.getMinX), a("bb_xmax")))),
+            And(LessThanOrEqual(a("bb_ymin"), ceilAs(env.getMaxY, a("bb_ymin"))),
+              GreaterThanOrEqual(a("bb_ymax"), litAs(math.floor(env.getMinY), a("bb_ymax")))))
           Filter(And(pre, si), child)
         case None => f
       }

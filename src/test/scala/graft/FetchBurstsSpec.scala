@@ -61,4 +61,36 @@ class FetchBurstsSpec extends SparkSpec {
       .as[String].collect().toSeq
     assert(got == Seq("GRANULE_A", "GRANULE_B"))
   }
+
+  test("absent frames are skipped; all absent fails the require") {
+    val tmp = Files.createTempDirectory("graft-fetch-absent").toString
+    val zip = s"$tmp/frame-to-burst.json.zip"
+    Io.writeJsonZip(zip, "doc.json",
+      """{"data": {
+        |  "1": {"burst_ids": ["t001_000001_iw1", "t001_000002_iw1"]},
+        |  "2": {"burst_ids": ["t001_000003_iw1"]}
+        |}, "metadata": {"version": "t"}}""".stripMargin)
+    val bursts = Seq(
+      ("t001_000001_iw1", "2020-01-05 00:00:00", "G1.SAFE"),
+      ("t001_000002_iw1", "2020-01-06 00:00:00", "G2.SAFE"),
+      ("t001_000003_iw1", "2020-01-07 00:00:00", "G3.SAFE"))
+      .toDF("burst_id_jpl", "sensing_time", "granule")
+      .withColumn("sensing_time", $"sensing_time".cast("timestamp"))
+    val (s, e) = ("2020-01-01 00:00:00", "2020-12-31 23:59:59")
+
+    // frame 99 is not in the document: only frame 1's rows come back
+    val rows = Catalog.fetchBursts(spark, bursts, zip, Seq(1L, 99L), s, e)
+      .select($"burst_id_jpl").as[String].collect().sorted.toSeq
+    assert(rows == Seq("t001_000001_iw1", "t001_000002_iw1"))
+    val granules = Catalog.fetchGranules(spark, bursts, zip, Seq(99L, 1L), s, e)
+      .as[String].collect().toSeq
+    assert(granules == Seq("G1", "G2"))
+
+    Seq[(Seq[Long]) => Unit](
+      fids => Catalog.fetchBursts(spark, bursts, zip, fids, s, e),
+      fids => Catalog.fetchGranules(spark, bursts, zip, fids, s, e)).foreach { call =>
+      val err = intercept[IllegalArgumentException](call(Seq(98L, 99L)))
+      assert(err.getMessage.contains("no requested frame present"))
+    }
+  }
 }

@@ -1,7 +1,14 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.domain.Catalog
+import graft.functions.GeoFunctions
+import graft.plans.SpatialExpressions
 import graft.sources.Io
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** End-to-end CLI test (cli.py:28-44 surface): create a catalog from a
@@ -32,83 +39,103 @@ class MainSpec extends SparkSpec {
     bos.toString("UTF-8").linesIterator.toSeq.filter(_.nonEmpty)
   }
 
-  test("create + lookup + intersect + fetch-bursts + fetch-granules end-to-end") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cli").toString
-    val burstMapDir = s"$tmp/burst_map"
-    grid().write.parquet(burstMapDir)
+  /** Jobs that `body` launches: a listener counts the job starts tagged
+    * with a job group set around the call (broadcast jobs inherit it), and
+    * the listener bus is drained before the count is read. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"job-budget-${java.util.UUID.randomUUID}"
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job budget")
+    try body
+    finally {
+      sc.clearJobGroup()
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  private case class Served(catDir: String, zip: String, bursts: String, fid: Long,
+      burstIds: Seq[String])
+
+  /** One `create`d catalog with its frame-to-burst document, and a
+    * historical fact in which every burst of the first frame acquires on
+    * two dates under two granules. */
+  private lazy val served: Served = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-cli-served").toString
+    grid().write.parquet(s"$tmp/burst_map")
     val landFile = java.nio.file.Paths.get(s"$tmp/land.wkt")
     java.nio.file.Files.writeString(landFile,
       "POLYGON ((9 3.5, 14 3.5, 14 11.5, 9 11.5, 9 3.5))")
     val catDir = s"$tmp/catalog"
-
-    // create: persists the three catalog tables
-    Main.run(spark, List("create", burstMapDir, landFile.toString, catDir))
+    Main.run(spark, List("create", s"$tmp/burst_map", landFile.toString, catDir))
     val frames = spark.read.parquet(s"$catDir/frames")
-    assert(frames.count() > 0)
-    assert(Seq("bb_xmin", "bb_ymin", "bb_xmax", "bb_ymax", "is_north_america")
-      .forall(frames.columns.contains))
-
-    // lookup: JSON line carrying the frame's sorted burst-id list
-    val someFid = frames.select($"fid").orderBy($"fid").as[Int].head()
-    val lookupOut = capture(Main.run(spark, List("lookup", catDir, someFid.toString)))
-    assert(lookupOut.size == 1)
-    assert(lookupOut.head.contains("\"burst_ids\":[\"t001_"))
-
-    // intersect: both probe forms hit the frames covering lon 10-12, lat ~4
-    val byBbox = capture(Main.run(spark,
-      List("intersect", catDir, "--bbox", "10.5,3.9,11.5,4.1")))
-    val byWkt = capture(Main.run(spark, List("intersect", catDir, "--wkt",
-      Catalog.bboxWkt(10.5, 3.9, 11.5, 4.1))))
-    assert(byBbox.nonEmpty && byBbox == byWkt)
-    assert(byBbox.forall(_.contains("\"fid\":")))
-
-    // historical fact fixture: every burst of the looked-up frame acquires
-    // on two dates under two granules
-    val burstIds = spark.read.json(Seq(Io.readJsonZip {
-      val zip = s"$tmp/f2b.json.zip"
-      Io.writeJsonZip(zip, "f2b.json", Io.frameToBurstJson(
-        Catalog.frameSummaries(frames, spark.read.parquet(s"$catDir/frames_bursts"),
-          spark.read.parquet(s"$catDir/burst_id_map")),
-        Map("version" -> "test")))
-      zip
-    }).toDS()).select(explode(col(s"data.$someFid.burst_ids")).as("burst_id_jpl"))
-      .as[String].collect().toSeq
-    assert(burstIds.nonEmpty)
-    val zip = s"$tmp/f2b.json.zip" // written above
-    val burstsDir = s"$tmp/bursts"
+    val fb = spark.read.parquet(s"$catDir/frames_bursts")
+    val bim = spark.read.parquet(s"$catDir/burst_id_map")
+    val zip = s"$tmp/f2b.json.zip"
+    Io.writeJsonZip(zip, "f2b.json", Io.frameToBurstJson(
+      Catalog.frameSummaries(frames, fb, bim), Map("version" -> "test")))
+    val fid = frames.select($"fid".cast("long")).orderBy($"fid").as[Long].head()
+    val burstIds = Catalog.lookup(frames, fb, bim, fid)
+      .select(explode($"burst_ids")).as[String].collect().toSeq
     burstIds.flatMap(b => Seq(
         (b, "2023-01-05 00:00:00", "S1A_20230105.SAFE"),
         (b, "2024-06-01 00:00:00", "S1A_20240601.SAFE")))
       .toDF("burst_id_jpl", "st", "granule")
       .select($"burst_id_jpl", $"st".cast("timestamp").as("sensing_time"), $"granule")
-      .write.parquet(burstsDir)
+      .write.parquet(s"$tmp/bursts")
+    assert(burstIds.nonEmpty)
+    Served(catDir, zip, s"$tmp/bursts", fid, burstIds)
+  }
+
+  test("create + lookup + intersect + fetch-bursts + fetch-granules end-to-end") {
+    val c = served
+
+    // create: persists the three catalog tables
+    val frames = spark.read.parquet(s"${c.catDir}/frames")
+    assert(frames.count() > 0)
+    assert(Seq("bb_xmin", "bb_ymin", "bb_xmax", "bb_ymax", "is_north_america")
+      .forall(frames.columns.contains))
+
+    // lookup: JSON line carrying the frame's sorted burst-id list
+    val lookupOut = capture(Main.run(spark, List("lookup", c.catDir, c.fid.toString)))
+    assert(lookupOut.size == 1)
+    assert(lookupOut.head.contains("\"burst_ids\":[\"t001_"))
+
+    // intersect: both probe forms hit the frames covering lon 10-12, lat ~4
+    val byBbox = capture(Main.run(spark,
+      List("intersect", c.catDir, "--bbox", "10.5,3.9,11.5,4.1")))
+    val byWkt = capture(Main.run(spark, List("intersect", c.catDir, "--wkt",
+      Catalog.bboxWkt(10.5, 3.9, 11.5, 4.1))))
+    assert(byBbox.nonEmpty && byBbox == byWkt)
+    assert(byBbox.forall(_.contains("\"fid\":")))
 
     // fetch-bursts: CSV rows only inside the time range
-    val outDir = s"$tmp/fetched"
-    Main.run(spark, List("fetch-bursts", burstsDir, zip, someFid.toString,
+    val outDir = java.nio.file.Files.createTempDirectory("graft-cli-fetched").toString
+    Main.run(spark, List("fetch-bursts", c.bursts, c.zip, c.fid.toString,
       "2023-01-01 00:00:00", "2023-12-31 00:00:00", outDir))
     val fetched = spark.read.option("header", "true").csv(outDir)
-    assert(fetched.count() == burstIds.size)
+    assert(fetched.count() == c.burstIds.size)
     assert(fetched.select($"granule").distinct().as[String].collect().toSeq ==
       Seq("S1A_20230105.SAFE"))
 
     // fetch-granules: distinct granules with .SAFE stripped, full range
-    val granules = capture(Main.run(spark, List("fetch-granules", burstsDir, zip,
-      someFid.toString, "2023-01-01 00:00:00", "2024-12-31 00:00:00")))
+    val granules = capture(Main.run(spark, List("fetch-granules", c.bursts, c.zip,
+      c.fid.toString, "2023-01-01 00:00:00", "2024-12-31 00:00:00")))
     assert(granules.map(l => l.contains("S1A_20230105") || l.contains("S1A_20240601"))
       .forall(identity) && granules.size == 2)
     assert(granules.forall(!_.contains(".SAFE")))
   }
 
   test("printJson guard refuses to collect past the row cap") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cli-guard").toString
-    val burstMapDir = s"$tmp/burst_map"
-    grid().write.parquet(burstMapDir)
-    val landFile = java.nio.file.Paths.get(s"$tmp/land.wkt")
-    java.nio.file.Files.writeString(landFile,
-      "POLYGON ((9 3.5, 14 3.5, 14 11.5, 9 11.5, 9 3.5))")
-    val catDir = s"$tmp/catalog"
-    Main.run(spark, List("create", burstMapDir, landFile.toString, catDir))
+    val catDir = served.catDir
     val nFrames = spark.read.parquet(s"$catDir/frames").count()
     assert(nFrames > 1)
     // a planet-sized probe hits every frame; with the cap below it, the
@@ -187,5 +214,57 @@ class MainSpec extends SparkSpec {
     val cliWkt = capture(Main.run(spark, List("intersect", catDir, "--wkt",
       Catalog.bboxWkt(xmin, ymin, xmax, ymax))))
     assert(direct.nonEmpty && cli == direct && cliWkt == direct)
+  }
+
+  test("each CLI request stays within its job budget") {
+    val c = served
+    val lookup = jobsOf(capture(Main.run(spark, List("lookup", c.catDir, c.fid.toString))))
+    val bbox = jobsOf(capture(Main.run(spark,
+      List("intersect", c.catDir, "--bbox", "10.5,3.9,11.5,4.1"))))
+    val wkt = jobsOf(capture(Main.run(spark, List("intersect", c.catDir, "--wkt",
+      Catalog.bboxWkt(10.5, 3.9, 11.5, 4.1)))))
+    val fetch = jobsOf(capture(Main.run(spark, List("fetch-granules",
+      c.bursts, c.zip, c.fid.toString, "2023-01-01 00:00:00", "2024-12-31 00:00:00"))))
+    assert(lookup <= 3, s"lookup launched $lookup jobs")
+    assert(bbox == 1 && wkt == 1, s"intersect launched $bbox (bbox) and $wkt (wkt) jobs")
+    assert(fetch <= 3, s"fetch-granules launched $fetch jobs")
+  }
+
+  test("readParquet takes Spark's inferred schema from one footer, without a job") {
+    Seq("frames", "frames_bursts", "burst_id_map").foreach { t =>
+      val p = s"${served.catDir}/$t"
+      var df: DataFrame = null
+      assert(jobsOf { df = Main.readParquet(spark, p) } == 0, t)
+      assert(df.schema == spark.read.parquet(p).schema, t)
+    }
+    // partition columns still come from the directory names
+    val part = java.nio.file.Files.createTempDirectory("graft-part").toString + "/t"
+    spark.range(0, 20).select($"id", ($"id" % 3).cast("int").as("year"),
+        $"id".cast("string").as("s"))
+      .write.partitionBy("year").parquet(part)
+    val got = Main.readParquet(spark, part)
+    assert(got.schema == spark.read.parquet(part).schema && got.columns.contains("year"))
+    assert(got.orderBy($"id").collect().toSeq ==
+      spark.read.parquet(part).orderBy($"id").collect().toSeq)
+    // a column the files lack still fails analysis
+    intercept[AnalysisException](
+      Main.readParquet(spark, s"${served.catDir}/frames").select($"no_such_column"))
+  }
+
+  test("st_intersects over a created catalog's frames equals the UDF and the CLI intersect") {
+    // the frames' xmin..ymax are UTM metres; only bb_* are degrees
+    val frames = spark.read.parquet(s"${served.catDir}/frames")
+    val q = Catalog.bboxWkt(10.5, 3.9, 11.5, 4.1)
+    def fids(df: DataFrame): Seq[Long] =
+      df.select($"fid".cast("long")).as[Long].collect().sorted.toSeq
+    val udf = fids(frames.filter(GeoFunctions.stIntersects($"geom", lit(q))))
+    val native = fids(frames.filter(SpatialExpressions.stIntersectsNative($"geom", q)))
+    frames.createOrReplaceTempView("created_frames")
+    val sql = fids(spark.sql(s"SELECT fid FROM created_frames WHERE st_intersects(geom, '$q')"))
+    val cli = capture(Main.run(spark, List("intersect", served.catDir, "--wkt", q)))
+      .map(l => "\"fid\":(\\d+)".r.findFirstMatchIn(l).get.group(1).toLong).sorted
+    assert(udf.nonEmpty)
+    assert(native == udf && sql == udf && cli == udf,
+      s"udf $udf, native $native, sql $sql, cli $cli")
   }
 }

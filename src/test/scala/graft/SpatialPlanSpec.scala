@@ -11,7 +11,7 @@ class SpatialPlanSpec extends SparkSpec {
     val x = (i % 10) * 10.0; val y = (i / 10) * 10.0
     (i, x.toLong, y.toLong, (x + 8).toLong, (y + 8).toLong,
       s"POLYGON (($x $y, ${x + 8} $y, ${x + 8} ${y + 8}, $x ${y + 8}, $x $y))")
-  }.toDF("fid", "xmin", "ymin", "xmax", "ymax", "geom")
+  }.toDF("fid", "bb_xmin", "bb_ymin", "bb_xmax", "bb_ymax", "geom")
 
   test("native st_intersects matches the UDF") {
     val df = framesDf()
@@ -49,9 +49,12 @@ class SpatialPlanSpec extends SparkSpec {
     assert(optimized.contains("<= 30") && optimized.contains(">= 15"),
       s"no bbox prefilter in:\n$optimized")
     // the injected plain comparisons reach the parquet scan as PushedFilters
-    val physical = filtered.queryExecution.executedPlan.toString
+    // (printed in full: the default metadata length cuts the bb_* filters)
+    spark.conf.set("spark.sql.maxMetadataStringLength", "1000")
+    val physical = try filtered.queryExecution.executedPlan.toString
+      finally spark.conf.unset("spark.sql.maxMetadataStringLength")
     assert(physical.contains("PushedFilters: [") &&
-      physical.contains("LessThanOrEqual(xmin"),
+      physical.contains("LessThanOrEqual(bb_xmin"),
       s"bbox not pushed down:\n$physical")
 
     val got = filtered.select($"fid").as[Int].collect().sorted.toSeq
