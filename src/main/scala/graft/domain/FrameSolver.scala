@@ -121,16 +121,6 @@ object FrameSolver {
     }.sortBy(f => (f.start, f.end))
   }
 
-  /** Expand slices into the frame↔burst join table: frame ids 1-based, each
-    * burst triplet contributing ogc_fids 3b−2..3b (frames.py:46-59). */
-  def frameToBurstRows(slices: Seq[FrameSlice]): Seq[(Int, Int, Boolean)] =
-    slices.zipWithIndex.flatMap { case (FrameSlice(s, e, land), idx) =>
-      for {
-        burst <- (s + 1) to e
-        ogc <- (1 + 3 * (burst - 1)) until (4 + 3 * (burst - 1))
-      } yield (idx + 1, ogc, land)
-    }
-
   /** Spark operator: per-key boolean sequences → frame slices.
     * Input rows (key, pos, isLand); output (key, frame_id, start, end,
     * is_land, n_bursts). Key-local `flatMapGroups` — no driver collect. */

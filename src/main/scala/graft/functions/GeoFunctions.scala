@@ -151,9 +151,6 @@ object GeoFunctions {
   val stIntersects = udf((a: String, b: String) =>
     if (a == null || b == null) false else parseWkt(a).intersects(parseWkt(b)))
 
-  val stContains = udf((a: String, b: String) =>
-    if (a == null || b == null) false else parseWkt(a).contains(parseWkt(b)))
-
   val stArea = udf((a: String) => if (a == null) 0.0 else parseWkt(a).getArea)
 
   /** Part count (1 for simple geometries, N for MULTI*) — lets the
@@ -167,11 +164,6 @@ object GeoFunctions {
     * integer-lattice geometry every segment length is an integer, so the
     * double sum is exact — what lets q_geo_union_pipeline oracle it. */
   val stLength = udf((a: String) => if (a == null) 0.0 else parseWkt(a).getLength)
-
-  val stCentroid = udf { (a: String) =>
-    val c = parseWkt(a).getCentroid
-    (c.getX, c.getY)
-  }
 
   /** Dateline-aware centroid (build_frame_db.py:262-307 weighted-centroid
     * rule): for a wrap-encoded geometry, take the centroid in the +360

@@ -4,12 +4,15 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.functions._
 
 /** Neighborhood-structure mining over the power-law document graph
-  * (common-neighbor link prediction, per-vertex local clustering) plus
-  * the general connected-components primitive the graph family closes on.
+  * (common-neighbor link prediction, per-vertex local clustering),
+  * connected components (through [[TextPipeline.dedupClusters]], the
+  * repo's one CC implementation), personalized PageRank (through
+  * [[Graphs.pageRankOn]]) and the HyperANF ball-growth census.
   *
-  * Both operators run against [[Graphs.skewedUndirectedEdges]] — the
-  * Zipf-like generator whose node 0 receives ~half of ALL edges — because
-  * that hub is exactly where naive formulations explode:
+  * The two neighborhood operators run against
+  * [[Graphs.skewedUndirectedEdges]] — the Zipf-like generator whose node
+  * 0 receives ~half of ALL edges — because that hub is exactly where
+  * naive formulations explode:
   *
   *   - Common-neighbor counting enumerates a wedge per (center, u, w)
   *     triple, which is quadratic in the hub's degree. There is no exact
@@ -185,17 +188,13 @@ object GraphMining {
         .limit(50)
     },
 
-    // Connected components by min-label propagation WITH pointer jumping:
-    // each round every vertex adopts min(own label, neighbors' labels,
-    // label-of-label). The label-of-label join is the doubling step — the
-    // frontier a label has traveled doubles per round, so convergence is
-    // O(log diameter) rounds instead of O(diameter). The fixture graph is
-    // the doc-id path cut into 97-vertex segments (edge i→i+1 absent when
-    // (i+1) % 97 = 0 or i+1 is missing), whose diameter is FIXED at 96 at
-    // any corpus size — 8 doubling rounds (2^7 = 128 ≥ 96) suffice at any
-    // scale, which is exactly the property that makes pointer-jumping CC
-    // the 100 TB shape: per round two keyed equi-joins + one combiner
-    // min-groupBy, no windows, no driver state.
+    // Connected components of the doc-id path cut into 97-vertex
+    // segments (edge i→i+1 absent when (i+1) % 97 = 0 or i+1 is missing),
+    // through TextPipeline.dedupClusters: partition-local union-find
+    // contraction, then min-label propagation with pointer jumping over
+    // the cross-partition quotient graph, looped to a checked fixpoint (it
+    // throws rather than return unconverged labels). Each component is
+    // labeled by its minimum id; the readout is a combiner count per label.
     //
     // The oracle does NOT replay the iteration: on a path-segment graph
     // the components are analytically the maximal runs of consecutive
@@ -216,13 +215,13 @@ object GraphMining {
         |SELECT CAST(MIN(v) AS BIGINT) AS component,
         |  CAST(COUNT(*) AS BIGINT) AS size
         |FROM isl GROUP BY g ORDER BY component""".stripMargin) { (s, d) =>
-      val ids = Tables.documents(s, d).select(col("doc_id").as("v"))
+      val ids = Tables.documents(s, d).select(col("doc_id"))
         .localCheckpoint(true)
-      val fwd = ids.filter(pmod(col("v") + 1, lit(97)) =!= 0)
-        .select(col("v").as("a"), (col("v") + 1).as("b"))
-        .join(ids.select(col("v").as("b")), Seq("b"), "left_semi")
-      ccLabels(ids, fwd, rounds = 8)
-        .groupBy(col("l").as("component"))
+      val fwd = ids.filter(pmod(col("doc_id") + 1, lit(97)) =!= 0)
+        .select(col("doc_id").as("doc1"), (col("doc_id") + 1).as("doc2"))
+        .join(ids.select(col("doc_id").as("doc2")), Seq("doc2"), "left_semi")
+      TextPipeline.dedupClusters(ids, fwd)
+        .groupBy(col("canonical_id").as("component"))
         .agg(count(lit(1)).as("size"))
         .orderBy(col("component"))
     },
@@ -232,8 +231,8 @@ object GraphMining {
     // uniformly — the "related to THESE documents" ranking that powers
     // seed-expansion retrieval, over the same power-law graph as
     // q_pagerank_skew (the hub is where proximity mass piles up and where
-    // a naive per-vertex formulation would skew). Same integer-exact
-    // round shape as pageRankOn: seeds reset to 150000 per round, every
+    // a naive per-vertex formulation would skew). pageRankOn with the
+    // teleport on the seeds: seeds reset to 150000 per round, every
     // other vertex's reset is 0, contributions floor(r·0.85/3); the
     // per-round dst-sum is a combiner aggregate, so the hot vertex
     // partial-aggregates map-side. Non-seed vertices the seeds never
@@ -252,30 +251,11 @@ object GraphMining {
          |SELECT doc_id, CAST(r AS BIGINT) AS rank_q6
          |FROM r3 WHERE r > 0
          |ORDER BY rank_q6 DESC, doc_id LIMIT 20""".stripMargin) { (s, d) =>
-      import org.apache.spark.storage.StorageLevel
       val docs = Tables.documents(s, d)
-      // edges materialized once, pre-partitioned on src — every round's
-      // rank join reuses the partitioning (the pageRankOn discipline)
-      val p = Graphs.iterParts(docs)
-      val edges = Graphs.skewedEdges(docs)
-        .repartition(p, col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-      val nodes = docs.select(col("doc_id")).repartition(p, col("doc_id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      def reset(base: Long) =
-        when(pmod(col("doc_id"), lit(100)) === 0, lit(base)).otherwise(lit(0L))
-      var ranks = nodes.select(col("doc_id"), reset(1000000L).as("r"))
-      for (_ <- 1 to 3) {
-        val contribs = edges
-          .join(ranks.select(col("doc_id").as("src"), col("r")), Seq("src"))
-          .select(col("dst"),
-            floor(col("r") * lit(850000.0) / lit(3000000.0)).cast("long").as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("cin"))
-        ranks = nodes
-          .join(contribs.select(col("dst").as("doc_id"), col("cin")), Seq("doc_id"), "left")
-          .select(col("doc_id"), (reset(150000L) + coalesce(col("cin"), lit(0L))).as("r"))
-      }
-      ranks.filter(col("r") > 0)
-        .select(col("doc_id"), col("r").as("rank_q6"))
+      Graphs.pageRankOn(docs.select(col("doc_id")), Graphs.skewedEdges(docs), iters = 3,
+          teleport = m =>
+            when(pmod(col("doc_id"), lit(100)) === 0, lit(m)).otherwise(lit(0L)))
+        .filter(col("rank_q6") > 0)
         .orderBy(col("rank_q6").desc, col("doc_id"))
         .limit(20)
     },
@@ -344,27 +324,20 @@ object GraphMining {
            |ORDER BY round""".stripMargin
       }) { (s, d) =>
       val docs = Tables.documents(s, d)
-      // persist (not checkpoint): localCheckpoint drops partitioning info,
-      // so every round's register join re-shuffled the edge list; the
-      // cached hash(dst) layout is reused by all 3 rounds instead
-      val edges = Graphs.syntheticEdges(docs)
-        .repartition(Graphs.iterParts(docs), col("dst"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // every round's register join probes the edges by dst
+      val edges = Graphs.keyed(Graphs.syntheticEdges(docs), "dst")
       val (bCol, rhoCol) = Sketches.rhoOf(Sketches.hllMix(col("doc_id")))
       val r0 = docs.select(col("doc_id").as("v"), bCol.as("b"), rhoCol.as("rho"))
         .localCheckpoint(true)
-      val rounds = scala.collection.mutable.ListBuffer(r0)
-      var cur = r0
-      for (_ <- 1 to 3) {
-        cur = cur
+      // the readout reads every round, so each round is checkpointed
+      (1 to 3).scanLeft(r0) { (cur, _) =>
+        cur
           .unionAll(edges
             .join(cur.select(col("v").as("dst"), col("b"), col("rho")), Seq("dst"))
             .select(col("src").as("v"), col("b"), col("rho")))
           .groupBy(col("v"), col("b")).agg(max(col("rho")).as("rho"))
           .localCheckpoint(true)
-        rounds += cur
-      }
-      rounds.toList.zipWithIndex.map { case (regs, i) =>
+      }.zipWithIndex.map { case (regs, i) =>
         regs.groupBy(col("v"))
           .agg(count(lit(1)).as("np"), sum(col("rho")).as("srho"),
             (sum(lit(1.0) /
@@ -395,45 +368,4 @@ object GraphMining {
        |    FROM edges e JOIN $prev p ON p.doc_id = e.src) c
        |    ON c.doc_id = nd.doc_id
        |  GROUP BY nd.doc_id)""".stripMargin
-
-  /** `rounds` rounds of min-label propagation with pointer jumping over an
-    * undirected edge list `edges` (a, b). Each round every vertex takes
-    * min(own, neighbors', label-of-label).
-    *
-    * Convergence contract — read before reusing on a new graph: the
-    * pointer term l(l(v)) doubles the distance the minimum has traveled
-    * per round ONLY when vertex ids are monotone along geodesics toward
-    * the component minimum (consecutive-id paths/grids — the
-    * q_connected_components island fixture, where ⌈log₂(diameter)⌉+1
-    * rounds therefore suffice and StatsInferenceSpec proves that bound
-    * tight in both directions). On arbitrary id layouts l(v) can point
-    * ACROSS the component to a vertex no closer to the minimum, the
-    * doubling stalls, and worst-case convergence degrades toward
-    * O(diameter) rounds — FoldCrossCheckSpec measures random 60-vertex
-    * graphs needing more rounds than the log bound. Size `rounds` from
-    * the id geometry of YOUR graph, or iterate to a fixpoint.
-    * Returns (v, l) with l = the component's minimum vertex id. */
-  def ccLabels(ids: org.apache.spark.sql.DataFrame,
-               edges: org.apache.spark.sql.DataFrame, rounds: Int): org.apache.spark.sql.DataFrame = {
-    // persist pre-keyed on the join key (localCheckpoint would drop the
-    // partitioning and re-shuffle adj every round)
-    val adj = edges.select(col("a").as("v"), col("b").as("u"))
-      .unionAll(edges.select(col("b").as("v"), col("a").as("u")))
-      .repartition(Graphs.iterParts(edges), col("u"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var lbl = ids.select(col("v"), col("v").as("l"))
-    for (_ <- 1 to rounds) {
-      val nbr = adj
-        .join(lbl.select(col("v").as("u"), col("l")), Seq("u"))
-        .select(col("v"), col("l"))
-      val ptr = lbl.as("x")
-        .join(lbl.select(col("v").as("l"), col("l").as("l2")).as("y"), Seq("l"))
-        .select(col("x.v").as("v"), col("l2").as("l"))
-      lbl = lbl.select(col("v"), col("l"))
-        .unionAll(nbr).unionAll(ptr)
-        .groupBy(col("v")).agg(min(col("l")).as("l"))
-        .localCheckpoint(true)
-    }
-    lbl
-  }
 }

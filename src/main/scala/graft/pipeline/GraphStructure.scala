@@ -13,11 +13,12 @@ import Graphs._
   * label-propagation partition, degree distribution, reciprocity, and
   * Bradley-Terry strength fitting.
   *
-  * Byte-identical move of the census/paths/structure query family out of
-  * Graphs.scala (round-12 file-size seam, the EventAnalytics/Corpus split
-  * discipline): the graph generators and the round-unrolling SQL helpers
-  * stay in [[Graphs]] (shared with [[GraphMining]] and the rank family)
-  * and are imported unqualified so the query bodies are untouched.
+  * The query bodies call the generators, the iterative operators
+  * (bfsHops, shortestPaths, labelPropagation — each keys its static
+  * relations through [[Graphs.keyed]]) and the round-unrolling oracle
+  * SQL helpers of [[Graphs]], imported unqualified. q_bradley_terry keeps
+  * its own loop: its state is a broadcast parameter vector, not a keyed
+  * graph relation.
   */
 object GraphStructure {
 

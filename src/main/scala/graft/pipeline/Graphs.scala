@@ -1,8 +1,9 @@
 package graft.pipeline
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Link-graph scoring for corpus curation: PageRank-style authority over a
   * deterministic synthetic link graph (each document links to its 3
@@ -20,11 +21,36 @@ import org.apache.spark.sql.functions._
   * and edges co-partition round over round, so at 100 TB the per-round
   * cost is a single co-located shuffle of the edge list — the standard
   * distributed PageRank shape. Damping 0.85 (q6: 850000/1000000).
+  *
+  * The iterative operators here (pageRankOn, bfsHops, shortestPaths,
+  * hits, labelPropagationOn, kCoreCensusOn) and GraphMining's q_ppr and
+  * q_anf share two rules. Each static relation a round joins against is
+  * laid out by [[keyed]], the one place that picks its key, partition
+  * count and persistence. Rounds are folds: `foldLeft` where only the
+  * last state is read, which keeps the unroll one static plan, and
+  * `scanLeft` over eagerly localCheckpointed states where the readout
+  * reads every round (kCoreCensusOn, q_anf).
   */
 object Graphs {
 
-  /** Scale-adaptive partition count for the iterative family's per-round
-    * persisted relations (edge lists, adjacency, rank/label vectors).
+  /** `df` as a static relation of the iterative family (edge list,
+    * adjacency, node set): hash-partitioned on `key`, then persisted, so
+    * every round's join on `key` reuses the layout instead of
+    * re-shuffling the relation.
+    *
+    * Persist, not localCheckpoint: a checkpoint drops the hash
+    * partitioning (on Spark 4.1 a localCheckpointed frame reports
+    * UnknownPartitioning(0)), so the next keyed join would re-shuffle it
+    * every round. Lineage cuts belong on per-round STATE read by every
+    * round's readout (kCoreCensusOn, q_anf), never on these relations.
+    *
+    * The partition count comes from `df`'s input bytes (see
+    * [[iterParts]]). Partition count never affects results: every
+    * per-round aggregate here is an exact integer sum/min/max/count. */
+  def keyed(df: DataFrame, key: String): DataFrame =
+    df.repartition(iterParts(df), col(key)).persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** Scale-adaptive partition count for [[keyed]].
     *
     * The r15 profiles showed every per-round stage of the graph queries
     * running 32–64 near-empty tasks (the persisted relations inherit the
@@ -40,12 +66,10 @@ object Graphs {
     * doc-id column — at a ~16 MB-of-source target, clamped to
     * [1, spark.sql.shuffle.partitions]. At production scale the clamp
     * binds (bytes/16 MB >> partitions) and the behavior is identical to
-    * the previous repartition(col(...)); only genuinely tiny inputs get
+    * a plain repartition(col(...)); only genuinely tiny inputs get
     * fewer, denser partitions (guide §2.2: fewer, larger partitions).
-    * Deterministic (file sizes, no sampling), and partition count never
-    * affects results — every per-round aggregate here is an exact
-    * integer sum/min/max/count. */
-  def iterParts(src: DataFrame): Int = {
+    * Deterministic (file sizes, no sampling). */
+  private def iterParts(src: DataFrame): Int = {
     val spark = src.sparkSession
     val max = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
     val bytes = graft.Tables.inputBytes(spark, src.inputFiles.toSeq)
@@ -104,9 +128,8 @@ object Graphs {
     * The edge list is materialized ONCE, pre-partitioned on `src` — every
     * round's rank join then reuses that partitioning instead of re-deriving
     * and re-shuffling the edges (at 100 TB the edge scan is the dominant
-    * cost and must not repeat per iteration). Ranks are checkpointed per
-    * round past a small iteration count, same lineage rationale as
-    * TextPipeline.dedupClusters. */
+    * cost and must not repeat per iteration). The rounds stay one static
+    * plan: every caller runs at most 4. */
   def pageRank(docs: DataFrame, iters: Int): DataFrame =
     pageRankOn(docs.select(col("doc_id")), syntheticEdges(docs), iters)
 
@@ -115,32 +138,29 @@ object Graphs {
     * (the skew variants feed a power-law edge table here). A hot
     * in-vertex is safe by construction: the per-round cost on `dst` is a
     * combiner-backed sum, so the hub's in-edges partial-aggregate
-    * map-side and the shuffle carries one row per map partition. */
-  def pageRankOn(nodesIn: DataFrame, edgesIn: DataFrame, iters: Int): DataFrame = {
+    * map-side and the shuffle carries one row per map partition.
+    *
+    * `teleport(mass)` spreads a rank mass over the vertices: it gives the
+    * initial ranks (mass 1e6) and the per-round reset (mass 1.5e5, the
+    * undamped 15%). The default is uniform; q_ppr concentrates it on a
+    * seed set (personalized PageRank). */
+  def pageRankOn(nodesIn: DataFrame, edgesIn: DataFrame, iters: Int,
+      teleport: Long => Column = lit(_)): DataFrame = {
     require(iters >= 1)
-    import org.apache.spark.storage.StorageLevel
-    val p = iterParts(edgesIn)
-    val edges = edgesIn
-      .repartition(p, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // nodes re-keyed to the same adaptive count: every round's left join
-    // (and the final readout) probes it by doc_id
-    val nodes = nodesIn.repartition(p, col("doc_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var ranks = nodes.select(col("doc_id"), lit(1000000L).as("r"))
-    for (i <- 1 to iters) {
-      val contribs = edges
-        .join(ranks.select(col("doc_id").as("src"), col("r")), Seq("src"))
-        .select(col("dst"),
-          floor(col("r") * lit(850000.0) / lit(3000000.0)).cast("long").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("cin"))
-      ranks = nodes
-        .join(contribs.select(col("dst").as("doc_id"), col("cin")), Seq("doc_id"), "left")
-        .select(col("doc_id"), (lit(150000L) + coalesce(col("cin"), lit(0L))).as("r"))
-      // fixed small unrolls stay one static plan; longer runs cut lineage
-      if (iters > 4 && i < iters) ranks = ranks.localCheckpoint(true)
-    }
-    ranks.select(col("doc_id"), col("r").as("rank_q6"))
+    val edges = keyed(edgesIn, "src")
+    // every round's left join (and the final readout) probes nodes by doc_id
+    val nodes = keyed(nodesIn, "doc_id")
+    (1 to iters).foldLeft(nodes.select(col("doc_id"), teleport(1000000L).as("r"))) {
+      (ranks, _) =>
+        val contribs = edges
+          .join(ranks.select(col("doc_id").as("src"), col("r")), Seq("src"))
+          .select(col("dst"),
+            floor(col("r") * lit(850000.0) / lit(3000000.0)).cast("long").as("c"))
+          .groupBy(col("dst")).agg(sum(col("c")).as("cin"))
+        nodes
+          .join(contribs.select(col("dst").as("doc_id"), col("cin")), Seq("doc_id"), "left")
+          .select(col("doc_id"), (teleport(150000L) + coalesce(col("cin"), lit(0L))).as("r"))
+    }.select(col("doc_id"), col("r").as("rank_q6"))
   }
 
   /** Undirected simple edge set from the directed link graph: canonical
@@ -230,38 +250,26 @@ object Graphs {
     * (edges ⋈ frontier on src) → distinct → anti-join vs the visited set,
     * the textbook distributed BFS. The edge list is materialized once and
     * every round's join shuffles only the frontier against it; the
-    * visited set is eagerly checkpointed so round N+1's plan stays O(1).
-    * Returns (doc_id, hop = shortest distance ≤ maxHop). */
+    * shallow unroll (every caller runs at most 4 hops) stays one static
+    * plan. Returns (doc_id, hop = shortest distance ≤ maxHop). */
   def bfsHops(docs: DataFrame, source: Long, maxHop: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     require(maxHop >= 1)
-    val edges = syntheticEdges(docs)
-      .repartition(iterParts(docs), col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var reached = docs.sparkSession.range(1)
+    val edges = keyed(syntheticEdges(docs), "src")
+    val start = docs.sparkSession.range(1)
       .select(lit(source).as("doc_id"), lit(0L).as("hop"))
-    var frontier = reached.select(col("doc_id"))
-    for (h <- 1 to maxHop) {
-      frontier = edges
-        .join(frontier.withColumnRenamed("doc_id", "src"), Seq("src"))
-        .select(col("dst").as("doc_id")).distinct()
-        .join(reached, Seq("doc_id"), "left_anti")
-      reached = reached
-        .unionByName(frontier.select(col("doc_id"), lit(h.toLong).as("hop")))
-      // a shallow unroll stays one static plan (6 extra eager jobs cost
-      // more than they save); deep traversals cut lineage per round
-      if (maxHop > 4 && h < maxHop) {
-        frontier = frontier.localCheckpoint(true)
-        reached = reached.localCheckpoint(true)
-      }
-    }
-    reached
+    (1 to maxHop).foldLeft((start, start.select(col("doc_id")))) {
+      case ((reached, frontier), h) =>
+        val next = edges
+          .join(frontier.withColumnRenamed("doc_id", "src"), Seq("src"))
+          .select(col("dst").as("doc_id")).distinct()
+          .join(reached, Seq("doc_id"), "left_anti")
+        (reached.unionByName(next.select(col("doc_id"), lit(h.toLong).as("hop"))), next)
+    }._1
   }
 
   /** Deterministic integer edge weight in [1, 97] derived from the
     * endpoint ids — both engines recompute it bit-for-bit. */
-  private def edgeWeight(src: org.apache.spark.sql.Column,
-      dst: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private def edgeWeight(src: Column, dst: Column): Column =
     (pmod(src * 31 + dst * 17, lit(97L)) + 1).cast("long")
 
   /** Single-source shortest path, Bellman-Ford relaxation bounded to
@@ -278,24 +286,18 @@ object Graphs {
     * (neighborhood radius) exactly as exposed here, the standard
     * iterative-relaxation shape. Returns (doc_id, dist). */
   def shortestPaths(docs: DataFrame, source: Long, rounds: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     require(rounds >= 1)
-    val edges = syntheticEdges(docs)
-      .select(col("src"), col("dst"), edgeWeight(col("src"), col("dst")).as("w"))
-      .repartition(iterParts(docs), col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var dist = docs.sparkSession.range(1)
+    val edges = keyed(syntheticEdges(docs)
+      .select(col("src"), col("dst"), edgeWeight(col("src"), col("dst")).as("w")), "src")
+    val start = docs.sparkSession.range(1)
       .select(lit(source).as("v"), lit(0L).as("dist"))
-    for (r <- 1 to rounds) {
+    (1 to rounds).foldLeft(start) { (dist, _) =>
       val relaxed = edges
         .join(dist.withColumnRenamed("v", "src"), Seq("src"))
         .select(col("dst").as("v"), (col("dist") + col("w")).as("dist"))
-      dist = dist.unionByName(relaxed)
+      dist.unionByName(relaxed)
         .groupBy(col("v")).agg(min(col("dist")).as("dist"))
-      // same lineage rule as bfsHops: shallow unrolls stay one plan
-      if (rounds > 4 && r < rounds) dist = dist.localCheckpoint(true)
-    }
-    dist.select(col("v").as("doc_id"), col("dist"))
+    }.select(col("v").as("doc_id"), col("dist"))
   }
 
   /** One Bellman-Ford round as a min-merge CTE. */
@@ -322,13 +324,8 @@ object Graphs {
     * normalizing max is a broadcast single row. */
   def hits(docs: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1)
-    import org.apache.spark.storage.StorageLevel
-    val p = iterParts(docs)
-    val edges = syntheticEdges(docs)
-      .repartition(p, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = docs.select(col("doc_id")).repartition(p, col("doc_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = keyed(syntheticEdges(docs), "src")
+    val nodes = keyed(docs.select(col("doc_id")), "doc_id")
     def half(scores: DataFrame, joinKey: String, outKey: String): DataFrame = {
       // persist the raw sums: they feed BOTH the normalizing max and the
       // score join — unpersisted, each half-round would recompute the
@@ -343,11 +340,11 @@ object Graphs {
           coalesce(floor(col("raw") * lit(1000000.0) / col("m")), lit(0.0))
             .cast("long").as("s"))
     }
-    var hub = nodes.select(col("doc_id"), lit(1000000L).as("s"))
-    var auth: DataFrame = null
-    for (_ <- 1 to rounds) {
-      auth = half(hub, "src", "dst")  // in-edge hub mass → authority
-      hub = half(auth, "dst", "src")  // out-edge auth mass → hub
+    val hub0 = nodes.select(col("doc_id"), lit(1000000L).as("s"))
+    // state (auth, hub); the initial auth is a placeholder no round reads
+    val (auth, hub) = (1 to rounds).foldLeft((hub0, hub0)) { case ((_, hub), _) =>
+      val auth = half(hub, "src", "dst")  // in-edge hub mass → authority
+      (auth, half(auth, "dst", "src"))    // out-edge auth mass → hub
     }
     auth.select(col("doc_id"), col("s").as("auth_q6"))
       .join(hub.select(col("doc_id"), col("s").as("hub_q6")), Seq("doc_id"))
@@ -379,31 +376,21 @@ object Graphs {
   def labelPropagationOn(nodesIn: DataFrame, ue: DataFrame,
       rounds: Int): DataFrame = {
     require(rounds >= 1)
-    import org.apache.spark.storage.StorageLevel
-    val p = iterParts(ue)
-    val adj = ue.select(col("a").as("v"), col("b").as("u"))
-      .unionAll(ue.select(col("b").as("v"), col("a").as("u")))
-      .repartition(p, col("u"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = nodesIn.repartition(p, col("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var lbl = nodes.select(col("v"), col("v").as("lbl"))
-    for (i <- 1 to rounds) {
-      val counted = adj
+    val adj = keyed(ue.select(col("a").as("v"), col("b").as("u"))
+      .unionAll(ue.select(col("b").as("v"), col("a").as("u"))), "u")
+    val nodes = keyed(nodesIn, "v")
+    // each round's labels have one consumer, the next round's join, so
+    // they are not persisted
+    (1 to rounds).foldLeft(nodes.select(col("v"), col("v").as("lbl"))) { (lbl, _) =>
+      val picked = adj
         .join(lbl.select(col("v").as("u"), col("lbl")), Seq("u"))
         .groupBy(col("v"), col("lbl")).agg(count(lit(1)).as("c"))
-      val picked = counted
         .groupBy(col("v"))
         .agg(max(struct(col("c"), (-col("lbl")).as("neg"))).as("win"))
         .select(col("v"), (-col("win.neg")).as("lbl"))
-      lbl = nodes.join(picked, Seq("v"), "left")
+      nodes.join(picked, Seq("v"), "left")
         .select(col("v"), coalesce(col("lbl"), col("v")).as("lbl"))
-      // each round's labels feed the next round's join AND the final
-      // output — persist so the recursion doesn't re-derive (same
-      // rationale as the HITS half-round sums)
-      if (i < rounds) lbl = lbl.persist(StorageLevel.MEMORY_AND_DISK)
     }
-    lbl
   }
 
   /** One label-propagation round as a CTE pair: neighbor-label counts,
@@ -444,48 +431,40 @@ object Graphs {
     *
     * Scale posture: each round is two semi-joins of the (once-persisted)
     * edge list against the survivor set plus one combiner-backed degree
-    * aggregate — the textbook distributed peel; survivor sets persist per
-    * round so round r+1's plan never re-derives round r. Rounds are
-    * bounded (a fixpoint census, not full coreness), matching the BFS /
-    * Bellman-Ford convention in this module. */
+    * aggregate — the textbook distributed peel. Every round's survivor
+    * set is read by the census, so each is eagerly localCheckpointed:
+    * lazily, the census union would race every branch through the full
+    * peel chain (measured 30 s of recompute at ANY scale versus ~1 job
+    * per round materialized). Rounds are bounded (a fixpoint census, not
+    * full coreness), matching the BFS / Bellman-Ford convention in this
+    * module. */
   def kCoreCensus(docs: DataFrame, k: Int, rounds: Int): DataFrame =
     kCoreCensusOn(undirectedEdges(docs), k, rounds)
 
   /** [[kCoreCensus]] over an explicit undirected (a, b) edge set. */
   def kCoreCensusOn(ueIn: DataFrame, k: Int, rounds: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     require(k >= 1 && rounds >= 1)
-    // pre-keyed on `a` at the adaptive count: every round's first semi
-    // join probes ue by a and reuses this partitioning
-    val ue = ueIn.repartition(iterParts(ueIn), col("a"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // survivor sets are EAGERLY materialized per round (localCheckpoint):
-    // the 5-branch census union would otherwise race every branch through
-    // the full lazy peel chain — measured 30 s of recompute at ANY scale
-    // versus ~1 job per round materialized
-    var surv = ue.select(col("a").as("v"))
+    // every round's first semi join probes ue by a
+    val ue = keyed(ueIn, "a")
+    val surv0 = ue.select(col("a").as("v"))
       .unionAll(ue.select(col("b").as("v")))
       .distinct()
       .localCheckpoint(true)
-    def censusRow(r: Int, df: DataFrame): DataFrame =
-      df.agg(count(lit(1)).as("n_core"), sum(col("v")).as("sum_ids"))
-        .select(lit(r.toLong).as("round"), col("n_core"),
-          col("sum_ids").cast("long").as("sum_ids"))
-    val rows = scala.collection.mutable.ListBuffer(censusRow(0, surv))
-    for (r <- 1 to rounds) {
+    (1 to rounds).scanLeft(surv0) { (surv, _) =>
       val induced = ue
         .join(surv.select(col("v").as("a")), Seq("a"), "left_semi")
         .join(surv.select(col("v").as("b")), Seq("b"), "left_semi")
-      val next = induced.select(col("a").as("v"))
+      induced.select(col("a").as("v"))
         .unionAll(induced.select(col("b").as("v")))
         .groupBy(col("v")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("v"))
         .localCheckpoint(true)
-      rows += censusRow(r, next)
-      surv = next
-    }
-    rows.reduce(_ unionAll _)
+    }.zipWithIndex.map { case (surv, r) =>
+      surv.agg(count(lit(1)).as("n_core"), sum(col("v")).as("sum_ids"))
+        .select(lit(r.toLong).as("round"), col("n_core"),
+          col("sum_ids").cast("long").as("sum_ids"))
+    }.reduce(_ unionAll _)
   }
 
   /** One k=3 peeling round as a CTE: survivors of `prev` with induced

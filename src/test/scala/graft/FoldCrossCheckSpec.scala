@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.StatsTimeSeries
-import graft.pipeline.GraphMining
+import graft.pipeline.TextPipeline
 
 /** Independent replays of the distributed sequential folds and the
-  * label-propagation machinery: each test recomputes the answer with a
+  * connected-components machinery: each test recomputes the answer with a
   * plain driver-side recursion (collect → foldLeft / union-find) and
   * demands exact equality with the engine's repartition +
   * sortWithinPartitions + mapPartitions (or keyed-join) formulation —
@@ -14,7 +14,7 @@ import graft.pipeline.GraphMining
   */
 class FoldCrossCheckSpec extends SparkSpec {
 
-  test("ccLabels equals union-find on random graphs (fixpoint rounds)") {
+  test("dedupClusters equals union-find on random graphs") {
     import spark.implicits._
     for (seed <- Seq(7, 42, 1234)) {
       val rnd = new scala.util.Random(seed)
@@ -23,37 +23,21 @@ class FoldCrossCheckSpec extends SparkSpec {
         val a = rnd.nextInt(n); val b = rnd.nextInt(n)
         (math.min(a, b).toLong, math.max(a, b).toLong)
       }.filter(e => e._1 != e._2).distinct
-      // random id layouts break the monotone-geodesic precondition of the
-      // log₂ bound (see the ccLabels scaladoc), so find the fixpoint
-      // round count by replaying the synchronous recurrence driver-side
-      val adj = Array.fill(n)(List.empty[Int])
-      for ((a, b) <- edges) {
-        adj(a.toInt) = b.toInt :: adj(a.toInt)
-        adj(b.toInt) = a.toInt :: adj(b.toInt)
-      }
-      var lbl = Array.tabulate(n)(_.toLong)
-      var rounds = 0
-      var changed = true
-      while (changed) {
-        val next = Array.tabulate(n) { v =>
-          (lbl(v) :: lbl(lbl(v).toInt) :: adj(v).map(u => lbl(u))).min
-        }
-        changed = !java.util.Arrays.equals(next, lbl)
-        if (changed) { lbl = next; rounds += 1 }
-      }
-      // driver-side union-find: the recurrence must have converged to it
+      // driver-side union-find: each vertex's label is its component minimum
       val parent = Array.tabulate(n)(identity)
       def find(x: Int): Int = if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
       for ((a, b) <- edges) parent(find(a.toInt)) = find(b.toInt)
-      for (v <- 0 until n)
-        assert(lbl(v) == (0 until n).filter(u => find(u) == find(v)).min,
-          s"seed $seed: recurrence fixpoint is not the component minimum at $v")
-      // the engine at the measured round count must reproduce it exactly
-      val ids = (0L until n.toLong).toDF("v")
-      val got = GraphMining.ccLabels(ids, edges.toDF("a", "b"), rounds = rounds)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      for (v <- 0 until n)
-        assert(got(v.toLong) == lbl(v), s"seed $seed: label diverges at $v after $rounds rounds")
+      val expected = (0 until n).map(v => (0 until n).filter(u => find(u) == find(v)).min.toLong)
+      val ids = (0L until n.toLong).toDF("doc_id")
+      // default width contracts everything in one partition; 8 partitions
+      // leave a quotient graph for the propagation loop
+      for (parts <- Seq(None, Some(8))) {
+        val got = TextPipeline.dedupClusters(ids, edges.toDF("doc1", "doc2"),
+            partsOverride = parts)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        for (v <- 0 until n)
+          assert(got(v.toLong) == expected(v), s"seed $seed, parts $parts: label diverges at $v")
+      }
     }
   }
 

@@ -86,11 +86,4 @@ class FrameSolverSpec extends AnyFunSuite {
     assert(FrameSolver.landOptimizedSlices(Array.fill(5)(false)) ==
       Seq(FrameSlice(0, 5, false)))
   }
-
-  test("frameToBurstRows expands triplets 1-based") {
-    val rows = FrameSolver.frameToBurstRows(Seq(FrameSlice(0, 2, true)))
-    // bursts 1..2 → ogc fids 1,2,3 and 4,5,6, frame id 1
-    assert(rows == Seq((1, 1, true), (1, 2, true), (1, 3, true),
-      (1, 4, true), (1, 5, true), (1, 6, true)))
-  }
 }

@@ -754,25 +754,6 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("Window"), s"CC must not sort/window raw labels:\n$p")
     assert(p.contains("partial_count"), s"size count lost its combiner:\n$p")
     assert(!p.contains("CartesianProduct"), s"cartesian:\n$p")
-    // one un-checkpointed round over a synthetic graph: the min-label
-    // fold must partial-aggregate map-side and join on the vertex keys
-    import spark.implicits._
-    val ids = (0L until 50L).toDF("v")
-    val e = (0L until 49L).map(i => (i, i + 1)).toDF("a", "b")
-    val adj = e.select(col("a").as("v"), col("b").as("u"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("u")))
-    val lbl = ids.select(col("v"), col("v").as("l"))
-    val nbr = adj.join(lbl.select(col("v").as("u"), col("l")), Seq("u"))
-      .select(col("v"), col("l"))
-    val ptr = lbl.as("x")
-      .join(lbl.select(col("v").as("l"), col("l").as("l2")).as("y"), Seq("l"))
-      .select(col("x.v").as("v"), col("l2").as("l"))
-    val round = lbl.unionAll(nbr).unionAll(ptr)
-      .groupBy(col("v")).agg(min(col("l")).as("l"))
-    val rp = round.queryExecution.executedPlan.toString
-    assert(rp.contains("partial_min"), s"round lost its map-side min combiner:\n$rp")
-    assert(!rp.contains("CartesianProduct") && !rp.contains("Window"),
-      s"round must be keyed joins only:\n$rp")
   }
 
   test("pca moment pass is one combiner-reduced self-join; iterations broadcast") {

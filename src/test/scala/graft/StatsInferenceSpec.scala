@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import pipeline.GraphMining
+import pipeline.TextPipeline
 
 /** Invariants of the round-11 additions that the DuckDB differential
   * can't phrase: ANOVA's sum-of-squares decomposition against a raw
   * double recomputation, Mann-Whitney against the textbook raw-rank
-  * formulation, the pointer-jumping convergence bound (tightness in
-  * both directions), the PCA iterate being a fixpoint direction of its
+  * formulation, connected components on a path and on split segments,
+  * the PCA iterate being a fixpoint direction of its
   * own covariance matrix, Hellinger band membership, and negative-
   * sampling disjointness/determinism.
   */
@@ -54,20 +54,22 @@ class StatsInferenceSpec extends SparkSpec {
     assert(u2 >= 0 && u2 <= 2 * n0 * n1)
   }
 
-  test("pointer-jumping cc: 8 rounds converge a 97-path, 7 rounds do not") {
+  test("connected components: a 97-path is one component, segments stay apart") {
     import spark.implicits._
-    val ids = (0L until 97L).toDF("v")
-    val edges = (0L until 96L).map(i => (i, i + 1)).toDF("a", "b")
-    val full = GraphMining.ccLabels(ids, edges, rounds = 8).collect()
-    assert(full.forall(_.getAs[Long]("l") == 0L), "8 rounds must reach the minimum everywhere")
-    val short = GraphMining.ccLabels(ids, edges, rounds = 7).collect()
-    assert(short.exists(_.getAs[Long]("l") != 0L),
-      "7 rounds must NOT converge a 96-diameter path — the doubling bound is tight")
+    val ids = (0L until 97L).toDF("doc_id")
+    val edges = (0L until 96L).map(i => (i, i + 1)).toDF("doc1", "doc2")
+    // one partition contracts the whole path; 8 leave a quotient path
+    // for the propagation loop
+    for (parts <- Seq(None, Some(8))) {
+      val full = TextPipeline.dedupClusters(ids, edges, partsOverride = parts).collect()
+      assert(full.forall(_.getAs[Long]("canonical_id") == 0L),
+        s"parts $parts: the path must reach the minimum everywhere")
+    }
     // two segments stay separate components
-    val ids2 = (0L until 10L).toDF("v")
-    val e2 = Seq((0L, 1L), (1L, 2L), (3L, 4L)).toDF("a", "b")
-    val lbl2 = GraphMining.ccLabels(ids2, e2, rounds = 4).collect()
-      .map(r => r.getAs[Long]("v") -> r.getAs[Long]("l")).toMap
+    val ids2 = (0L until 10L).toDF("doc_id")
+    val e2 = Seq((0L, 1L), (1L, 2L), (3L, 4L)).toDF("doc1", "doc2")
+    val lbl2 = TextPipeline.dedupClusters(ids2, e2).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("canonical_id")).toMap
     assert(lbl2(0L) == 0L && lbl2(1L) == 0L && lbl2(2L) == 0L)
     assert(lbl2(3L) == 3L && lbl2(4L) == 3L)
     assert(lbl2(5L) == 5L, "isolated vertex is its own component")
