@@ -1,7 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main (driver contract): run every registered query against
   * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
@@ -84,7 +86,12 @@ object Bench {
       .flatMap(field(_, "sentinel_before")).filter(_ > 0)
     val noisyWindow = baselineSentinel.exists(s => sentinelBefore > 1.5 * s)
 
+    // generated-class compiles inside the timed loop: a cache smaller than
+    // the loop's working set recompiles on every run
+    val (compiles0, compileNs0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
     val timed = RegistryRunner.run(spark, queries, "bench")(median)
+    val codegenCompiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+    val codegenCompileMs = (CodeGenerator.compileTime - compileNs0) / 1000000
 
     val sentinelAfter = sentinel()
     val contaminated = sentinelBefore > 0 && sentinelAfter > 2.0 * sentinelBefore
@@ -98,7 +105,8 @@ object Bench {
       s""""contaminated":$contaminated,"noisy_window":$noisyWindow,"sentinel_before":$sentinelBefore,"sentinel_after":$sentinelAfter,"shared_materialization_sec":$sharedMaterializationSec,""" +
       s""""cpus":${RegistryRunner.cpus},"parallelism":${spark.sparkContext.defaultParallelism},"shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
       s""""xmx_mb":${Runtime.getRuntime.maxMemory >> 20},"jvm":${str(System.getProperty("java.runtime.version"))},""" +
-      s""""baseline":${str(baselineSentinel.fold("none")(_ => "bench_full_latest.json"))}"""
+      s""""baseline":${str(baselineSentinel.fold("none")(_ => "bench_full_latest.json"))},""" +
+      s""""codegen_cache_entries":${spark.conf.get("spark.sql.codegen.cache.maxEntries")},"codegen_compiles":$codegenCompiles,"codegen_compile_ms":$codegenCompileMs"""
     // n_queries counts the entries in THIS json's queries map (the headline
     // line is a truncated view); n_total is the full run count.
     def toJson(rs: Seq[(String, Double)]): String = {

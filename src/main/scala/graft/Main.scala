@@ -127,14 +127,16 @@ object Main {
             coalesce(col("is_north_america"), lit(false)))
       case None => r.frames.withColumn("is_north_america", lit(false))
     }
-    framesNa
-      .withColumn("e", GeoFunctions.stEnvelope(col("geom")))
-      .withColumn("bb_xmin", col("e._1")).withColumn("bb_ymin", col("e._2"))
-      .withColumn("bb_xmax", col("e._3")).withColumn("bb_ymax", col("e._4"))
-      .drop("e")
-      .write.mode("overwrite").parquet(s"$outDir/frames")
-    r.framesBursts.write.mode("overwrite").parquet(s"$outDir/frames_bursts")
-    r.burstIdMap.write.mode("overwrite").parquet(s"$outDir/burst_id_map")
+    try {
+      framesNa
+        .withColumn("e", GeoFunctions.stEnvelope(col("geom")))
+        .withColumn("bb_xmin", col("e._1")).withColumn("bb_ymin", col("e._2"))
+        .withColumn("bb_xmax", col("e._3")).withColumn("bb_ymax", col("e._4"))
+        .drop("e")
+        .write.mode("overwrite").parquet(s"$outDir/frames")
+      r.framesBursts.write.mode("overwrite").parquet(s"$outDir/frames_bursts")
+      r.burstIdMap.write.mode("overwrite").parquet(s"$outDir/burst_id_map")
+    } finally r.unpersist()
   }
 
   /** Hard cap on rows printed by [[printJson]] — serving results are

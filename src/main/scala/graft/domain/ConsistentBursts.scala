@@ -1,6 +1,7 @@
 package graft.domain
 
-import java.time.LocalDate
+import java.time.{Instant, LocalDate}
+import java.time.temporal.ChronoUnit
 
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -54,22 +55,33 @@ object ConsistentBursts {
 
   /** Option-0 per frame (the selection the reference ships,
     * create_cslc_burst_catalog.py:290-311), with the per-(frame, date)
-    * earliest sensing time truncated to seconds attached. */
+    * earliest sensing time truncated to seconds attached for each kept
+    * date. One keyed pass: a frame's rows carry both the (burst, date) grid
+    * and the sensing times, so the option and its times come from the same
+    * group, and min(trunc(t)) = trunc(min(t)) lets the truncation follow
+    * the minimum. The input is read once; a separate time aggregate joined
+    * back per kept date would read it twice.
+    * Rows (frame_id, burst_id, date, sensing_time) → (frame_id,
+    * total_num_bursts, burst_id_list, sensing_time_list ascending). */
   def consistentSelection(bursts: DataFrame): DataFrame = {
-    val opts = missingDataOptions(
-      bursts.select(col("frame_id"), col("burst_id"), col("date")))
-      .filter(col("option_num") === 0)
-    val earliest = bursts
-      .groupBy(col("frame_id").as("e_fid"), col("date").as("e_date"))
-      .agg(date_trunc("second", min(col("sensing_time"))).as("sensing_time"))
-    opts.select(col("frame_id"), col("total_num_bursts"), col("burst_id_list"),
-        explode(col("date_list")).as("date_str"))
-      .join(earliest,
-        col("frame_id") === col("e_fid") &&
-          col("date_str") === col("e_date").cast("string"))
-      .drop("e_fid", "e_date")
-      .groupBy(col("frame_id"), col("total_num_bursts"), col("burst_id_list"))
-      .agg(array_sort(collect_list(col("sensing_time"))).as("sensing_time_list"))
+    val spark = bursts.sparkSession
+    import spark.implicits._
+    bursts.select(col("frame_id").cast("long"), col("burst_id").cast("string"),
+        col("date").cast("date"), col("sensing_time").cast("timestamp"))
+      .as[(Long, String, LocalDate, Instant)]
+      .groupByKey(_._1)
+      .flatMapGroups { (fid, rows) =>
+        val rs = rows.toSeq
+        val o = options(rs.map(r => (r._2, r._3))).head
+        // a kept date whose times are all null attaches no time, as a SQL
+        // min per date followed by collect_list (which skips nulls) does
+        val earliest = rs.filter(_._4 != null)
+          .groupMapReduce(_._3)(_._4)((a, b) => if (b.isBefore(a)) b else a)
+        val times = o.dates.flatMap(earliest.get)
+          .map(_.truncatedTo(ChronoUnit.SECONDS)).sorted
+        Iterator((fid, o.totalCells, o.burstIds, times))
+      }
+      .toDF("frame_id", "total_num_bursts", "burst_id_list", "sensing_time_list")
   }
 
   val queries: Seq[QueryDef] = Seq(

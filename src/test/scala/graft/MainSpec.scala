@@ -2,11 +2,12 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.domain.Catalog
+import graft.domain.{BurstCatalog, Catalog}
 import graft.functions.GeoFunctions
 import graft.plans.SpatialExpressions
 import graft.sources.Io
 import org.apache.spark.ListenerBusDrain
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
@@ -31,6 +32,17 @@ class MainSpec extends SparkSpec {
     }
     rows.toDF("OGC_FID", "burst_id", "relative_orbit_number", "subswath_name",
       "orbit_pass", "geom")
+  }
+
+  /** `create`'s inputs in a fresh temp dir: the grid and a land polygon
+    * over part of track 1. Returns (dir, burst map path, land file path). */
+  private def createInputs(prefix: String): (String, String, String) = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
+    grid().write.parquet(s"$tmp/burst_map")
+    val landFile = java.nio.file.Paths.get(s"$tmp/land.wkt")
+    java.nio.file.Files.writeString(landFile,
+      "POLYGON ((9 3.5, 14 3.5, 14 11.5, 9 11.5, 9 3.5))")
+    (tmp, s"$tmp/burst_map", landFile.toString)
   }
 
   private def capture(body: => Unit): Seq[String] = {
@@ -69,13 +81,9 @@ class MainSpec extends SparkSpec {
     * historical fact in which every burst of the first frame acquires on
     * two dates under two granules. */
   private lazy val served: Served = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cli-served").toString
-    grid().write.parquet(s"$tmp/burst_map")
-    val landFile = java.nio.file.Paths.get(s"$tmp/land.wkt")
-    java.nio.file.Files.writeString(landFile,
-      "POLYGON ((9 3.5, 14 3.5, 14 11.5, 9 11.5, 9 3.5))")
+    val (tmp, burstMap, land) = createInputs("graft-cli-served")
     val catDir = s"$tmp/catalog"
-    Main.run(spark, List("create", s"$tmp/burst_map", landFile.toString, catDir))
+    Main.run(spark, List("create", burstMap, land, catDir))
     val frames = spark.read.parquet(s"$catDir/frames")
     val fb = spark.read.parquet(s"$catDir/frames_bursts")
     val bim = spark.read.parquet(s"$catDir/burst_id_map")
@@ -153,12 +161,7 @@ class MainSpec extends SparkSpec {
   }
 
   test("create routes a multi-shape North-America boundary through the STRtree join") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cli-na").toString
-    val burstMapDir = s"$tmp/burst_map"
-    grid().write.parquet(burstMapDir)
-    val landFile = java.nio.file.Paths.get(s"$tmp/land.wkt")
-    java.nio.file.Files.writeString(landFile,
-      "POLYGON ((9 3.5, 14 3.5, 14 11.5, 9 11.5, 9 3.5))")
+    val (tmp, burstMapDir, land) = createInputs("graft-cli-na")
     // two disjoint shapes, one WKT per line (build_frame_db.py:653-655
     // loads a multi-shape NA boundary): one over track 1's lon band
     // (~10-13), one over track 2's (~20-23) but only low latitudes
@@ -167,8 +170,7 @@ class MainSpec extends SparkSpec {
       """POLYGON ((9 0, 14 0, 14 20, 9 20, 9 0))
         |POLYGON ((19 0, 24 0, 24 3, 19 3, 19 0))""".stripMargin)
     val catDir = s"$tmp/catalog"
-    Main.run(spark, List("create", burstMapDir, landFile.toString, catDir,
-      naFile.toString))
+    Main.run(spark, List("create", burstMapDir, land, catDir, naFile.toString))
     val frames = spark.read.parquet(s"$catDir/frames")
     // every track-1 frame intersects shape 1; track-2 frames only if their
     // bbox dips below lat 3 (burst rows start at y = 0.8) — both shapes
@@ -180,6 +182,53 @@ class MainSpec extends SparkSpec {
       .select($"fid").as[Int].collect().toSet
     assert(t1.nonEmpty && t2low.nonEmpty)
     assert(na == (t1 ++ t2low))
+  }
+
+  test("create frees what it persists") {
+    val (tmp, burstMap, land) = createInputs("graft-cli-persist")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Main.run(spark, List("create", burstMap, land, s"$tmp/catalog"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
+  test("a repeated catalog build and serve compiles no generated class") {
+    // `create`, the burst catalog, the frame-to-burst document and one
+    // request of each CLI kind: about 180 generated classes, so with
+    // Spark's default cache of 100 (an LRU) every repeat recompiled them
+    val (tmp, burstMap, land) = createInputs("graft-cli-compiles")
+    val survey = java.nio.file.Paths.get(s"$tmp/survey.csv")
+    java.nio.file.Files.writeString(survey, (for {
+      track <- Seq(1, 2); burst <- 1 to 18; iw <- 1 to 3; day <- Seq("05", "17", "29")
+    } yield {
+      val g = f"OPERA_L2_CSLC-S1_T$track%03d-${(track - 1) * 18 + burst}%06d-IW$iw%d_" +
+        s"202401${day}T060000Z_20240201T000000Z_S1A_VV_v1.0"
+      s"$g,2024-01-$day 06:00:00,2024-02-01 00:00:00,1"
+    }).mkString("Granule ID,Temporal Time,Revision Time,revision-id\n", "\n", "\n"))
+    val c = served
+    def compiles(out: String): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val cat = s"$tmp/$out"
+      Main.run(spark, List("create", burstMap, land, cat))
+      val frames = spark.read.parquet(s"$cat/frames")
+      val fb = spark.read.parquet(s"$cat/frames_bursts")
+      val bim = spark.read.parquet(s"$cat/burst_id_map")
+      assert(BurstCatalog.makeBurstCatalog(spark, survey.toString, bim, fb, None,
+        Map("version" -> "test")).contains("sensing_time_list"))
+      val zip = s"$cat/f2b.json.zip"
+      Io.writeJsonZip(zip, "f2b.json", Io.frameToBurstJson(
+        Catalog.frameSummaries(frames, fb, bim), Map("version" -> "test")))
+      capture {
+        Main.run(spark, List("lookup", cat, c.fid.toString))
+        Main.run(spark, List("intersect", cat, "--bbox", "10.5,3.9,11.5,4.1"))
+        Main.run(spark, List("intersect", cat, "--wkt", Catalog.bboxWkt(10.5, 3.9, 11.5, 4.1)))
+        Main.run(spark, List("fetch-granules", c.bursts, zip, c.fid.toString,
+          "2023-01-01 00:00:00", "2024-12-31 00:00:00"))
+      }
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = compiles("first")
+    val second = compiles("second")
+    assert(second == 0, s"the repeat compiled $second classes (the first pass $first)")
   }
 
   test("CLI lookup/intersect agree with direct Catalog calls on the sf0.01 build") {

@@ -109,6 +109,11 @@ def main():
             imps.append((a / b, a, b, q))
     print(f"old: {old['value']:.1f} s / {len(oq)} queries   "
           f"new: {new['value']:.1f} s / {len(nq)} queries")
+    # generated-class compiles in the timed loop (captures since the
+    # codegen cache was sized; older ones lack the fields)
+    for key in ("codegen_compiles", "codegen_compile_ms"):
+        if key in old and key in new:
+            print(f"{key}: {old[key]} -> {new[key]}")
     if added:
         t = sum(nq[q] for q in added)
         print(f"added ({len(added)}, {t:.1f} s): {', '.join(added)}")
