@@ -4,7 +4,6 @@ import java.time.Instant
 
 import graft.QueryDef
 import graft.functions.GeoFunctions
-import graft.sources.XmlSource
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -26,6 +25,13 @@ object BurstIngest {
   final case class IngestedBurst(granule: String, burst_id_jpl: String,
       sensing_time_us: Long, wkt: String)
 
+  /** Annotation timestamp (`2020-01-01T00:00:00.123456`, no zone) as UTC
+    * epoch microseconds; the sub-second digits are kept. */
+  private[graft] def parseTimeUs(s: String): Long = {
+    val inst = Instant.parse(if (s.endsWith("Z")) s else s + "Z")
+    inst.getEpochSecond * 1000000L + inst.getNano / 1000L
+  }
+
   /** (granuleFile, annotationXml, manifestXml) → one row per burst. */
   def ingest(files: Dataset[(String, String, String)]): Dataset[IngestedBurst] = {
     val spark = files.sparkSession
@@ -36,7 +42,7 @@ object BurstIngest {
 
       // swath + ANX from the annotation (parse_bursts.py:269-291)
       val swath = (ann \ "adsHeader" \ "swath").text.trim // e.g. IW1
-      val anxUs = XmlSource.parseTimeUs(
+      val anxUs = parseTimeUs(
         (ann \ "imageAnnotation" \ "imageInformation" \ "ascendingNodeTime").text.trim)
 
       // start/stop relative orbit from the manifest (get_start_end_track,
@@ -71,7 +77,7 @@ object BurstIngest {
       // one burst per <burst> element, paired with its boundary; the id is
       // the Eq. 9-89/9-91 physics incl. equator-crossing track adjustment
       val sensing = (ann \ "swathTiming" \ "burstList" \ "burst")
-        .map(b => XmlSource.parseTimeUs((b \ "sensingTime").text.trim))
+        .map(b => parseTimeUs((b \ "sensingTime").text.trim))
       val stem = file.split('/').last.stripSuffix(".SAFE")
       // zip would silently truncate on a malformed granule, dropping bursts
       require(sensing.length == polys.length,

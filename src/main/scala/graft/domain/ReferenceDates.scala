@@ -16,8 +16,7 @@ import org.apache.spark.sql.functions._
   * Not expressible as a window frame (the predicate depends on how many
   * references were already emitted) → `groupByKey.flatMapGroups` over the
   * sorted per-key iterator (SURVEY.md W5/D5). State is key-local, so the
-  * operator scales horizontally; the streaming analogue is
-  * `flatMapGroupsWithState` (see graft.streaming).
+  * operator scales horizontally.
   */
 object ReferenceDates {
 

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.{Geometry, GeometryFactory, Polygon, PrecisionModel}
 import org.locationtech.jts.io.{WKBReader, WKBWriter, WKTReader, WKTWriter}
 import org.locationtech.jts.operation.union.CascadedPolygonUnion
-import org.locationtech.jts.simplify.TopologyPreservingSimplifier
 
 import scala.jdk.CollectionConverters._
 
@@ -16,7 +15,7 @@ import scala.jdk.CollectionConverters._
   * Design split:
   *   - pure-arithmetic pieces (UTM zone, EPSG pick, bbox snap) are Column
   *     expressions → codegen'd, usable in pushdown-friendly predicates;
-  *   - topology pieces (intersects, union, simplify, dateline split) are JTS
+  *   - topology pieces (intersects, union, dateline split) are JTS
   *     UDFs over WKT — used *after* a bbox prefilter so the expensive exact
   *     predicate only sees candidates (the two-stage plan the reference
   *     hand-writes at query_frame_db.py:85-121).
@@ -193,9 +192,6 @@ object GeoFunctions {
     (e.getMinX, e.getMinY, e.getMaxX, e.getMaxY)
   }
 
-  val stSimplify = udf((a: String, tol: Double) =>
-    toWkt(TopologyPreservingSimplifier.simplify(parseWkt(a), tol)))
-
   /** Project a 4326 WKT to the given UTM/polar EPSG (vertex-wise). */
   val stProject = udf { (wkt: String, epsg: Int) =>
     val g = parseWkt(wkt)
@@ -255,8 +251,6 @@ object GeoFunctions {
   /** Buffer holds WKB blobs; finish runs CascadedPolygonUnion with a
     * buffer(0) validity guard (SURVEY.md §7.5 risk 2). */
   class GeomUnionAgg extends Aggregator[String, Seq[Array[Byte]], String] {
-    @transient private lazy val wkbWriter = new WKBWriter()
-    @transient private lazy val wkbReader = new WKBReader(gf)
     override def zero: Seq[Array[Byte]] = Nil
     override def reduce(b: Seq[Array[Byte]], a: String): Seq[Array[Byte]] =
       if (a == null) b else b :+ new WKBWriter().write(parseWkt(a))

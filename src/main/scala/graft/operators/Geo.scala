@@ -347,9 +347,7 @@ object Geo {
     // MultiPolygon parts both fall out of the edge census), envelope =
     // cell min/max — and shoelace/segment sums over integer coordinates
     // are exact in double, so the hash pins the whole WKT→union→area/
-    // length/envelope path bit-for-bit. (stSimplify, formerly a rows-only
-    // column here, is covered by GeoFunctionsSpec + the K5 GeoJSON sink —
-    // its WKT string length has no closed form.)
+    // length/envelope path bit-for-bit.
     QueryDef.sql(
       "q_geo_union_pipeline",
       """WITH sq AS (

@@ -55,8 +55,9 @@ object SpatialJoin {
     }
   }
 
-  /** Test hook: how many STRtree builds this JVM has performed. */
-  def treeBuildCount: Long = TreeCache.builds.get()
+  /** How many STRtree builds this JVM has performed; SourcesSpec reads it
+    * to pin one build per executor, however many tasks probe the index. */
+  private[graft] def treeBuildCount: Long = TreeCache.builds.get()
 
   /** big(id: long, wkt: string) ⨝ small Seq[(polyId, wkt)] →
     * (id, poly_id) for every pair satisfying the predicate.

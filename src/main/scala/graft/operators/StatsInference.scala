@@ -10,8 +10,6 @@ import org.apache.spark.sql.functions._
   * generalization Kruskal-Wallis H, and the paired Wilcoxon signed-rank
   * test (reference analogy: the summary-stats family of
   * `build_frame_db.py:233-270` read out as decision statistics).
-  * `streaming/Sessions.groupMomentsStream` is the continuous twin of
-  * the ANOVA moment reduction.
   *
   * Determinism contract (shared with Stats.scala): every sufficient
   * statistic is an exact integer reduction — BIGINT first moments,

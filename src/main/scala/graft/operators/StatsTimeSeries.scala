@@ -15,11 +15,10 @@ object StatsTimeSeries {
 
   /** One additive Holt-Winters update with α = β = γ = 1/2 as exact
     * binary halving (the holtStep discipline — halving a < 2⁵³ integer in
-    * a double is exact and FLOOR is negative-safe, so batch, stream, and
-    * the recursive-CTE oracle replay the identical fold):
+    * a double is exact and FLOOR is negative-safe, so the q_holt_winters
+    * fold and its recursive-CTE oracle replay the identical update):
     * l' = ⌊(x − s + l + b)/2⌋, b' = ⌊(l' − l + b)/2⌋,
-    * s' = ⌊(x − l' + s)/2⌋. Shared by q_holt_winters and
-    * streaming/Sessions.holtWintersStream. */
+    * s' = ⌊(x − l' + s)/2⌋. */
   def hwStep(l: Long, b: Long, s: Long, xc: Long): (Long, Long, Long) = {
     val l2 = math.floor((xc - s + l + b) / 2.0).toLong
     val b2 = math.floor((l2 - l + b) / 2.0).toLong

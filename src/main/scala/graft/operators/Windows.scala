@@ -16,18 +16,16 @@ import org.apache.spark.sql.functions._
 object Windows {
 
   /** One EWMA step (α = 16/64): returns (next smoothed value, spiked?)
-    * given the prior smoothed value. THE single definition of the
-    * recursion — the batch fold (q_ewma) and the streaming form
-    * (streaming.Sessions.ewmaStream) both call it, so the stream==batch
-    * contract cannot drift; callers handle first-row seeding (s₁ = x₁). */
-  def ewmaStep(s: Long, x: Long): (Long, Boolean) =
+    * given the prior smoothed value. The q_ewma fold calls it once per
+    * row; the caller seeds the first row (s₁ = x₁). */
+  private def ewmaStep(s: Long, x: Long): (Long, Boolean) =
     (math.floor((16.0 * x + 48.0 * s) / 64.0).toLong, math.abs(x - s) > 500)
 
   /** One Holt (double exponential smoothing) step, α = β = 1/2 in exact
     * binary halving: lₜ = ⌊(xₜ + lₜ₋₁ + bₜ₋₁)/2⌋, bₜ = ⌊(lₜ − lₜ₋₁ + bₜ₋₁)/2⌋.
     * Halving a < 2⁵³ integer in a double is exact and FLOOR is negative-
     * safe, so the DuckDB recursive CTE replays the fold bit-for-bit.
-    * THE single definition of the recursion (q_ewma discipline). */
+    * The q_holt_linear fold calls it once per row. */
   def holtStep(l: Long, b: Long, x: Long): (Long, Long) = {
     val l2 = math.floor((x + l + b) / 2.0).toLong
     (l2, math.floor((l2 - l + b) / 2.0).toLong)

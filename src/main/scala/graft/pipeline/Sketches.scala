@@ -46,10 +46,10 @@ object Sketches {
   private def cmA(depth: Int) = (0 until depth).map(i => 104729L * (i + 1) + 12345L)
   private def cmB(depth: Int) = (0 until depth).map(i => 7919L * (i + 1) + 271L)
 
-  /** Count-Min bucket of `key` for hash row i. Package-visible so the
-    * streaming form (streaming/Sessions.countMinStream) hashes identically
-    * to the batch build — a diverged hash would make stream==batch fail. */
-  private[graft] def cmBucket(key: Column, i: Column, depth: Int, width: Int): Column = {
+  /** Count-Min bucket of `key` for hash row i: the one hash both the
+    * sketch build and its point query use, so they cannot diverge
+    * ([[cmBucketSql]] is the oracle's copy). */
+  private def cmBucket(key: Column, i: Column, depth: Int, width: Int): Column = {
     // coefficient lookup by row id, as a CASE chain (fixed tiny depth)
     val as = cmA(depth); val bs = cmB(depth)
     val a = as.zipWithIndex.tail.foldLeft(when(i === 0, as.head)) {

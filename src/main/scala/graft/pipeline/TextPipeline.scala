@@ -1,8 +1,9 @@
 package graft.pipeline
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Training-data text pipeline: deduplication (exact, MinHash+LSH, SimHash,
   * n-gram Jaccard), language ID, quality scoring, token counting, and
@@ -144,13 +145,12 @@ object TextPipeline {
   /** Row-LOCAL MinHash signature (doc_id, h0..h15): the whole signature
     * computes inside one row — grams as a transform over positions, hm via
     * the same codegen'd gramHash5, h_i = array_min over (hm·a_i+b_i) mod P
-    * — so it runs on a STREAMING frame (no aggregation, which Append-mode
-    * streams cannot do pre-watermark) and on any batch frame without the
-    * shuffle [[signaturesOf]] pays. min is multiplicity-invariant, so the
-    * raw positional gram array gives bit-identical signatures to the
-    * distinct-gram aggregate (StreamingSpec pins stream == batch). Batch
-    * pipelines should still prefer the memoized [[minhashSignatures]]
-    * table, which four queries share. */
+    * — so [[lshEdgesStream]] can run it on a streaming frame (no
+    * aggregation, which Append-mode streams cannot do pre-watermark). min
+    * is multiplicity-invariant, so the raw positional gram array gives
+    * signatures bit-identical to the distinct-gram aggregate (StreamingSpec
+    * pins the two equal). Batch queries read the memoized
+    * [[minhashSignatures]] table instead, which four of them share. */
   def rowLocalSignatures(docs: DataFrame): DataFrame = {
     val t = normText(col("text"))
     val gh = transform(sequence(lit(1), length(col("t")) - 4),
@@ -458,11 +458,47 @@ object TextPipeline {
        |  CAST(SUM(doc_id) AS BIGINT) AS sum_members
        |FROM canon GROUP BY canonical_id ORDER BY canonical_id""".stripMargin
 
+  final case class LshEdge(b: Int, sig_key: String, doc1: Long, doc2: Long)
+
+  /** Streaming MinHash-LSH near-dup candidate edges: documents stream in,
+    * each computes its 16-hash signature ROW-LOCALLY
+    * ([[rowLocalSignatures]] — no aggregation, so it is legal in an
+    * Append-mode stream and bit-identical to the batch signature), bands
+    * explode to (b, sig_key) keys, and per band bucket the state is ONE
+    * long — the minimum doc id seen — emitting STAR edges (hub, member)
+    * exactly like the batch lshClusterEdges reduction: per-bucket state and
+    * per-arrival output are O(1) even when a hot bucket absorbs millions of
+    * duplicates, and connected components over the streamed star edges
+    * equal components over the batch edges (StreamingSpec proves it across
+    * micro-batches). When a later batch brings a new lower hub, the old hub
+    * is re-linked to it, preserving connectivity across any arrival order. */
+  def lshEdgesStream(docs: DataFrame,
+      bands: Int = LshBands,
+      rowsPerBand: Int = LshRowsPerBand): Dataset[LshEdge] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val sig = rowLocalSignatures(docs)
+    bandRows(sig, bands, rowsPerBand)
+      .select(col("b").cast("int"), col("sig_key"), col("doc_id").cast("long"))
+      .as[(Int, String, Long)]
+      .groupByKey { case (b, k, _) => (b, k) }
+      .flatMapGroupsWithState[Long, LshEdge](
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        case ((b, k), rows, state: GroupState[Long]) =>
+          val ids = rows.map(_._3).toArray.distinct.sorted
+          val prev = state.getOption
+          val hub = prev.fold(ids.head)(m => math.min(m, ids.head))
+          state.update(hub)
+          (ids.iterator.filter(_ != hub).map(d => LshEdge(b, k, hub, d)) ++
+            prev.filter(_ != hub).iterator.map(m => LshEdge(b, k, hub, m)))
+      }
+  }
+
   /** Two-drop incremental ingest for q_dedup_incremental: stage the corpus
-    * as two file drops and run [[graft.streaming.Sessions.lshEdgesStream]]
-    * to completion once per drop against one checkpoint, exactly like a
-    * daily ingest job restarted on each arrival. Returns the cumulative
-    * (doc1, doc2) edge table. Fresh temp dirs per invocation (under the
+    * as two file drops and run [[lshEdgesStream]] to completion once per
+    * drop against one checkpoint, exactly like a daily ingest job restarted
+    * on each arrival. Returns the cumulative (doc1, doc2) edge table.
+    * Fresh temp dirs per invocation (under the
     * shutdown-hook-cleaned root, so the lazily-read result outlives the
     * call); the streaming runs execute eagerly in here — that cost IS the
     * operator, so Bench bills it. */
@@ -495,7 +531,7 @@ object TextPipeline {
     def runDrop(drop: DataFrame): Unit = {
       drop.repartition(dropFiles).write.mode("append").parquet(inDir)
       val in = ss.readStream.schema(s.read.parquet(inDir).schema).parquet(inDir)
-      graft.streaming.Sessions.lshEdgesStream(in)
+      lshEdgesStream(in)
         .writeStream.outputMode("append").format("parquet")
         .option("path", outDir).option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start().awaitTermination()

@@ -58,18 +58,6 @@ object EmbeddedDb {
     s.read.jdbc(url(path), table, props)
   }
 
-  /** The reference's minimal-db projection (build_frame_db.py:453-480):
-    * id, name, epsg, and the bbox snapped to INTEGER coordinates. Expects
-    * columns (fid, burst_id_jpl, epsg, xmin, ymin, xmax, ymax); floors the
-    * mins and ceils the maxes so the int bbox still covers the geometry. */
-  def minimalProjection(df: DataFrame): DataFrame =
-    df.select(col("fid").cast("long"), col("burst_id_jpl"),
-      col("epsg").cast("long"),
-      floor(col("xmin")).cast("long").as("xmin"),
-      floor(col("ymin")).cast("long").as("ymin"),
-      ceil(col("xmax")).cast("long").as("xmax"),
-      ceil(col("ymax")).cast("long").as("ymax"))
-
   /** Oracle-gated roundtrip: project supplier, write it through the
     * embedded-DB sink, read it back via JDBC, and return it ordered. The
     * DuckDB oracle computes the same projection straight from parquet, so a

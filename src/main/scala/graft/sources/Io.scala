@@ -4,21 +4,17 @@ import java.io.{ByteArrayOutputStream, FileInputStream, FileOutputStream}
 import java.nio.charset.StandardCharsets
 import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
 
-import graft.functions.GeoFunctions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Sources/sinks beyond plain parquet/CSV (SURVEY.md §2.1).
   *
   *   - Zipped single-entry JSON (S7, utils.py:11-24): driver-side util —
   *     these are small catalog artifacts, not distributed datasets.
-  *   - Nested JSON documents (K4): the frame-to-burst / burst-to-frame
-  *     closures (README.md:98-139). Built distributed (`to_json(struct)`
-  *     per frame), assembled driver-side only at the final ~46k-row document
+  *   - Nested JSON document (K4): the frame-to-burst closure
+  *     (README.md:98-139). Built distributed (`to_json(struct)` per
+  *     frame), assembled driver-side only at the final ~46k-row document
   *     boundary — the one place a collect is correct (§7.5 risk 6).
-  *   - GeoJSON FeatureCollection scan (S6): `spark.read.json(multiLine)` +
-  *     coordinate-array → WKT conversion (dims are small; distributed read
-  *     still used so 100 TB of features would also work).
   */
 object Io {
 
@@ -46,19 +42,7 @@ object Io {
     } finally zis.close()
   }
 
-  // ---------------- columnar interchange beyond parquet
-
-  /** ORC sink/scan (the other columnar interchange format a lakehouse
-    * deployment meets; Spark ships the reader/writer natively). Same
-    * distributed path as the parquet sink — predicate pushdown and
-    * column pruning work identically (IoSpec pins the pushdown). */
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
-
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
-  // ---------------- nested JSON documents (K4 / F11 shapes)
+  // ---------------- nested JSON document (K4 / F11 shape)
 
   /** JSON string escape (backslash, quote, all control chars) for the
     * hand-assembled document keys/metadata — an id or metadata value
@@ -89,121 +73,7 @@ object Io {
     s"""{"data": $data, "metadata": ${metaJson(metadata)}}"""
   }
 
-  /** burst-to-frame inverse closure (build_frame_db.py:526-545). */
-  def burstToFrameJson(framesBursts: DataFrame, metadata: Map[String, String]): String = {
-    val rows = framesBursts
-      .groupBy(col("burst_id_jpl"))
-      .agg(array_sort(collect_list(col("frame_fid"))).as("frame_ids"))
-      .select(col("burst_id_jpl"), to_json(struct(col("frame_ids"))).as("j"))
-      .orderBy(col("burst_id_jpl"))
-      .collect()
-    val data = rows.map(r => s"${jsonEscape(r.getAs[String]("burst_id_jpl"))}: ${r.getAs[String]("j")}")
-      .mkString("{", ", ", "}")
-    s"""{"data": $data, "metadata": ${metaJson(metadata)}}"""
-  }
-
   private def metaJson(m: Map[String, String]): String =
     m.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${jsonEscape(k)}: ${jsonEscape(v)}" }.mkString("{", ", ", "}")
-
-  // ---------------- GeoJSON FeatureCollection source (S6)
-
-  /** Read a GeoJSON FeatureCollection into (properties..., wkt). Supports
-    * Polygon and MultiPolygon geometries. */
-  def readGeoJson(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("multiLine", "true").json(path)
-    val features = raw.select(explode(col("features")).as("f"))
-      .select(col("f.properties").as("properties"),
-        col("f.geometry.type").as("gtype"),
-        to_json(col("f.geometry.coordinates")).as("coords"))
-    features.withColumn("wkt", geoJsonToWkt(col("gtype"), col("coords")))
-      .drop("gtype", "coords")
-  }
-
-  /** (type, coordinates-as-json) → WKT. */
-  val geoJsonToWkt = udf { (gtype: String, coordsJson: String) =>
-    // tiny recursive bracket parser for nested double arrays. Mixed-depth
-    // columns (Polygon 3-deep vs MultiPolygon 4-deep) make Spark's JSON
-    // inference stringify subtrees — quoted tokens holding arrays are
-    // unescaped and parsed recursively.
-    def parseNums(s: String): Any = {
-      def arr(i0: Int): (Seq[Any], Int) = {
-        var i = i0 + 1
-        val out = Seq.newBuilder[Any]
-        while (s(i) != ']') {
-          if (s(i) == '[') { val (a, ni) = arr(i); out += a; i = ni }
-          else if (s(i) == ',' || s(i) == ' ') i += 1
-          else if (s(i) == '"') {
-            val e = s.indexOf('"', i + 1)
-            val inner = s.substring(i + 1, e).replace("\\\"", "\"")
-            out += (if (inner.trim.startsWith("[")) parseNums(inner)
-                    else inner.toDouble)
-            i = e + 1
-          } else {
-            val e = math.min(
-              Seq(s.indexOf(',', i), s.indexOf(']', i)).filter(_ >= 0).min, s.length)
-            out += s.substring(i, e).toDouble
-            i = e
-          }
-        }
-        (out.result(), i + 1)
-      }
-      arr(s.indexOf('['))._1
-    }
-    def ring(r: Seq[Any]): String = r.map {
-      case Seq(x: Double, y: Double, _*) => s"$x $y"
-      case other => throw new IllegalArgumentException(s"bad ring point $other")
-    }.mkString("(", ", ", ")")
-    def poly(p: Seq[Any]): String =
-      p.map { case r: Seq[Any @unchecked] => ring(r) }.mkString("(", ", ", ")")
-    val parsed = parseNums(coordsJson).asInstanceOf[Seq[Any]]
-    gtype match {
-      case "Polygon" => s"POLYGON ${poly(parsed)}"
-      case "MultiPolygon" =>
-        s"MULTIPOLYGON ${parsed.map { case p: Seq[Any @unchecked] => poly(p) }
-          .mkString("(", ", ", ")")}"
-      case other => throw new IllegalArgumentException(s"unsupported geometry $other")
-    }
-  }
-
-  /** K5: simplified-GeoJSON export (create_2d_geojsons.py:26-92): simplify
-    * each WKT and emit a FeatureCollection string (driver-side assembly at
-    * the small-artifact boundary). */
-  def toSimplifiedGeoJson(df: DataFrame, wktCol: String, idCol: String,
-      tolerance: Double): String = {
-    val rows = df.select(col(idCol).cast("string").as("id"),
-        GeoFunctions.stSimplify(col(wktCol), lit(tolerance)).as("wkt"))
-      .orderBy(col("id"))
-      .collect()
-    val features = rows.map { r =>
-      val g = GeoFunctions.parseWkt(r.getAs[String]("wkt"))
-      val coords = geomToGeoJsonCoords(g)
-      s"""{"type": "Feature", "properties": {"id": ${jsonEscape(r.getAs[String]("id"))}}, """ +
-        s""""geometry": {"type": "${geoJsonType(g)}", "coordinates": $coords}}"""
-    }.mkString("[", ", ", "]")
-    s"""{"type": "FeatureCollection", "features": $features}"""
-  }
-
-  private def geoJsonType(g: org.locationtech.jts.geom.Geometry): String =
-    g.getGeometryType match {
-      case "Polygon" => "Polygon"
-      case "MultiPolygon" => "MultiPolygon"
-      case other => throw new IllegalArgumentException(s"unsupported $other")
-    }
-
-  private def geomToGeoJsonCoords(g: org.locationtech.jts.geom.Geometry): String = {
-    import org.locationtech.jts.geom.Polygon
-    def ring(r: org.locationtech.jts.geom.LineString): String =
-      r.getCoordinates.map(c => s"[${c.x}, ${c.y}]").mkString("[", ", ", "]")
-    def poly(p: Polygon): String =
-      (Seq(ring(p.getExteriorRing)) ++
-        (0 until p.getNumInteriorRing).map(i => ring(p.getInteriorRingN(i))))
-        .mkString("[", ", ", "]")
-    g match {
-      case p: Polygon => poly(p)
-      case mp =>
-        (0 until mp.getNumGeometries).map(i => poly(mp.getGeometryN(i).asInstanceOf[Polygon]))
-          .mkString("[", ", ", "]")
-    }
-  }
 }

@@ -37,16 +37,6 @@ class EmbeddedDbSpec extends SparkSpec {
     assert(back == Seq((2L, "b"), (3L, "c")))
   }
 
-  test("minimal projection snaps bbox to covering integers (floor mins, ceil maxes)") {
-    val df = Seq((7L, "t001_000007_iw1", 32610, -122.6, 36.2, -121.4, 38.9))
-      .toDF("fid", "burst_id_jpl", "epsg", "xmin", "ymin", "xmax", "ymax")
-    val m = EmbeddedDb.minimalProjection(df)
-      .as[(Long, String, Long, Long, Long, Long, Long)].collect().head
-    assert(m == ((7L, "t001_000007_iw1", 32610L, -123L, 36L, -121L, 39L)))
-    // int bbox must cover the original
-    assert(m._4 <= -122.6 && m._5 <= 36.2 && m._6 >= -121.4 && m._7 >= 38.9)
-  }
-
   test("multiple tables live in one artifact, like the reference's sqlite file") {
     val db = tmpDb("db3")
     EmbeddedDb.writeTable(Seq((1L, 10L)).toDF("fid", "frame"), db, "frames")

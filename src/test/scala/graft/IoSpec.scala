@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import graft.sources.Io
-import org.apache.spark.sql.functions._
 
 class IoSpec extends SparkSpec {
   import spark.implicits._
@@ -32,75 +31,20 @@ class IoSpec extends SparkSpec {
   }
 
   test("JSON documents escape quotes/backslashes/control chars in ids and metadata") {
-    val fb = Seq((1, """id"with\quote"""), (2, "tab\there"))
-      .toDF("frame_fid", "burst_id_jpl")
-    val doc = Io.burstToFrameJson(fb, Map("note" -> "line1\nline2 \"q\""))
+    val frames = Seq(
+      ("""id"with\quote""", 32631, false, false, 0L, 0L, 1L, 1L, Seq("b\"1")),
+      ("tab\there", 32632, true, false, 0L, 0L, 1L, 1L, Seq.empty[String]))
+      .toDF("fid", "epsg", "is_land", "is_north_america",
+        "xmin", "ymin", "xmax", "ymax", "burst_ids")
+    val doc = Io.frameToBurstJson(frames, Map("note" -> "line1\nline2 \"q\""))
     // must parse as valid JSON despite the hostile strings
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val tree = om.readTree(doc)
     assert(tree.get("data").has("""id"with\quote"""))
     assert(tree.get("data").has("tab\there"))
+    assert(tree.get("data").get("""id"with\quote""").get("burst_ids").get(0)
+      .asText() == "b\"1")
     assert(tree.get("metadata").get("note").asText() == "line1\nline2 \"q\"")
-  }
-
-  test("burst-to-frame inverse closure") {
-    val fb = Seq((1, "t001_000001_iw1"), (2, "t001_000001_iw1"), (1, "t001_000002_iw1"))
-      .toDF("frame_fid", "burst_id_jpl")
-    val doc = Io.burstToFrameJson(fb, Map("version" -> "x"))
-    val parsed = spark.read.json(Seq(doc).toDS())
-    assert(parsed.select("data.t001_000001_iw1.frame_ids")
-      .as[Seq[Long]].head() == Seq(1L, 2L))
-  }
-
-  test("GeoJSON FeatureCollection source → WKT") {
-    val tmp = Files.createTempDirectory("graft-geojson").toString
-    val path = s"$tmp/land.geojson"
-    val geojson =
-      """{"type": "FeatureCollection", "features": [
-        |  {"type": "Feature", "properties": {"name": "a"},
-        |   "geometry": {"type": "Polygon",
-        |     "coordinates": [[[0, 0], [2, 0], [2, 2], [0, 2], [0, 0]]]}},
-        |  {"type": "Feature", "properties": {"name": "b"},
-        |   "geometry": {"type": "MultiPolygon",
-        |     "coordinates": [[[[5, 5], [6, 5], [6, 6], [5, 6], [5, 5]]]]}}
-        |]}""".stripMargin
-    Files.writeString(java.nio.file.Paths.get(path), geojson)
-    val df = Io.readGeoJson(spark, path)
-    val wkts = df.select($"properties.name", $"wkt").as[(String, String)]
-      .collect().toMap
-    assert(wkts("a").startsWith("POLYGON"))
-    assert(wkts("b").startsWith("MULTIPOLYGON"))
-    import graft.functions.GeoFunctions
-    assert(GeoFunctions.parseWkt(wkts("a")).getArea == 4.0)
-    assert(GeoFunctions.parseWkt(wkts("b")).getArea == 1.0)
-  }
-
-  test("GeoJSON polygon with a hole round-trips with correct area") {
-    val tmp = Files.createTempDirectory("graft-geojson-hole").toString
-    val geojson =
-      """{"type": "FeatureCollection", "features": [
-        |  {"type": "Feature", "properties": {"name": "donut"},
-        |   "geometry": {"type": "Polygon", "coordinates": [
-        |     [[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]],
-        |     [[4, 4], [6, 4], [6, 6], [4, 6], [4, 4]]]}}
-        |]}""".stripMargin
-    val path = s"$tmp/donut.geojson"
-    Files.writeString(java.nio.file.Paths.get(path), geojson)
-    val wkt = Io.readGeoJson(spark, path).select($"wkt").as[String].head()
-    assert(graft.functions.GeoFunctions.parseWkt(wkt).getArea == 96.0) // 100 − 4
-  }
-
-  test("simplified GeoJSON export round-trips through the reader") {
-    val tmp = Files.createTempDirectory("graft-geojson2").toString
-    val df = Seq((1, "POLYGON ((0 0, 1 0, 2 0, 2 2, 0 2, 0 0))"))
-      .toDF("fid", "geom")
-    val out = Io.toSimplifiedGeoJson(df, "geom", "fid", tolerance = 0.5)
-    val path = s"$tmp/out.geojson"
-    Files.writeString(java.nio.file.Paths.get(path), out)
-    val back = Io.readGeoJson(spark, path)
-    val wkt = back.select($"wkt").as[String].head()
-    // collinear vertex (1 0) simplified away; area preserved
-    assert(graft.functions.GeoFunctions.parseWkt(wkt).getArea == 4.0)
   }
 
   test("parquet schema evolution: mergeSchema unions old and new columns") {
@@ -117,23 +61,5 @@ class IoSpec extends SparkSpec {
       .select($"id", $"s", $"extra").as[(Long, String, Option[Long])].collect()
     assert(rows.toSeq == Seq((1L, "a", None), (2L, "b", None),
       (3L, "c", Some(30L)), (4L, "d", Some(40L))))
-  }
-
-  test("ORC sink/scan round-trip preserves rows and pushes predicates") {
-    val tmp = Files.createTempDirectory("graft-orc").toString
-    val src = Tables.orders(spark, sf())
-    Io.writeOrc(src, s"$tmp/orders.orc")
-    val back = Io.readOrc(spark, s"$tmp/orders.orc")
-    assert(back.count() == src.count())
-    // values survive bit-for-bit (checksum over a stable projection)
-    def sig(df: org.apache.spark.sql.DataFrame) =
-      df.select($"o_orderkey", $"o_totalprice").orderBy($"o_orderkey")
-        .agg(sum(hash($"o_orderkey", $"o_totalprice").cast("long"))).as[Long].head()
-    assert(sig(back) == sig(src))
-    // the scan prunes columns and pushes the key predicate like parquet
-    val plan = back.filter($"o_orderkey" === 1024L).select($"o_orderkey")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [") && plan.contains("o_orderkey"),
-      s"ORC pushdown missing:\n$plan")
   }
 }

@@ -1,10 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import graft.domain.BurstId
 import graft.operators.SpatialJoin
-import graft.sources.XmlSource
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -34,39 +33,6 @@ class SourcesSpec extends SparkSpec {
       .option("delimiter", ";").csv(s"$tmp/out/*.csv")
     assert(declared.count() == inferred.count() && declared.count() > 0)
     assert(declared.schema("event_id").dataType == LongType)
-  }
-
-  test("XML ingest: bursts + geolocation grid (S9)") {
-    val xml =
-      """<product>
-        |  <adsHeader><swath>IW2</swath></adsHeader>
-        |  <swathTiming><burstList count="2">
-        |    <burst><sensingTime>2020-01-01T00:00:01.500000</sensingTime>
-        |      <firstValidSample>10 10 10</firstValidSample></burst>
-        |    <burst><sensingTime>2020-01-01T00:00:04.258273</sensingTime>
-        |      <firstValidSample>12 12</firstValidSample></burst>
-        |  </burstList></swathTiming>
-        |  <geolocationGrid><geolocationGridPointList count="2">
-        |    <geolocationGridPoint><line>0</line><pixel>0</pixel>
-        |      <latitude>41.5</latitude><longitude>2.25</longitude></geolocationGridPoint>
-        |    <geolocationGridPoint><line>0</line><pixel>100</pixel>
-        |      <latitude>41.6</latitude><longitude>2.35</longitude></geolocationGridPoint>
-        |  </geolocationGridPointList></geolocationGrid>
-        |</product>""".stripMargin
-    val ds = Seq(("f1.xml", xml)).toDS()
-    val bursts = XmlSource.parseBursts(ds).collect()
-    assert(bursts.length == 2)
-    assert(bursts.forall(_.swath == "IW2"))
-    assert(bursts(0).firstValidSample == 10)
-    assert(bursts(1).sensingTimeUs - bursts(0).sensingTimeUs == 2758273L)
-    val grid = XmlSource.parseGeolocationGrid(ds).collect()
-    assert(grid.length == 2 && grid(1).pixel == 100)
-
-    // distributed read path
-    val tmp = Files.createTempDirectory("graft-xml").toString
-    Files.writeString(Paths.get(s"$tmp/a.xml"), xml)
-    val fromDir = XmlSource.readXmlDir(spark, s"$tmp/*.xml")
-    assert(XmlSource.parseBursts(fromDir).count() == 2)
   }
 
   test("broadcast STRtree spatial join: points in polygons (J7/J10)") {
@@ -144,6 +110,10 @@ class SourcesSpec extends SparkSpec {
       val want = BurstId.fromBurstParams(t, anx, 3, 3, "iw1")
       assert(r.burst_id_jpl == want.jplId, s"burst $i")
     }
+    // annotation timestamps keep their microseconds
+    assert(BurstIngest.parseTimeUs("2020-01-01T00:00:04.258273") -
+      BurstIngest.parseTimeUs("2020-01-01T00:00:01.500000") == 2758273L)
+
     // consecutive bursts get consecutive ESA ids
     val ids = rows.map(_.burst_id_jpl.split("_")(1).toLong)
     assert(ids.zip(ids.tail).forall { case (a, b) => b == a + 1 })

@@ -1,356 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
-import graft.streaming.Sessions
-import org.apache.spark.sql.functions._
-
+/** Batch operators run on streaming frames: the relational Count-Min
+  * build, and the streaming MinHash-LSH pass behind q_dedup_incremental
+  * (`TextPipeline.lshEdgesStream`) — its row-local signature, its star
+  * edges and its checkpoint resume, each against the batch result. */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
-
-  test("availableNow stream sessionization matches batch result") {
-    val tmp = Files.createTempDirectory("graft-stream").toString
-    val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val cp = s"$tmp/cp"
-    // stage a small event drop
-    Tables.events(spark, sf()).filter($"user_id" < 10)
-      .select($"user_id", $"ts", $"value")
-      .coalesce(1).write.parquet(inDir)
-
-    Sessions.runStream(spark, inDir, outDir, cp,
-      df => Sessions.sessionWindows(df, "30 minutes"),
-      watermarkDelay = "0 seconds")
-
-    val streamed = spark.read.parquet(outDir)
-      .select($"user_id", $"session_start", $"n_events")
-      .as[(Long, java.sql.Timestamp, Long)].collect().toSet
-
-    val batch = Sessions.sessionWindows(
-        spark.read.parquet(inDir), "30 minutes")
-      .select($"user_id", $"session_start", $"n_events")
-      .as[(Long, java.sql.Timestamp, Long)].collect().toSet
-
-    // append mode holds sessions not yet past the watermark (= max event
-    // time): streamed must be a subset of batch and must contain every
-    // session that ended safely before the final watermark
-    assert(streamed.nonEmpty)
-    assert(streamed.subsetOf(batch))
-    val maxTs = spark.read.parquet(inDir).agg(max($"ts")).as[java.sql.Timestamp].head()
-    val safe = batch.filter { case (_, start, _) =>
-      start.getTime < maxTs.getTime - 3600L * 1000 }
-    assert(safe.subsetOf(streamed))
-  }
-
-  test("incremental runs resume from the checkpoint (per-date append model)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-incr").toString
-    val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val cp = s"$tmp/cp"
-    val ev = Tables.events(spark, sf()).select($"event_id", $"ts", $"user_id")
-
-    // drop 1: first half of the data, run to completion
-    ev.filter($"event_id" % 2 === 0).coalesce(1).write.parquet(inDir)
-    Sessions.runStream(spark, inDir, outDir, cp, df => df)
-    val afterFirst = spark.read.parquet(outDir).count()
-    assert(afterFirst == ev.filter($"event_id" % 2 === 0).count())
-
-    // drop 2: append the second half; the resumed run must process ONLY
-    // the new files (checkpoint), ending with exactly one copy of each row
-    ev.filter($"event_id" % 2 === 1).coalesce(1).write.mode("append").parquet(inDir)
-    Sessions.runStream(spark, inDir, outDir, cp, df => df)
-    val all = spark.read.parquet(outDir)
-    assert(all.count() == ev.count())
-    assert(all.select($"event_id").distinct().count() == ev.count())
-  }
-
-  test("streaming dedup drops re-delivered keys within the watermark") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dedup").toString
-    val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val cp = s"$tmp/cp"
-    // duplicate every event id (simulated re-delivery)
-    val ev = Tables.events(spark, sf()).filter($"user_id" < 10)
-      .select($"event_id", $"ts", $"user_id")
-    ev.unionAll(ev).coalesce(1).write.parquet(inDir)
-
-    Sessions.runStream(spark, inDir, outDir, cp,
-      df => Sessions.dedupStream(df, Seq("event_id")),
-      watermarkDelay = "1 hour")
-
-    val got = spark.read.parquet(outDir).count()
-    assert(got == ev.count())
-    assert(spark.read.parquet(outDir).select($"event_id").distinct().count() == got)
-  }
-
-  test("stream-stream interval join equals the batch join on the same data") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ssj").toString
-    val pDir = s"$tmp/p"; val qDir = s"$tmp/q"
-    val outDir = s"$tmp/out"; val cp = s"$tmp/cp"
-    val ev = Tables.events(spark, sf()).filter($"user_id" < 8)
-    ev.filter($"event_type" === "purchase")
-      .select($"event_id", $"user_id", $"ts").coalesce(1).write.parquet(pDir)
-    ev.filter($"event_type" === "click")
-      .select($"event_id", $"user_id", $"ts").coalesce(1).write.parquet(qDir)
-
-    def stream(dir: String) =
-      spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir)
-
-    // generous watermark delay → no state eviction inside the run, so the
-    // stream result must EQUAL the batch join (the 0-delay eviction path
-    // is exercised by the sessionization test above)
-    val q = Sessions.intervalJoin(stream(pDir), stream(qDir),
-        "user_id", "2 hours", watermarkDelay = "30 days")
-      .select($"l.event_id".as("pid"), $"r.event_id".as("qid"))
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", outDir).option("checkpointLocation", cp)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-
-    val streamed = spark.read.parquet(outDir)
-      .as[(Long, Long)].collect().toSet
-    val batch = Sessions.intervalJoin(
-        spark.read.parquet(pDir), spark.read.parquet(qDir),
-        "user_id", "2 hours", watermarkDelay = "30 days")
-      .select($"l.event_id".as("pid"), $"r.event_id".as("qid"))
-      .as[(Long, Long)].collect().toSet
-    assert(batch.nonEmpty)
-    assert(streamed == batch)
-  }
-
-  test("interval join under a tight watermark emits only valid pairs (eviction path)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ssj0").toString
-    val pDir = s"$tmp/p"; val qDir = s"$tmp/q"
-    val outDir = s"$tmp/out"; val cp = s"$tmp/cp"
-    val ev = Tables.events(spark, sf()).filter($"user_id" < 8)
-    ev.filter($"event_type" === "purchase")
-      .select($"event_id", $"user_id", $"ts").coalesce(1).write.parquet(pDir)
-    ev.filter($"event_type" === "click")
-      .select($"event_id", $"user_id", $"ts").coalesce(1).write.parquet(qDir)
-    def stream(dir: String) =
-      spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir)
-
-    // 0-delay watermark → right-state eviction at watermark − lookback is
-    // live; every emitted pair must still satisfy the join condition and
-    // be a subset of the batch result (bounded state can only LOSE matches
-    // that arrive after eviction, never invent pairs)
-    val q = Sessions.intervalJoin(stream(pDir), stream(qDir),
-        "user_id", "2 hours", watermarkDelay = "0 seconds")
-      .select($"l.event_id".as("pid"), $"r.event_id".as("qid"),
-        $"l_ts", $"r_ts")
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", outDir).option("checkpointLocation", cp)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-
-    val streamed = spark.read.parquet(outDir)
-    streamed.as[(Long, Long, java.sql.Timestamp, java.sql.Timestamp)]
-      .collect().foreach { case (pid, qid, lts, rts) =>
-        assert(rts.getTime <= lts.getTime && rts.getTime >= lts.getTime - 2 * 3600 * 1000,
-          s"pair ($pid, $qid) violates the interval")
-      }
-    val batch = Sessions.intervalJoin(
-        spark.read.parquet(pDir), spark.read.parquet(qDir),
-        "user_id", "2 hours")
-      .select($"l.event_id".as("pid"), $"r.event_id".as("qid"))
-      .as[(Long, Long)].collect().toSet
-    val streamedPairs = streamed.select($"pid", $"qid").as[(Long, Long)].collect().toSet
-    assert(streamedPairs.subsetOf(batch))
-  }
-
-  test("flatMapGroupsWithState batch labeling assigns sequential batches") {
-    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    val acqs = (0 until 120).map(i =>
-      Sessions.Acq(1L, new java.sql.Timestamp(base.getTime + i * 60000L)))
-    val out = Sessions.labelAcquisitions(acqs.toDS(), batchSize = 50)
-      .collect().sortBy(_.ts.getTime)
-    assert(out.length == 120)
-    assert(out.take(50).forall(_.batchId == 0))
-    assert(out.slice(50, 100).forall(_.batchId == 1))
-    assert(out.drop(100).forall(_.batchId == 2))
-    // batches 0 and 1 are closed (120 = 2×50 + 20) → historical; the
-    // 20-row open batch is forward
-    assert(out.take(50).forall(_.label == "historical_01"))
-    assert(out.slice(50, 100).forall(_.label == "historical_02"))
-    assert(out.drop(100).forall(_.label == "forward"))
-  }
-
-  test("streaming ewma after one availableNow drop equals the batch fold") {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ewma").toString
-    val inDir = s"$tmp/in"
-    Tables.events(spark, sf()).filter($"user_id" < 40)
-      .select($"user_id", $"ts", $"event_id",
-        floor($"value" * 100).cast("long").as("x"))
-      .coalesce(1).write.parquet(inDir)
-    val schema = spark.read.parquet(inDir).schema
-    val in = spark.readStream.schema(schema).parquet(inDir).as[Sessions.EwmaEvent]
-    val q = Sessions.ewmaStream(in)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("ewma_stream").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val streamed = spark.table("ewma_stream")
-      .select($"user_id", $"n_events", $"ewma", $"n_spikes")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val batch = SparkEntry.queries("q_ewma")(spark, sf())
-      .select($"user_id", $"n_events", $"ewma_final", $"n_spikes")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(streamed == batch && streamed.nonEmpty)
-  }
-
-  test("streaming holt after one availableNow drop equals the batch fold") {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft-holt").toString
-    val inDir = s"$tmp/in"
-    Tables.events(spark, sf())
-      .groupBy($"event_type", $"ts".cast("date").as("day"))
-      .agg(count(lit(1)).as("x"))
-      .select($"event_type",
-        datediff($"day", lit("1970-01-01").cast("date")).cast("long").as("ep"),
-        ($"x" * 100).as("xc"))
-      .coalesce(1).write.parquet(inDir)
-    val schema = spark.read.parquet(inDir).schema
-    val in = spark.readStream.schema(schema).parquet(inDir).as[Sessions.HoltDaily]
-    val q = Sessions.holtStream(in)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("holt_stream").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val streamed = spark.table("holt_stream")
-      .select($"event_type", $"n_days", $"level_c", $"trend_c", $"fc7_c")
-      .as[(String, Long, Long, Long, Long)].collect().toSet
-    val batch = SparkEntry.queries("q_holt_linear")(spark, sf())
-      .select($"event_type", $"n_days", $"level_c", $"trend_c", $"fc7_c")
-      .as[(String, Long, Long, Long, Long)].collect().toSet
-    assert(streamed == batch && streamed.nonEmpty)
-  }
-
-  test("streaming holt-winters after one availableNow drop equals the batch fold") {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft-hw").toString
-    val inDir = s"$tmp/in"
-    Tables.events(spark, sf())
-      .groupBy($"event_type", $"ts".cast("date").as("day"))
-      .agg(count(lit(1)).as("x"))
-      .select($"event_type",
-        datediff($"day", lit("1970-01-01").cast("date")).cast("long").as("ep"),
-        ($"x" * 100).as("xc"))
-      .coalesce(1).write.parquet(inDir)
-    val schema = spark.read.parquet(inDir).schema
-    val in = spark.readStream.schema(schema).parquet(inDir).as[Sessions.HoltDaily]
-    val q = Sessions.holtWintersStream(in)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("hw_stream").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    // the batch operator emits only series past the seed week (n > 7);
-    // the stream snapshots every series, so restrict before comparing
-    val streamed = spark.table("hw_stream").filter($"n_days" > 7)
-      .select($"event_type", $"n_days", $"level_c", $"trend_c",
-        $"s0_c", $"s3_c", $"s6_c", $"fc1_c")
-      .as[(String, Long, Long, Long, Long, Long, Long, Long)].collect().toSet
-    val batch = SparkEntry.queries("q_holt_winters")(spark, sf())
-      .select($"event_type", $"n_days", $"level_c", $"trend_c",
-        $"s0_c", $"s3_c", $"s6_c", $"fc1_c")
-      .as[(String, Long, Long, Long, Long, Long, Long, Long)].collect().toSet
-    assert(streamed == batch && streamed.nonEmpty)
-  }
-
-  test("streaming croston after one availableNow drop equals the batch fold") {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cro").toString
-    val inDir = s"$tmp/in"
-    Tables.lineitem(spark, sf())
-      .groupBy($"l_partkey",
-        datediff($"l_shipdate".cast("date"), lit("1970-01-01").cast("date"))
-          .cast("long").as("di"))
-      .agg(sum($"l_quantity".cast("long")).as("sz"))
-      .coalesce(1).write.parquet(inDir)
-    val schema = spark.read.parquet(inDir).schema
-    val in = spark.readStream.schema(schema).parquet(inDir).as[Sessions.CrostonDemand]
-    val q = Sessions.crostonStream(in)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("cro_stream").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val streamed = spark.table("cro_stream")
-      .select($"l_partkey", $"n_demands", $"z_c", $"p_c", $"rate_q6", $"sba_q6")
-      .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
-    val batch = SparkEntry.queries("q_croston")(spark, sf())
-      .select($"l_partkey", $"n_demands", $"z_c", $"p_c", $"rate_q6", $"sba_q6")
-      .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
-    assert(streamed == batch && streamed.nonEmpty)
-  }
-
-  test("streaming debounce after one availableNow drop equals the batch fold") {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft-deb").toString
-    val inDir = s"$tmp/in"
-    Tables.events(spark, sf()).select($"user_id", $"ts", $"event_id")
-      .coalesce(1).write.parquet(inDir)
-    val schema = spark.read.parquet(inDir).schema
-    val in = spark.readStream.schema(schema).parquet(inDir).as[Sessions.DebEvent]
-    val q = Sessions.debounceStream(in)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("deb_stream").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val streamed = spark.table("deb_stream")
-      .select($"user_id", $"n_events", $"n_kept", $"kept_ck")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val batch = SparkEntry.queries("q_debounce")(spark, sf())
-      .select($"user_id", $"n_events", $"n_kept", $"kept_ck")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(streamed == batch && streamed.nonEmpty)
-  }
-
-  test("streaming windowed funnel after one availableNow drop equals the batch joins") {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft-funnel").toString
-    val inDir = s"$tmp/in"
-    Tables.events(spark, sf())
-      .select($"user_id", $"ts", $"event_id", $"event_type")
-      .coalesce(1).write.parquet(inDir)
-    val schema = spark.read.parquet(inDir).schema
-    val in = spark.readStream.schema(schema).parquet(inDir)
-      .as[Sessions.WFunnelEvent]
-    val q = Sessions.windowedFunnelStream(in)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("wfunnel_stream").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    // one snapshot per user after a single drop; stage counts must equal
-    // the batch operator's funnel row exactly
-    val snap = spark.table("wfunnel_stream")
-    val counts = snap.agg(
-      sum(when($"stage" >= 1, 1L).otherwise(0L)),
-      sum(when($"stage" >= 2, 1L).otherwise(0L)),
-      sum(when($"stage" >= 3, 1L).otherwise(0L)))
-      .as[(Long, Long, Long)].collect().head
-    val batch = SparkEntry.queries("q_funnel_windowed")(spark, sf())
-      .select($"n_viewed", $"n_clicked_24h", $"n_purchased_24h")
-      .as[(Long, Long, Long)].collect().head
-    assert(counts == batch && counts._1 > 0)
-    // the step timestamps themselves match the batch MIN-join t0 per user
-    val t0Batch = Tables.events(spark, sf())
-      .filter($"event_type" === "view")
-      .groupBy($"user_id")
-      .agg(min(expr("unix_micros(ts)")).as("t0"))
-      .as[(Long, Long)].collect().toSet
-    val t0Stream = snap.filter($"stage" >= 1)
-      .select($"user_id", $"t0_us").as[(Long, Long)].collect().toSet
-    assert(t0Stream == t0Batch)
-  }
-
-  test("streaming min-k sample after one availableNow drop equals the batch sample") {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mink").toString
-    val inDir = s"$tmp/in"
-    Tables.documents(spark, sf()).select($"source", $"doc_id")
-      .coalesce(1).write.parquet(inDir)
-    val schema = spark.read.parquet(inDir).schema
-    val in = spark.readStream.schema(schema).parquet(inDir).as[Sessions.SampleDoc]
-    val q = Sessions.minKSampleStream(in)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("mink_stream").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val streamed = spark.table("mink_stream")
-      .select($"source", $"rk", $"doc_id")
-      .as[(String, Long, Long)].collect().toSet
-    val batch = SparkEntry.queries("q_sample_exact_k")(spark, sf())
-      .select($"source", $"rk", $"doc_id")
-      .as[(String, Long, Long)].collect().toSet
-    assert(streamed == batch && streamed.nonEmpty)
-  }
 
   test("streaming count-min sketch equals the batch sketch (fixed state)") {
     import graft.pipeline.Sketches
@@ -377,79 +32,6 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.size <= 4 * 256)
   }
 
-  test("stateful streaming count-min (flatMapGroupsWithState) merges across micro-batches") {
-    import graft.pipeline.Sketches
-    import org.apache.spark.sql.streaming.Trigger
-    // two parquet files + maxFilesPerTrigger=1 force TWO micro-batches, so
-    // the pass only holds if the second batch's increments merged into the
-    // first's counter state — the stateful property under test. Counters
-    // are monotone, so max(cnt) per cell across the append snapshots is
-    // the final sketch.
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cms-state").toString
-    val inDir = s"$tmp/in"
-    val users = Tables.events(spark, sf()).select($"user_id")
-    users.filter($"user_id" % 2 === 0).coalesce(1).write.parquet(inDir)
-    users.filter($"user_id" % 2 === 1).coalesce(1).write.mode("append").parquet(inDir)
-    val schema = spark.read.parquet(inDir).schema
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = Sessions.countMinStream(in, $"user_id")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("cms_stateful").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val streamed = spark.table("cms_stateful")
-      .groupBy($"i", $"bucket").agg(max($"cnt").as("cnt"))
-      .as[(Int, Int, Long)].collect()
-      .map { case (i, b, c) => (i, b.toLong, c) }.toSet
-    val batch = Sketches.countMin(spark.read.parquet(inDir), $"user_id").table
-      .as[(Int, Long, Long)].collect().toSet
-    assert(streamed == batch && streamed.nonEmpty)
-    assert(streamed.size <= 4 * 256)
-  }
-
-  test("streaming Misra-Gries heavy hitters honor the error bound vs exact counts") {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mg").toString
-    val inDir = s"$tmp/in"
-    val users = Tables.events(spark, sf()).select($"user_id")
-    // two micro-batches so the summary must carry state across them
-    users.filter($"event_id" % 2 === 0).coalesce(1).write.parquet(inDir)
-    Thread.sleep(50)
-    users.filter($"event_id" % 2 === 1).coalesce(1).write.mode("append").parquet(inDir)
-    val schema = spark.read.parquet(inDir).schema
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val capacity = 8
-    val q = Sessions.heavyHittersStream(in, $"user_id", capacity = capacity, shards = 4)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("mg_stream").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val all = spark.table("mg_stream")
-      .as[Sessions.MgEntry].collect()
-    // the LATEST batch per shard is the summary
-    val lastBatch = all.groupBy(_.shard).map { case (s, es) => s -> es.map(_.batch).max }
-    val summary = all.filter(e => e.batch == lastBatch(e.shard))
-    assert(summary.nonEmpty)
-    assert(summary.groupBy(_.shard).values.forall(_.length <= capacity))
-    val exact = spark.read.parquet(inDir).groupBy($"user_id")
-      .agg(count(lit(1)).as("n")).as[(Long, Long)].collect().toMap
-    val shardTotals = exact.groupBy { case (k, _) => math.floorMod(k, 4L).toInt }
-      .map { case (s, m) => s -> m.values.sum }
-    // Misra-Gries guarantee, both sides: est never overcounts, and the
-    // shared decrement counter bounds the undercount
-    summary.foreach { e =>
-      assert(e.est <= exact(e.key), s"overcount on ${e.key}")
-      assert(exact(e.key) <= e.est + e.max_err, s"undercount beyond bound on ${e.key}")
-    }
-    // any key heavier than shardTotal/(capacity+1) must be resident
-    exact.foreach { case (k, n) =>
-      val s = math.floorMod(k, 4L).toInt
-      if (n > shardTotals(s) / (capacity + 1))
-        assert(summary.exists(e => e.shard == s && e.key == k),
-          s"heavy key $k (n=$n) missing from shard $s summary")
-    }
-  }
-
   test("row-local minhash signature equals the aggregated batch signature") {
     import graft.pipeline.TextPipeline
     val docs = Tables.documents(spark, sf())
@@ -474,7 +56,7 @@ class StreamingSpec extends SparkSpec {
     val schema = spark.read.parquet(inDir).schema
     val in = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = Sessions.lshEdgesStream(in)
+    val q = TextPipeline.lshEdgesStream(in)
       .writeStream.outputMode("append").format("memory")
       .queryName("lsh_stream").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
@@ -512,7 +94,7 @@ class StreamingSpec extends SparkSpec {
     def runOnce(): Unit = {
       val schema = spark.read.parquet(inDir).schema
       val in = spark.readStream.schema(schema).parquet(inDir)
-      val q = Sessions.lshEdgesStream(in)
+      val q = TextPipeline.lshEdgesStream(in)
         .writeStream.outputMode("append").format("parquet")
         .option("path", outDir).option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
@@ -554,305 +136,5 @@ class StreamingSpec extends SparkSpec {
     val batch = SparkEntry.queries("q_dedup_clusters")(spark, sf())
       .collect().map(_.toSeq).toSeq
     assert(inc.nonEmpty && inc == batch)
-  }
-
-  test("streaming first-seen exact dedup equals the batch keeper set") {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft-firstseen").toString
-    val inDir = s"$tmp/in"
-    val docs = Tables.documents(spark, sf())
-      .select(lower(substring($"text", 1, 40)).as("key"),
-        $"doc_id".cast("long").as("doc_id"))
-    // two micro-batches split by id, ascending across them (files process
-    // in write order): each key's min doc_id lives in the earliest batch
-    // where the key appears, so first-seen == the batch min-id keeper —
-    // and duplicate keys in the SECOND file exercise the cross-batch drop
-    docs.filter($"doc_id" < 250).coalesce(1).write.parquet(inDir)
-    Thread.sleep(50) // distinct mtimes pin the file processing order
-    docs.filter($"doc_id" >= 250).coalesce(1).write.mode("append").parquet(inDir)
-    val schema = spark.read.parquet(inDir).schema
-    val in = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(inDir).as[Sessions.DocKey]
-    val q = Sessions.firstSeenStream(in)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("first_seen").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val streamed = spark.table("first_seen").as[(String, Long)].collect().toSet
-    val batch = SparkEntry.queries("q_dedup_keep")(spark, sf())
-      .select($"norm_key", $"kept_doc_id").as[(String, Long)].collect().toSet
-    assert(streamed == batch && streamed.nonEmpty)
-    // state is one marker per distinct key, nothing per re-delivery
-    assert(streamed.size == batch.size)
-  }
-
-  test("streaming HLL registers equal the batch registers (64-row state)") {
-    import graft.pipeline.Sketches
-    import org.apache.spark.sql.streaming.Trigger
-    // two micro-batches: the pass requires the second batch's ranks to
-    // max-merge into the first's register state. Registers are monotone,
-    // so max(maxrho) per bucket over the append snapshots = final sketch.
-    val tmp = java.nio.file.Files.createTempDirectory("graft-hll-stream").toString
-    val inDir = s"$tmp/in"
-    val users = Tables.orders(spark, sf()).select($"o_custkey")
-    users.filter($"o_custkey" % 2 === 0).coalesce(1).write.parquet(inDir)
-    Thread.sleep(50)
-    users.filter($"o_custkey" % 2 === 1).coalesce(1).write.mode("append").parquet(inDir)
-    val schema = spark.read.parquet(inDir).schema
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = Sessions.hllStream(in, $"o_custkey")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("hll_stream").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val streamed = spark.table("hll_stream")
-      .groupBy($"bucket").agg(max($"maxrho").as("maxrho"))
-      .as[(Int, Long)].collect().toMap
-    // batch registers through the SAME shared mix — bit-identical or bust
-    val (bucket, r) = Sketches.rhoOf(Sketches.hllMix($"o_custkey"))
-    val batch = spark.read.parquet(inDir)
-      .select(bucket.cast("int").as("bucket"), r.as("r"))
-      .groupBy($"bucket").agg(max($"r").as("maxrho"))
-      .as[(Int, Long)].collect().toMap
-    assert(streamed == batch && streamed.nonEmpty)
-    // fixed state: at most one register per bucket
-    assert(streamed.size <= Sketches.HllBuckets)
-  }
-
-  test("sliding windows: streamed hop aggregates match batch on closed windows") {
-    val tmp = Files.createTempDirectory("graft-hop").toString
-    val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val cp = s"$tmp/cp"
-    Tables.events(spark, sf()).filter($"user_id" < 10)
-      .select($"event_type", $"ts", $"value")
-      .coalesce(1).write.parquet(inDir)
-
-    Sessions.runStream(spark, inDir, outDir, cp,
-      df => Sessions.slidingCounts(df, "ts", "event_type", "1 hour", "30 minutes"),
-      watermarkDelay = "0 seconds")
-
-    val streamed = spark.read.parquet(outDir)
-      .select($"event_type", $"w_start", $"n_events", $"sum_v_c")
-      .as[(String, java.sql.Timestamp, Long, Long)].collect().toSet
-    val batch = Sessions.slidingCounts(spark.read.parquet(inDir), "ts",
-        "event_type", "1 hour", "30 minutes")
-      .select($"event_type", $"w_start", $"n_events", $"sum_v_c")
-      .as[(String, java.sql.Timestamp, Long, Long)].collect().toSet
-
-    // append mode holds windows still open at the final watermark: the
-    // streamed set is a subset of batch, covers every safely-closed
-    // window, and each event fans out into width/slide = 2 windows
-    assert(streamed.nonEmpty && streamed.subsetOf(batch))
-    val maxTs = spark.read.parquet(inDir).agg(max($"ts")).as[java.sql.Timestamp].head()
-    val safe = batch.filter { case (_, start, _, _) =>
-      start.getTime < maxTs.getTime - 2L * 3600 * 1000 }
-    assert(safe.subsetOf(streamed))
-  }
-
-  test("watermarked dedup emits each key once and matches the batch key set") {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft-wmdedup").toString
-    val inDir = s"$tmp/in"
-    val ev = Tables.events(spark, sf())
-      .select($"ts", $"user_id", $"event_type")
-    // duplicates of (user_id, event_type) spread across two micro-batches;
-    // the horizon exceeds the table's whole span, so every redelivery is
-    // inside the watermark window and must be dropped exactly like batch
-    // dropDuplicates on the same keys
-    ev.filter($"user_id" % 2 === 0).coalesce(1).write.parquet(inDir)
-    Thread.sleep(50)
-    ev.filter($"user_id" % 2 === 1).coalesce(1).write.mode("append").parquet(inDir)
-    val schema = spark.read.parquet(inDir).schema
-    val in = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    val q = Sessions.dedupWithinWatermark(in, "ts",
-        Seq("user_id", "event_type"), "3650 days")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("wm_dedup").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val streamed = spark.table("wm_dedup")
-      .select($"user_id", $"event_type").as[(Long, String)].collect()
-    val batchKeys = ev.select($"user_id", $"event_type").distinct()
-      .as[(Long, String)].collect().toSet
-    assert(streamed.nonEmpty && streamed.toSet == batchKeys)
-    // exactly one survivor per key — no duplicate ever crosses the sink
-    assert(streamed.length == batchKeys.size)
-  }
-
-  test("streaming funnel progression equals the batch min-ts chain") {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = Files.createTempDirectory("graft-funnel").toString
-    val inDir = s"$tmp/in"
-    val ev = Tables.events(spark, sf()).filter($"user_id" < 40)
-      .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_type")
-    // two time-ordered micro-batches (early file, then late file): the
-    // in-order arrival the operator's stream==batch contract requires —
-    // stage chains spanning the batch boundary exercise the carried state
-    val mid = ev.agg(expr("percentile_approx(ts_us, 0.5)")).head().getLong(0)
-    ev.filter($"ts_us" <= mid).coalesce(1).write.parquet(inDir)
-    Thread.sleep(50)
-    ev.filter($"ts_us" > mid).coalesce(1).write.mode("append").parquet(inDir)
-    val schema = spark.read.parquet(inDir).schema
-    val in = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(inDir).as[Sessions.FunnelEvent]
-    val q = Sessions.funnelStream(in)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("funnel_hits").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val streamed = spark.table("funnel_hits")
-      .select($"user_id", $"stage", $"ts_us").as[(Long, Int, Long)].collect().toSet
-
-    // batch chain: t0 = min(view), t1 = min(click > t0), t2 = min(purchase > t1)
-    val v = ev.filter($"event_type" === "view").groupBy($"user_id")
-      .agg(min($"ts_us").as("t0"))
-    val c = ev.filter($"event_type" === "click").as("e")
-      .join(v.as("v"), $"e.user_id" === $"v.user_id" && $"e.ts_us" > $"t0")
-      .groupBy($"e.user_id").agg(min($"e.ts_us").as("t1"))
-    val p = ev.filter($"event_type" === "purchase").as("e")
-      .join(c.as("c"), $"e.user_id" === $"c.user_id" && $"e.ts_us" > $"t1")
-      .groupBy($"e.user_id").agg(min($"e.ts_us").as("t2"))
-    val batch =
-      v.select($"user_id", lit(1).as("stage"), $"t0".as("ts_us")).union(
-        c.select($"user_id", lit(2).as("stage"), $"t1".as("ts_us"))).union(
-        p.select($"user_id", lit(3).as("stage"), $"t2".as("ts_us")))
-        .as[(Long, Int, Long)].collect().toSet
-    assert(streamed.nonEmpty && streamed == batch)
-    // completions exist and every stage-3 user also holds stages 1 and 2
-    val done = streamed.filter(_._2 == 3).map(_._1)
-    assert(done.nonEmpty && done.forall(u =>
-      streamed.exists(h => h._1 == u && h._2 == 1) &&
-        streamed.exists(h => h._1 == u && h._2 == 2)))
-  }
-
-  test("streaming quantile sketch: final cells and p90 match batch") {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = Files.createTempDirectory("graft-qsketch").toString
-    val inDir = s"$tmp/in"
-    val vals = Tables.events(spark, sf())
-      .select($"event_type".as("key"),
-        (floor($"value" * 100).cast("long") + 1).as("v"))
-    // two micro-batches: state must carry the first drop's counts
-    vals.filter($"v" % 2 === 0).coalesce(1).write.parquet(inDir)
-    Thread.sleep(50)
-    vals.filter($"v" % 2 === 1).coalesce(1).write.mode("append").parquet(inDir)
-    val schema = spark.read.parquet(inDir).schema
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-      .as[(String, Long)]
-    val q = Sessions.quantileSketchStream(in)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("qsketch_stream").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    // counts are monotone: final sketch = max snapshot per cell
-    val streamed = spark.table("qsketch_stream")
-      .groupBy($"key", $"e", $"m").agg(max($"cnt").as("cnt"))
-      .as[(String, Long, Long, Long)].collect()
-      .map(r => (r._1, r._2, r._3) -> r._4).toMap
-    val batch = spark.read.parquet(inDir)
-      .withColumn("e", (length(bin($"v")) - 1).cast("long"))
-      .withColumn("m", expr("(v * 16) div cast(pow(2, e) as bigint) - 16"))
-      .groupBy($"key", $"e", $"m").agg(count(lit(1)).as("cnt"))
-      .as[(String, Long, Long, Long)].collect()
-      .map(r => (r._1, r._2, r._3) -> r._4).toMap
-    assert(streamed.nonEmpty && streamed == batch)
-    // the sketch answers quantiles identically: p90 bucket per key
-    def p90(cells: Map[(String, Long, Long), Long]): Map[String, (Long, Long)] =
-      cells.groupBy(_._1._1).map { case (k, cs) =>
-        val sorted = cs.toSeq.map { case ((_, e, m), c) => (e, m, c) }.sortBy(t => (t._1, t._2))
-        val n = sorted.map(_._3).sum
-        val rk = (n * 900 + 999) / 1000
-        var cum = 0L
-        val hit = sorted.find { t => cum += t._3; cum >= rk }.get
-        k -> (hit._1, hit._2)
-      }
-    assert(p90(streamed) == p90(batch))
-    // bounded state: at most 16 mantissa cells per (key, exponent)
-    assert(streamed.keys.groupBy(k => (k._1, k._2)).forall(_._2.size <= 16))
-  }
-
-  test("streaming clamped balance matches the batch closed form") {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = Files.createTempDirectory("graft-bal").toString
-    val inDir = s"$tmp/in"
-    // per-part signed moves with a global sequence = the batch sort key
-    val mv = Tables.lineitem(spark, sf())
-      .select($"l_partkey".as("key"),
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy($"l_partkey")
-          .orderBy($"l_shipdate", $"l_orderkey", $"l_linenumber")).cast("long").as("seq"),
-        when($"l_returnflag" === "R", -$"l_quantity".cast("long"))
-          .otherwise($"l_quantity".cast("long")).as("x"))
-    // two micro-batches split at a per-key PREFIX boundary (seq ≤ 5 then
-    // the rest) so arrival respects per-key order; state carries across
-    mv.filter($"seq" <= 5).coalesce(1).write.parquet(inDir)
-    Thread.sleep(50)
-    mv.filter($"seq" > 5).coalesce(1).write.mode("append").parquet(inDir)
-    val schema = spark.read.parquet(inDir).schema
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-      .as[Sessions.BalEvent]
-    val q = Sessions.clampedBalanceStream(in)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("bal_stream").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    // final snapshot per key = the one with the full move count
-    val streamed = spark.table("bal_stream")
-      .withColumn("rn", row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy($"key").orderBy($"n_moves".desc)))
-      .filter($"rn" === 1)
-      .select($"key", $"n_moves", $"bal", $"peak", $"n_floor_hits")
-      .as[(Long, Long, Long, Long, Long)].collect()
-      .map(r => r._1 -> (r._2, r._3, r._4, r._5)).toMap
-    val batch = SparkEntry.queries("q_clamped_balance")(spark, sf()).collect()
-      .map(r => r.getAs[Long]("l_partkey") ->
-        (r.getAs[Long]("n_moves"), r.getAs[Long]("end_bal"),
-          r.getAs[Long]("peak_bal"), r.getAs[Long]("n_floor_hits"))).toMap
-    assert(streamed.nonEmpty && streamed == batch)
-  }
-
-  test("streaming group moments reproduce the batch ANOVA F exactly") {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = Files.createTempDirectory("graft-mom").toString
-    val inDir = s"$tmp/in"
-    val ev = Tables.events(spark, sf())
-      .select($"event_id", $"event_type".as("g"),
-        floor($"value" * 1000).cast("long").as("vq"))
-    // two arbitrary micro-batches — moment folds commute, no order needed
-    ev.filter($"event_id" % 2 === 0).drop("event_id").coalesce(1).write.parquet(inDir)
-    Thread.sleep(50)
-    ev.filter($"event_id" % 2 === 1).drop("event_id").coalesce(1)
-      .write.mode("append").parquet(inDir)
-    val schema = spark.read.parquet(inDir).schema
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-      .as[Sessions.MomentEvent]
-    val q = Sessions.groupMomentsStream(in)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("mom_stream").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val streamed = spark.table("mom_stream")
-      .withColumn("rn", row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy($"g").orderBy($"n".desc)))
-      .filter($"rn" === 1)
-      .select($"g", $"n", $"s1", $"s2")
-      .as[(String, Long, Long, Long)].collect()
-      .map(r => r._1 -> (r._2, r._3, r._4)).toMap
-    val batchMom = ev.groupBy($"g")
-      .agg(count(lit(1)).as("n"), sum($"vq").as("s1"), sum($"vq" * $"vq").as("s2"))
-      .as[(String, Long, Long, Long)].collect()
-      .map(r => r._1 -> (r._2, r._3, r._4)).toMap
-    assert(streamed.nonEmpty && streamed == batchMom)
-    // F recomputed from the streamed state equals the batch query's f_q6
-    val k = streamed.size.toLong
-    val n = streamed.values.map(_._1).sum
-    val sswG = streamed.values.map { case (ng, s1, s2) =>
-      math.floor(s2.toDouble - s1.toDouble * (s1.toDouble / ng.toDouble)).toLong
-    }.sum
-    val s1T = streamed.values.map(_._2).sum
-    val s2T = streamed.values.map(_._3).sum
-    val ssb = math.floor(s2T.toDouble - s1T.toDouble * (s1T.toDouble / n.toDouble)).toLong - sswG
-    val f = math.floor(ssb.toDouble * (n - k).toDouble * 1e6 /
-      ((k - 1).toDouble * sswG.toDouble)).toLong
-    val batchF = SparkEntry.queries("q_anova_f")(spark, sf()).collect().head
-    assert(batchF.getAs[Long]("f_q6") == f,
-      s"streamed-state F $f vs batch ${batchF.getAs[Long]("f_q6")}")
   }
 }
