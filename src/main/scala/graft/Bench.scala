@@ -100,10 +100,12 @@ object Bench {
     val valid = timed.failed.isEmpty && sentinelBefore > 0 && sentinelAfter > 0
     val total = timed.results.map(_._2).sum
     def str(s: String) = "\"" + s + "\""
+    val gitSha = scala.util.Try(scala.sys.process.Process("git rev-parse HEAD")
+      .!!(scala.sys.process.ProcessLogger(_ => ())).trim).getOrElse("unknown")
     // read while the session is live: the compact line is built after stop()
     val fields = s""""valid":$valid,"failed":${timed.failed.map(str).mkString("[", ",", "]")},""" +
       s""""contaminated":$contaminated,"noisy_window":$noisyWindow,"sentinel_before":$sentinelBefore,"sentinel_after":$sentinelAfter,"shared_materialization_sec":$sharedMaterializationSec,""" +
-      s""""cpus":${RegistryRunner.cpus},"parallelism":${spark.sparkContext.defaultParallelism},"shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
+      s""""git_sha":${str(gitSha)},"cpus":${RegistryRunner.cpus},"parallelism":${spark.sparkContext.defaultParallelism},"shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
       s""""xmx_mb":${Runtime.getRuntime.maxMemory >> 20},"jvm":${str(System.getProperty("java.runtime.version"))},""" +
       s""""baseline":${str(baselineSentinel.fold("none")(_ => "bench_full_latest.json"))},""" +
       s""""codegen_cache_entries":${spark.conf.get("spark.sql.codegen.cache.maxEntries")},"codegen_compiles":$codegenCompiles,"codegen_compile_ms":$codegenCompileMs"""

@@ -2,12 +2,7 @@ package graft
 
 import graft.domain.{Catalog, CatalogBuild}
 import graft.functions.GeoFunctions
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.Footer
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 
 /** Command-line front door (the reference's `opera-db` CLI, cli.py:28-44),
@@ -28,9 +23,9 @@ import org.apache.spark.sql.functions._
   *
   * Serving requests are tiny and their latency tracks the number of Spark
   * jobs they launch, so each one is planned to launch as few as possible:
-  *   - every parquet input is read with the schema of its footer, read on
-  *     the driver ([[readParquet]]), so no read runs Spark's one-footer
-  *     schema-inference job;
+  *   - every parquet input goes through the engine's one reader,
+  *     [[Tables.read]], which takes the schema from one footer on the
+  *     driver, so no read runs Spark's schema-inference job;
   *   - the frame-to-burst document is parsed on the driver (Catalog);
   *   - [[printJson]] puts the row cap at the plan's root, so the collect is
   *     a `CollectLimit` (or a `TakeOrderedAndProject` for sorted results)
@@ -67,38 +62,32 @@ object Main {
     case "create" :: burstMap :: landWkt :: outDir :: rest =>
       create(spark, burstMap, landWkt, outDir, rest.headOption)
     case "lookup" :: catalogDir :: frameId :: Nil =>
-      printJson(Catalog.lookup(frames(spark, catalogDir),
-        table(spark, catalogDir, "frames_bursts"),
-        table(spark, catalogDir, "burst_id_map"), frameId.toLong))
+      printJson(Catalog.lookup(Tables.read(spark, s"$catalogDir/frames"),
+        Tables.read(spark, s"$catalogDir/frames_bursts"),
+        Tables.read(spark, s"$catalogDir/burst_id_map"), frameId.toLong))
     case "intersect" :: catalogDir :: "--bbox" :: bbox :: Nil =>
       bbox.split(',').map(_.trim.toDouble) match {
         case Array(xmin, ymin, xmax, ymax) =>
-          printJson(Catalog.intersect(frames(spark, catalogDir),
+          printJson(Catalog.intersect(Tables.read(spark, s"$catalogDir/frames"),
             Catalog.bboxWkt(xmin, ymin, xmax, ymax), (xmin, ymin, xmax, ymax))
             .select(col("fid"), col("epsg"), col("is_land"), col("orbit_pass")))
         case _ => usage()
       }
     case "intersect" :: catalogDir :: "--wkt" :: wkt :: Nil =>
       val env = GeoFunctions.parseWkt(wkt).getEnvelopeInternal
-      printJson(Catalog.intersect(frames(spark, catalogDir), wkt,
+      printJson(Catalog.intersect(Tables.read(spark, s"$catalogDir/frames"), wkt,
         (env.getMinX, env.getMinY, env.getMaxX, env.getMaxY))
         .select(col("fid"), col("epsg"), col("is_land"), col("orbit_pass")))
     case "fetch-bursts" :: bursts :: jsonZip :: fids :: start :: end :: outDir :: Nil =>
-      Catalog.fetchBursts(spark, readParquet(spark, bursts), jsonZip,
+      Catalog.fetchBursts(spark, Tables.read(spark, bursts), jsonZip,
           fids.split(',').map(_.trim.toLong).toSeq, start, end)
         .orderBy(col("burst_id_jpl"), col("sensing_time"))
         .coalesce(1).write.mode("overwrite").option("header", "true").csv(outDir)
     case "fetch-granules" :: bursts :: jsonZip :: fids :: start :: end :: Nil =>
-      printJson(Catalog.fetchGranules(spark, readParquet(spark, bursts), jsonZip,
+      printJson(Catalog.fetchGranules(spark, Tables.read(spark, bursts), jsonZip,
         fids.split(',').map(_.trim.toLong).toSeq, start, end))
     case _ => usage()
   }
-
-  private def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    readParquet(spark, s"$dir/$name")
-
-  private def frames(spark: SparkSession, dir: String): DataFrame =
-    table(spark, dir, "frames")
 
   /** §3.1 build → persisted catalog. The NA flag is a spatial-join flag
     * exactly like the land flag (build_frame_db.py:653-655 loads a
@@ -112,7 +101,7 @@ object Main {
     def readWkt(p: String): String =
       new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)),
         java.nio.charset.StandardCharsets.UTF_8).trim
-    val r = CatalogBuild.build(readParquet(spark, burstMap), readWkt(landWktFile))
+    val r = CatalogBuild.build(Tables.read(spark, burstMap), readWkt(landWktFile))
     val framesNa = naWktFile match {
       case Some(p) =>
         val shapes = readWkt(p).split('\n').map(_.trim).filter(_.nonEmpty)
@@ -145,37 +134,6 @@ object Main {
     * System property so specs can lower it without a million-row fixture. */
   private[graft] def maxJsonRows: Int =
     sys.props.get("graft.cli.maxJsonRows").map(_.toInt).getOrElse(100000)
-
-  /** `spark.read.parquet(path)` with the data schema read from one footer on
-    * the driver: the footer Spark's own inference reads (the first leaf data
-    * file in path order; Spark writes no summary files), so the schema is
-    * the same and a missing column still fails analysis, but no
-    * schema-inference job runs. Partition columns are still discovered by
-    * Spark from the directory names. A path that is not an existing file or
-    * directory (a glob, a typo) goes to Spark unchanged. */
-  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    // the names Spark's file index skips
-    def hidden(name: String) = (name.startsWith("_") && !name.contains("=")) ||
-      name.startsWith(".") || name.endsWith("._COPYING_")
-    def leaves(st: FileStatus): Seq[FileStatus] =
-      if (!st.isDirectory) Seq(st)
-      else fs.listStatus(st.getPath).toSeq
-        .filterNot(c => hidden(c.getPath.getName)).flatMap(leaves)
-    val first = (if (fs.exists(root)) leaves(fs.getFileStatus(root)) else Nil)
-      .minByOption(_.getPath.toString)
-    first match {
-      case Some(f) =>
-        val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
-          ParquetMetadataConverter.SKIP_ROW_GROUPS)
-        val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, meta),
-          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-        spark.read.schema(schema).parquet(path)
-      case None => spark.read.parquet(path)
-    }
-  }
 
   /** Deterministic JSON-lines print: small serving results only. The
     * `limit(cap + 1)` bounds what ever reaches the driver, and the +1

@@ -1,10 +1,15 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
 
-/** Loaders for the driver-generated test tables (TESTDATA.md).
+/** The engine's one parquet reader ([[read]]) + test-table loaders (TESTDATA.md).
   *
   * All tables are plain parquet under `{sfDir}/{name}.parquet`. The only
   * wrinkle is `events.ts`, written as parquet TIMESTAMP(NANOS): Spark has no
@@ -17,6 +22,37 @@ object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** `spark.read.parquet(path)` with the data schema read from one footer on
+    * the driver: the footer Spark's own inference reads (the first leaf data
+    * file in path order; Spark writes no summary files), so the schema is
+    * the same and a missing column still fails analysis, but no
+    * schema-inference job runs. Partition columns are still discovered by
+    * Spark from the directory names. A path that is not an existing file or
+    * directory (a glob, a typo) goes to Spark unchanged. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    // the names Spark's file index skips
+    def hidden(name: String) = (name.startsWith("_") && !name.contains("=")) ||
+      name.startsWith(".") || name.endsWith("._COPYING_")
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => hidden(c.getPath.getName)).flatMap(leaves)
+    val first = (if (fs.exists(root)) leaves(fs.getFileStatus(root)) else Nil)
+      .minByOption(_.getPath.toString)
+    first match {
+      case Some(f) =>
+        val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, meta),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
 
   /** Spread keys for the compute-carrying fact tables. The driver's test
     * fixtures are ONE parquet file with ONE row group per table, so every
@@ -71,7 +107,7 @@ object Tables {
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") events(spark, sfDir)
-    else spread(spark, spark.read.parquet(s"$sfDir/$name.parquet"), name)
+    else spread(spark, read(spark, s"$sfDir/$name.parquet"), name)
 
   private val NanosConf = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -79,12 +115,13 @@ object Tables {
     *
     * Sessions built via [[GraftSession]] (or the Verify/Bench mains) already
     * carry the nanosAsLong flag; for a foreign session we set it as a
-    * fallback — TIMESTAMP(NANOS) schema inference throws without it and
-    * parquet exposes no per-read option (ParquetOptions has no nanos key). */
+    * fallback, before [[read]] converts the footer — converting a
+    * TIMESTAMP(NANOS) column throws without it and parquet exposes no
+    * per-read option (ParquetOptions has no nanos key). */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     if (!spark.conf.getOption(NanosConf).contains("true"))
       spark.conf.set(NanosConf, "true")
-    val raw = spread(spark, spark.read.parquet(s"$sfDir/events.parquet"), "events")
+    val raw = spread(spark, read(spark, s"$sfDir/events.parquet"), "events")
     if (raw.schema("ts").dataType == LongType)
       // integral `div`, not `/`: epoch-ns ≈ 1.7e18 overflows double precision
       raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

@@ -119,7 +119,7 @@ object TextPipeline {
       build(p)
       p
     })
-    s.read.parquet(path)
+    Tables.read(s, path)
   }
 
   /** The materialized DISTINCT (doc_id, g, hm) table for (session, dir).
@@ -530,7 +530,7 @@ object TextPipeline {
       math.min(8, dropFiles).toString)
     def runDrop(drop: DataFrame): Unit = {
       drop.repartition(dropFiles).write.mode("append").parquet(inDir)
-      val in = ss.readStream.schema(s.read.parquet(inDir).schema).parquet(inDir)
+      val in = ss.readStream.schema(Tables.read(s, inDir).schema).parquet(inDir)
       lshEdgesStream(in)
         .writeStream.outputMode("append").format("parquet")
         .option("path", outDir).option("checkpointLocation", ckpt)
@@ -538,7 +538,7 @@ object TextPipeline {
     }
     runDrop(docs.filter(col("doc_id") % 2 === 0))
     runDrop(docs.filter(col("doc_id") % 2 === 1))
-    s.read.parquet(outDir).select(col("doc1"), col("doc2")).distinct()
+    Tables.read(s, outDir).select(col("doc1"), col("doc2")).distinct()
   }
 
   val queries: Seq[QueryDef] = Seq(

@@ -1,14 +1,10 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.domain.{BurstCatalog, Catalog}
 import graft.functions.GeoFunctions
 import graft.plans.SpatialExpressions
 import graft.sources.Io
-import org.apache.spark.ListenerBusDrain
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -49,29 +45,6 @@ class MainSpec extends SparkSpec {
     val bos = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(bos, true, "UTF-8"))(body)
     bos.toString("UTF-8").linesIterator.toSeq.filter(_.nonEmpty)
-  }
-
-  /** Jobs that `body` launches: a listener counts the job starts tagged
-    * with a job group set around the call (broadcast jobs inherit it), and
-    * the listener bus is drained before the count is read. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"job-budget-${java.util.UUID.randomUUID}"
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job budget")
-    try body
-    finally {
-      sc.clearJobGroup()
-      ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
   }
 
   private case class Served(catDir: String, zip: String, bursts: String, fid: Long,
@@ -279,11 +252,11 @@ class MainSpec extends SparkSpec {
     assert(fetch <= 3, s"fetch-granules launched $fetch jobs")
   }
 
-  test("readParquet takes Spark's inferred schema from one footer, without a job") {
+  test("Tables.read takes Spark's inferred schema from one footer, without a job") {
     Seq("frames", "frames_bursts", "burst_id_map").foreach { t =>
       val p = s"${served.catDir}/$t"
       var df: DataFrame = null
-      assert(jobsOf { df = Main.readParquet(spark, p) } == 0, t)
+      assert(jobsOf { df = Tables.read(spark, p) } == 0, t)
       assert(df.schema == spark.read.parquet(p).schema, t)
     }
     // partition columns still come from the directory names
@@ -291,13 +264,13 @@ class MainSpec extends SparkSpec {
     spark.range(0, 20).select($"id", ($"id" % 3).cast("int").as("year"),
         $"id".cast("string").as("s"))
       .write.partitionBy("year").parquet(part)
-    val got = Main.readParquet(spark, part)
+    val got = Tables.read(spark, part)
     assert(got.schema == spark.read.parquet(part).schema && got.columns.contains("year"))
     assert(got.orderBy($"id").collect().toSeq ==
       spark.read.parquet(part).orderBy($"id").collect().toSeq)
     // a column the files lack still fails analysis
     intercept[AnalysisException](
-      Main.readParquet(spark, s"${served.catDir}/frames").select($"no_such_column"))
+      Tables.read(spark, s"${served.catDir}/frames").select($"no_such_column"))
   }
 
   test("st_intersects over a created catalog's frames equals the UDF and the CLI intersect") {
