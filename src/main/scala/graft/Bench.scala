@@ -41,6 +41,13 @@ object Bench {
     }
     def median(q: QueryDef): Double = // upper median for even n
       (1 to runs).map(_ => timeOnce(q.build(spark, sfDir))).sorted.apply(runs / 2)
+    // generated-class compiles (count, ms summed over threads) that `body`
+    // causes; the JVM-wide counters are exact while one query runs at a time
+    def compiled[A](body: => A): (A, Long, Long) = {
+      val (n0, ns0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+      val a = body
+      (a, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0, (CodeGenerator.compileTime - ns0) / 1000000)
+    }
     // a sentinel run that fails reads -1 and invalidates the capture
     def sentinel(): Double = RegistryRunner.run(spark, sentinelQuery, "sentinel")(
       q => timeOnce(q.build(spark, sfDir))).results.headOption.fold(-1.0)(_._2)
@@ -86,12 +93,12 @@ object Bench {
       .flatMap(field(_, "sentinel_before")).filter(_ > 0)
     val noisyWindow = baselineSentinel.exists(s => sentinelBefore > 1.5 * s)
 
-    // generated-class compiles inside the timed loop: a cache smaller than
-    // the loop's working set recompiles on every run
-    val (compiles0, compileNs0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
-    val timed = RegistryRunner.run(spark, queries, "bench")(median)
-    val codegenCompiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
-    val codegenCompileMs = (CodeGenerator.compileTime - compileNs0) / 1000000
+    // generated-class compiles inside the timed loop, in total and per
+    // query (all of its runs): a cache smaller than the loop's working set
+    // recompiles on every run
+    val (perQuery, codegenCompiles, codegenCompileMs) =
+      compiled(RegistryRunner.run(spark, queries, "bench")(q => compiled(median(q))))
+    val timed = perQuery.copy(results = perQuery.results.map { case (q, (t, _, _)) => q -> t })
 
     val sentinelAfter = sentinel()
     val contaminated = sentinelBefore > 0 && sentinelAfter > 2.0 * sentinelBefore
@@ -111,11 +118,14 @@ object Bench {
       s""""codegen_cache_entries":${spark.conf.get("spark.sql.codegen.cache.maxEntries")},"codegen_compiles":$codegenCompiles,"codegen_compile_ms":$codegenCompileMs"""
     // n_queries counts the entries in THIS json's queries map (the headline
     // line is a truncated view); n_total is the full run count.
-    def toJson(rs: Seq[(String, Double)]): String = {
+    def toJson(rs: Seq[(String, Double)], extra: String = ""): String = {
       val qs = rs.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${rs.length},"n_total":${queries.length},"runs_per_query":$runs,$fields,"queries":$qs,"sf":${str(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${rs.length},"n_total":${queries.length},"runs_per_query":$runs,$fields,"queries":$qs$extra,"sf":${str(sfDir)}}"""
     }
-    val json = toJson(timed.results)
+    val queryCodegen = perQuery.results.map { case (q, (_, n, ms)) =>
+      s"""${str(q)}:{"codegen_compiles":$n,"codegen_compile_ms":$ms}"""
+    }.mkString(""","query_codegen":{""", ",", "}")
+    val json = toJson(timed.results, queryCodegen)
     if (!valid) System.err.println(s"[bench] INVALID capture: failed [${timed.failed.mkString(",")}], sentinel $sentinelBefore -> $sentinelAfter")
     if (contaminated) System.err.println(f"[bench] CONTAMINATED capture: sentinel $sentinelBefore%.2fs -> $sentinelAfter%.2fs (machine ran concurrent work)")
     if (noisyWindow)

@@ -99,7 +99,9 @@ object GraftSession {
     * notebook session created elsewhere). Static confs cannot be set on a
     * live session, so the generated-class cache keeps the size that JVM
     * started with (Spark's default is 100, which a warm catalog build
-    * outgrows; see [[conf]]). */
+    * outgrows; see [[conf]]). Nor can a live session gain a columnar rule,
+    * so an attached session lacks `plans.ParamLiteralRule`: there a
+    * request whose filter literals are new compiles new classes. */
   def attach(spark: SparkSession): SparkSession = {
     plans.GraftExtensions.register(spark)
     Seq(TimeZone, NanosAsLong).foreach { case (k, v) => spark.conf.set(k, v) }

@@ -12,11 +12,14 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
 /** The engine's one parquet reader ([[read]]) + test-table loaders (TESTDATA.md).
   *
   * All tables are plain parquet under `{sfDir}/{name}.parquet`. The only
-  * wrinkle is `events.ts`, written as parquet TIMESTAMP(NANOS): Spark has no
-  * nanosecond timestamp type, so we read it with
-  * `spark.sql.legacy.parquet.nanosAsLong` and truncate to microseconds —
-  * exactly what DuckDB's nanos→TIMESTAMP cast does, keeping both engines
-  * bit-identical.
+  * wrinkle is `events.ts`. The local test tables write it as parquet
+  * TIMESTAMP(MICROS) without UTC adjustment, which Spark reads as
+  * TimestampNTZ and [[events]] casts to TimestampType. An events file may
+  * instead carry TIMESTAMP(NANOS): Spark has no nanosecond timestamp type,
+  * so it is read with `spark.sql.legacy.parquet.nanosAsLong` and truncated
+  * to microseconds — exactly what DuckDB's nanos→TIMESTAMP cast does,
+  * keeping both engines bit-identical. Only TablesReadSpec's written file
+  * takes that branch.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -111,7 +114,8 @@ object Tables {
 
   private val NanosConf = "spark.sql.legacy.parquet.nanosAsLong"
 
-  /** events with `ts` as a microsecond TimestampType (floor-truncated from ns).
+  /** events with `ts` as a microsecond TimestampType (cast from
+    * TimestampNTZ, or floor-truncated from a TIMESTAMP(NANOS) column's ns).
     *
     * Sessions built via [[GraftSession]] (or the Verify/Bench mains) already
     * carry the nanosAsLong flag; for a foreign session we set it as a

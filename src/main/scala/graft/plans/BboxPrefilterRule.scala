@@ -75,12 +75,15 @@ object BboxPrefilterRule extends Rule[LogicalPlan] {
 /** Session wiring. Two paths:
   *   - config: `spark.sql.extensions=graft.plans.GraftExtensions`, which
   *     GraftSession's conf block sets on every session it builds;
-  *   - runtime: `GraftExtensions.register(spark)` on a live session.
+  *   - runtime: `GraftExtensions.register(spark)` on a live session, which
+  *     cannot gain the columnar [[ParamLiteralRule]] (see
+  *     `GraftSession.attach`).
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => BboxPrefilterRule)
     e.injectFunction(GraftExtensions.stIntersectsDescriptor)
+    e.injectColumnar(_ => ParamLiteralColumnarRule)
   }
 }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.BboxPrefilterRule
+import graft.plans.{BboxPrefilterRule, ParamLiteralColumnarRule}
 
 /** GraftSession is the one source of session config: the spec session is
   * built from it, and `attach` can be applied to a live session safely. */
@@ -10,6 +10,11 @@ class GraftSessionSpec extends SparkSpec {
     GraftSession.conf(4).foreach { case (k, v) =>
       assert(spark.conf.get(k) == v, s"$k on the spec session")
     }
+  }
+
+  test("a session built from the conf carries the literal-parameter rule") {
+    val rules = spark.sessionState.columnarRules
+    assert(rules.count(_ == ParamLiteralColumnarRule) == 1, rules)
   }
 
   test("attach is idempotent") {

@@ -204,6 +204,68 @@ class MainSpec extends SparkSpec {
     assert(second == 0, s"the repeat compiled $second classes (the first pass $first)")
   }
 
+  test("a request with new parameters compiles no generated class") {
+    // Spark inlines primitive literals into generated code; the engine's
+    // ParamLiteralRule keeps a filter's frame id, bbox and date range out
+    // of it, so each kind compiles only for its first request
+    val c = served
+    val frames = spark.read.parquet(s"${c.catDir}/frames")
+    val fb = spark.read.parquet(s"${c.catDir}/frames_bursts")
+    val bim = spark.read.parquet(s"${c.catDir}/burst_id_map")
+    def compiled(body: => Unit): (Long, Seq[String]) = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val out = capture(body)
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before, out)
+    }
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    def field(lines: Seq[String], name: String): Seq[String] =
+      lines.map(l => json.readTree(l).path(name).toString)
+    def fetch(start: String, end: String) =
+      List("fetch-granules", c.bursts, c.zip, c.fid.toString, start, end)
+    val polygon = "POLYGON ((20.2 8.3, 22.5 9.1, 21.1 12.6, 20.2 8.3))"
+    Seq(List("lookup", c.catDir, c.fid.toString),
+      List("intersect", c.catDir, "--bbox", "10.5,3.9,11.5,4.1"),
+      List("intersect", c.catDir, "--wkt", Catalog.bboxWkt(10.5, 3.9, 11.5, 4.1)),
+      fetch("2023-01-01 00:00:00", "2024-12-31 00:00:00"))
+      .foreach(args => capture(Main.run(spark, args)))
+
+    // brute force over the collected tables, outside any Spark plan
+    val fid2 = frames.select($"fid".cast("long")).as[Long].collect().filter(_ != c.fid).min
+    val ogcToJpl = bim.select($"OGC_FID".cast("long"), $"burst_id_jpl").as[(Long, String)]
+      .collect().toMap
+    val members = fb.select($"frame_fid".cast("long"), $"burst_ogc_fid".cast("long"))
+      .as[(Long, Long)].collect().groupMap(_._1)(p => ogcToJpl(p._2))
+    val geoms = frames.select($"fid".cast("long"), $"geom").as[(Long, String)].collect()
+    def intersecting(wkt: String): Seq[String] = geoms.filter { case (_, g) =>
+      GeoFunctions.parseWkt(g).intersects(GeoFunctions.parseWkt(wkt))
+    }.map(_._1.toString).sorted.toSeq
+
+    val (lookupN, lookup) = compiled(Main.run(spark, List("lookup", c.catDir, fid2.toString)))
+    assert(field(lookup, "fid") == Seq(fid2.toString))
+    assert(field(lookup, "burst_ids") ==
+      Seq(members(fid2).sorted.map("\"" + _ + "\"").mkString("[", ",", "]")))
+
+    val (bboxN, bbox) = compiled(Main.run(spark,
+      List("intersect", c.catDir, "--bbox", "20.5,8.9,21.5,12.1")))
+    assert(field(bbox, "fid").sorted == intersecting(Catalog.bboxWkt(20.5, 8.9, 21.5, 12.1)))
+    val (wktN, wkt) = compiled(Main.run(spark, List("intersect", c.catDir, "--wkt", polygon)))
+    assert(field(wkt, "fid").sorted == intersecting(polygon))
+    assert(bbox.nonEmpty && wkt.nonEmpty)
+
+    val (fetchN, granules) = compiled(Main.run(spark,
+      fetch("2024-01-01 00:00:00", "2024-12-31 00:00:00")))
+    val ids = members(c.fid).toSet
+    val from = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    val to = java.sql.Timestamp.valueOf("2024-12-31 00:00:00")
+    val expected = spark.read.parquet(c.bursts).as[(String, java.sql.Timestamp, String)]
+      .collect().collect { case (b, t, g) if ids(b) && !t.before(from) && !t.after(to) =>
+        "\"" + g.stripSuffix(".SAFE") + "\"" }.distinct.sorted.toSeq
+    assert(field(granules, "granule") == expected && expected == Seq("\"S1A_20240601\""))
+
+    assert(Seq(lookupN, bboxN, wktN, fetchN) == Seq(0, 0, 0, 0),
+      s"compiled: lookup $lookupN, bbox $bboxN, wkt $wktN, fetch-granules $fetchN")
+  }
+
   test("CLI lookup/intersect agree with direct Catalog calls on the sf0.01 build") {
     val d = sf("sf0.01")
     val tmp = java.nio.file.Files.createTempDirectory("graft-cli-oracle").toString

@@ -5,7 +5,9 @@ library does not depend on this).
 Compares two full Bench captures (the JSON line Bench.scala writes to
 bench_full_latest.json) and prints per-query regressions worse than
 REG_RATIO with an absolute delta above NOISE_SEC, plus improvements of
-the same magnitude, added/removed queries, and the total. Contaminated
+the same magnitude, added/removed queries, and the total. Each flagged
+query also shows its generated-class compiles and compile ms in both
+captures (the full capture's `query_codegen`). Contaminated
 captures (sentinel tripped) are refused — re-measure isolated instead
 of triaging noise.
 
@@ -67,6 +69,16 @@ def retime_isolated(queries, sf_dir):
     print("  re-time Bench run produced no parseable JSON — "
           "keeping in-suite flags")
     return {}
+
+
+def codegen(old, new, q):
+    """A flagged query's generated-class compiles and compile ms (summed
+    over threads) in both captures; captures before the per-query fields
+    read "?"."""
+    def get(cap, key):
+        return cap.get("query_codegen", {}).get(q, {}).get(key, "?")
+    return "".join(f" {key}={get(old, key)}->{get(new, key)}"
+                   for key in ("codegen_compiles", "codegen_compile_ms"))
 
 
 def main():
@@ -142,13 +154,15 @@ def main():
             # none) so close-outs quote tool output, not hand-run numbers
             tail = (f" isolated={iso[q]:.2f}s" if q in iso
                     else " isolated=n/a (run with --retime)")
-            print(f"  {q}: {a:.2f} -> {b:.2f} s ({r:.2f}x){tail}")
+            print(f"  {q}: {a:.2f} -> {b:.2f} s ({r:.2f}x){tail}"
+                  f"{codegen(old, new, q)}")
     else:
         print(f"\nno regressions > {REG_RATIO}x and > {NOISE_SEC} s")
     if imps:
         print(f"improvements (> {REG_RATIO}x):")
         for r, a, b, q in sorted(imps, reverse=True):
-            print(f"  {q}: {a:.2f} -> {b:.2f} s ({r:.2f}x faster)")
+            print(f"  {q}: {a:.2f} -> {b:.2f} s ({r:.2f}x faster)"
+                  f"{codegen(old, new, q)}")
     sys.exit(1 if regs else 0)
 
 

@@ -1,0 +1,53 @@
+#!/usr/bin/env python3
+"""Meta-test: tools/plan_diff.py must call two runs of one distinct
+aggregate identical although Spark ordered their Expand groups
+differently, and must still report a changed plan. Dev tool only.
+
+Usage: python3 tools/test_plan_diff.py
+"""
+import subprocess
+import sys
+import tempfile
+from pathlib import Path
+
+# q_dedup_exact's Expand and the lines that follow it, from two PlanDump
+# runs of one commit: the same groups, numbered in another order
+RUN_A = """(4) Expand
+Arguments: [[null, null, null, 0], [lang#14582, null, null, 1], [null, lower(substring(text#14581, 1, 40)), null, 2], [null, null, text#14581, 3]], [lang#14600, lower(substring(text, 1, 40))#14601, text#14602, gid#14599]
+
+(5) HashAggregate
+Keys [4]: [lang#14600, lower(substring(text, 1, 40))#14601, text#14602, gid#14599]
+Functions [4]: [partial_first(count(1)#14603L, true) FILTER (WHERE (gid#14599 = 0)), partial_count(text#14602) FILTER (WHERE (gid#14599 = 3)), partial_count(lower(substring(text, 1, 40))#14601) FILTER (WHERE (gid#14599 = 2)), partial_count(lang#14600) FILTER (WHERE (gid#14599 = 1))]
+"""
+RUN_B = """(4) Expand
+Arguments: [[null, null, null, 0], [text#14652, null, null, 1], [null, lang#14653, null, 2], [null, null, lower(substring(text#14652, 1, 40)), 3]], [text#14671, lang#14672, lower(substring(text, 1, 40))#14673, gid#14670]
+
+(5) HashAggregate
+Keys [4]: [text#14671, lang#14672, lower(substring(text, 1, 40))#14673, gid#14670]
+Functions [4]: [partial_first(count(1)#14674L, true) FILTER (WHERE (gid#14670 = 0)), partial_count(text#14671) FILTER (WHERE (gid#14670 = 1)), partial_count(lower(substring(text, 1, 40))#14673) FILTER (WHERE (gid#14670 = 3)), partial_count(lang#14672) FILTER (WHERE (gid#14670 = 2))]
+"""
+
+
+def diff(a, b):
+    with tempfile.TemporaryDirectory() as tmp:
+        for side, text in (("a", a), ("b", b)):
+            Path(tmp, side).mkdir()
+            Path(tmp, side, "q.txt").write_text(text)
+        r = subprocess.run([sys.executable, "tools/plan_diff.py", f"{tmp}/a", f"{tmp}/b"],
+                           capture_output=True, text=True)
+    return r.returncode, r.stdout
+
+
+def main():
+    rc, out = diff(RUN_A, RUN_B)
+    assert rc == 0 and "identical 1/1" in out, f"reordered groups reported as a change\n{out}"
+    # a count moved to another group is a real change
+    changed = RUN_B.replace("partial_count(text#14671) FILTER (WHERE (gid#14670 = 1))",
+                            "partial_count(text#14671) FILTER (WHERE (gid#14670 = 2))")
+    rc, out = diff(RUN_A, changed)
+    assert rc == 1 and "plan changed: q.txt" in out, f"changed plan reported identical\n{out}"
+    print("test_plan_diff: OK")
+
+
+if __name__ == "__main__":
+    main()
