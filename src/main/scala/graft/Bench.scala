@@ -107,7 +107,10 @@ object Bench {
     val valid = timed.failed.isEmpty && sentinelBefore > 0 && sentinelAfter > 0
     val total = timed.results.map(_._2).sum
     def str(s: String) = "\"" + s + "\""
-    val gitSha = scala.util.Try(scala.sys.process.Process("git rev-parse HEAD")
+    // the HEAD sha, suffixed "-dirty" when tracked files differ from it, so a
+    // capture of edited code never carries its parent commit's sha alone
+    val gitSha = scala.util.Try(scala.sys.process.Process(
+        "git describe --always --dirty --abbrev=40 --exclude=*")
       .!!(scala.sys.process.ProcessLogger(_ => ())).trim).getOrElse("unknown")
     // read while the session is live: the compact line is built after stop()
     val fields = s""""valid":$valid,"failed":${timed.failed.map(str).mkString("[", ",", "]")},""" +

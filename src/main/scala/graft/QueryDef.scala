@@ -18,8 +18,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * several downstream branches (e.g. q_dedup_embedding's equality-class
   * reps). The plan is lazy, so the query function cannot unpersist them
   * itself. [[RegistryRunner]] is the one place that runs registry queries
-  * and the one place that calls `spark.catalog.clearCache()` after each,
-  * so cached blocks do not accumulate across a sweep.
+  * and the one place that calls `spark.catalog.clearCache()` after each.
+  * That frees what a query `persist()`ed, but not a `localCheckpoint`:
+  * a checkpointed RDD is not in the CacheManager and keeps its blocks
+  * until a GC lets the ContextCleaner drop it. A spark-shell probe
+  * (local[4], sf0.01) still saw 2–9 checkpointed RDDs registered after
+  * `clearCache()` while the 10 single-shot eager builders ran. Freeing
+  * them needs a per-query scope (ROADMAP items 3 and 7).
   */
 final case class QueryDef(
     name: String,

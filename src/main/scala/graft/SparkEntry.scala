@@ -3,12 +3,20 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * `queries` is assembled from per-module registries; each entry carries its
-  * own DuckDB oracle SQL (QueryDef). Registry modules:
-  *   - operators.Relational — scans/filters/joins/aggs/sorts/set-ops (§2.1–2.8)
-  *   - operators.Windows    — window functions, gaps-and-islands (§2.5)
+/** The engine's query surface (SURVEY.md §7): `registry` concatenates
+  * the `queries` of 38 modules, each entry a [[QueryDef]] carrying its
+  * Spark builder and, when the semantics are SQL-expressible, its DuckDB
+  * oracle SQL. The modules live in four packages:
+  *   - `operators` — relational, window, as-of/range/Bloom join, layout,
+  *     ingest, analytics, commerce, geo, event, quality, CDC and
+  *     statistics operators;
+  *   - `domain` — the burst_db pipeline: catalog, burst ingest, consistent
+  *     bursts and blackout windows;
+  *   - `pipeline` — text, embedding, packing, corpus, tokenizer, lexical,
+  *     clustering, multimodal, sketch, graph and evaluation operators;
+  *   - `sources` — the embedded-database source.
+  * `queries` and `oracleSql` are the name-keyed views that Verify, Bench
+  * and PlanDump read; `entry` is the flagship smoke query.
   */
 object SparkEntry {
 

@@ -78,35 +78,51 @@ object Blackout {
       |  FROM (SELECT UNNEST(RANGE(0, 5)) AS key) k,
       |       (SELECT UNNEST(RANGE(0, 1096)) AS d) d)""".stripMargin
 
+  /** find_seasons' oracle over the synthetic daily series, up to the
+    * per-water-year aggregate `per_year` (caller filters n_bad/freeze_start). */
+  private val perYearSql =
+    s"""WITH $syntheticDailySql,
+       |wyd AS (
+       |  SELECT key, day, bad,
+       |    CAST(YEAR(day) - CASE WHEN MONTH(day) < 10 THEN 1 ELSE 0 END AS INTEGER) AS wy
+       |  FROM daily),
+       |marked AS (
+       |  SELECT key, wy, day, bad,
+       |    CASE WHEN bad IS DISTINCT FROM LAG(bad)
+       |           OVER (PARTITION BY key, wy ORDER BY day)
+       |         THEN 1 ELSE 0 END AS boundary
+       |  FROM wyd),
+       |runs AS (
+       |  SELECT key, wy, day, bad,
+       |    SUM(boundary) OVER (PARTITION BY key, wy ORDER BY day
+       |                        ROWS UNBOUNDED PRECEDING) AS run_id
+       |  FROM marked),
+       |bad_runs AS (
+       |  SELECT key, wy, run_id, CAST(COUNT(*) AS BIGINT) AS run_len,
+       |    MIN(day) AS run_start, MAX(day) AS run_end
+       |  FROM runs WHERE bad GROUP BY key, wy, run_id),
+       |per_year AS (
+       |  SELECT key, wy, CAST(SUM(run_len) AS BIGINT) AS n_bad,
+       |    MIN(CASE WHEN run_len >= 5 THEN run_start END) AS freeze_start,
+       |    MAX(run_end) AS thaw_end
+       |  FROM bad_runs GROUP BY key, wy)""".stripMargin
+
+  /** _yearly_windows' oracle: per-year windows of the (key, s_month, s_day,
+    * e_month, e_day) template relation `tmpl`, crossed with `yrs`. */
+  private def yearlyWindowsSql(tmpl: String): String =
+    s"""SELECT key, yr,
+       |  MAKE_TIMESTAMP(yr, s_month, s_day, 0, 0, 0) AS window_start,
+       |  MAKE_TIMESTAMP(
+       |    yr + CASE WHEN e_month < s_month
+       |               OR (e_month = s_month AND e_day < s_day) THEN 1 ELSE 0 END,
+       |    e_month, e_day, 23, 59, 59) AS window_end
+       |FROM $tmpl, yrs ORDER BY key, yr""".stripMargin
+
   val queries: Seq[QueryDef] = Seq(
 
     QueryDef.sql(
       "q_blackout_seasons",
-      s"""WITH $syntheticDailySql,
-         |wyd AS (
-         |  SELECT key, day, bad,
-         |    CAST(YEAR(day) - CASE WHEN MONTH(day) < 10 THEN 1 ELSE 0 END AS INTEGER) AS wy
-         |  FROM daily),
-         |marked AS (
-         |  SELECT key, wy, day, bad,
-         |    CASE WHEN bad IS DISTINCT FROM LAG(bad)
-         |           OVER (PARTITION BY key, wy ORDER BY day)
-         |         THEN 1 ELSE 0 END AS boundary
-         |  FROM wyd),
-         |runs AS (
-         |  SELECT key, wy, day, bad,
-         |    SUM(boundary) OVER (PARTITION BY key, wy ORDER BY day
-         |                        ROWS UNBOUNDED PRECEDING) AS run_id
-         |  FROM marked),
-         |bad_runs AS (
-         |  SELECT key, wy, run_id, CAST(COUNT(*) AS BIGINT) AS run_len,
-         |    MIN(day) AS run_start, MAX(day) AS run_end
-         |  FROM runs WHERE bad GROUP BY key, wy, run_id),
-         |per_year AS (
-         |  SELECT key, wy, CAST(SUM(run_len) AS BIGINT) AS n_bad,
-         |    MIN(CASE WHEN run_len >= 5 THEN run_start END) AS freeze_start,
-         |    MAX(run_end) AS thaw_end
-         |  FROM bad_runs GROUP BY key, wy)
+      s"""$perYearSql
          |SELECT key, wy, freeze_start, thaw_end, n_bad
          |FROM per_year WHERE n_bad >= 30 AND freeze_start IS NOT NULL
          |ORDER BY key, wy""".stripMargin) { (s, d) =>
@@ -121,31 +137,7 @@ object Blackout {
     // template → per-year windows with calendar wrap
     QueryDef.sql(
       "q_blackout_pipeline",
-      s"""WITH $syntheticDailySql,
-         |wyd AS (
-         |  SELECT key, day, bad,
-         |    CAST(YEAR(day) - CASE WHEN MONTH(day) < 10 THEN 1 ELSE 0 END AS INTEGER) AS wy
-         |  FROM daily),
-         |marked AS (
-         |  SELECT key, wy, day, bad,
-         |    CASE WHEN bad IS DISTINCT FROM LAG(bad)
-         |           OVER (PARTITION BY key, wy ORDER BY day)
-         |         THEN 1 ELSE 0 END AS boundary
-         |  FROM wyd),
-         |runs AS (
-         |  SELECT key, wy, day, bad,
-         |    SUM(boundary) OVER (PARTITION BY key, wy ORDER BY day
-         |                        ROWS UNBOUNDED PRECEDING) AS run_id
-         |  FROM marked),
-         |bad_runs AS (
-         |  SELECT key, wy, run_id, CAST(COUNT(*) AS BIGINT) AS run_len,
-         |    MIN(day) AS run_start, MAX(day) AS run_end
-         |  FROM runs WHERE bad GROUP BY key, wy, run_id),
-         |per_year AS (
-         |  SELECT key, wy, CAST(SUM(run_len) AS BIGINT) AS n_bad,
-         |    MIN(CASE WHEN run_len >= 5 THEN run_start END) AS freeze_start,
-         |    MAX(run_end) AS thaw_end
-         |  FROM bad_runs GROUP BY key, wy),
+      s"""$perYearSql,
          |seasons AS (
          |  SELECT key, wy, freeze_start, thaw_end FROM per_year
          |  WHERE n_bad >= 30 AND freeze_start IS NOT NULL),
@@ -162,13 +154,7 @@ object Blackout {
          |    CAST(DAYOFMONTH(DATE '2001-01-01' + (e_doy - 1)) AS INTEGER) AS e_day
          |  FROM tmpl),
          |yrs AS (SELECT CAST(UNNEST(RANGE(2020, 2023)) AS INTEGER) AS yr)
-         |SELECT key, yr,
-         |  MAKE_TIMESTAMP(yr, s_month, s_day, 0, 0, 0) AS window_start,
-         |  MAKE_TIMESTAMP(
-         |    yr + CASE WHEN e_month < s_month
-         |               OR (e_month = s_month AND e_day < s_day) THEN 1 ELSE 0 END,
-         |    e_month, e_day, 23, 59, 59) AS window_end
-         |FROM md, yrs ORDER BY key, yr""".stripMargin) { (s, d) =>
+         |${yearlyWindowsSql("md")}""".stripMargin) { (s, d) =>
       val seasons = findSeasons(syntheticDaily(s), pivotMonth = 10,
         minTotal = 30, minRun = 5)
       val tmpl = seasons.groupBy(col("key"))
@@ -187,7 +173,7 @@ object Blackout {
 
     QueryDef.sql(
       "q_blackout_yearly_windows",
-      """WITH tmpl AS (
+      s"""WITH tmpl AS (
         |  SELECT CAST(n_nationkey AS BIGINT) AS key,
         |    CAST(n_nationkey % 12 + 1 AS INTEGER) AS s_month,
         |    CAST(n_nationkey % 27 + 1 AS INTEGER) AS s_day,
@@ -195,13 +181,7 @@ object Blackout {
         |    CAST((n_nationkey + 13) % 27 + 1 AS INTEGER) AS e_day
         |  FROM nation),
         |yrs AS (SELECT CAST(UNNEST(RANGE(2016, 2020)) AS INTEGER) AS yr)
-        |SELECT key, yr,
-        |  MAKE_TIMESTAMP(yr, s_month, s_day, 0, 0, 0) AS window_start,
-        |  MAKE_TIMESTAMP(
-        |    yr + CASE WHEN e_month < s_month
-        |               OR (e_month = s_month AND e_day < s_day) THEN 1 ELSE 0 END,
-        |    e_month, e_day, 23, 59, 59) AS window_end
-        |FROM tmpl, yrs ORDER BY key, yr""".stripMargin) { (s, d) =>
+        |${yearlyWindowsSql("tmpl")}""".stripMargin) { (s, d) =>
       val tmpl = graft.Tables.nation(s, d).select(
         col("n_nationkey").cast("long").as("key"),
         (col("n_nationkey") % 12 + 1).cast("int").as("s_month"),

@@ -101,45 +101,53 @@ object BurstIngest {
     i.toString.stripSuffix("Z")
   }
 
-  /** Build one synthetic granule's (file, annotationXml, manifestXml). */
-  def syntheticGranule(k: Int): (String, String, String) = {
-    val track = k % 175 + 1
+  /** A synthetic annotation XML: 9 bursts of subswath `swath` sensed
+    * from `sensing0` s after a 2020-01-01 ANX, and a geolocation grid of
+    * 10 lines × 5 pixels at lat0 + line·0.17 + pixel·0.01, lon(pixel). */
+  private def annotationXml(swath: String, sensing0: Double, lat0: Double,
+      lon: Int => Double): String = {
     val anxUs = Instant.parse("2020-01-01T00:00:00Z").getEpochSecond * 1000000L
     val nBursts = 9
     val burstsXml = (0 until nBursts).map { i =>
-      val sUs = anxUs + ((2.5 + i * BurstId.TBeam) * 1e6).toLong
+      val sUs = anxUs + ((sensing0 + i * BurstId.TBeam) * 1e6).toLong
       s"<burst><azimuthTime>${timeStr(sUs)}</azimuthTime><sensingTime>${timeStr(sUs)}</sensingTime></burst>"
     }.mkString
-    // 10 grid lines × 5 pixels; granule 13 sits on the antimeridian
-    val lon0 = if (k == 13) 178.0 else -170.0 + k * 2.0
-    val lat0 = -40.0 + k * 3.0
-    def wrap(x: Double) = if (x > 180) x - 360 else x
     val gridXml = (0 until 10).flatMap { ln =>
       (0 until 5).map { px =>
-        val lon = wrap(lon0 + px * 0.9)
         val lat = lat0 + ln * 0.17 + px * 0.01
         s"<geolocationGridPoint><line>${ln * 1500}</line><pixel>${px * 5000}</pixel>" +
-          s"<latitude>$lat</latitude><longitude>$lon</longitude></geolocationGridPoint>"
+          s"<latitude>$lat</latitude><longitude>${lon(px)}</longitude></geolocationGridPoint>"
       }
     }.mkString
-    val ann =
-      s"""<product>
-         |<adsHeader><swath>IW1</swath><polarisation>VV</polarisation></adsHeader>
-         |<imageAnnotation><imageInformation>
-         |<ascendingNodeTime>${timeStr(anxUs)}</ascendingNodeTime>
-         |<productFirstLineUtcTime>${timeStr(anxUs + 2500000L)}</productFirstLineUtcTime>
-         |</imageInformation></imageAnnotation>
-         |<swathTiming><burstList count="$nBursts">$burstsXml</burstList></swathTiming>
-         |<geolocationGrid><geolocationGridPointList count="50">$gridXml</geolocationGridPointList></geolocationGrid>
-         |</product>""".stripMargin
-    val man =
-      s"""<manifest xmlns:safe="urn:ccsds:schema:xfdu:1">
-         |<safe:orbitReference>
-         |<safe:relativeOrbitNumber type="start">$track</safe:relativeOrbitNumber>
-         |<safe:relativeOrbitNumber type="stop">$track</safe:relativeOrbitNumber>
-         |</safe:orbitReference>
-         |</manifest>""".stripMargin
-    (f"S1A_IW_SLC__1SDV_G$k%03d.SAFE", ann, man)
+    s"""<product>
+       |<adsHeader><swath>$swath</swath><polarisation>VV</polarisation></adsHeader>
+       |<imageAnnotation><imageInformation>
+       |<ascendingNodeTime>${timeStr(anxUs)}</ascendingNodeTime>
+       |<productFirstLineUtcTime>${timeStr(anxUs + 2500000L)}</productFirstLineUtcTime>
+       |</imageInformation></imageAnnotation>
+       |<swathTiming><burstList count="$nBursts">$burstsXml</burstList></swathTiming>
+       |<geolocationGrid><geolocationGridPointList count="50">$gridXml</geolocationGridPointList></geolocationGrid>
+       |</product>""".stripMargin
+  }
+
+  /** A synthetic manifest XML with relative orbits `start` and `stop`. */
+  private def manifestXml(start: Int, stop: Int): String =
+    s"""<manifest xmlns:safe="urn:ccsds:schema:xfdu:1">
+       |<safe:orbitReference>
+       |<safe:relativeOrbitNumber type="start">$start</safe:relativeOrbitNumber>
+       |<safe:relativeOrbitNumber type="stop">$stop</safe:relativeOrbitNumber>
+       |</safe:orbitReference>
+       |</manifest>""".stripMargin
+
+  /** Build one synthetic granule's (file, annotationXml, manifestXml). */
+  def syntheticGranule(k: Int): (String, String, String) = {
+    val track = k % 175 + 1
+    // granule 13 sits on the antimeridian
+    val lon0 = if (k == 13) 178.0 else -170.0 + k * 2.0
+    def wrap(x: Double) = if (x > 180) x - 360 else x
+    (f"S1A_IW_SLC__1SDV_G$k%03d.SAFE",
+      annotationXml("IW1", 2.5, -40.0 + k * 3.0, px => wrap(lon0 + px * 0.9)),
+      manifestXml(track, track))
   }
 
   /** Physics-coverage granule family for q_burst_physics: unlike
@@ -164,42 +172,11 @@ object BurstIngest {
         val st = (k * 37) % 175 + 1
         if (k % 5 == 0) (st, st % 175 + 1) else (st, st)
       }
-    val swath = s"IW${k % 3 + 1}"
-    val anxUs = Instant.parse("2020-01-01T00:00:00Z").getEpochSecond * 1000000L
-    val base = if (k % 4 == 0) BurstId.TOrb + 2.5 else 2.5
-    val nBursts = 9
-    val burstsXml = (0 until nBursts).map { i =>
-      val sUs = anxUs + ((base + i * BurstId.TBeam) * 1e6).toLong
-      s"<burst><azimuthTime>${timeStr(sUs)}</azimuthTime><sensingTime>${timeStr(sUs)}</sensingTime></burst>"
-    }.mkString
     val lon0 = -170.0 + k * 2.0
-    val lat0 = -40.0 + k * 3.0
-    val gridXml = (0 until 10).flatMap { ln =>
-      (0 until 5).map { px =>
-        val lon = lon0 + px * 0.9
-        val lat = lat0 + ln * 0.17 + px * 0.01
-        s"<geolocationGridPoint><line>${ln * 1500}</line><pixel>${px * 5000}</pixel>" +
-          s"<latitude>$lat</latitude><longitude>$lon</longitude></geolocationGridPoint>"
-      }
-    }.mkString
-    val ann =
-      s"""<product>
-         |<adsHeader><swath>$swath</swath><polarisation>VV</polarisation></adsHeader>
-         |<imageAnnotation><imageInformation>
-         |<ascendingNodeTime>${timeStr(anxUs)}</ascendingNodeTime>
-         |<productFirstLineUtcTime>${timeStr(anxUs + 2500000L)}</productFirstLineUtcTime>
-         |</imageInformation></imageAnnotation>
-         |<swathTiming><burstList count="$nBursts">$burstsXml</burstList></swathTiming>
-         |<geolocationGrid><geolocationGridPointList count="50">$gridXml</geolocationGridPointList></geolocationGrid>
-         |</product>""".stripMargin
-    val man =
-      s"""<manifest xmlns:safe="urn:ccsds:schema:xfdu:1">
-         |<safe:orbitReference>
-         |<safe:relativeOrbitNumber type="start">$startTrack</safe:relativeOrbitNumber>
-         |<safe:relativeOrbitNumber type="stop">$endTrack</safe:relativeOrbitNumber>
-         |</safe:orbitReference>
-         |</manifest>""".stripMargin
-    (f"S1A_IW_SLC__1SDV_P$k%03d.SAFE", ann, man)
+    (f"S1A_IW_SLC__1SDV_P$k%03d.SAFE",
+      annotationXml(s"IW${k % 3 + 1}", if (k % 4 == 0) BurstId.TOrb + 2.5 else 2.5,
+        -40.0 + k * 3.0, px => lon0 + px * 0.9),
+      manifestXml(startTrack, endTrack))
   }
 
   val queries: Seq[QueryDef] = Seq(

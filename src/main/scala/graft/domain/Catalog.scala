@@ -110,10 +110,7 @@ object Catalog {
     * the final distinct on the (small) matched slice. */
   def granulesFor(bursts: DataFrame, burstIds: DataFrame,
       start: String, end: String): DataFrame =
-    bursts
-      .filter(col("sensing_time") >= lit(start).cast("timestamp") &&
-        col("sensing_time") <= lit(end).cast("timestamp"))
-      .join(broadcast(burstIds), Seq("burst_id_jpl"), "left_semi")
+    burstsFor(bursts, burstIds, start, end)
       .select(replace(col("granule"), lit(".SAFE"), lit("")).as("granule"))
       .distinct()
       .orderBy(col("granule"))
@@ -136,52 +133,65 @@ object Catalog {
     lists.flatMap(_.elements().asScala.map(_.asText)).distinct.toDF("burst_id_jpl")
   }
 
+  /** The historical-fetch queries' synthetic fixture: a bursts fact from
+    * orders (many bursts share a granule) and the burst-id list of frames 3
+    * and 7 (27 burst numbers × 3 subswaths each), an arithmetic frame→burst
+    * mapping standing in for the JSON document. */
+  private def syntheticFetch(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val bursts = Tables.orders(s, d).select(
+      format_string("t%03d_%06d_iw%d",
+        pmod(pmod(col("o_orderkey"), lit(3000)), lit(175)) + 1,
+        pmod(col("o_orderkey"), lit(3000)),
+        pmod(col("o_orderkey"), lit(3)) + 1).as("burst_id_jpl"),
+      col("o_orderdate").cast("timestamp").as("sensing_time"),
+      format_string("S1A_IW_SLC__1SDV_%sT000000_%05d.SAFE",
+        date_format(col("o_orderdate"), "yyyyMMdd"),
+        pmod(col("o_orderkey"), lit(500))).as("granule"))
+    val fids = Seq(3L, 7L)
+    import s.implicits._
+    val ids = fids.toDF("fid")
+      .crossJoin(s.range(0, 27).toDF("k"))
+      .crossJoin(s.range(1, 4).toDF("iw"))
+      .select(format_string("t%03d_%06d_iw%d",
+        pmod(col("fid") * 100 + col("k"), lit(175)) + 1,
+        col("fid") * 100 + col("k"), col("iw")).as("burst_id_jpl"))
+      .distinct()
+    (bursts, ids)
+  }
+
+  /** Oracle twin of [[syntheticFetch]] plus the time range and IN-list
+    * semi-join, projecting `select`; the caller appends its ORDER BY. */
+  private def syntheticFetchSql(select: String): String =
+    s"""WITH bursts AS (
+       |  SELECT
+       |    PRINTF('t%03d_%06d_iw%d', (o_orderkey % 3000) % 175 + 1,
+       |      o_orderkey % 3000, o_orderkey % 3 + 1) AS burst_id_jpl,
+       |    CAST(o_orderdate AS TIMESTAMP) AS sensing_time,
+       |    PRINTF('S1A_IW_SLC__1SDV_%sT000000_%05d.SAFE',
+       |      STRFTIME(o_orderdate, '%Y%m%d'), o_orderkey % 500) AS granule
+       |  FROM orders),
+       |wanted AS (
+       |  SELECT DISTINCT PRINTF('t%03d_%06d_iw%d',
+       |      (f.fid * 100 + k.k) % 175 + 1, f.fid * 100 + k.k, iw.iw) AS burst_id_jpl
+       |  FROM (SELECT UNNEST([3, 7]) AS fid) f,
+       |       (SELECT UNNEST(RANGE(0, 27)) AS k) k,
+       |       (SELECT UNNEST(RANGE(1, 4)) AS iw) iw)
+       |SELECT $select
+       |FROM bursts
+       |WHERE burst_id_jpl IN (SELECT burst_id_jpl FROM wanted)
+       |  AND sensing_time >= TIMESTAMP '1993-01-01 00:00:00'
+       |  AND sensing_time <= TIMESTAMP '1997-06-30 00:00:00'
+       |""".stripMargin
+
   val queries: Seq[QueryDef] = Seq(
     // granule-level historical fetch (query_historical_bursts.py:98-124):
-    // a synthetic bursts fact from orders (many bursts share a granule),
-    // an arithmetic frame→burst mapping standing in for the JSON document
-    // (frames 3 and 7, 27 burst numbers × 3 subswaths each), IN-list
-    // semi-join + time range + granule dedup + `.SAFE` strip
+    // the synthetic fetch fixture through IN-list semi-join + time range +
+    // granule dedup + `.SAFE` strip
     QueryDef.sql(
       "q_fetch_granules",
-      """WITH bursts AS (
-        |  SELECT
-        |    PRINTF('t%03d_%06d_iw%d', (o_orderkey %% 3000) %% 175 + 1,
-        |      o_orderkey %% 3000, o_orderkey %% 3 + 1) AS burst_id_jpl,
-        |    CAST(o_orderdate AS TIMESTAMP) AS sensing_time,
-        |    PRINTF('S1A_IW_SLC__1SDV_%sT000000_%05d.SAFE',
-        |      STRFTIME(o_orderdate, '%Y%m%d'), o_orderkey %% 500) AS granule
-        |  FROM orders),
-        |wanted AS (
-        |  SELECT DISTINCT PRINTF('t%03d_%06d_iw%d',
-        |      (f.fid * 100 + k.k) %% 175 + 1, f.fid * 100 + k.k, iw.iw) AS burst_id_jpl
-        |  FROM (SELECT UNNEST([3, 7]) AS fid) f,
-        |       (SELECT UNNEST(RANGE(0, 27)) AS k) k,
-        |       (SELECT UNNEST(RANGE(1, 4)) AS iw) iw)
-        |SELECT DISTINCT REPLACE(granule, '.SAFE', '') AS granule
-        |FROM bursts
-        |WHERE burst_id_jpl IN (SELECT burst_id_jpl FROM wanted)
-        |  AND sensing_time >= TIMESTAMP '1993-01-01 00:00:00'
-        |  AND sensing_time <= TIMESTAMP '1997-06-30 00:00:00'
-        |ORDER BY granule""".stripMargin.replace("%%", "%")) { (s, d) =>
-      val bursts = Tables.orders(s, d).select(
-        format_string("t%03d_%06d_iw%d",
-          pmod(pmod(col("o_orderkey"), lit(3000)), lit(175)) + 1,
-          pmod(col("o_orderkey"), lit(3000)),
-          pmod(col("o_orderkey"), lit(3)) + 1).as("burst_id_jpl"),
-        col("o_orderdate").cast("timestamp").as("sensing_time"),
-        format_string("S1A_IW_SLC__1SDV_%sT000000_%05d.SAFE",
-          date_format(col("o_orderdate"), "yyyyMMdd"),
-          pmod(col("o_orderkey"), lit(500))).as("granule"))
-      val fids = Seq(3L, 7L)
-      import s.implicits._
-      val ids = fids.toDF("fid")
-        .crossJoin(s.range(0, 27).toDF("k"))
-        .crossJoin(s.range(1, 4).toDF("iw"))
-        .select(format_string("t%03d_%06d_iw%d",
-          pmod(col("fid") * 100 + col("k"), lit(175)) + 1,
-          col("fid") * 100 + col("k"), col("iw")).as("burst_id_jpl"))
-        .distinct()
+      syntheticFetchSql("DISTINCT REPLACE(granule, '.SAFE', '') AS granule") +
+        "ORDER BY granule") { (s, d) =>
+      val (bursts, ids) = syntheticFetch(s, d)
       granulesFor(bursts, ids, "1993-01-01 00:00:00", "1997-06-30 00:00:00")
     },
 
@@ -192,44 +202,9 @@ object Catalog {
     // without an oracle row
     QueryDef.sql(
       "q_fetch_bursts",
-      """WITH bursts AS (
-        |  SELECT
-        |    PRINTF('t%03d_%06d_iw%d', (o_orderkey %% 3000) %% 175 + 1,
-        |      o_orderkey %% 3000, o_orderkey %% 3 + 1) AS burst_id_jpl,
-        |    CAST(o_orderdate AS TIMESTAMP) AS sensing_time,
-        |    PRINTF('S1A_IW_SLC__1SDV_%sT000000_%05d.SAFE',
-        |      STRFTIME(o_orderdate, '%Y%m%d'), o_orderkey %% 500) AS granule
-        |  FROM orders),
-        |wanted AS (
-        |  SELECT DISTINCT PRINTF('t%03d_%06d_iw%d',
-        |      (f.fid * 100 + k.k) %% 175 + 1, f.fid * 100 + k.k, iw.iw) AS burst_id_jpl
-        |  FROM (SELECT UNNEST([3, 7]) AS fid) f,
-        |       (SELECT UNNEST(RANGE(0, 27)) AS k) k,
-        |       (SELECT UNNEST(RANGE(1, 4)) AS iw) iw)
-        |SELECT burst_id_jpl, sensing_time, granule
-        |FROM bursts
-        |WHERE burst_id_jpl IN (SELECT burst_id_jpl FROM wanted)
-        |  AND sensing_time >= TIMESTAMP '1993-01-01 00:00:00'
-        |  AND sensing_time <= TIMESTAMP '1997-06-30 00:00:00'
-        |ORDER BY burst_id_jpl, sensing_time, granule""".stripMargin.replace("%%", "%")) { (s, d) =>
-      val bursts = Tables.orders(s, d).select(
-        format_string("t%03d_%06d_iw%d",
-          pmod(pmod(col("o_orderkey"), lit(3000)), lit(175)) + 1,
-          pmod(col("o_orderkey"), lit(3000)),
-          pmod(col("o_orderkey"), lit(3)) + 1).as("burst_id_jpl"),
-        col("o_orderdate").cast("timestamp").as("sensing_time"),
-        format_string("S1A_IW_SLC__1SDV_%sT000000_%05d.SAFE",
-          date_format(col("o_orderdate"), "yyyyMMdd"),
-          pmod(col("o_orderkey"), lit(500))).as("granule"))
-      val fids = Seq(3L, 7L)
-      import s.implicits._
-      val ids = fids.toDF("fid")
-        .crossJoin(s.range(0, 27).toDF("k"))
-        .crossJoin(s.range(1, 4).toDF("iw"))
-        .select(format_string("t%03d_%06d_iw%d",
-          pmod(col("fid") * 100 + col("k"), lit(175)) + 1,
-          col("fid") * 100 + col("k"), col("iw")).as("burst_id_jpl"))
-        .distinct()
+      syntheticFetchSql("burst_id_jpl, sensing_time, granule") +
+        "ORDER BY burst_id_jpl, sensing_time, granule") { (s, d) =>
+      val (bursts, ids) = syntheticFetch(s, d)
       burstsFor(bursts, ids, "1993-01-01 00:00:00", "1997-06-30 00:00:00")
         .orderBy(col("burst_id_jpl"), col("sensing_time"), col("granule"))
     }

@@ -84,6 +84,29 @@ object ConsistentBursts {
       .toDF("frame_id", "total_num_bursts", "burst_id_list", "sensing_time_list")
   }
 
+  /** Oracle of the option-0 candidates: the distinct (frame, date, burst)
+    * tuples, each date's sorted burst set `bset`, and the distinct sets. */
+  private val candidateSetsSql =
+    """WITH tuples AS (
+      |  SELECT DISTINCT user_id AS frame_id, event_type AS burst_id,
+      |    CAST(ts AS DATE) AS date
+      |  FROM events),
+      |by_date AS (
+      |  SELECT frame_id, date, LIST_SORT(LIST(DISTINCT burst_id)) AS bset
+      |  FROM tuples GROUP BY frame_id, date),
+      |cands AS (SELECT DISTINCT frame_id, bset FROM by_date)""".stripMargin
+
+  /** Ranks the kept (frame_id, bset, n_dates) of relation `kept` by cells,
+    * dates, then the lexicographic burst list, as [[options]] does. */
+  private def rankedSql(kept: String): String =
+    s"""ranked AS (
+       |  SELECT frame_id, bset, n_dates,
+       |    CAST(LEN(bset) * n_dates AS BIGINT) AS total_cells,
+       |    ROW_NUMBER() OVER (PARTITION BY frame_id
+       |      ORDER BY LEN(bset) * n_dates DESC, n_dates DESC,
+       |               ARRAY_TO_STRING(bset, ',')) AS rn
+       |  FROM $kept)""".stripMargin
+
   val queries: Seq[QueryDef] = Seq(
     // blackout-interval anti-join (P7, create_cslc_burst_catalog.py:172-183):
     // events excluded when their date falls inside the key's blackout window
@@ -121,26 +144,13 @@ object ConsistentBursts {
     // by subset-coverage; rank by cells, dates, lexicographic tiebreak)
     QueryDef.sql(
       "q_consistent_option0",
-      """WITH tuples AS (
-        |  SELECT DISTINCT user_id AS frame_id, event_type AS burst_id,
-        |    CAST(ts AS DATE) AS date
-        |  FROM events),
-        |by_date AS (
-        |  SELECT frame_id, date, LIST_SORT(LIST(DISTINCT burst_id)) AS bset
-        |  FROM tuples GROUP BY frame_id, date),
-        |cands AS (SELECT DISTINCT frame_id, bset FROM by_date),
+      s"""$candidateSetsSql,
         |kept AS (
         |  SELECT c.frame_id, c.bset, CAST(COUNT(*) AS BIGINT) AS n_dates
         |  FROM cands c JOIN by_date d
         |    ON d.frame_id = c.frame_id AND LIST_HAS_ALL(d.bset, c.bset)
         |  GROUP BY c.frame_id, c.bset),
-        |ranked AS (
-        |  SELECT frame_id, bset, n_dates,
-        |    CAST(LEN(bset) * n_dates AS BIGINT) AS total_cells,
-        |    ROW_NUMBER() OVER (PARTITION BY frame_id
-        |      ORDER BY LEN(bset) * n_dates DESC, n_dates DESC,
-        |               ARRAY_TO_STRING(bset, ',')) AS rn
-        |  FROM kept)
+        |${rankedSql("kept")}
         |SELECT frame_id, total_cells, ARRAY_TO_STRING(bset, ',') AS burst_ids,
         |  n_dates
         |FROM ranked WHERE rn = 1 ORDER BY frame_id""".stripMargin) { (s, d) =>
@@ -162,14 +172,7 @@ object ConsistentBursts {
     // first/last of the attached time list pin the time attachment.
     QueryDef.sql(
       "q_consistent_selection",
-      """WITH tuples AS (
-        |  SELECT DISTINCT user_id AS frame_id, event_type AS burst_id,
-        |    CAST(ts AS DATE) AS date
-        |  FROM events),
-        |by_date AS (
-        |  SELECT frame_id, date, LIST_SORT(LIST(DISTINCT burst_id)) AS bset
-        |  FROM tuples GROUP BY frame_id, date),
-        |cands AS (SELECT DISTINCT frame_id, bset FROM by_date),
+      s"""$candidateSetsSql,
         |kept AS (
         |  SELECT c.frame_id, c.bset, d.date
         |  FROM cands c JOIN by_date d
@@ -177,13 +180,7 @@ object ConsistentBursts {
         |agg AS (
         |  SELECT frame_id, bset, CAST(COUNT(*) AS BIGINT) AS n_dates
         |  FROM kept GROUP BY frame_id, bset),
-        |ranked AS (
-        |  SELECT frame_id, bset, n_dates,
-        |    CAST(LEN(bset) * n_dates AS BIGINT) AS total_cells,
-        |    ROW_NUMBER() OVER (PARTITION BY frame_id
-        |      ORDER BY LEN(bset) * n_dates DESC, n_dates DESC,
-        |               ARRAY_TO_STRING(bset, ',')) AS rn
-        |  FROM agg),
+        |${rankedSql("agg")},
         |times AS (
         |  SELECT user_id AS frame_id, CAST(ts AS DATE) AS date,
         |    DATE_TRUNC('second', MIN(ts)) AS t

@@ -164,6 +164,18 @@ object GeoFunctions {
     * double sum is exact — what lets q_geo_union_pipeline oracle it. */
   val stLength = udf((a: String) => if (a == null) 0.0 else parseWkt(a).getLength)
 
+  /** A copy of `g` with its negative longitudes shifted by +360, made
+    * valid by a zero buffer when the shift leaves it invalid. */
+  private def shiftedEast(g: Geometry): Geometry = {
+    val shifted = g.copy()
+    shifted.apply(new org.locationtech.jts.geom.CoordinateFilter {
+      override def filter(c: org.locationtech.jts.geom.Coordinate): Unit =
+        if (c.x < 0) c.x += 360
+    })
+    shifted.geometryChanged()
+    if (shifted.isValid) shifted else shifted.buffer(0)
+  }
+
   /** Dateline-aware centroid (build_frame_db.py:262-307 weighted-centroid
     * rule): for a wrap-encoded geometry, take the centroid in the +360
     * shifted frame and wrap the longitude back — a naive centroid of the
@@ -174,13 +186,7 @@ object GeoFunctions {
       val c = g.getCentroid
       (c.getX, c.getY)
     } else {
-      val shifted = g.copy()
-      shifted.apply(new org.locationtech.jts.geom.CoordinateFilter {
-        override def filter(c: org.locationtech.jts.geom.Coordinate): Unit =
-          if (c.x < 0) c.x += 360
-      })
-      shifted.geometryChanged()
-      val c = (if (shifted.isValid) shifted else shifted.buffer(0)).getCentroid
+      val c = shiftedEast(g).getCentroid
       val lon = if (c.getX >= 180) c.getX - 360 else c.getX
       (lon, c.getY)
     }
@@ -213,13 +219,7 @@ object GeoFunctions {
     val env = g.getEnvelopeInternal
     if (env.getWidth <= 180) g
     else {
-      val shifted = g.copy()
-      shifted.apply(new org.locationtech.jts.geom.CoordinateFilter {
-        override def filter(c: org.locationtech.jts.geom.Coordinate): Unit =
-          if (c.x < 0) c.x += 360
-      })
-      shifted.geometryChanged()
-      val fixed = if (shifted.isValid) shifted else shifted.buffer(0)
+      val fixed = shiftedEast(g)
       val west = gf.toGeometry(new org.locationtech.jts.geom.Envelope(0, 180, -90, 90))
       val east = gf.toGeometry(new org.locationtech.jts.geom.Envelope(180, 360, -90, 90))
       import org.locationtech.jts.operation.overlayng.OverlayNGRobust

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,41 +12,61 @@ import org.apache.spark.sql.functions._
   */
 object Analytics {
 
-  /** Exact LOWER median of `valueCol` per `event_type` via a
+  /** Exact positional pick of `valueCol` per `event_type` via a
     * quantized-value histogram: the histogram groupBy is map-side
     * combined and its size is bounded by DISTINCT values per key, so no
-    * reducer ever sorts raw rows. The positional pick selects the unique
-    * histogram row whose cumulative count first reaches position
-    * (n+1)/2. Shared by q_robust_stats and q_anomaly_rows. */
-  private def lowerMedian(df: org.apache.spark.sql.DataFrame, valueCol: String,
-      outName: String) = {
+    * reducer ever sorts raw rows. The pick selects the unique histogram
+    * row whose cumulative count first reaches position `pos(n)`. */
+  private def histogramPick(df: org.apache.spark.sql.DataFrame, valueCol: String,
+      outName: String)(pos: Column => Column) = {
     val hist = df.groupBy(col("event_type"), col(valueCol))
       .agg(count(lit(1)).as("c"))
     val wCum = Window.partitionBy(col("event_type")).orderBy(col(valueCol))
     val wAll = Window.partitionBy(col("event_type"))
     hist
       .withColumn("cum", sum(col("c")).over(wCum))
-      .withColumn("pos", floor((sum(col("c")).over(wAll) + 1) / 2.0).cast("long"))
+      .withColumn("pos", pos(sum(col("c")).over(wAll)))
       .filter(col("cum") - col("c") < col("pos") && col("pos") <= col("cum"))
       .select(col("event_type"), col(valueCol).as(outName))
   }
 
-  /** Exact lower p-quantile (p = num/den) per `event_type` via the same
-    * quantized-value histogram as [[lowerMedian]]: position
-    * (n−1)·num div den + 1 in value order. No reducer sorts raw rows. */
+  /** Exact LOWER median: position (n+1)/2. Shared by q_robust_stats and
+    * q_anomaly_rows. */
+  private def lowerMedian(df: org.apache.spark.sql.DataFrame, valueCol: String,
+      outName: String) =
+    histogramPick(df, valueCol, outName)(n => floor((n + 1) / 2.0).cast("long"))
+
+  /** Exact lower p-quantile (p = num/den): position (n−1)·num div den + 1
+    * in value order. */
   private def lowerQuantile(df: org.apache.spark.sql.DataFrame, valueCol: String,
-      num: Int, den: Int, outName: String) = {
-    val hist = df.groupBy(col("event_type"), col(valueCol))
-      .agg(count(lit(1)).as("c"))
-    val wCum = Window.partitionBy(col("event_type")).orderBy(col(valueCol))
-    val wAll = Window.partitionBy(col("event_type"))
-    hist
-      .withColumn("cum", sum(col("c")).over(wCum))
-      .withColumn("pos",
-        (floor(((sum(col("c")).over(wAll) - 1) * num) / den.toDouble) + 1).cast("long"))
-      .filter(col("cum") - col("c") < col("pos") && col("pos") <= col("cum"))
-      .select(col("event_type"), col(valueCol).as(outName))
-  }
+      num: Int, den: Int, outName: String) =
+    histogramPick(df, valueCol, outName)(n =>
+      (floor(((n - 1) * num) / den.toDouble) + 1).cast("long"))
+
+  /** Oracle twin of [[robustDeviations]]: the row-number lower median
+    * and MAD per type, as CTEs `v`, `med`, `dev` and `mad`. */
+  private val robustDeviationsSql =
+    """WITH v AS (
+      |  SELECT event_type, event_id,
+      |    CAST(FLOOR(value * 100) AS BIGINT) AS x
+      |  FROM events),
+      |med AS (
+      |  SELECT event_type, x AS med_c FROM (
+      |    SELECT event_type, x,
+      |      ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY x, event_id) AS rn,
+      |      COUNT(*) OVER (PARTITION BY event_type) AS n
+      |    FROM v) t
+      |  WHERE rn = CAST(FLOOR((n + 1) / 2.0) AS BIGINT)),
+      |dev AS (
+      |  SELECT v.event_type, v.event_id, v.x, ABS(v.x - m.med_c) AS ad, m.med_c
+      |  FROM v JOIN med m USING (event_type)),
+      |mad AS (
+      |  SELECT event_type, ad AS mad_c FROM (
+      |    SELECT event_type, ad,
+      |      ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY ad, event_id) AS rn,
+      |      COUNT(*) OVER (PARTITION BY event_type) AS n
+      |    FROM dev) t
+      |  WHERE rn = CAST(FLOOR((n + 1) / 2.0) AS BIGINT))""".stripMargin
 
   /** (event_type, event_id, x = cents-quantized value) projection plus
     * per-type median and MAD columns — the shared robust-stats core. */
@@ -294,27 +314,7 @@ object Analytics {
     // so the picked value is identical to the oracle's row_number plan.
     QueryDef.sql(
       "q_robust_stats",
-      """WITH v AS (
-        |  SELECT event_type, event_id,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS x
-        |  FROM events),
-        |med AS (
-        |  SELECT event_type, x AS med_c FROM (
-        |    SELECT event_type, x,
-        |      ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY x, event_id) AS rn,
-        |      COUNT(*) OVER (PARTITION BY event_type) AS n
-        |    FROM v) t
-        |  WHERE rn = CAST(FLOOR((n + 1) / 2.0) AS BIGINT)),
-        |dev AS (
-        |  SELECT v.event_type, v.event_id, v.x, ABS(v.x - m.med_c) AS ad, m.med_c
-        |  FROM v JOIN med m USING (event_type)),
-        |mad AS (
-        |  SELECT event_type, ad AS mad_c FROM (
-        |    SELECT event_type, ad,
-        |      ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY ad, event_id) AS rn,
-        |      COUNT(*) OVER (PARTITION BY event_type) AS n
-        |    FROM dev) t
-        |  WHERE rn = CAST(FLOOR((n + 1) / 2.0) AS BIGINT))
+      s"""$robustDeviationsSql
         |SELECT d.event_type, CAST(COUNT(*) AS BIGINT) AS n,
         |  MAX(d.med_c) AS med_c, MAX(md.mad_c) AS mad_c,
         |  CAST(SUM(CASE WHEN d.ad > 5 * md.mad_c THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
@@ -335,27 +335,7 @@ object Analytics {
     // summary and the listing cannot disagree.
     QueryDef.sql(
       "q_anomaly_rows",
-      """WITH v AS (
-        |  SELECT event_type, event_id,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS x
-        |  FROM events),
-        |med AS (
-        |  SELECT event_type, x AS med_c FROM (
-        |    SELECT event_type, x,
-        |      ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY x, event_id) AS rn,
-        |      COUNT(*) OVER (PARTITION BY event_type) AS n
-        |    FROM v) t
-        |  WHERE rn = CAST(FLOOR((n + 1) / 2.0) AS BIGINT)),
-        |dev AS (
-        |  SELECT v.event_type, v.event_id, v.x, ABS(v.x - m.med_c) AS ad, m.med_c
-        |  FROM v JOIN med m USING (event_type)),
-        |mad AS (
-        |  SELECT event_type, ad AS mad_c FROM (
-        |    SELECT event_type, ad,
-        |      ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY ad, event_id) AS rn,
-        |      COUNT(*) OVER (PARTITION BY event_type) AS n
-        |    FROM dev) t
-        |  WHERE rn = CAST(FLOOR((n + 1) / 2.0) AS BIGINT))
+      s"""$robustDeviationsSql
         |SELECT d.event_type, d.event_id, d.x, d.ad, d.med_c, md.mad_c
         |FROM dev d JOIN mad md USING (event_type)
         |WHERE d.ad > 5 * md.mad_c

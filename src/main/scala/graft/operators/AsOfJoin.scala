@@ -72,63 +72,55 @@ object AsOfJoin {
         rcols.map(c => col(s"__m.$c").as(prefix + c)): _*)
   }
 
+  /** Each purchase attached to the user's click `direction` of it
+    * (q_asof_join, q_asof_join_forward). */
+  private def purchaseClick(s: org.apache.spark.sql.SparkSession, d: String,
+      direction: String): DataFrame = {
+    val ev = Tables.events(s, d)
+    val probes = ev.filter(col("event_type") === "purchase")
+      .select(col("event_id"), col("user_id"), col("ts"))
+    // right side unique per (key, time): pre-aggregate equal-timestamp ties
+    val quotes = ev.filter(col("event_type") === "click")
+      .groupBy(col("user_id"), col("ts"))
+      .agg(floor(max(col("value")) * 100).cast("long").as("click_val_q2"))
+    asOf(probes, quotes, Seq("user_id"), "ts", direction = direction)
+      .select(col("event_id"), col("user_id"),
+        unix_micros(col("ts")).as("p_ts_us"),
+        unix_micros(col("asof_ts")).as("click_ts_us"),
+        col("asof_click_val_q2").as("click_val_q2"))
+      .orderBy(col("event_id"))
+  }
+
+  /** DuckDB's native ASOF LEFT JOIN twin of [[purchaseClick]]; `cmp` is
+    * the click-to-purchase time condition. */
+  private def purchaseClickSql(cmp: String): String =
+    s"""WITH probes AS (
+       |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
+       |quotes AS (
+       |  SELECT user_id, ts, CAST(FLOOR(MAX(value) * 100) AS BIGINT) AS click_val_q2
+       |  FROM events WHERE event_type = 'click' GROUP BY user_id, ts)
+       |SELECT p.event_id, p.user_id, EPOCH_US(p.ts) AS p_ts_us,
+       |  EPOCH_US(q.ts) AS click_ts_us, q.click_val_q2
+       |FROM probes p ASOF LEFT JOIN quotes q
+       |  ON p.user_id = q.user_id AND q.ts $cmp p.ts
+       |ORDER BY event_id""".stripMargin
+
   val queries: Seq[QueryDef] = Seq(
     // every purchase attached to the user's most recent click at-or-before
     // it; DuckDB's NATIVE ASOF LEFT JOIN is the oracle, so the union+window
     // formulation is proven equivalent to the canonical operator semantics
     QueryDef.sql(
       "q_asof_join",
-      """WITH probes AS (
-        |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-        |quotes AS (
-        |  SELECT user_id, ts, CAST(FLOOR(MAX(value) * 100) AS BIGINT) AS click_val_q2
-        |  FROM events WHERE event_type = 'click' GROUP BY user_id, ts)
-        |SELECT p.event_id, p.user_id, EPOCH_US(p.ts) AS p_ts_us,
-        |  EPOCH_US(q.ts) AS click_ts_us, q.click_val_q2
-        |FROM probes p ASOF LEFT JOIN quotes q
-        |  ON p.user_id = q.user_id AND q.ts <= p.ts
-        |ORDER BY event_id""".stripMargin) { (s, d) =>
-      val ev = Tables.events(s, d)
-      val probes = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      // right side unique per (key, time): pre-aggregate equal-timestamp ties
-      val quotes = ev.filter(col("event_type") === "click")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(floor(max(col("value")) * 100).cast("long").as("click_val_q2"))
-      asOf(probes, quotes, Seq("user_id"), "ts")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("p_ts_us"),
-          unix_micros(col("asof_ts")).as("click_ts_us"),
-          col("asof_click_val_q2").as("click_val_q2"))
-        .orderBy(col("event_id"))
+      purchaseClickSql("<=")) { (s, d) =>
+      purchaseClick(s, d, "backward")
     },
 
     // forward direction: each purchase attached to the user's NEXT click
     // at-or-after it (DuckDB's ASOF with a >= condition is the oracle)
     QueryDef.sql(
       "q_asof_join_forward",
-      """WITH probes AS (
-        |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-        |quotes AS (
-        |  SELECT user_id, ts, CAST(FLOOR(MAX(value) * 100) AS BIGINT) AS click_val_q2
-        |  FROM events WHERE event_type = 'click' GROUP BY user_id, ts)
-        |SELECT p.event_id, p.user_id, EPOCH_US(p.ts) AS p_ts_us,
-        |  EPOCH_US(q.ts) AS click_ts_us, q.click_val_q2
-        |FROM probes p ASOF LEFT JOIN quotes q
-        |  ON p.user_id = q.user_id AND q.ts >= p.ts
-        |ORDER BY event_id""".stripMargin) { (s, d) =>
-      val ev = Tables.events(s, d)
-      val probes = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val quotes = ev.filter(col("event_type") === "click")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(floor(max(col("value")) * 100).cast("long").as("click_val_q2"))
-      asOf(probes, quotes, Seq("user_id"), "ts", direction = "forward")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("p_ts_us"),
-          unix_micros(col("asof_ts")).as("click_ts_us"),
-          col("asof_click_val_q2").as("click_val_q2"))
-        .orderBy(col("event_id"))
+      purchaseClickSql(">=")) { (s, d) =>
+      purchaseClick(s, d, "forward")
     },
 
     // NEAREST direction: each event attached to the temporally closest

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,6 +15,53 @@ import org.apache.spark.sql.functions._
   * partition by user, aggregates are combiner-backed, values quantized.
   */
 object EventJourneys {
+
+  /** The next-event transition matrix (a, b, p = q6 probability) of the
+    * Markov queries, purchase made absorbing; checkpointed, since every
+    * squaring reads it twice. */
+  private def transitionMatrix(s: SparkSession, d: String): DataFrame = {
+    val seq = Tables.events(s, d).select(col("user_id"), col("event_type").as("a"),
+      lead(col("event_type"), 1).over(Window.partitionBy(col("user_id"))
+        .orderBy(col("ts"), col("event_id"))).as("b"))
+    val tc = seq.filter(col("b").isNotNull && col("a") =!= "purchase")
+      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("c"))
+    tc.withColumn("p", expr("(c * 1000000) div sum(c) over (partition by a)"))
+      .select(col("a"), col("b"), col("p"))
+      .unionByName(s.range(1)
+        .select(lit("purchase").as("a"), lit("purchase").as("b"), lit(1000000L).as("p")))
+      .localCheckpoint(true)
+  }
+
+  /** `m`⁸ by three squarings, each exact Σ(p·p) div 10⁶ and checkpointed. */
+  private def pow8(m: DataFrame): DataFrame =
+    (1 to 3).foldLeft(m) { (t, _) =>
+      t.as("x").join(t.as("y"), col("y.a") === col("x.b"))
+        .groupBy(col("x.a").as("a"), col("y.b").as("b"))
+        .agg(expr("sum(x.p * y.p) div 1000000").as("p"))
+        .localCheckpoint(true)
+    }
+
+  /** Oracle twin of [[transitionMatrix]]: CTEs seq, tc and t1. */
+  private val transitionMatrixSql =
+    """WITH seq AS (
+      |  SELECT user_id, event_type AS a,
+      |    LEAD(event_type) OVER (PARTITION BY user_id
+      |      ORDER BY ts, event_id) AS b
+      |  FROM events),
+      |tc AS (
+      |  SELECT a, b, CAST(COUNT(*) AS BIGINT) AS c FROM seq
+      |  WHERE b IS NOT NULL AND a <> 'purchase' GROUP BY a, b),
+      |t1 AS MATERIALIZED (
+      |  SELECT a, b, (c * 1000000) // SUM(c) OVER (PARTITION BY a) AS p
+      |  FROM tc
+      |  UNION ALL
+      |  SELECT 'purchase' AS a, 'purchase' AS b, 1000000 AS p)""".stripMargin
+
+  /** One squaring of relation `prev` into CTE `next`. */
+  private def squareSql(prev: String, next: String): String =
+    s"""$next AS MATERIALIZED (
+       |  SELECT x.a, y.b, CAST(SUM(x.p * y.p) // 1000000 AS BIGINT) AS p
+       |  FROM $prev x JOIN $prev y ON y.a = x.b GROUP BY x.a, y.b)""".stripMargin
 
   val queries: Seq[QueryDef] = Seq(
 
@@ -542,50 +590,14 @@ object EventJourneys {
     // TWICE — the exponential re-inlining lesson).
     QueryDef.sql(
       "q_markov_conversion",
-      """WITH seq AS (
-        |  SELECT user_id, event_type AS a,
-        |    LEAD(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS b
-        |  FROM events),
-        |tc AS (
-        |  SELECT a, b, CAST(COUNT(*) AS BIGINT) AS c FROM seq
-        |  WHERE b IS NOT NULL AND a <> 'purchase' GROUP BY a, b),
-        |t1 AS MATERIALIZED (
-        |  SELECT a, b, (c * 1000000) // SUM(c) OVER (PARTITION BY a) AS p
-        |  FROM tc
-        |  UNION ALL
-        |  SELECT 'purchase' AS a, 'purchase' AS b, 1000000 AS p),
-        |t2 AS MATERIALIZED (
-        |  SELECT x.a, y.b, CAST(SUM(x.p * y.p) // 1000000 AS BIGINT) AS p
-        |  FROM t1 x JOIN t1 y ON y.a = x.b GROUP BY x.a, y.b),
-        |t4 AS MATERIALIZED (
-        |  SELECT x.a, y.b, CAST(SUM(x.p * y.p) // 1000000 AS BIGINT) AS p
-        |  FROM t2 x JOIN t2 y ON y.a = x.b GROUP BY x.a, y.b),
-        |t8 AS MATERIALIZED (
-        |  SELECT x.a, y.b, CAST(SUM(x.p * y.p) // 1000000 AS BIGINT) AS p
-        |  FROM t4 x JOIN t4 y ON y.a = x.b GROUP BY x.a, y.b)
+      s"""$transitionMatrixSql,
+        |${squareSql("t1", "t2")},
+        |${squareSql("t2", "t4")},
+        |${squareSql("t4", "t8")}
         |SELECT a AS start_state, CAST(p AS BIGINT) AS p_convert8_q6
         |FROM t8 WHERE b = 'purchase' AND a <> 'purchase'
         |ORDER BY start_state""".stripMargin) { (s, d) =>
-      val seq = Tables.events(s, d).select(col("user_id"), col("event_type").as("a"),
-        lead(col("event_type"), 1).over(Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))).as("b"))
-      val tc = seq.filter(col("b").isNotNull && col("a") =!= "purchase")
-        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("c"))
-      val t1 = tc
-        .withColumn("p", expr("(c * 1000000) div sum(c) over (partition by a)"))
-        .select(col("a"), col("b"), col("p"))
-        .unionByName(Tables.events(s, d).sparkSession.range(1)
-          .select(lit("purchase").as("a"), lit("purchase").as("b"),
-            lit(1000000L).as("p")))
-      var t = t1.localCheckpoint(true)
-      for (_ <- 1 to 3) {
-        t = t.as("x").join(t.as("y"), col("y.a") === col("x.b"))
-          .groupBy(col("x.a").as("a"), col("y.b").as("b"))
-          .agg(expr("sum(x.p * y.p) div 1000000").as("p"))
-          .localCheckpoint(true)
-      }
-      t.filter(col("b") === "purchase" && col("a") =!= "purchase")
+      pow8(transitionMatrix(s, d)).filter(col("b") === "purchase" && col("a") =!= "purchase")
         .select(col("a").as("start_state"), col("p").as("p_convert8_q6"))
         .orderBy(col("start_state"))
     },
@@ -632,35 +644,18 @@ object EventJourneys {
     QueryDef.sql(
       "q_markov_attribution",
       {
-        def sq(prev: String, next: String, suf: String) =
-          s"""$next AS MATERIALIZED (
-             |  SELECT x.a, y.b, CAST(SUM(x.p * y.p) // 1000000 AS BIGINT) AS p
-             |  FROM ${prev} x JOIN ${prev} y ON y.a = x.b GROUP BY x.a, y.b)"""
-            .stripMargin
         def variant(state: String, suf: String) =
           s"""v1$suf AS MATERIALIZED (
              |  SELECT a, b, p FROM t1 WHERE a <> '$state' AND b <> '$state'
              |  UNION ALL
              |  SELECT '$state' AS a, '$state' AS b, 0 AS p),
-             |${sq(s"v1$suf", s"v2$suf", suf)},
-             |${sq(s"v2$suf", s"v4$suf", suf)},
-             |${sq(s"v4$suf", s"v8$suf", suf)}""".stripMargin
-        s"""WITH seq AS (
-           |  SELECT user_id, event_type AS a,
-           |    LEAD(event_type) OVER (PARTITION BY user_id
-           |      ORDER BY ts, event_id) AS b
-           |  FROM events),
-           |tc AS (
-           |  SELECT a, b, CAST(COUNT(*) AS BIGINT) AS c FROM seq
-           |  WHERE b IS NOT NULL AND a <> 'purchase' GROUP BY a, b),
-           |t1 AS MATERIALIZED (
-           |  SELECT a, b, (c * 1000000) // SUM(c) OVER (PARTITION BY a) AS p
-           |  FROM tc
-           |  UNION ALL
-           |  SELECT 'purchase' AS a, 'purchase' AS b, 1000000 AS p),
-           |${sq("t1", "t2", "")},
-           |${sq("t2", "t4", "")},
-           |${sq("t4", "t8", "")},
+             |${squareSql(s"v1$suf", s"v2$suf")},
+             |${squareSql(s"v2$suf", s"v4$suf")},
+             |${squareSql(s"v4$suf", s"v8$suf")}""".stripMargin
+        s"""$transitionMatrixSql,
+           |${squareSql("t1", "t2")},
+           |${squareSql("t2", "t4")},
+           |${squareSql("t4", "t8")},
            |base AS (SELECT p AS p0 FROM t8 WHERE a = 'view' AND b = 'purchase'),
            |${variant("click", "c")},
            |${variant("error", "e")},
@@ -678,35 +673,15 @@ object EventJourneys {
            |FROM rem CROSS JOIN base
            |ORDER BY removed_state""".stripMargin
       }) { (s, d) =>
-      val seq = Tables.events(s, d).select(col("user_id"), col("event_type").as("a"),
-        lead(col("event_type"), 1).over(Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))).as("b"))
-      val tc = seq.filter(col("b").isNotNull && col("a") =!= "purchase")
-        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("c"))
-      val sess = Tables.events(s, d).sparkSession
-      val absorbing = sess.range(1)
-        .select(lit("purchase").as("a"), lit("purchase").as("b"), lit(1000000L).as("p"))
-      val t1 = tc
-        .withColumn("p", expr("(c * 1000000) div sum(c) over (partition by a)"))
-        .select(col("a"), col("b"), col("p"))
-        .unionByName(absorbing)
-        .localCheckpoint(true)
-      def pow8(m0: org.apache.spark.sql.DataFrame) = {
-        var t = m0
-        for (_ <- 1 to 3) {
-          t = t.as("x").join(t.as("y"), col("y.a") === col("x.b"))
-            .groupBy(col("x.a").as("a"), col("y.b").as("b"))
-            .agg(expr("sum(x.p * y.p) div 1000000").as("p"))
-            .localCheckpoint(true)
-        }
-        t.filter(col("a") === "view" && col("b") === "purchase").select(col("p"))
-      }
-      val base = pow8(t1).select(col("p").as("p0"))
+      val t1 = transitionMatrix(s, d)
+      def viewToPurchase(m: DataFrame) =
+        pow8(m).filter(col("a") === "view" && col("b") === "purchase").select(col("p"))
+      val base = viewToPurchase(t1).select(col("p").as("p0"))
       val variants = Seq("click", "error", "signup").map { st =>
         val v1 = t1.filter(col("a") =!= st && col("b") =!= st)
-          .unionByName(sess.range(1)
+          .unionByName(s.range(1)
             .select(lit(st).as("a"), lit(st).as("b"), lit(0L).as("p")))
-        pow8(v1).select(lit(st).as("removed_state"), col("p"))
+        viewToPurchase(v1).select(lit(st).as("removed_state"), col("p"))
       }
       variants.reduce(_ unionByName _)
         .crossJoin(broadcast(base))

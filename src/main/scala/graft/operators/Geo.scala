@@ -63,20 +63,13 @@ object Geo {
           (col("tr") * 8 + col("sw")).cast("double"),
           col("r") * lit(0.8)).as("geom"))
 
-  /** Shared DuckDB-oracle prefix (pos -> allf): replay of the jpl-id
-    * grid inversion -> land flag -> two-pass smoothing -> per-run DP
-    * frame solve -> feasible/infeasible frame spans, keyed by track.
-    * Both q_catalog_frames_meta and q_catalog_build build on it
-    * (callers wrap as "WITH RECURSIVE <prefix>, <tail...>"). */
-  private val catalogFramesPrefixSql: String =
-    """pos AS (
-      |  SELECT CAST(s_suppkey // 27 + 1 AS INTEGER) AS key,
-      |    ROW_NUMBER() OVER (PARTITION BY s_suppkey // 27
-      |      ORDER BY s_suppkey) AS rn,
-      |    ((s_suppkey // 27) <= 5
-      |      AND (s_suppkey % 27) BETWEEN 6 AND 18) AS land0
-      |  FROM supplier WHERE s_suppkey < 400),
-      |r0 AS (
+  /** Shared DuckDB-oracle frame solve (pos -> allf): land flag ->
+    * two-pass smoothing -> per-run DP frame solve -> feasible/infeasible
+    * frame spans, keyed by `key`. `pos` is the body of the (key, rn, land0)
+    * CTE it starts from; callers wrap as "WITH RECURSIVE <prefix>, <tail...>". */
+  private def framesDpSql(pos: String): String =
+    s"pos AS (\n$pos),\n" +
+    """r0 AS (
       |  SELECT key, rn, land0,
       |    rn - ROW_NUMBER() OVER (PARTITION BY key, land0 ORDER BY rn) AS g0
       |  FROM pos),
@@ -164,6 +157,16 @@ object Geo {
       |  WHERE d.best >= 1000000000000),
       |allf AS (
       |  SELECT * FROM feas UNION ALL SELECT * FROM infeas)""".stripMargin
+
+  /** The frame solve on the jpl-id grid inversion, keyed by track; both
+    * q_catalog_frames_meta and q_catalog_build build on it. */
+  private val catalogFramesPrefixSql: String = framesDpSql(
+    """  SELECT CAST(s_suppkey // 27 + 1 AS INTEGER) AS key,
+      |    ROW_NUMBER() OVER (PARTITION BY s_suppkey // 27
+      |      ORDER BY s_suppkey) AS rn,
+      |    ((s_suppkey // 27) <= 5
+      |      AND (s_suppkey % 27) BETWEEN 6 AND 18) AS land0
+      |  FROM supplier WHERE s_suppkey < 400""".stripMargin)
 
   val queries: Seq[QueryDef] = Seq(
 
@@ -465,99 +468,12 @@ object Geo {
     //      one undersized frame carrying the run's own land flag.
     QueryDef.sql(
       "q_frame_dp",
-      """WITH RECURSIVE pos AS (
-        |  SELECT user_id AS key,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn,
-        |    (event_type = 'error') AS land0
-        |  FROM events),
-        |r0 AS (
-        |  SELECT key, rn, land0,
-        |    rn - ROW_NUMBER() OVER (PARTITION BY key, land0 ORDER BY rn) AS g0
-        |  FROM pos),
-        |shortland AS (
-        |  SELECT key, MAX(rn) AS e FROM r0 WHERE land0
-        |  GROUP BY key, g0 HAVING COUNT(*) < 5),
-        |i1 AS (
-        |  SELECT p.key, p.rn,
-        |    (p.land0 OR EXISTS (SELECT 1 FROM shortland s
-        |       WHERE s.key = p.key AND p.rn BETWEEN s.e - 1 AND s.e + 3)) AS land1
-        |  FROM pos p),
-        |r1 AS (
-        |  SELECT key, rn, land1,
-        |    rn - ROW_NUMBER() OVER (PARTITION BY key, land1 ORDER BY rn) AS g1
-        |  FROM i1),
-        |runlen AS (
-        |  SELECT key, land1, g1, COUNT(*) AS len
-        |  FROM r1 GROUP BY key, land1, g1),
-        |i2 AS (
-        |  SELECT r.key, r.rn, (r.land1 OR l.len < 5) AS land
-        |  FROM r1 r JOIN runlen l
-        |    ON l.key = r.key AND l.land1 = r.land1 AND l.g1 = r.g1),
-        |r2 AS (
-        |  SELECT key, rn, land,
-        |    rn - ROW_NUMBER() OVER (PARTITION BY key, land ORDER BY rn) AS g2
-        |  FROM i2),
-        |nn AS (
-        |  SELECT key, land,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY key ORDER BY MIN(rn)) AS BIGINT) AS run_id,
-        |    CAST(MIN(rn) - 1 AS BIGINT) AS run_start,
-        |    CAST(COUNT(*) AS BIGINT) AS n
-        |  FROM r2 GROUP BY key, land, g2),
-        |dp AS (
-        |  SELECT key, run_id, n, n AS i, CAST(0 AS BIGINT) AS best,
-        |    CAST(-1 AS BIGINT) AS bj,
-        |    CAST(1000000000000 AS BIGINT) AS w1, CAST(1000000000000 AS BIGINT) AS w2,
-        |    CAST(1000000000000 AS BIGINT) AS w3, CAST(1000000000000 AS BIGINT) AS w4,
-        |    CAST(1000000000000 AS BIGINT) AS w5, CAST(1000000000000 AS BIGINT) AS w6,
-        |    CAST(1000000000000 AS BIGINT) AS w7, CAST(1000000000000 AS BIGINT) AS w8,
-        |    CAST(1000000000000 AS BIGINT) AS w9
-        |  FROM nn
-        |  UNION ALL
-        |  SELECT key, run_id, n, i,
-        |    LEAST(c4, c5, c6, c7, c8, c9) AS best,
-        |    CASE LEAST(c4, c5, c6, c7, c8, c9)
-        |      WHEN c4 THEN i + 4 WHEN c5 THEN i + 5 WHEN c6 THEN i + 6
-        |      WHEN c7 THEN i + 7 WHEN c8 THEN i + 8 ELSE i + 9 END AS bj,
-        |    w1, w2, w3, w4, w5, w6, w7, w8, w9
-        |  FROM (
-        |    SELECT key, run_id, n, i - 1 AS i,
-        |      CASE WHEN i + 3 <= n AND w3 < 1000000000000
-        |        THEN w3 + 64 ELSE 1000000000000 END AS c4,
-        |      CASE WHEN i + 4 <= n AND w4 < 1000000000000
-        |        THEN w4 + 27 ELSE 1000000000000 END AS c5,
-        |      CASE WHEN i + 5 <= n AND w5 < 1000000000000
-        |        THEN w5 + 8 ELSE 1000000000000 END AS c6,
-        |      CASE WHEN i + 6 <= n AND w6 < 1000000000000
-        |        THEN w6 + 1 ELSE 1000000000000 END AS c7,
-        |      CASE WHEN i + 7 <= n AND w7 < 1000000000000
-        |        THEN w7 ELSE 1000000000000 END AS c8,
-        |      CASE WHEN i + 8 <= n AND w8 < 1000000000000
-        |        THEN w8 + 1 ELSE 1000000000000 END AS c9,
-        |      best AS w1, w1 AS w2, w2 AS w3, w3 AS w4, w4 AS w5,
-        |      w5 AS w6, w6 AS w7, w7 AS w8, w8 AS w9
-        |    FROM dp WHERE i > 0) s),
-        |walk AS (
-        |  SELECT key, run_id, n, CAST(0 AS BIGINT) AS k FROM nn
-        |  UNION ALL
-        |  SELECT w.key, w.run_id, w.n, d.bj AS k
-        |  FROM walk w JOIN dp d
-        |    ON d.key = w.key AND d.run_id = w.run_id AND d.i = w.k
-        |  WHERE w.k < w.n AND d.best < 1000000000000),
-        |feas AS (
-        |  SELECT w.key, nn.run_start + w.k AS "start",
-        |    nn.run_start + LEAST(d.bj + 1, w.n) AS "end", nn.land AS is_land
-        |  FROM walk w
-        |  JOIN dp d ON d.key = w.key AND d.run_id = w.run_id AND d.i = w.k
-        |  JOIN nn ON nn.key = w.key AND nn.run_id = w.run_id
-        |  WHERE w.k < w.n AND d.best < 1000000000000),
-        |infeas AS (
-        |  SELECT nn.key, nn.run_start AS "start",
-        |    nn.run_start + nn.n AS "end", nn.land AS is_land
-        |  FROM nn JOIN dp d
-        |    ON d.key = nn.key AND d.run_id = nn.run_id AND d.i = 0
-        |  WHERE d.best >= 1000000000000),
-        |allf AS (
-        |  SELECT * FROM feas UNION ALL SELECT * FROM infeas)
+      "WITH RECURSIVE " + framesDpSql(
+        """  SELECT user_id AS key,
+          |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn,
+          |    (event_type = 'error') AS land0
+          |  FROM events""".stripMargin) +
+        """
         |SELECT key,
         |  CAST(ROW_NUMBER() OVER (PARTITION BY key ORDER BY "start", "end") AS BIGINT) AS frame_id,
         |  "start", "end", is_land, "end" - "start" AS n_bursts

@@ -120,16 +120,7 @@ object Resampling {
     // q6 expansion.
     QueryDef.sql(
       "q_permutation_test",
-      s"""WITH base AS (
-        |  SELECT user_id, CAST(EPOCH_US(ts) // 86400000000 AS BIGINT) AS di,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS vq
-        |  FROM events),
-        |sp AS (SELECT (MIN(di) + MAX(di) + 1) // 2 AS cut FROM base),
-        |pu AS (
-        |  SELECT user_id, $h1Sql,
-        |    CAST(SUM(CASE WHEN di >= sp.cut THEN vq ELSE 0 END)
-        |      - SUM(CASE WHEN di < sp.cut THEN vq ELSE 0 END) AS BIGINT) AS dd
-        |  FROM base CROSS JOIN sp GROUP BY user_id, sp.cut),
+      s"""${StatsInference.prePostDeltasSql(s"user_id, $h1Sql")},
         |obs AS (
         |  SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
         |    CAST(SUM(dd) AS BIGINT) AS t_obs
@@ -146,15 +137,7 @@ object Resampling {
         |  cnt.c + 1 AS p_num,
         |  ((cnt.c + 1) * 1000000) // ${B + 1} AS p_q6
         |FROM obs CROSS JOIN cnt""".stripMargin) { (s, d) =>
-      val base = Tables.events(s, d).select(
-        col("user_id"),
-        expr("unix_micros(ts) div 86400000000").as("di"),
-        floor(col("value") * 100).cast("long").as("vq"))
-      val sp = base.agg(expr("(min(di) + max(di) + 1) div 2").as("cut"))
-      val pu = base.crossJoin(broadcast(sp))
-        .groupBy(col("user_id"), col("cut"))
-        .agg((sum(when(col("di") >= col("cut"), col("vq")).otherwise(0L))
-          - sum(when(col("di") < col("cut"), col("vq")).otherwise(0L))).as("dd"))
+      val pu = StatsInference.prePostDeltas(s, d)
         .select(col("user_id"), h1Col, col("dd"))
       val obs = pu.agg(nUsersGuarded, sum(col("dd")).as("t_obs"))
       val reps = pu.crossJoin(repSpine(s))

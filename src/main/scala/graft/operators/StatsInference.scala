@@ -27,6 +27,49 @@ import org.apache.spark.sql.functions._
   */
 object StatsInference {
 
+  /** Per-user change (user_id, cut, dd) of summed cents from before to
+    * after the timeline's midpoint day: the paired statistic of
+    * q_wilcoxon_signed_rank and q_permutation_test. */
+  private[operators] def prePostDeltas(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
+    val base = Tables.events(s, d).select(
+      col("user_id"),
+      expr("unix_micros(ts) div 86400000000").as("di"),
+      floor(col("value") * 100).cast("long").as("vq"))
+    val sp = base.agg(expr("(min(di) + max(di) + 1) div 2").as("cut"))
+    base.crossJoin(broadcast(sp))
+      .groupBy(col("user_id"), col("cut"))
+      .agg((sum(when(col("di") >= col("cut"), col("vq")).otherwise(0L))
+        - sum(when(col("di") < col("cut"), col("vq")).otherwise(0L))).as("dd"))
+  }
+
+  /** Oracle twin of [[prePostDeltas]] as CTEs base, sp and pu; `cols` is
+    * pu's leading column list. */
+  private[operators] def prePostDeltasSql(cols: String): String =
+    s"""WITH base AS (
+       |  SELECT user_id, CAST(EPOCH_US(ts) // 86400000000 AS BIGINT) AS di,
+       |    CAST(FLOOR(value * 100) AS BIGINT) AS vq
+       |  FROM events),
+       |sp AS (SELECT (MIN(di) + MAX(di) + 1) // 2 AS cut FROM base),
+       |pu AS (
+       |  SELECT $cols,
+       |    CAST(SUM(CASE WHEN di >= sp.cut THEN vq ELSE 0 END)
+       |      - SUM(CASE WHEN di < sp.cut THEN vq ELSE 0 END) AS BIGINT) AS dd
+       |  FROM base CROSS JOIN sp GROUP BY user_id, sp.cut)""".stripMargin
+
+  /** (coh = user_id mod 2, vq = cents) per event: the two cohorts of the
+    * rank tests. */
+  private def cohorts(s: org.apache.spark.sql.SparkSession, d: String) =
+    Tables.events(s, d).select(
+      pmod(col("user_id"), lit(2)).cast("long").as("coh"),
+      floor(col("value") * 100).cast("long").as("vq"))
+
+  private val cohortsSql =
+    """WITH base AS (
+      |  SELECT CAST(((user_id % 2) + 2) % 2 AS BIGINT) AS coh,
+      |    CAST(FLOOR(value * 100) AS BIGINT) AS vq
+      |  FROM events)""".stripMargin
+
   val queries: Seq[QueryDef] = Seq(
 
     // One-way ANOVA F over event types: vq = floor(value·1e3) exact
@@ -110,10 +153,7 @@ object StatsInference {
     // a global sort of the fact table.
     QueryDef.sql(
       "q_mann_whitney",
-      """WITH base AS (
-        |  SELECT CAST(((user_id % 2) + 2) % 2 AS BIGINT) AS coh,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS vq
-        |  FROM events),
+      s"""$cohortsSql,
         |hist AS (
         |  SELECT vq,
         |    CAST(SUM(CASE WHEN coh = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c0,
@@ -143,9 +183,7 @@ object StatsInference {
         |    AS BIGINT)
         |  END AS z_q6
         |FROM agg""".stripMargin) { (s, d) =>
-      val base = Tables.events(s, d).select(
-        pmod(col("user_id"), lit(2)).cast("long").as("coh"),
-        floor(col("value") * 100).cast("long").as("vq"))
+      val base = cohorts(s, d)
       val hist = base.groupBy(col("vq")).agg(
         sum(when(col("coh") === 0, 1L).otherwise(0L)).as("c0"),
         sum(when(col("coh") === 1, 1L).otherwise(0L)).as("c1"),
@@ -276,16 +314,7 @@ object StatsInference {
     // tie correction.
     QueryDef.sql(
       "q_wilcoxon_signed_rank",
-      """WITH base AS (
-        |  SELECT user_id, CAST(EPOCH_US(ts) // 86400000000 AS BIGINT) AS di,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS vq
-        |  FROM events),
-        |sp AS (SELECT (MIN(di) + MAX(di) + 1) // 2 AS cut FROM base),
-        |pu AS (
-        |  SELECT user_id,
-        |    CAST(SUM(CASE WHEN di >= sp.cut THEN vq ELSE 0 END)
-        |      - SUM(CASE WHEN di < sp.cut THEN vq ELSE 0 END) AS BIGINT) AS dd
-        |  FROM base CROSS JOIN sp GROUP BY user_id, sp.cut),
+      s"""${prePostDeltasSql("user_id")},
         |nz AS (SELECT user_id, dd, ABS(dd) AS ad FROM pu WHERE dd <> 0),
         |hist AS (
         |  SELECT ad, CAST(COUNT(*) AS BIGINT) AS t,
@@ -310,15 +339,7 @@ object StatsInference {
         |        - CAST(ties AS DOUBLE) / 48.0))) AS BIGINT)
         |  END AS z_q6
         |FROM agg""".stripMargin) { (s, d) =>
-      val base = Tables.events(s, d).select(
-        col("user_id"),
-        expr("unix_micros(ts) div 86400000000").as("di"),
-        floor(col("value") * 100).cast("long").as("vq"))
-      val sp = base.agg(expr("(min(di) + max(di) + 1) div 2").as("cut"))
-      val pu = base.crossJoin(broadcast(sp))
-        .groupBy(col("user_id"), col("cut"))
-        .agg((sum(when(col("di") >= col("cut"), col("vq")).otherwise(0L))
-          - sum(when(col("di") < col("cut"), col("vq")).otherwise(0L))).as("dd"))
+      val pu = prePostDeltas(s, d)
       val nz = pu.filter(col("dd") =!= 0)
         .select(col("dd"), abs(col("dd")).as("ad"))
       val hist = nz.groupBy(col("ad")).agg(
@@ -468,10 +489,7 @@ object StatsInference {
     // sort of the fact table.
     QueryDef.sql(
       "q_ks_test",
-      """WITH base AS (
-        |  SELECT CAST(((user_id % 2) + 2) % 2 AS BIGINT) AS coh,
-        |    CAST(FLOOR(value * 100) AS BIGINT) AS vq
-        |  FROM events),
+      s"""$cohortsSql,
         |hist AS (
         |  SELECT vq,
         |    CAST(SUM(CASE WHEN coh = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c0,
@@ -496,9 +514,7 @@ object StatsInference {
         |             / CAST(tot.n0 + tot.n1 AS DOUBLE))
         |      * 1000000.0) AS BIGINT) END AS ks_q6
         |FROM tot CROSS JOIN mx""".stripMargin) { (s, d) =>
-      val base = Tables.events(s, d).select(
-        pmod(col("user_id"), lit(2)).cast("long").as("coh"),
-        floor(col("value") * 100).cast("long").as("vq"))
+      val base = cohorts(s, d)
       val hist = base.groupBy(col("vq")).agg(
         sum(when(col("coh") === 0, 1L).otherwise(0L)).as("c0"),
         sum(when(col("coh") === 1, 1L).otherwise(0L)).as("c1"))

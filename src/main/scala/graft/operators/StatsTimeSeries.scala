@@ -26,6 +26,58 @@ object StatsTimeSeries {
     (l2, b2, s2)
   }
 
+  /** Per-type daily count series (event_type, ep = epoch day, xc =
+    * count·100), each type's days in one partition and in order: the input
+    * of the sequential Holt folds (q_holt_winters, q_holt_linear). */
+  private[operators] def dailySeries(s: org.apache.spark.sql.SparkSession, d: String) = {
+    import s.implicits._
+    Tables.events(s, d)
+      .groupBy(col("event_type"), col("ts").cast("date").as("day"))
+      .agg(count(lit(1)).as("x"))
+      .select(col("event_type"),
+        datediff(col("day"), lit("1970-01-01").cast("date")).cast("long").as("ep"),
+        (col("x") * 100).as("xc"))
+      .as[(String, Long, Long)]
+      .repartition(col("event_type"))
+      .sortWithinPartitions(col("event_type"), col("ep"))
+  }
+
+  /** Oracle twin of [[dailySeries]]: CTEs daily and seq (rn = day order). */
+  private[operators] val dailySeriesSql =
+    """WITH RECURSIVE daily AS (
+      |  SELECT event_type, CAST(ts AS DATE) AS day,
+      |    CAST(COUNT(*) AS BIGINT) AS x
+      |  FROM events GROUP BY 1, 2),
+      |seq AS (
+      |  SELECT event_type, x * 100 AS xc,
+      |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS rn
+      |  FROM daily)""".stripMargin
+
+  /** Per-type daily event counts (event_type, di, x) and their ordered
+    * same-type day pairs a.di < b.di, columns still aliased a and b. */
+  private def dailyPairs(s: org.apache.spark.sql.SparkSession, d: String) = {
+    val daily = Tables.events(s, d)
+      .groupBy(col("event_type"),
+        expr("unix_micros(ts) div 86400000000").as("di"))
+      .agg(count(lit(1)).as("x"))
+    (daily, daily.as("a")
+      .join(daily.as("b"),
+        col("a.event_type") === col("b.event_type") && col("a.di") < col("b.di")))
+  }
+
+  /** Oracle twin of [[dailyPairs]]: CTEs daily and pr, where pr projects
+    * event_type and `cols` over the pair (a, b). */
+  private def dailyPairsSql(cols: String): String =
+    s"""WITH daily AS (
+       |  SELECT event_type, CAST(EPOCH_US(ts) // 86400000000 AS BIGINT) AS di,
+       |    CAST(COUNT(*) AS BIGINT) AS x
+       |  FROM events GROUP BY 1, 2),
+       |pr AS (
+       |  SELECT a.event_type,
+       |    $cols
+       |  FROM daily a JOIN daily b
+       |    ON a.event_type = b.event_type AND a.di < b.di)""".stripMargin
+
   val queries: Seq[QueryDef] = Seq(
 
 
@@ -269,17 +321,9 @@ object StatsTimeSeries {
     // (slope, d1, d2) rank inside each type partition.
     QueryDef.sql(
       "q_theilsen",
-      """WITH daily AS (
-        |  SELECT event_type, CAST(EPOCH_US(ts) // 86400000000 AS BIGINT) AS di,
-        |    CAST(COUNT(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2),
-        |pr AS (
-        |  SELECT a.event_type,
-        |    CAST(FLOOR((b.x - a.x) * CAST(1000000.0 AS DOUBLE)
-        |      / (b.di - a.di)) AS BIGINT) AS sl,
-        |    a.di AS d1, b.di AS d2
-        |  FROM daily a JOIN daily b
-        |    ON a.event_type = b.event_type AND a.di < b.di),
+      s"""${dailyPairsSql("""CAST(FLOOR((b.x - a.x) * CAST(1000000.0 AS DOUBLE)
+          |      / (b.di - a.di)) AS BIGINT) AS sl,
+          |    a.di AS d1, b.di AS d2""".stripMargin)},
         |rk AS (
         |  SELECT event_type, sl,
         |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY sl, d1, d2) AS rn,
@@ -288,14 +332,8 @@ object StatsTimeSeries {
         |SELECT event_type, CAST(m AS BIGINT) AS n_pairs,
         |  CAST(sl AS BIGINT) AS ts_slope_q6
         |FROM rk WHERE rn = (m + 1) // 2 ORDER BY event_type""".stripMargin) { (s, d) =>
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("di"))
-        .agg(count(lit(1)).as("x"))
-      val pr = daily.as("a")
-        .join(daily.as("b"),
-          col("a.event_type") === col("b.event_type") && col("a.di") < col("b.di"))
-        .select(col("a.event_type").as("event_type"),
+      val (_, pairs) = dailyPairs(s, d)
+      val pr = pairs.select(col("a.event_type").as("event_type"),
           floor((col("b.x") - col("a.x")) * lit(1000000.0)
             / (col("b.di") - col("a.di"))).cast("long").as("sl"),
           col("a.di").as("d1"), col("b.di").as("d2"))
@@ -318,15 +356,7 @@ object StatsTimeSeries {
     // guard discipline).
     QueryDef.sql(
       "q_mann_kendall",
-      """WITH daily AS (
-        |  SELECT event_type, CAST(EPOCH_US(ts) // 86400000000 AS BIGINT) AS di,
-        |    CAST(COUNT(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2),
-        |pr AS (
-        |  SELECT a.event_type,
-        |    CASE WHEN b.x > a.x THEN 1 WHEN b.x < a.x THEN -1 ELSE 0 END AS sg
-        |  FROM daily a JOIN daily b
-        |    ON a.event_type = b.event_type AND a.di < b.di),
+      s"""${dailyPairsSql("CASE WHEN b.x > a.x THEN 1 WHEN b.x < a.x THEN -1 ELSE 0 END AS sg")},
         |s AS (SELECT event_type, CAST(SUM(sg) AS BIGINT) AS s_stat
         |      FROM pr GROUP BY event_type),
         |nn AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
@@ -350,14 +380,8 @@ object StatsTimeSeries {
         |    / SQRT(var18 * CAST(1.0 AS DOUBLE) / 18.0)) AS BIGINT)
         |  END AS z_q6
         |FROM v ORDER BY event_type""".stripMargin) { (s, d) =>
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("di"))
-        .agg(count(lit(1)).as("x"))
-      val pr = daily.as("a")
-        .join(daily.as("b"),
-          col("a.event_type") === col("b.event_type") && col("a.di") < col("b.di"))
-        .select(col("a.event_type").as("event_type"),
+      val (daily, pairs) = dailyPairs(s, d)
+      val pr = pairs.select(col("a.event_type").as("event_type"),
           when(col("b.x") > col("a.x"), 1)
             .when(col("b.x") < col("a.x"), -1).otherwise(0).as("sg"))
       val sS = pr.groupBy(col("event_type")).agg(sum(col("sg")).cast("long").as("s_stat"))
@@ -731,14 +755,7 @@ object StatsTimeSeries {
         val initS = (1 to 7).map(i => s"x$i - l0").mkString(", ")
         val xPivot = (1 to 7).map(i =>
           s"MAX(CASE WHEN rn = $i THEN xc END) AS x$i").mkString(",\n    ")
-        s"""WITH RECURSIVE daily AS (
-           |  SELECT event_type, CAST(ts AS DATE) AS day,
-           |    CAST(COUNT(*) AS BIGINT) AS x
-           |  FROM events GROUP BY 1, 2),
-           |seq AS (
-           |  SELECT event_type, x * 100 AS xc,
-           |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS rn
-           |  FROM daily),
+        s"""$dailySeriesSql,
            |init AS (
            |  SELECT event_type, SUM(CASE WHEN rn <= 7 THEN xc ELSE 0 END) // 7 AS l0,
            |    $xPivot
@@ -763,15 +780,7 @@ object StatsTimeSeries {
            |FROM last WHERE rr = 1 ORDER BY event_type""".stripMargin
       }) { (s, d) =>
       import s.implicits._
-      Tables.events(s, d)
-        .groupBy(col("event_type"), col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("x"))
-        .select(col("event_type"),
-          datediff(col("day"), lit("1970-01-01").cast("date")).cast("long").as("ep"),
-          (col("x") * 100).as("xc"))
-        .as[(String, Long, Long)]
-        .repartition(col("event_type"))
-        .sortWithinPartitions(col("event_type"), col("ep"))
+      dailySeries(s, d)
         .mapPartitions { it =>
           val out = scala.collection.mutable.ListBuffer
             .empty[(String, Long, Long, Long, Array[Long], Long)]

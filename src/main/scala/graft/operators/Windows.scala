@@ -386,14 +386,7 @@ object Windows {
     // as a recursive CTE (exact halving, see holtStep).
     QueryDef.sql(
       "q_holt_linear",
-      """WITH RECURSIVE daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    CAST(COUNT(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2),
-        |seq AS (
-        |  SELECT event_type, x * 100 AS xc,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS rn
-        |  FROM daily),
+      s"""${StatsTimeSeries.dailySeriesSql},
         |walk(event_type, rn, l, b) AS (
         |  SELECT event_type, rn, xc, CAST(0 AS BIGINT) FROM seq WHERE rn = 1
         |  UNION ALL
@@ -411,15 +404,7 @@ object Windows {
         |  CAST(l + 7 * b AS BIGINT) AS fc7_c
         |FROM last WHERE rr = 1 ORDER BY event_type""".stripMargin) { (s, d) =>
       import s.implicits._
-      Tables.events(s, d)
-        .groupBy(col("event_type"), col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("x"))
-        .select(col("event_type"),
-          datediff(col("day"), lit("1970-01-01").cast("date")).cast("long").as("ep"),
-          (col("x") * 100).as("xc"))
-        .as[(String, Long, Long)]
-        .repartition(col("event_type"))
-        .sortWithinPartitions(col("event_type"), col("ep"))
+      StatsTimeSeries.dailySeries(s, d)
         .mapPartitions { it =>
           val out = scala.collection.mutable.ListBuffer.empty[(String, Long, Long, Long, Long)]
           var cur: String = null

@@ -94,6 +94,16 @@ object Clustering {
        |      p -> (STRUCT_EXTRACT(p,1) - STRUCT_EXTRACT(p,2))
        |         * (STRUCT_EXTRACT(p,1) - STRUCT_EXTRACT(p,2)))) AS BIGINT)""".stripMargin
 
+  /** Lloyd round 1's inputs: the first 4 vectors as centroids `c0` and
+    * every vector's squared distance to each (`d1`). */
+  private val firstRoundDistSql =
+    s"""$qvSql,
+       |c0 AS (SELECT vec_id AS cid, q AS cq FROM qv WHERE vec_id < 4),
+       |d1 AS (
+       |  SELECT v.vec_id, c.cid,
+       |    ${distSql("v.q", "c.cq")} AS dist
+       |  FROM qv v CROSS JOIN c0 c)""".stripMargin
+
   val queries: Seq[QueryDef] = Seq(
 
     // 2 Lloyd rounds, k = 4: report per-cluster membership, total inertia
@@ -101,12 +111,7 @@ object Clustering {
     // the exact integer replay of Clustering.kmeans(emb, 4, 2)
     QueryDef.sql(
       "q_kmeans",
-      s"""WITH $qvSql,
-         |c0 AS (SELECT vec_id AS cid, q AS cq FROM qv WHERE vec_id < 4),
-         |d1 AS (
-         |  SELECT v.vec_id, c.cid,
-         |    ${distSql("v.q", "c.cq")} AS dist
-         |  FROM qv v CROSS JOIN c0 c),
+      s"""WITH $firstRoundDistSql,
          |m1 AS (
          |  SELECT vec_id, cid, dist FROM (
          |    SELECT vec_id, cid, dist,
@@ -322,12 +327,7 @@ object Clustering {
     // global-tf join shuffles on the bounded vocabulary, never raw text.
     QueryDef.sql(
       "q_cluster_terms",
-      s"""WITH $qvSql,
-         |c0 AS (SELECT vec_id AS cid, q AS cq FROM qv WHERE vec_id < 4),
-         |d1 AS (
-         |  SELECT v.vec_id, c.cid,
-         |    ${distSql("v.q", "c.cq")} AS dist
-         |  FROM qv v CROSS JOIN c0 c),
+      s"""WITH $firstRoundDistSql,
          |m1 AS (
          |  SELECT vec_id, cid FROM (
          |    SELECT vec_id, cid,

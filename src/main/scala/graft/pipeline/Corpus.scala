@@ -31,6 +31,35 @@ object Corpus {
       |  SELECT doc_id, UNNEST(REGEXP_EXTRACT_ALL(LOWER(text), '[a-z0-9]+')) AS t
       |  FROM documents)""".stripMargin
 
+  /** Integer BM25 term scores (doc_id, s) of the tokens that pass
+    * `terms`, as q_bm25_search defines them. */
+  private[pipeline] def bm25TermScores(s: org.apache.spark.sql.SparkSession, d: String,
+      terms: org.apache.spark.sql.Column) = {
+    val toks = tokRows(s, d)
+    val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
+    val g = dl.agg(sum(col("dl")).as("sumdl"), count(lit(1)).as("n"))
+    val tf = toks.filter(terms)
+      .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf"))
+    val dft = tf.groupBy(col("t")).agg(count(lit(1)).as("df"))
+    val nn = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
+    tf.join(broadcast(dft), Seq("t"))
+      .join(dl, Seq("doc_id"))
+      .crossJoin(broadcast(nn)).crossJoin(broadcast(g))
+      .select(col("doc_id"),
+        (floor((col("n_docs") - col("df") + 0.5) * lit(1000000.0)
+            / (col("df") + 0.5)).cast("long")
+          * expr("(22 * tf * sumdl * 1000000) div (10 * sumdl * tf + 3 * sumdl + 9 * dl * n)"))
+          .as("s"))
+  }
+
+  /** Per-(doc, token) count and token length: the Gopher signals' base. */
+  private val tokenCountsSql =
+    s"""$toksSql,
+       |tc AS (
+       |  SELECT doc_id, t, CAST(COUNT(*) AS BIGINT) AS cnt,
+       |    CAST(LENGTH(t) AS BIGINT) AS wlen
+       |  FROM tok GROUP BY doc_id, t)""".stripMargin
+
   private[pipeline] def tokRows(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables.documents(s, d)
       .select(col("doc_id"),
@@ -403,22 +432,8 @@ object Corpus {
          |  CAST(COUNT(*) AS BIGINT) AS n_terms
          |FROM scored GROUP BY doc_id
          |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin) { (s, d) =>
-      val toks = tokRows(s, d)
-      val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-      val g = dl.agg(sum(col("dl")).as("sumdl"), count(lit(1)).as("n"))
-      val tf = toks.filter(col("t").isin("table", "hash", "stream"))
-        .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf"))
-      val dft = tf.groupBy(col("t")).agg(count(lit(1)).as("df"))
-      val nn = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
-      val scored = tf.join(broadcast(dft), Seq("t"))
-        .join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(nn)).crossJoin(broadcast(g))
-        .select(col("doc_id"),
-          (floor((col("n_docs") - col("df") + 0.5) * lit(1000000.0)
-              / (col("df") + 0.5)).cast("long")
-            * expr("(22 * tf * sumdl * 1000000) div (10 * sumdl * tf + 3 * sumdl + 9 * dl * n)"))
-            .as("s"))
-      scored.groupBy(col("doc_id"))
+      bm25TermScores(s, d, col("t").isin("table", "hash", "stream"))
+        .groupBy(col("doc_id"))
         .agg(sum(col("s")).as("score"), count(lit(1)).as("n_terms"))
         .orderBy(col("score").desc, col("doc_id")).limit(20)
     },
@@ -453,11 +468,7 @@ object Corpus {
     // per doc; no window ever sees raw tokens.
     QueryDef.sql(
       "q_quality_gopher",
-      s"""WITH $toksSql,
-         |tc AS (
-         |  SELECT doc_id, t, CAST(COUNT(*) AS BIGINT) AS cnt,
-         |    CAST(LENGTH(t) AS BIGINT) AS wlen
-         |  FROM tok GROUP BY doc_id, t),
+      s"""WITH $tokenCountsSql,
          |sig AS (
          |  SELECT doc_id,
          |    CAST(SUM(cnt) AS BIGINT) AS n_tokens,
@@ -814,11 +825,7 @@ object Corpus {
     // operators COMPOSE, not just run alone.
     QueryDef.sql(
       "q_corpus_gate",
-      s"""WITH $toksSql,
-         |tc AS (
-         |  SELECT doc_id, t, CAST(COUNT(*) AS BIGINT) AS cnt,
-         |    CAST(LENGTH(t) AS BIGINT) AS wlen
-         |  FROM tok GROUP BY doc_id, t),
+      s"""WITH $tokenCountsSql,
          |sig AS (
          |  SELECT doc_id,
          |    CAST(SUM(cnt) AS BIGINT) AS n_tokens,
@@ -833,16 +840,7 @@ object Corpus {
          |    THEN 1 ELSE 0 END AS is_q
          |  FROM sig),
          |lx AS (
-         |  SELECT doc_id,
-         |    CAST((LENGTH(p) - LENGTH(REPLACE(p, ' the ', ''))) / 5
-         |       + (LENGTH(p) - LENGTH(REPLACE(p, ' and ', ''))) / 5 AS BIGINT) AS s_en,
-         |    CAST((LENGTH(p) - LENGTH(REPLACE(p, ' der ', ''))) / 5
-         |       + (LENGTH(p) - LENGTH(REPLACE(p, ' und ', ''))) / 5 AS BIGINT) AS s_de,
-         |    CAST((LENGTH(p) - LENGTH(REPLACE(p, ' le ', ''))) / 4
-         |       + (LENGTH(p) - LENGTH(REPLACE(p, ' et ', ''))) / 4 AS BIGINT) AS s_fr,
-         |    CAST((LENGTH(p) - LENGTH(REPLACE(p, ' el ', ''))) / 4
-         |       + (LENGTH(p) - LENGTH(REPLACE(p, ' y ', ''))) / 3 AS BIGINT) AS s_es
-         |  FROM (SELECT doc_id, ' ' || LOWER(text) || ' ' AS p FROM documents) x),
+         |${Eval.scoresSql("doc_id")}),
          |ln AS (
          |  SELECT doc_id, CASE WHEN s_en + s_de + s_fr + s_es > 0
          |    AND s_en >= GREATEST(s_de, s_fr, s_es) THEN 1 ELSE 0 END AS is_en
@@ -876,16 +874,7 @@ object Corpus {
           && floor(col("n_distinct") * lit(1000000.0) / col("n_tokens")) >= 200000
           && floor(col("top_cnt") * lit(1000000.0) / col("n_tokens")) <= 200000,
           1L).otherwise(0L).as("is_q"))
-      def occ(kw: String): org.apache.spark.sql.Column =
-        ((length(col("p")) - length(expr(s"replace(p, '$kw', '')"))) / kw.length)
-          .cast("long")
-      val lang = docs
-        .select(col("doc_id"), concat(lit(" "), lower(col("text")), lit(" ")).as("p"))
-        .select(col("doc_id"),
-          (occ(" the ") + occ(" and ")).as("s_en"),
-          (occ(" der ") + occ(" und ")).as("s_de"),
-          (occ(" le ") + occ(" et ")).as("s_fr"),
-          (occ(" el ") + occ(" y ")).as("s_es"))
+      val lang = Eval.scored(docs, Seq("doc_id"))
         .select(col("doc_id"),
           when(col("s_en") + col("s_de") + col("s_fr") + col("s_es") > 0
             && col("s_en") >= greatest(col("s_de"), col("s_fr"), col("s_es")),

@@ -72,18 +72,71 @@ object Embeddings {
        |    CAST(SUM(CASE WHEN s >= 0 THEN CAST(POWER(2, p) AS BIGINT) ELSE 0 END) AS BIGINT) AS bucket
        |  FROM proj GROUP BY vec_id)""".stripMargin
 
+  /** Oracle CTEs `norms` (squared norms) and `dots` (qid, cand_id, dot_q)
+    * of the 8 probes vec_id < 8 against every other vector. */
+  private[pipeline] val probeDotsSql =
+    s"""$qelemsSql,
+       |norms AS (SELECT vec_id, CAST(SUM(qe*qe) AS BIGINT) AS n2 FROM qe GROUP BY vec_id),
+       |dots AS (
+       |  SELECT q.vec_id AS qid, c.vec_id AS cand_id, CAST(SUM(q.qe*c.qe) AS BIGINT) AS dot_q
+       |  FROM qe q JOIN qe c ON q.i = c.i AND q.vec_id <> c.vec_id
+       |  WHERE q.vec_id < 8
+       |  GROUP BY q.vec_id, c.vec_id)""".stripMargin
+
+  /** Probe-candidate `dots` (qid, cand_id, dot_q) with cos_q6 from the
+    * squared `norms` (vec_id, n2) of both sides; probes are vec_id < 8. */
+  private[pipeline] def withCosine(dots: DataFrame, norms: DataFrame): DataFrame =
+    dots
+      .join(broadcast(norms.filter(col("vec_id") < 8)
+        .select(col("vec_id").as("qid"), col("n2").as("qn2"))), Seq("qid"))
+      .join(norms.select(col("vec_id").as("cand_id"), col("n2").as("cn2")), Seq("cand_id"))
+      .withColumn("cos_q6",
+        floor(col("dot_q") / sqrt(col("qn2").cast("double") * col("cn2")) * 1000000)
+          .cast("long"))
+
+  /** Top-5 candidates by quantized dot product `dot` (over probe array
+    * `qe` and candidate array `embedding`) for probes vec_id < 4: the
+    * pairing q_ann_zipwith and q_ann_native_dot share. */
+  private def probeTop5(s: org.apache.spark.sql.SparkSession, d: String,
+      dot: org.apache.spark.sql.Column) = {
+    import org.apache.spark.sql.expressions.Window
+    val emb = Tables.embeddings(s, d)
+    val q = emb.filter(col("vec_id") < 4)
+      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+    val pairs = emb.crossJoin(broadcast(q))
+      .filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id").as("cand_id"), dot.as("dot_q"))
+    val w = Window.partitionBy(col("qid")).orderBy(col("dot_q").desc, col("cand_id"))
+    pairs.withColumn("rk", row_number().over(w).cast("long"))
+      .filter(col("rk") <= 5)
+      .select(col("qid"), col("rk"), col("cand_id"), col("dot_q"))
+      .orderBy(col("qid"), col("rk"))
+  }
+
+  /** The one oracle of [[probeTop5]]: both ANN dot-product queries must
+    * match the same text, so a hash match of q_ann_native_dot proves the
+    * native dot product bit-exact against the zip_with formulation. */
+  private val probeTop5Sql =
+    """WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 4),
+      |pairs AS (
+      |  SELECT q.qid, e.vec_id AS cand_id,
+      |    CAST(LIST_SUM(LIST_TRANSFORM(LIST_ZIP(q.qe, e.embedding),
+      |      p -> CAST(FLOOR(CAST(STRUCT_EXTRACT(p, 1) AS DOUBLE)*1000000) AS BIGINT)
+      |         * CAST(FLOOR(CAST(STRUCT_EXTRACT(p, 2) AS DOUBLE)*1000000) AS BIGINT))) AS BIGINT) AS dot_q
+      |  FROM q, embeddings e WHERE e.vec_id <> q.qid),
+      |ranked AS (
+      |  SELECT qid, cand_id, dot_q,
+      |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dot_q DESC, cand_id) AS rk
+      |  FROM pairs)
+      |SELECT qid, CAST(rk AS BIGINT) AS rk, cand_id, dot_q
+      |FROM ranked WHERE rk <= 5 ORDER BY qid, rk""".stripMargin
+
   val queries: Seq[QueryDef] = Seq(
 
     // Brute-force cosine top-k: probe vectors (vec_id < 8) vs whole corpus
     QueryDef.sql(
       "q_ann_bruteforce",
-      s"""WITH $qelemsSql,
-         |norms AS (SELECT vec_id, CAST(SUM(qe*qe) AS BIGINT) AS n2 FROM qe GROUP BY vec_id),
-         |dots AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cand_id, CAST(SUM(q.qe*c.qe) AS BIGINT) AS dot_q
-         |  FROM qe q JOIN qe c ON q.i = c.i AND q.vec_id <> c.vec_id
-         |  WHERE q.vec_id < 8
-         |  GROUP BY q.vec_id, c.vec_id),
+      s"""WITH $probeDotsSql,
          |ranked AS (
          |  SELECT qid, cand_id, dot_q,
          |    CAST(FLOOR(dot_q / SQRT(CAST(n1.n2 AS DOUBLE) * n2.n2) * 1000000) AS BIGINT) AS cos_q6,
@@ -111,13 +164,7 @@ object Embeddings {
         .filter(col("qid") =!= col("cand_id"))
         .select(col("qid"), col("cand_id"),
           qdot(col("pe"), col("embedding")).as("dot_q"))
-      val withCos = dots
-        .join(broadcast(norms.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("qid"), col("n2").as("qn2"))), Seq("qid"))
-        .join(norms.select(col("vec_id").as("cand_id"), col("n2").as("cn2")), Seq("cand_id"))
-        .withColumn("cos_q6",
-          floor(col("dot_q") / sqrt(col("qn2").cast("double") * col("cn2")) * 1000000)
-            .cast("long"))
+      val withCos = withCosine(dots, norms)
       val w = Window.partitionBy(col("qid")).orderBy(col("cos_q6").desc, col("cand_id"))
       withCos.withColumn("rk", row_number().over(w).cast("long"))
         .filter(col("rk") <= 5)
@@ -148,36 +195,12 @@ object Embeddings {
     // zero shuffle of element rows
     QueryDef.sql(
       "q_ann_zipwith",
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        |pairs AS (
-        |  SELECT q.qid, e.vec_id AS cand_id,
-        |    CAST(LIST_SUM(LIST_TRANSFORM(LIST_ZIP(q.qe, e.embedding),
-        |      p -> CAST(FLOOR(CAST(STRUCT_EXTRACT(p, 1) AS DOUBLE)*1000000) AS BIGINT)
-        |         * CAST(FLOOR(CAST(STRUCT_EXTRACT(p, 2) AS DOUBLE)*1000000) AS BIGINT))) AS BIGINT) AS dot_q
-        |  FROM q, embeddings e WHERE e.vec_id <> q.qid),
-        |ranked AS (
-        |  SELECT qid, cand_id, dot_q,
-        |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dot_q DESC, cand_id) AS rk
-        |  FROM pairs)
-        |SELECT qid, CAST(rk AS BIGINT) AS rk, cand_id, dot_q
-        |FROM ranked WHERE rk <= 5 ORDER BY qid, rk""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val emb = Tables.embeddings(s, d)
-      val q = emb.filter(col("vec_id") < 4)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val dot = aggregate(
+      probeTop5Sql) { (s, d) =>
+      probeTop5(s, d, aggregate(
         zip_with(col("qe"), col("embedding"), (a, b) =>
           floor(a.cast("double") * 1000000).cast("long") *
             floor(b.cast("double") * 1000000).cast("long")),
-        lit(0L), (acc, x) => acc + x)
-      val pairs = emb.crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id").as("cand_id"), dot.as("dot_q"))
-      val w = Window.partitionBy(col("qid")).orderBy(col("dot_q").desc, col("cand_id"))
-      pairs.withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 5)
-        .select(col("qid"), col("rk"), col("cand_id"), col("dot_q"))
-        .orderBy(col("qid"), col("rk"))
+        lit(0L), (acc, x) => acc + x))
     },
 
     // same pairing as q_ann_zipwith but through the codegen'd QDotExpr —
@@ -186,32 +209,8 @@ object Embeddings {
     // the hash match proves the native expression bit-exact
     QueryDef.sql(
       "q_ann_native_dot",
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 4),
-        |pairs AS (
-        |  SELECT q.qid, e.vec_id AS cand_id,
-        |    CAST(LIST_SUM(LIST_TRANSFORM(LIST_ZIP(q.qe, e.embedding),
-        |      p -> CAST(FLOOR(CAST(STRUCT_EXTRACT(p, 1) AS DOUBLE)*1000000) AS BIGINT)
-        |         * CAST(FLOOR(CAST(STRUCT_EXTRACT(p, 2) AS DOUBLE)*1000000) AS BIGINT))) AS BIGINT) AS dot_q
-        |  FROM q, embeddings e WHERE e.vec_id <> q.qid),
-        |ranked AS (
-        |  SELECT qid, cand_id, dot_q,
-        |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dot_q DESC, cand_id) AS rk
-        |  FROM pairs)
-        |SELECT qid, CAST(rk AS BIGINT) AS rk, cand_id, dot_q
-        |FROM ranked WHERE rk <= 5 ORDER BY qid, rk""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val emb = Tables.embeddings(s, d)
-      val q = emb.filter(col("vec_id") < 4)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val pairs = emb.crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id").as("cand_id"),
-          graft.functions.QDot.qdot(col("qe"), col("embedding")).as("dot_q"))
-      val w = Window.partitionBy(col("qid")).orderBy(col("dot_q").desc, col("cand_id"))
-      pairs.withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 5)
-        .select(col("qid"), col("rk"), col("cand_id"), col("dot_q"))
-        .orderBy(col("qid"), col("rk"))
+      probeTop5Sql) { (s, d) =>
+      probeTop5(s, d, graft.functions.QDot.qdot(col("qe"), col("embedding")))
     },
 
     // embedding-cosine near-duplicate detection: LSH buckets generate the

@@ -28,13 +28,7 @@ object EmbeddingsEval {
     // window with (cos_q6 DESC, cand_id) tie-break.
     QueryDef.sql(
       "q_ndcg_eval",
-      s"""WITH $qelemsSql,
-         |norms AS (SELECT vec_id, CAST(SUM(qe*qe) AS BIGINT) AS n2 FROM qe GROUP BY vec_id),
-         |dots AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cand_id, CAST(SUM(q.qe*c.qe) AS BIGINT) AS dot_q
-         |  FROM qe q JOIN qe c ON q.i = c.i AND q.vec_id <> c.vec_id
-         |  WHERE q.vec_id < 8
-         |  GROUP BY q.vec_id, c.vec_id),
+      s"""WITH ${Embeddings.probeDotsSql},
          |ranked AS (
          |  SELECT qid, cand_id,
          |    ROW_NUMBER() OVER (PARTITION BY qid
@@ -100,13 +94,7 @@ object EmbeddingsEval {
         .filter(col("qid") =!= col("cand_id"))
         .select(col("qid"), col("qlabel"), col("cand_id"),
           qdot(col("pe"), col("embedding")).as("dot_q"))
-      val withCos = dots
-        .join(broadcast(norms.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("qid"), col("n2").as("qn2"))), Seq("qid"))
-        .join(norms.select(col("vec_id").as("cand_id"), col("n2").as("cn2")), Seq("cand_id"))
-        .withColumn("cos_q6",
-          floor(col("dot_q") / sqrt(col("qn2").cast("double") * col("cn2")) * 1000000)
-            .cast("long"))
+      val withCos = Embeddings.withCosine(dots, norms)
       val w = Window.partitionBy(col("qid")).orderBy(col("cos_q6").desc, col("cand_id"))
       val top = withCos.withColumn("rk", row_number().over(w)).filter(col("rk") <= 10)
       val dcg = top
@@ -514,22 +502,8 @@ object EmbeddingsEval {
       import org.apache.spark.sql.expressions.Window
       import graft.functions.QDot.qdot
       // lexical leg: q_bm25_search's integer BM25, same constants
-      val toks = Corpus.tokRows(s, d)
-      val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-      val g = dl.agg(sum(col("dl")).as("sumdl"), count(lit(1)).as("n"))
-      val tf = toks
-        .filter(col("t").isin("table", "hash", "stream") && col("doc_id") =!= 0)
-        .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf"))
-      val dft = tf.groupBy(col("t")).agg(count(lit(1)).as("df"))
-      val nn = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
-      val bm = tf.join(broadcast(dft), Seq("t"))
-        .join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(nn)).crossJoin(broadcast(g))
-        .select(col("doc_id"),
-          (floor((col("n_docs") - col("df") + 0.5) * lit(1000000.0)
-              / (col("df") + 0.5)).cast("long")
-            * expr("(22 * tf * sumdl * 1000000) div (10 * sumdl * tf + 3 * sumdl + 9 * dl * n)"))
-            .as("s"))
+      val bm = Corpus.bm25TermScores(s, d,
+          col("t").isin("table", "hash", "stream") && col("doc_id") =!= 0)
         .groupBy(col("doc_id")).agg(sum(col("s")).as("score"))
       val lex = bm.orderBy(col("score").desc, col("doc_id")).limit(50)
         .withColumn("r_lex",

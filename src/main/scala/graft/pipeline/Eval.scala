@@ -24,32 +24,36 @@ import org.apache.spark.sql.functions._
   */
 object Eval {
 
-  /** The q_text_langid stopword-hit scorer (`TextPipeline.scala:818`):
-    * (s_en, s_de, s_fr, s_es) hit counts over the padded lowercase text. */
-  private def scored(df: org.apache.spark.sql.DataFrame) = {
+  /** The q_text_langid stopword-hit scorer: the `keys` columns of the
+    * documents plus (s_en, s_de, s_fr, s_es) hit counts over the padded
+    * lowercase text. */
+  private[pipeline] def scored(df: org.apache.spark.sql.DataFrame,
+      keys: Seq[String] = Seq("doc_id", "lang")) = {
     def occ(p: Column, kw: String): Column =
       ((length(p) - length(expr(s"replace(p, '$kw', '')"))) / kw.length).cast("long")
-    df.select(col("doc_id"), col("lang"),
-        concat(lit(" "), lower(col("text")), lit(" ")).as("p"))
-      .select(col("doc_id"), col("lang"),
+    val k = keys.map(col)
+    df.select(k :+ concat(lit(" "), lower(col("text")), lit(" ")).as("p"): _*)
+      .select(k ++ Seq(
         (occ(col("p"), " the ") + occ(col("p"), " and ")).as("s_en"),
         (occ(col("p"), " der ") + occ(col("p"), " und ")).as("s_de"),
         (occ(col("p"), " le ") + occ(col("p"), " et ")).as("s_fr"),
-        (occ(col("p"), " el ") + occ(col("p"), " y ")).as("s_es"))
+        (occ(col("p"), " el ") + occ(col("p"), " y ")).as("s_es")): _*)
   }
 
-  private val scoredSql =
-    """scored AS (
-      |  SELECT doc_id, lang,
-      |    CAST((LENGTH(p) - LENGTH(REPLACE(p, ' the ', ''))) / 5
-      |       + (LENGTH(p) - LENGTH(REPLACE(p, ' and ', ''))) / 5 AS BIGINT) AS s_en,
-      |    CAST((LENGTH(p) - LENGTH(REPLACE(p, ' der ', ''))) / 5
-      |       + (LENGTH(p) - LENGTH(REPLACE(p, ' und ', ''))) / 5 AS BIGINT) AS s_de,
-      |    CAST((LENGTH(p) - LENGTH(REPLACE(p, ' le ', ''))) / 4
-      |       + (LENGTH(p) - LENGTH(REPLACE(p, ' et ', ''))) / 4 AS BIGINT) AS s_fr,
-      |    CAST((LENGTH(p) - LENGTH(REPLACE(p, ' el ', ''))) / 4
-      |       + (LENGTH(p) - LENGTH(REPLACE(p, ' y ', ''))) / 3 AS BIGINT) AS s_es
-      |  FROM (SELECT doc_id, lang, ' ' || LOWER(text) || ' ' AS p FROM documents) x)""".stripMargin
+  /** Oracle twin of [[scored]]; `keys` is its column list in SQL. */
+  private[pipeline] def scoresSql(keys: String): String =
+    s"""  SELECT $keys,
+       |    CAST((LENGTH(p) - LENGTH(REPLACE(p, ' the ', ''))) / 5
+       |       + (LENGTH(p) - LENGTH(REPLACE(p, ' and ', ''))) / 5 AS BIGINT) AS s_en,
+       |    CAST((LENGTH(p) - LENGTH(REPLACE(p, ' der ', ''))) / 5
+       |       + (LENGTH(p) - LENGTH(REPLACE(p, ' und ', ''))) / 5 AS BIGINT) AS s_de,
+       |    CAST((LENGTH(p) - LENGTH(REPLACE(p, ' le ', ''))) / 4
+       |       + (LENGTH(p) - LENGTH(REPLACE(p, ' et ', ''))) / 4 AS BIGINT) AS s_fr,
+       |    CAST((LENGTH(p) - LENGTH(REPLACE(p, ' el ', ''))) / 4
+       |       + (LENGTH(p) - LENGTH(REPLACE(p, ' y ', ''))) / 3 AS BIGINT) AS s_es
+       |  FROM (SELECT $keys, ' ' || LOWER(text) || ' ' AS p FROM documents) x""".stripMargin
+
+  private[pipeline] val scoredSql = s"scored AS (\n${scoresSql("doc_id, lang")})"
 
   private val predSql =
     """pred AS (
@@ -63,13 +67,35 @@ object Eval {
 
   /** The argmax decision rule of `predSql`, as an engine Column over the
     * output of [[scored]]. */
-  private def predicted(df: org.apache.spark.sql.DataFrame) =
+  private[pipeline] def predicted(df: org.apache.spark.sql.DataFrame) =
     df.withColumn("pred_lang",
       when(col("s_en") + col("s_de") + col("s_fr") + col("s_es") === 0, "unknown")
         .when(col("s_en") >= greatest(col("s_de"), col("s_fr"), col("s_es")), "en")
         .when(col("s_de") >= greatest(col("s_fr"), col("s_es")), "de")
         .when(col("s_fr") >= col("s_es"), "fr")
         .otherwise("es"))
+
+  /** The English-ness score histogram (sc, t, c1 = English count) and its
+    * totals (n, p) of q_lift_gain, q_youden_threshold and q_pr_auc. The
+    * histogram is checkpointed: the totals and the query's window both
+    * read it. */
+  private def scoreHistogram(s: org.apache.spark.sql.SparkSession, d: String) = {
+    val hist = scored(Tables.documents(s, d))
+      .groupBy(col("s_en").as("sc"))
+      .agg(count(lit(1)).as("t"),
+        sum(when(col("lang") === "en", 1L).otherwise(0L)).as("c1"))
+      .localCheckpoint(true)
+    (hist, hist.agg(sum(col("t")).as("n"), sum(col("c1")).as("p")))
+  }
+
+  private val scoreHistogramSql =
+    s"""$scoredSql,
+       |hist AS (
+       |  SELECT s_en AS sc, CAST(COUNT(*) AS BIGINT) AS t,
+       |    CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS c1
+       |  FROM scored GROUP BY s_en),
+       |tot AS (SELECT CAST(SUM(t) AS BIGINT) AS n, CAST(SUM(c1) AS BIGINT) AS p
+       |        FROM hist)""".stripMargin
 
   val queries: Seq[QueryDef] = Seq(
 
@@ -300,13 +326,7 @@ object Eval {
     // rows), never the corpus.
     QueryDef.sql(
       "q_lift_gain",
-      s"""WITH $scoredSql,
-         |hist AS (
-         |  SELECT s_en AS sc, CAST(COUNT(*) AS BIGINT) AS t,
-         |    CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS c1
-         |  FROM scored GROUP BY s_en),
-         |tot AS (SELECT CAST(SUM(t) AS BIGINT) AS n, CAST(SUM(c1) AS BIGINT) AS p
-         |        FROM hist),
+      s"""WITH $scoreHistogramSql,
          |rk AS (
          |  SELECT sc, t, c1,
          |    SUM(t) OVER (ORDER BY sc DESC ROWS UNBOUNDED PRECEDING) - t AS cumb
@@ -326,12 +346,7 @@ object Eval {
          |  CASE WHEN tot.p = 0 OR cn = 0 THEN NULL
          |    ELSE (cp * tot.n * 1000000) // (cn * tot.p) END AS lift_q6
          |FROM cum CROSS JOIN tot ORDER BY decile""".stripMargin) { (s, d) =>
-      val hist = scored(Tables.documents(s, d))
-        .groupBy(col("s_en").as("sc"))
-        .agg(count(lit(1)).as("t"),
-          sum(when(col("lang") === "en", 1L).otherwise(0L)).as("c1"))
-        .localCheckpoint(true)
-      val tot = hist.agg(sum(col("t")).as("n"), sum(col("c1")).as("p"))
+      val (hist, tot) = scoreHistogram(s, d)
       // domain-bounded window: one row per distinct stopword-hit count
       val w = Window.orderBy(col("sc").desc).rowsBetween(Window.unboundedPreceding, 0)
       val g = hist.select(col("t"), col("c1"),
@@ -364,13 +379,7 @@ object Eval {
     // 1-row readout.
     QueryDef.sql(
       "q_youden_threshold",
-      s"""WITH $scoredSql,
-         |hist AS (
-         |  SELECT s_en AS sc, CAST(COUNT(*) AS BIGINT) AS t,
-         |    CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS c1
-         |  FROM scored GROUP BY s_en),
-         |tot AS (SELECT CAST(SUM(t) AS BIGINT) AS n, CAST(SUM(c1) AS BIGINT) AS p
-         |        FROM hist),
+      s"""WITH $scoreHistogramSql,
          |rk AS (
          |  SELECT sc,
          |    CAST(SUM(c1) OVER (ORDER BY sc DESC ROWS UNBOUNDED PRECEDING) AS BIGINT) AS tp,
@@ -384,12 +393,7 @@ object Eval {
          |  FROM rk CROSS JOIN tot WHERE tot.p > 0 AND tot.n > tot.p)
          |SELECT CAST(sc AS BIGINT) AS threshold, tp, fp, tpr_q6, fpr_q6, j_q6
          |FROM j ORDER BY j_q6 DESC, sc DESC LIMIT 1""".stripMargin) { (s, d) =>
-      val hist = scored(Tables.documents(s, d))
-        .groupBy(col("s_en").as("sc"))
-        .agg(count(lit(1)).as("t"),
-          sum(when(col("lang") === "en", 1L).otherwise(0L)).as("c1"))
-        .localCheckpoint(true)
-      val tot = hist.agg(sum(col("t")).as("n"), sum(col("c1")).as("p"))
+      val (hist, tot) = scoreHistogram(s, d)
       val w = Window.orderBy(col("sc").desc).rowsBetween(Window.unboundedPreceding, 0)
       hist.select(col("sc"),
           sum(col("c1")).over(w).as("tp"),
@@ -414,13 +418,7 @@ object Eval {
     // raw rows.
     QueryDef.sql(
       "q_pr_auc",
-      s"""WITH $scoredSql,
-         |hist AS (
-         |  SELECT s_en AS sc, CAST(COUNT(*) AS BIGINT) AS t,
-         |    CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS c1
-         |  FROM scored GROUP BY s_en),
-         |tot AS (SELECT CAST(SUM(t) AS BIGINT) AS n, CAST(SUM(c1) AS BIGINT) AS p
-         |        FROM hist),
+      s"""WITH $scoreHistogramSql,
          |rk AS (
          |  SELECT c1,
          |    CAST(SUM(c1) OVER (ORDER BY sc DESC ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cp,
@@ -434,12 +432,7 @@ object Eval {
          |  CASE WHEN tot.n = 0 THEN NULL
          |    ELSE (tot.p * 1000000) // tot.n END AS prevalence_q6
          |FROM tot CROSS JOIN ap""".stripMargin) { (s, d) =>
-      val hist = scored(Tables.documents(s, d))
-        .groupBy(col("s_en").as("sc"))
-        .agg(count(lit(1)).as("t"),
-          sum(when(col("lang") === "en", 1L).otherwise(0L)).as("c1"))
-        .localCheckpoint(true)
-      val tot = hist.agg(sum(col("t")).as("n"), sum(col("c1")).as("p"))
+      val (hist, tot) = scoreHistogram(s, d)
       val w = Window.orderBy(col("sc").desc).rowsBetween(Window.unboundedPreceding, 0)
       val ap = hist.select(col("c1"),
           sum(col("c1")).over(w).as("cp"), sum(col("t")).over(w).as("cn"))

@@ -152,15 +152,7 @@ object GraphMining {
       // cached-but-lineaged plan serializes the ue/deg subtree 9+ ways into
       // every task binary (observed 6-9 MiB tasks). Truncating lineage here
       // keeps the final stages' closures kilobyte-sized.
-      val oriented = ue
-        .join(deg.select(col("v").as("a"), col("d").as("da")), Seq("a"))
-        .join(deg.select(col("v").as("b"), col("d").as("db")), Seq("b"))
-        .select(
-          when(col("da") < col("db") ||
-            (col("da") === col("db") && col("a") < col("b")),
-            struct(col("a").as("u"), col("b").as("w")))
-            .otherwise(struct(col("b").as("u"), col("a").as("w"))).as("e"))
-        .select(col("e.u").as("u"), col("e.w").as("w"))
+      val oriented = Graphs.orientByDegree(ue, deg, "d")
         .localCheckpoint(true)
       val tri = oriented.as("e1")
         .join(oriented.as("e2"),

@@ -29,10 +29,7 @@ object GraphStructure {
     // correct but no hub bound; fine at oracle scale)
     QueryDef.sql(
       "q_triangle_count",
-      s"""WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
-         |e0 AS (
-         |  SELECT doc_id AS src, (doc_id * 7 + j) % n.n_docs AS dst
-         |  FROM documents CROSS JOIN n CROSS JOIN UNNEST(RANGE(1, 4)) AS u(j)),
+      s"""WITH ${ringEdgesSql("e0")},
          |ue AS (
          |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
          |  FROM e0 WHERE src <> dst),
@@ -60,10 +57,7 @@ object GraphStructure {
     // Oracle unrolls the frontier recurrence with EXCEPT.
     QueryDef.sql(
       "q_bfs_reach",
-      s"""WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
-         |e0 AS (
-         |  SELECT doc_id AS src, (doc_id * 7 + j) % n.n_docs AS dst
-         |  FROM documents CROSS JOIN n CROSS JOIN UNNEST(RANGE(1, 4)) AS u(j)),
+      s"""WITH ${ringEdgesSql("e0")},
          |d0 AS (SELECT CAST(0 AS BIGINT) AS v),
          |f1 AS (
          |  SELECT DISTINCT e.dst AS v FROM e0 e JOIN d0 ON e.src = d0.v
@@ -93,10 +87,7 @@ object GraphStructure {
     // the oracle unrolls the relaxation as min-merge CTEs.
     QueryDef.sql(
       "q_shortest_path",
-      s"""WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
-         |e0 AS (
-         |  SELECT doc_id AS src, (doc_id * 7 + j) % n.n_docs AS dst
-         |  FROM documents CROSS JOIN n CROSS JOIN UNNEST(RANGE(1, 4)) AS u(j)),
+      s"""WITH ${ringEdgesSql("e0")},
          |we AS (
          |  SELECT src, dst,
          |    CAST((src * 31 + dst * 17) % 97 + 1 AS BIGINT) AS w FROM e0),
@@ -119,10 +110,7 @@ object GraphStructure {
     // one guarded IEEE division.
     QueryDef.sql(
       "q_assortativity",
-      s"""WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
-         |e0 AS (
-         |  SELECT doc_id AS src, (doc_id * 7 + j) % n.n_docs AS dst
-         |  FROM documents CROSS JOIN n CROSS JOIN UNNEST(RANGE(1, 4)) AS u(j)),
+      s"""WITH ${ringEdgesSql("e0")},
          |ue AS (
          |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
          |  FROM e0 WHERE src <> dst),
@@ -172,18 +160,8 @@ object GraphStructure {
     // negative-safe in both engines).
     QueryDef.sql(
       "q_modularity",
-      s"""WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
-         |e0 AS (
-         |  SELECT doc_id AS src, (doc_id * 7 + j) % n.n_docs AS dst
-         |  FROM documents CROSS JOIN n CROSS JOIN UNNEST(RANGE(1, 4)) AS u(j)),
-         |ue AS (
-         |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM e0 WHERE src <> dst),
-         |adj AS (SELECT a AS v, b AS u FROM ue UNION ALL SELECT b, a FROM ue),
-         |nodes AS (SELECT doc_id AS v FROM documents),
-         |l0 AS (SELECT doc_id AS v, doc_id AS lbl FROM documents),
-         |${lpRoundSql("l0", "l1")},
-         |${lpRoundSql("l1", "l2")},
+      s"""WITH ${ringEdgesSql("e0")},
+         |${lpTwoRoundsSql("e0")},
          |deg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS dg FROM adj GROUP BY v),
          |dc AS (
          |  SELECT c.lbl, CAST(SUM(d.dg) AS BIGINT) AS d_c
@@ -274,10 +252,7 @@ object GraphStructure {
     // scale both sides hash-partition on the same composite key.
     QueryDef.sql(
       "q_reciprocity",
-      """WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
-        |e0 AS (
-        |  SELECT doc_id AS src, (doc_id * 7 + j) % n.n_docs AS dst
-        |  FROM documents CROSS JOIN n CROSS JOIN UNNEST(RANGE(1, 4)) AS u(j)),
+      s"""WITH ${ringEdgesSql("e0")},
         |ed AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
         |m AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_edges FROM ed),
         |r AS (

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -197,6 +197,21 @@ object Graphs {
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
 
+  /** Undirected edges (a, b) directed from the lower-(degree, id)
+    * endpoint as (u, w), with degrees read from column `degCol` of
+    * `deg` (v, degCol). */
+  private[pipeline] def orientByDegree(ue: DataFrame, deg: DataFrame,
+      degCol: String): DataFrame =
+    ue
+      .join(deg.select(col("v").as("a"), col(degCol).as("da")), Seq("a"))
+      .join(deg.select(col("v").as("b"), col(degCol).as("db")), Seq("b"))
+      .select(
+        when(col("da") < col("db") ||
+          (col("da") === col("db") && col("a") < col("b")),
+          struct(col("a").as("u"), col("b").as("w")))
+          .otherwise(struct(col("b").as("u"), col("a").as("w"))).as("e"))
+      .select(col("e.u").as("u"), col("e.w").as("w"))
+
   /** Triangle + wedge census with the global clustering coefficient —
     * the standard graph-health probe for a link/near-dup graph.
     *
@@ -220,15 +235,7 @@ object Graphs {
       .unionAll(ue.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val oriented = ue
-      .join(deg.select(col("v").as("a"), col("deg").as("da")), Seq("a"))
-      .join(deg.select(col("v").as("b"), col("deg").as("db")), Seq("b"))
-      .select(
-        when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")),
-          struct(col("a").as("u"), col("b").as("w")))
-          .otherwise(struct(col("b").as("u"), col("a").as("w"))).as("e"))
-      .select(col("e.u").as("u"), col("e.w").as("w"))
+    val oriented = orientByDegree(ue, deg, "deg")
       .persist(StorageLevel.MEMORY_AND_DISK)
     val e1 = oriented.as("e1")
     val e2 = oriented.as("e2")
@@ -501,6 +508,121 @@ object Graphs {
       |    n.n_docs // ((doc_id * 7 + j * 13) % n.n_docs + 1) - 1 AS dst
       |  FROM documents CROSS JOIN n CROSS JOIN UNNEST(RANGE(1, 4)) AS u(j))""".stripMargin
 
+  /** Ring edge CTEs `n` and `edges`: identical arithmetic to
+    * [[syntheticEdges]]. */
+  private[pipeline] def ringEdgesSql(edges: String): String =
+    s"""n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
+       |$edges AS (
+       |  SELECT doc_id AS src, (doc_id * 7 + j) % n.n_docs AS dst
+       |  FROM documents CROSS JOIN n CROSS JOIN UNNEST(RANGE(1, 4)) AS u(j))""".stripMargin
+
+  /** Two label-propagation rounds over the undirected simple edges of
+    * relation `edges`: CTEs ue, adj, nodes, l0, l1 and l2. */
+  private[pipeline] def lpTwoRoundsSql(edges: String): String =
+    s"""ue AS (
+       |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
+       |  FROM $edges WHERE src <> dst),
+       |adj AS (SELECT a AS v, b AS u FROM ue UNION ALL SELECT b, a FROM ue),
+       |nodes AS (SELECT doc_id AS v FROM documents),
+       |l0 AS (SELECT doc_id AS v, doc_id AS lbl FROM documents),
+       |${lpRoundSql("l0", "l1")},
+       |${lpRoundSql("l1", "l2")}""".stripMargin
+
+  /** Oracle twin of [[communitySizes]] over [[lpTwoRoundsSql]]. */
+  private def communitySizesSql(edges: String): String =
+    s"""${lpTwoRoundsSql(edges)}
+       |SELECT CAST(lbl AS BIGINT) AS community,
+       |  CAST(COUNT(*) AS BIGINT) AS n_members,
+       |  CAST(MIN(v) AS BIGINT) AS min_doc
+       |FROM l2 GROUP BY lbl
+       |ORDER BY n_members DESC, community LIMIT 25""".stripMargin
+
+  /** Size histogram (top 25 by size) of a (v, lbl) labelling. */
+  private def communitySizes(labels: DataFrame): DataFrame =
+    labels
+      .groupBy(col("lbl").as("community"))
+      .agg(count(lit(1)).as("n_members"), min(col("v")).as("min_doc"))
+      .orderBy(col("n_members").desc, col("community"))
+      .limit(25)
+
+  /** 3-core peeling census over relation `edges`, 4 rounds: the oracle
+    * twin of [[kCoreCensusOn]]. */
+  private def kCoreCensusSql(edges: String): String =
+    s"""ue AS MATERIALIZED (
+       |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
+       |  FROM $edges WHERE src <> dst),
+       |s0 AS MATERIALIZED (
+       |  SELECT DISTINCT v FROM (
+       |    SELECT a AS v FROM ue UNION ALL SELECT b AS v FROM ue)),
+       |${peelSql("s0", "s1")},
+       |${peelSql("s1", "s2")},
+       |${peelSql("s2", "s3")},
+       |${peelSql("s3", "s4")},
+       |census AS (
+       |  SELECT CAST(0 AS BIGINT) AS round, CAST(COUNT(*) AS BIGINT) AS n_core,
+       |    CAST(SUM(v) AS BIGINT) AS sum_ids FROM s0
+       |  UNION ALL SELECT 1, CAST(COUNT(*) AS BIGINT), CAST(SUM(v) AS BIGINT) FROM s1
+       |  UNION ALL SELECT 2, CAST(COUNT(*) AS BIGINT), CAST(SUM(v) AS BIGINT) FROM s2
+       |  UNION ALL SELECT 3, CAST(COUNT(*) AS BIGINT), CAST(SUM(v) AS BIGINT) FROM s3
+       |  UNION ALL SELECT 4, CAST(COUNT(*) AS BIGINT), CAST(SUM(v) AS BIGINT) FROM s4)
+       |SELECT round, n_core, sum_ids FROM census ORDER BY round""".stripMargin
+
+  /** Distinct (user_id, item = props.k) pairs of events: the user × item
+    * bipartite graph of q_bipartite_cooccur and q_item_cf_recs. */
+  private def userItems(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .select(col("user_id"),
+        from_json(col("props"),
+          org.apache.spark.sql.types.StructType.fromDDL("k BIGINT"))
+          .getField("k").as("item"))
+      .distinct()
+
+  /** Item pairs i < j co-held by ≥ 5 users of the capped (user_id, item)
+    * set `ui`, with n_both and both items' degrees d_i, d_j. */
+  private def cooccurPairs(ui: DataFrame): DataFrame = {
+    val deg = ui.groupBy(col("item")).agg(count(lit(1)).as("d"))
+    val pair = ui.as("a")
+      .join(ui.as("b"),
+        col("a.user_id") === col("b.user_id") && col("a.item") < col("b.item"))
+      .groupBy(col("a.item").as("i"), col("b.item").as("j"))
+      .agg(count(lit(1)).as("n_both"))
+      .filter(col("n_both") >= 5)
+    pair
+      .join(deg.select(col("item").as("i"), col("d").as("d_i")), Seq("i"))
+      .join(deg.select(col("item").as("j"), col("d").as("d_j")), Seq("j"))
+  }
+
+  /** Oracle twin of [[userItems]] → [[capItemsPerKey]] → [[cooccurPairs]]
+    * (before the degree joins): CTEs ui0, vocab, ui, deg and pair. */
+  private val cooccurPairsSql: String =
+    """WITH ui0 AS (
+      |  SELECT DISTINCT user_id, CAST(props->>'k' AS BIGINT) AS item
+      |  FROM events),
+      |vocab AS (SELECT CAST(COUNT(DISTINCT item) AS BIGINT) AS nv FROM ui0),
+      |ui AS (
+      |  SELECT user_id, item FROM (
+      |    SELECT user_id, item,
+      |      ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY item) AS rn
+      |    FROM ui0) r CROSS JOIN vocab
+      |  WHERE r.rn <= GREATEST(64, 4 * CAST(FLOOR(SQRT(CAST(nv AS DOUBLE))) AS BIGINT))),
+      |deg AS (SELECT item, CAST(COUNT(*) AS BIGINT) AS d FROM ui GROUP BY item),
+      |pair AS (
+      |  SELECT a.item AS i, b.item AS j, CAST(COUNT(*) AS BIGINT) AS n_both
+      |  FROM ui a JOIN ui b ON a.user_id = b.user_id AND a.item < b.item
+      |  GROUP BY a.item, b.item
+      |  HAVING COUNT(*) >= 5)""".stripMargin
+
+  /** 3 unrolled PageRank rounds over the `edges` CTE `edgesSql`; top 20. */
+  private def pageRankSql(edgesSql: String): String =
+    s"""WITH nodes AS (SELECT doc_id FROM documents),
+       |$edgesSql,
+       |r0 AS (SELECT doc_id, CAST(1000000 AS BIGINT) AS r FROM nodes),
+       |${iterSql("r0", "r1")},
+       |${iterSql("r1", "r2")},
+       |${iterSql("r2", "r3")}
+       |SELECT doc_id, CAST(r AS BIGINT) AS rank_q6
+       |FROM r3 ORDER BY rank_q6 DESC, doc_id LIMIT 20""".stripMargin
+
   val queries: Seq[QueryDef] = Seq(
 
     // Bipartite projection (user x item -> item-item co-occurrence with
@@ -515,22 +637,7 @@ object Graphs {
     // set, keeping Jaccard internally consistent) join back per cell.
     QueryDef.sql(
       "q_bipartite_cooccur",
-      """WITH ui0 AS (
-        |  SELECT DISTINCT user_id, CAST(props->>'k' AS BIGINT) AS item
-        |  FROM events),
-        |vocab AS (SELECT CAST(COUNT(DISTINCT item) AS BIGINT) AS nv FROM ui0),
-        |ui AS (
-        |  SELECT user_id, item FROM (
-        |    SELECT user_id, item,
-        |      ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY item) AS rn
-        |    FROM ui0) r CROSS JOIN vocab
-        |  WHERE r.rn <= GREATEST(64, 4 * CAST(FLOOR(SQRT(CAST(nv AS DOUBLE))) AS BIGINT))),
-        |deg AS (SELECT item, CAST(COUNT(*) AS BIGINT) AS d FROM ui GROUP BY item),
-        |pair AS (
-        |  SELECT a.item AS i, b.item AS j, CAST(COUNT(*) AS BIGINT) AS n_both
-        |  FROM ui a JOIN ui b ON a.user_id = b.user_id AND a.item < b.item
-        |  GROUP BY a.item, b.item
-        |  HAVING COUNT(*) >= 5)
+      s"""$cooccurPairsSql
         |SELECT p.i, p.j, p.n_both, da.d AS d_i, db.d AS d_j,
         |  CAST(FLOOR(p.n_both * CAST(1000000.0 AS DOUBLE)
         |             / (da.d + db.d - p.n_both)) AS BIGINT) AS jac_q6
@@ -538,23 +645,7 @@ object Graphs {
         |JOIN deg da ON da.item = p.i
         |JOIN deg db ON db.item = p.j
         |ORDER BY p.i, p.j""".stripMargin) { (s, d) =>
-      val ui0 = graft.Tables.events(s, d)
-        .select(col("user_id"),
-          from_json(col("props"),
-            org.apache.spark.sql.types.StructType.fromDDL("k BIGINT"))
-            .getField("k").as("item"))
-        .distinct()
-      val ui = capItemsPerKey(ui0, "user_id", "item")
-      val deg = ui.groupBy(col("item")).agg(count(lit(1)).as("d"))
-      val pair = ui.as("a")
-        .join(ui.as("b"),
-          col("a.user_id") === col("b.user_id") && col("a.item") < col("b.item"))
-        .groupBy(col("a.item").as("i"), col("b.item").as("j"))
-        .agg(count(lit(1)).as("n_both"))
-        .filter(col("n_both") >= 5)
-      pair
-        .join(deg.select(col("item").as("i"), col("d").as("d_i")), Seq("i"))
-        .join(deg.select(col("item").as("j"), col("d").as("d_j")), Seq("j"))
+      cooccurPairs(capItemsPerKey(userItems(s, d), "user_id", "item"))
         .select(col("i"), col("j"), col("n_both"), col("d_i"), col("d_j"),
           floor(col("n_both") * lit(1000000.0)
             / (col("d_i") + col("d_j") - col("n_both"))).cast("long").as("jac_q6"))
@@ -572,22 +663,7 @@ object Graphs {
     // join + per-user aggregate, the rank window partitions by user.
     QueryDef.sql(
       "q_item_cf_recs",
-      """WITH ui0 AS (
-        |  SELECT DISTINCT user_id, CAST(props->>'k' AS BIGINT) AS item
-        |  FROM events),
-        |vocab AS (SELECT CAST(COUNT(DISTINCT item) AS BIGINT) AS nv FROM ui0),
-        |ui AS (
-        |  SELECT user_id, item FROM (
-        |    SELECT user_id, item,
-        |      ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY item) AS rn
-        |    FROM ui0) r CROSS JOIN vocab
-        |  WHERE r.rn <= GREATEST(64, 4 * CAST(FLOOR(SQRT(CAST(nv AS DOUBLE))) AS BIGINT))),
-        |deg AS (SELECT item, CAST(COUNT(*) AS BIGINT) AS d FROM ui GROUP BY item),
-        |pair AS (
-        |  SELECT a.item AS i, b.item AS j, CAST(COUNT(*) AS BIGINT) AS n_both
-        |  FROM ui a JOIN ui b ON a.user_id = b.user_id AND a.item < b.item
-        |  GROUP BY a.item, b.item
-        |  HAVING COUNT(*) >= 5),
+      s"""$cooccurPairsSql,
         |simh AS (
         |  SELECT p.i, p.j,
         |    CAST(FLOOR(p.n_both * CAST(1000000.0 AS DOUBLE)
@@ -611,24 +687,9 @@ object Graphs {
         |  FROM filtered)
         |SELECT user_id, CAST(rk AS BIGINT) AS rk, item, score, n_neighbors
         |FROM top WHERE rk <= 3 ORDER BY user_id, rk""".stripMargin) { (s, d) =>
-      val ui0 = graft.Tables.events(s, d)
-        .select(col("user_id"),
-          from_json(col("props"),
-            org.apache.spark.sql.types.StructType.fromDDL("k BIGINT"))
-            .getField("k").as("item"))
-        .distinct()
-      val ui = capItemsPerKey(ui0, "user_id", "item")
+      val ui = capItemsPerKey(userItems(s, d), "user_id", "item")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val deg = ui.groupBy(col("item")).agg(count(lit(1)).as("d"))
-      val pair = ui.as("a")
-        .join(ui.as("b"),
-          col("a.user_id") === col("b.user_id") && col("a.item") < col("b.item"))
-        .groupBy(col("a.item").as("i"), col("b.item").as("j"))
-        .agg(count(lit(1)).as("n_both"))
-        .filter(col("n_both") >= 5)
-      val simh = pair
-        .join(deg.select(col("item").as("i"), col("d").as("d_i")), Seq("i"))
-        .join(deg.select(col("item").as("j"), col("d").as("d_j")), Seq("j"))
+      val simh = cooccurPairs(ui)
         .select(col("i"), col("j"),
           floor(col("n_both") * lit(1000000.0)
             / (col("d_i") + col("d_j") - col("n_both"))).cast("long").as("w"))
@@ -657,17 +718,7 @@ object Graphs {
     // 3 unrolled power-iteration rounds; top 20 authorities
     QueryDef.sql(
       "q_pagerank",
-      s"""WITH nodes AS (SELECT doc_id FROM documents),
-         |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
-         |edges AS (
-         |  SELECT doc_id AS src, (doc_id * 7 + j) % n.n_docs AS dst
-         |  FROM documents CROSS JOIN n CROSS JOIN UNNEST(RANGE(1, 4)) AS u(j)),
-         |r0 AS (SELECT doc_id, CAST(1000000 AS BIGINT) AS r FROM nodes),
-         |${iterSql("r0", "r1")},
-         |${iterSql("r1", "r2")},
-         |${iterSql("r2", "r3")}
-         |SELECT doc_id, CAST(r AS BIGINT) AS rank_q6
-         |FROM r3 ORDER BY rank_q6 DESC, doc_id LIMIT 20""".stripMargin) { (s, d) =>
+      pageRankSql(ringEdgesSql("edges"))) { (s, d) =>
       pageRank(Tables.documents(s, d), iters = 3)
         .orderBy(col("rank_q6").desc, col("doc_id"))
         .limit(20)
@@ -678,10 +729,7 @@ object Graphs {
     // exact; top 20 authorities with both scores.
     QueryDef.sql(
       "q_hits",
-      s"""WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
-         |edges AS (
-         |  SELECT doc_id AS src, (doc_id * 7 + j) % n.n_docs AS dst
-         |  FROM documents CROSS JOIN n CROSS JOIN UNNEST(RANGE(1, 4)) AS u(j)),
+      s"""WITH ${ringEdgesSql("edges")},
          |nodes AS (SELECT doc_id FROM documents),
          |h0 AS (SELECT doc_id, CAST(1000000 AS BIGINT) AS s FROM nodes),
          |${hitsHalfSql("h0", "src", "dst", "a1")},
@@ -702,28 +750,9 @@ object Graphs {
     // oracle replays both rounds as GROUP BY + ROW_NUMBER CTEs.
     QueryDef.sql(
       "q_label_propagation",
-      s"""WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
-         |e0 AS (
-         |  SELECT doc_id AS src, (doc_id * 7 + j) % n.n_docs AS dst
-         |  FROM documents CROSS JOIN n CROSS JOIN UNNEST(RANGE(1, 4)) AS u(j)),
-         |ue AS (
-         |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM e0 WHERE src <> dst),
-         |adj AS (SELECT a AS v, b AS u FROM ue UNION ALL SELECT b, a FROM ue),
-         |nodes AS (SELECT doc_id AS v FROM documents),
-         |l0 AS (SELECT doc_id AS v, doc_id AS lbl FROM documents),
-         |${lpRoundSql("l0", "l1")},
-         |${lpRoundSql("l1", "l2")}
-         |SELECT CAST(lbl AS BIGINT) AS community,
-         |  CAST(COUNT(*) AS BIGINT) AS n_members,
-         |  CAST(MIN(v) AS BIGINT) AS min_doc
-         |FROM l2 GROUP BY lbl
-         |ORDER BY n_members DESC, community LIMIT 25""".stripMargin) { (s, d) =>
-      labelPropagation(Tables.documents(s, d), rounds = 2)
-        .groupBy(col("lbl").as("community"))
-        .agg(count(lit(1)).as("n_members"), min(col("v")).as("min_doc"))
-        .orderBy(col("n_members").desc, col("community"))
-        .limit(25)
+      s"""WITH ${ringEdgesSql("e0")},
+         |${communitySizesSql("e0")}""".stripMargin) { (s, d) =>
+      communitySizes(labelPropagation(Tables.documents(s, d), rounds = 2))
     },
 
     // 3-core peeling census, 4 synchronous rounds: per-round survivor
@@ -731,28 +760,8 @@ object Graphs {
     // semi-join + HAVING CTE.
     QueryDef.sql(
       "q_kcore",
-      s"""WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
-         |e0 AS (
-         |  SELECT doc_id AS src, (doc_id * 7 + j) % n.n_docs AS dst
-         |  FROM documents CROSS JOIN n CROSS JOIN UNNEST(RANGE(1, 4)) AS u(j)),
-         |ue AS MATERIALIZED (
-         |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM e0 WHERE src <> dst),
-         |s0 AS MATERIALIZED (
-         |  SELECT DISTINCT v FROM (
-         |    SELECT a AS v FROM ue UNION ALL SELECT b AS v FROM ue)),
-         |${peelSql("s0", "s1")},
-         |${peelSql("s1", "s2")},
-         |${peelSql("s2", "s3")},
-         |${peelSql("s3", "s4")},
-         |census AS (
-         |  SELECT CAST(0 AS BIGINT) AS round, CAST(COUNT(*) AS BIGINT) AS n_core,
-         |    CAST(SUM(v) AS BIGINT) AS sum_ids FROM s0
-         |  UNION ALL SELECT 1, CAST(COUNT(*) AS BIGINT), CAST(SUM(v) AS BIGINT) FROM s1
-         |  UNION ALL SELECT 2, CAST(COUNT(*) AS BIGINT), CAST(SUM(v) AS BIGINT) FROM s2
-         |  UNION ALL SELECT 3, CAST(COUNT(*) AS BIGINT), CAST(SUM(v) AS BIGINT) FROM s3
-         |  UNION ALL SELECT 4, CAST(COUNT(*) AS BIGINT), CAST(SUM(v) AS BIGINT) FROM s4)
-         |SELECT round, n_core, sum_ids FROM census ORDER BY round""".stripMargin) { (s, d) =>
+      s"""WITH ${ringEdgesSql("e0")},
+         |${kCoreCensusSql("e0")}""".stripMargin) { (s, d) =>
       kCoreCensus(Tables.documents(s, d), k = 3, rounds = 4)
         .orderBy(col("round"))
     },
@@ -771,14 +780,7 @@ object Graphs {
     // semi-join + combiner degree count — no per-vertex window anywhere.
     QueryDef.sql(
       "q_pagerank_skew",
-      s"""WITH nodes AS (SELECT doc_id FROM documents),
-         |$skewEdgesSql,
-         |r0 AS (SELECT doc_id, CAST(1000000 AS BIGINT) AS r FROM nodes),
-         |${iterSql("r0", "r1")},
-         |${iterSql("r1", "r2")},
-         |${iterSql("r2", "r3")}
-         |SELECT doc_id, CAST(r AS BIGINT) AS rank_q6
-         |FROM r3 ORDER BY rank_q6 DESC, doc_id LIMIT 20""".stripMargin) { (s, d) =>
+      pageRankSql(skewEdgesSql)) { (s, d) =>
       val docs = Tables.documents(s, d)
       pageRankOn(docs.select(col("doc_id")), skewedEdges(docs), iters = 3)
         .orderBy(col("rank_q6").desc, col("doc_id"))
@@ -788,24 +790,7 @@ object Graphs {
     QueryDef.sql(
       "q_kcore_skew",
       s"""WITH $skewEdgesSql,
-         |ue AS MATERIALIZED (
-         |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM edges WHERE src <> dst),
-         |s0 AS MATERIALIZED (
-         |  SELECT DISTINCT v FROM (
-         |    SELECT a AS v FROM ue UNION ALL SELECT b AS v FROM ue)),
-         |${peelSql("s0", "s1")},
-         |${peelSql("s1", "s2")},
-         |${peelSql("s2", "s3")},
-         |${peelSql("s3", "s4")},
-         |census AS (
-         |  SELECT CAST(0 AS BIGINT) AS round, CAST(COUNT(*) AS BIGINT) AS n_core,
-         |    CAST(SUM(v) AS BIGINT) AS sum_ids FROM s0
-         |  UNION ALL SELECT 1, CAST(COUNT(*) AS BIGINT), CAST(SUM(v) AS BIGINT) FROM s1
-         |  UNION ALL SELECT 2, CAST(COUNT(*) AS BIGINT), CAST(SUM(v) AS BIGINT) FROM s2
-         |  UNION ALL SELECT 3, CAST(COUNT(*) AS BIGINT), CAST(SUM(v) AS BIGINT) FROM s3
-         |  UNION ALL SELECT 4, CAST(COUNT(*) AS BIGINT), CAST(SUM(v) AS BIGINT) FROM s4)
-         |SELECT round, n_core, sum_ids FROM census ORDER BY round""".stripMargin) { (s, d) =>
+         |${kCoreCensusSql("edges")}""".stripMargin) { (s, d) =>
       kCoreCensusOn(skewedUndirectedEdges(Tables.documents(s, d)),
         k = 3, rounds = 4)
         .orderBy(col("round"))
@@ -814,26 +799,10 @@ object Graphs {
     QueryDef.sql(
       "q_label_prop_skew",
       s"""WITH $skewEdgesSql,
-         |ue AS (
-         |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM edges WHERE src <> dst),
-         |adj AS (SELECT a AS v, b AS u FROM ue UNION ALL SELECT b, a FROM ue),
-         |nodes AS (SELECT doc_id AS v FROM documents),
-         |l0 AS (SELECT doc_id AS v, doc_id AS lbl FROM documents),
-         |${lpRoundSql("l0", "l1")},
-         |${lpRoundSql("l1", "l2")}
-         |SELECT CAST(lbl AS BIGINT) AS community,
-         |  CAST(COUNT(*) AS BIGINT) AS n_members,
-         |  CAST(MIN(v) AS BIGINT) AS min_doc
-         |FROM l2 GROUP BY lbl
-         |ORDER BY n_members DESC, community LIMIT 25""".stripMargin) { (s, d) =>
+         |${communitySizesSql("edges")}""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d)
-      labelPropagationOn(docs.select(col("doc_id").as("v")),
-        skewedUndirectedEdges(docs), rounds = 2)
-        .groupBy(col("lbl").as("community"))
-        .agg(count(lit(1)).as("n_members"), min(col("v")).as("min_doc"))
-        .orderBy(col("n_members").desc, col("community"))
-        .limit(25)
+      communitySizes(labelPropagationOn(docs.select(col("doc_id").as("v")),
+        skewedUndirectedEdges(docs), rounds = 2))
     }
   )
 }

@@ -39,6 +39,23 @@ object Lexical {
       |  SELECT doc_id, UNNEST(REGEXP_EXTRACT_ALL(LOWER(text), '[a-z0-9]+')) AS t
       |  FROM documents)""".stripMargin
 
+  /** [[toksSql]] plus the per-(doc, token) count `c` as CTE `cte`. */
+  private def tokenCountsSql(cte: String): String =
+    s"""$toksSql,
+       |$cte AS (
+       |  SELECT doc_id, t, CAST(COUNT(*) AS BIGINT) AS c
+       |  FROM tok GROUP BY doc_id, t)""".stripMargin
+
+  /** One row per DISTINCT text (rep-collapse): r = its smallest doc id,
+    * ids = all its doc ids, w = their count, tk = its token array. */
+  private def textReps(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .groupBy(col("text"))
+      .agg(min(col("doc_id")).as("r"), collect_list(col("doc_id")).as("ids"),
+        count(lit(1)).as("w"))
+      .select(col("r"), col("ids"), col("w"),
+        regexp_extract_all(lower(col("text")), lit(tokPat), lit(0)).as("tk"))
+
   val queries: Seq[QueryDef] = Seq(
 
     // PMI collocation mining: score(x,y) ∝ P(x,y)/(P(x)P(y)) over
@@ -167,12 +184,7 @@ object Lexical {
     // distinct token), not raw tokens.
     QueryDef.sql(
       "q_vocab_coverage",
-      """WITH tok AS (
-        |  SELECT doc_id, UNNEST(REGEXP_EXTRACT_ALL(LOWER(text), '[a-z0-9]+')) AS t
-        |  FROM documents),
-        |dt AS (
-        |  SELECT doc_id, t, CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM tok GROUP BY doc_id, t),
+      s"""WITH ${tokenCountsSql("dt")},
         |freq AS (SELECT t, CAST(SUM(c) AS BIGINT) AS cf FROM dt GROUP BY t),
         |vocab AS (
         |  SELECT t FROM freq ORDER BY cf DESC, t LIMIT 500),
@@ -189,12 +201,7 @@ object Lexical {
       // weights each rep histogram by its clone count (clone-weighted ==
       // the naive per-doc semantics), and per-doc coverage fans back out
       // through the carried doc-id list.
-      val reps = Tables.documents(s, d)
-        .groupBy(col("text"))
-        .agg(min(col("doc_id")).as("r"), collect_list(col("doc_id")).as("ids"),
-          count(lit(1)).as("w"))
-        .select(col("r"), col("ids"), col("w"),
-          regexp_extract_all(lower(col("text")), lit(tokPat), lit(0)).as("tk"))
+      val reps = textReps(s, d)
         .persist()
       val dt = reps.select(col("r"), col("w"), explode(col("tk")).as("t"))
         .groupBy(col("r"), col("w"), col("t")).agg(count(lit(1)).as("c"))
@@ -221,12 +228,7 @@ object Lexical {
     // repeats are unigrams rather than trigram runs.
     QueryDef.sql(
       "q_token_gini",
-      """WITH tok AS (
-        |  SELECT doc_id, UNNEST(REGEXP_EXTRACT_ALL(LOWER(text), '[a-z0-9]+')) AS t
-        |  FROM documents),
-        |hist AS (
-        |  SELECT doc_id, t, CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM tok GROUP BY doc_id, t),
+      s"""WITH ${tokenCountsSql("hist")},
         |g AS (
         |  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tok,
         |    CAST(COUNT(*) AS BIGINT) AS n_types,
@@ -298,12 +300,7 @@ object Lexical {
       // lists. Model joins are keyed by bigram/word — vocabulary-sized
       // shuffle joins, never broadcast (a 100 TB corpus's bigram table
       // is dictionary-scale but not provably driver-sized).
-      val reps = Tables.documents(s, d)
-        .groupBy(col("text"))
-        .agg(min(col("doc_id")).as("r"), collect_list(col("doc_id")).as("ids"),
-          count(lit(1)).as("w"))
-        .select(col("r"), col("ids"), col("w"),
-          regexp_extract_all(lower(col("text")), lit(tokPat), lit(0)).as("tk"))
+      val reps = textReps(s, d)
         .filter(size(col("tk")) >= 2)
         .persist()
       val rb = reps
@@ -724,12 +721,7 @@ object Lexical {
     // (Σc·100 ≥ N), so clone factors can't empty or explode the output.
     QueryDef.sql(
       "q_word_burstiness",
-      """WITH tok AS (
-        |  SELECT doc_id, UNNEST(REGEXP_EXTRACT_ALL(LOWER(text), '[a-z0-9]+')) AS t
-        |  FROM documents),
-        |hist AS (
-        |  SELECT doc_id, t, CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM tok GROUP BY doc_id, t),
+      s"""WITH ${tokenCountsSql("hist")},
         |nd AS (SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n FROM tok),
         |w AS (
         |  SELECT t, CAST(COUNT(*) AS BIGINT) AS df,

@@ -137,6 +137,51 @@ object Sketches {
   def rhoSqlOf(hv: String): (String, String) =
     (s"$hv & 63", s"26 - (${bitLenSql(s"($hv >> 6)")})")
 
+  /** p50/p90/p99 of the positive BIGINT column `v` of `values` through
+    * the mergeable log-histogram sketch: one row (pm, rk, e, m) per
+    * quantile, the bucket holding the rk-th value. */
+  private def logQuantiles(values: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val spark = values.sparkSession
+    import spark.implicits._
+    val b = values
+      .select(col("v"), (length(bin(col("v"))) - 1).cast("long").as("e"))
+      .select(col("e"),
+        expr("(v * 16) div cast(pow(2, e) as bigint) - 16").as("m"))
+      .groupBy(col("e"), col("m")).agg(count(lit(1)).as("cnt"))
+    val n = b.agg(sum(col("cnt")).as("n"))
+    val c = b.withColumn("cum",
+      sum(col("cnt")).over(Window.orderBy(col("e"), col("m"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val ks = Seq(500L, 900L, 990L).toDF("pm").crossJoin(broadcast(n))
+      .select(col("pm"), expr("(n * pm + 999) div 1000").as("rk"))
+    broadcast(ks).join(c, col("cum") >= col("rk"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("pm")).orderBy(col("e"), col("m"))))
+      .filter(col("rn") === 1)
+  }
+
+  /** Oracle twin of [[logQuantiles]] over relation `src`: CTEs b, n, c,
+    * p, k and q. */
+  private def logQuantilesSql(src: String): String =
+    s"""b AS (
+       |  SELECT CAST(LENGTH(BIN(v)) - 1 AS BIGINT) AS e,
+       |    (v * 16) // CAST(POWER(2, LENGTH(BIN(v)) - 1) AS BIGINT) - 16 AS m,
+       |    CAST(COUNT(*) AS BIGINT) AS cnt
+       |  FROM $src GROUP BY 1, 2),
+       |n AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n FROM b),
+       |c AS (
+       |  SELECT e, m, cnt,
+       |    SUM(cnt) OVER (ORDER BY e, m
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+       |  FROM b),
+       |p AS (SELECT UNNEST([500, 900, 990]) AS pm),
+       |k AS (SELECT pm, (n.n * pm + 999) // 1000 AS rk FROM p CROSS JOIN n),
+       |q AS (
+       |  SELECT k.pm, k.rk, c.e, c.m,
+       |    ROW_NUMBER() OVER (PARTITION BY k.pm ORDER BY c.e, c.m) AS rn
+       |  FROM k JOIN c ON c.cum >= k.rk)""".stripMargin
+
   val queries: Seq[QueryDef] = Seq(
 
     // EXACT distinct counting as mergeable state: Spark's native bitmap
@@ -582,49 +627,16 @@ object Sketches {
     // contribute only through the combiner-backed groupBy.
     QueryDef.sql(
       "q_quantile_sketch",
-      """WITH v AS (
+      s"""WITH v AS (
         |  SELECT CAST(FLOOR(l_extendedprice * 100) AS BIGINT) AS v FROM lineitem),
-        |b AS (
-        |  SELECT CAST(LENGTH(BIN(v)) - 1 AS BIGINT) AS e,
-        |    (v * 16) // CAST(POWER(2, LENGTH(BIN(v)) - 1) AS BIGINT) - 16 AS m,
-        |    CAST(COUNT(*) AS BIGINT) AS cnt
-        |  FROM v GROUP BY 1, 2),
-        |n AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n FROM b),
-        |c AS (
-        |  SELECT e, m, cnt,
-        |    SUM(cnt) OVER (ORDER BY e, m
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM b),
-        |p AS (SELECT UNNEST([500, 900, 990]) AS pm),
-        |k AS (SELECT pm, (n.n * pm + 999) // 1000 AS rk FROM p CROSS JOIN n),
-        |q AS (
-        |  SELECT k.pm, k.rk, c.e, c.m,
-        |    ROW_NUMBER() OVER (PARTITION BY k.pm ORDER BY c.e, c.m) AS rn
-        |  FROM k JOIN c ON c.cum >= k.rk)
+        |${logQuantilesSql("v")}
         |SELECT CAST(pm AS BIGINT) AS p_permille, CAST(rk AS BIGINT) AS rank_k,
         |  CAST(((16 + m) << e) // 16 AS BIGINT) AS q_lb,
         |  CAST(((17 + m) << e) // 16 AS BIGINT) AS q_ub
         |FROM q WHERE rn = 1 ORDER BY p_permille""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val v = Tables.lineitem(s, d)
-        .select(floor(col("l_extendedprice") * 100).cast("long").as("v"))
-      val b = v
-        .select(col("v"), (length(bin(col("v"))) - 1).cast("long").as("e"))
-        .select(col("e"),
-          expr("(v * 16) div cast(pow(2, e) as bigint) - 16").as("m"))
-        .groupBy(col("e"), col("m")).agg(count(lit(1)).as("cnt"))
-      val n = b.agg(sum(col("cnt")).as("n"))
-      val c = b.withColumn("cum",
-        sum(col("cnt")).over(Window.orderBy(col("e"), col("m"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      import s.implicits._
-      val ks = Seq(500L, 900L, 990L).toDF("pm").crossJoin(broadcast(n))
-        .select(col("pm"), expr("(n * pm + 999) div 1000").as("rk"))
-      val q = broadcast(ks).join(c, col("cum") >= col("rk"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("pm")).orderBy(col("e"), col("m"))))
-        .filter(col("rn") === 1)
-      q.select(col("pm").as("p_permille"), col("rk").as("rank_k"),
+      logQuantiles(Tables.lineitem(s, d)
+          .select(floor(col("l_extendedprice") * 100).cast("long").as("v")))
+        .select(col("pm").as("p_permille"), col("rk").as("rank_k"),
           expr("shiftleft(m + 16, cast(e as int)) div 16").as("q_lb"),
           expr("shiftleft(m + 17, cast(e as int)) div 16").as("q_ub"))
         .orderBy(col("p_permille"))
@@ -699,7 +711,7 @@ object Sketches {
     // ≥ 1 s so the log2 bucketing never sees zero.
     QueryDef.sql(
       "q_conversion_latency",
-      """WITH pu AS (
+      s"""WITH pu AS (
         |  SELECT user_id,
         |    MIN(CASE WHEN event_type = 'view' THEN EPOCH_US(ts) END) AS tv
         |  FROM events GROUP BY user_id),
@@ -710,29 +722,11 @@ object Sketches {
         |  WHERE e.event_type = 'purchase' AND p.tv IS NOT NULL
         |    AND EPOCH_US(e.ts) > p.tv
         |  GROUP BY e.user_id, p.tv),
-        |b AS (
-        |  SELECT CAST(LENGTH(BIN(v)) - 1 AS BIGINT) AS e,
-        |    (v * 16) // CAST(POWER(2, LENGTH(BIN(v)) - 1) AS BIGINT) - 16 AS m,
-        |    CAST(COUNT(*) AS BIGINT) AS cnt
-        |  FROM conv GROUP BY 1, 2),
-        |n AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n FROM b),
-        |c AS (
-        |  SELECT e, m, cnt,
-        |    SUM(cnt) OVER (ORDER BY e, m
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM b),
-        |p AS (SELECT UNNEST([500, 900, 990]) AS pm),
-        |k AS (SELECT pm, (n.n * pm + 999) // 1000 AS rk FROM p CROSS JOIN n),
-        |q AS (
-        |  SELECT k.pm, k.rk, c.e, c.m,
-        |    ROW_NUMBER() OVER (PARTITION BY k.pm ORDER BY c.e, c.m) AS rn
-        |  FROM k JOIN c ON c.cum >= k.rk)
+        |${logQuantilesSql("conv")}
         |SELECT CAST(pm AS BIGINT) AS p_permille, CAST(rk AS BIGINT) AS rank_k,
         |  CAST(((16 + m) << e) // 16 AS BIGINT) AS lat_lb_s,
         |  CAST(((17 + m) << e) // 16 AS BIGINT) AS lat_ub_s
         |FROM q WHERE rn = 1 ORDER BY p_permille""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      import s.implicits._
       val ev = graft.Tables.events(s, d)
       val pu = ev.groupBy(col("user_id"))
         .agg(min(when(col("event_type") === "view", unix_micros(col("ts")))).as("tv"))
@@ -742,21 +736,7 @@ object Sketches {
         .groupBy(col("user_id"), col("tv"))
         .agg(min(unix_micros(col("ts"))).as("tp"))
         .select(greatest(lit(1L), expr("(tp - tv) div 1000000")).as("v"))
-      val b = conv
-        .select(col("v"), (length(bin(col("v"))) - 1).cast("long").as("e"))
-        .select(col("e"),
-          expr("(v * 16) div cast(pow(2, e) as bigint) - 16").as("m"))
-        .groupBy(col("e"), col("m")).agg(count(lit(1)).as("cnt"))
-      val n = b.agg(sum(col("cnt")).as("n"))
-      val c = b.withColumn("cum",
-        sum(col("cnt")).over(Window.orderBy(col("e"), col("m"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      val ks = Seq(500L, 900L, 990L).toDF("pm").crossJoin(broadcast(n))
-        .select(col("pm"), expr("(n * pm + 999) div 1000").as("rk"))
-      broadcast(ks).join(c, col("cum") >= col("rk"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("pm")).orderBy(col("e"), col("m"))))
-        .filter(col("rn") === 1)
+      logQuantiles(conv)
         .select(col("pm").as("p_permille"), col("rk").as("rank_k"),
           expr("shiftleft(m + 16, cast(e as int)) div 16").as("lat_lb_s"),
           expr("shiftleft(m + 17, cast(e as int)) div 16").as("lat_ub_s"))

@@ -17,6 +17,46 @@ import TextPipeline.{distinctGrams, grams, gramsSql, normText, P}
   */
 object TextAnalysis {
 
+  /** Doc pairs doc1 < doc2 sharing a rare gram (df ≤ 20), with `shared`
+    * and each doc's rare-gram count n1, n2: the candidates of the n-gram
+    * near-dup queries. */
+  private def rareGramPairs(s: org.apache.spark.sql.SparkSession, d: String) = {
+    // the shared materialized distinct gram table feeds the df aggregate
+    // and the semi-join probe side (at 100 TB this materialization is
+    // mandatory, not an optimization)
+    val dgAll = distinctGrams(s, d).select(col("doc_id"), col("g"))
+    // document frequency via groupBy+semi-join, NOT count().over(
+    // partitionBy(g)): the window has no map-side combine, so the hottest
+    // gram's full row set serializes onto one reducer — the one true
+    // straggler at 100 TB. groupBy combines map-side; the semi-join back
+    // onto the persisted distinct set keeps only rare grams.
+    val rareGrams = dgAll.groupBy(col("g")).agg(count(lit(1)).as("df"))
+      .filter(col("df") <= 20).select(col("g"))
+    // rdg feeds the candidate self-join AND both size lookups — persist
+    val rdg = dgAll.join(rareGrams, Seq("g"), "left_semi")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sizes = rdg.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    val inter = rdg.as("a")
+      .join(rdg.as("b"), col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
+      .agg(count(lit(1)).as("shared"))
+    inter
+      .join(sizes.select(col("doc_id").as("doc1"), col("n").as("n1")), Seq("doc1"))
+      .join(sizes.select(col("doc_id").as("doc2"), col("n").as("n2")), Seq("doc2"))
+  }
+
+  /** Oracle twin of [[rareGramPairs]]: CTEs up to `sizes` and `inter`. */
+  private val rareGramPairsSql =
+    s"""$gramsSql,
+       |dg AS (SELECT DISTINCT doc_id, g FROM grams),
+       |rare AS (SELECT g FROM dg GROUP BY g HAVING COUNT(*) <= 20),
+       |rdg AS (SELECT dg.doc_id, dg.g FROM dg JOIN rare USING (g)),
+       |sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM rdg GROUP BY doc_id),
+       |inter AS (
+       |  SELECT a.doc_id AS doc1, b.doc_id AS doc2, CAST(COUNT(*) AS BIGINT) AS shared
+       |  FROM rdg a JOIN rdg b ON a.g = b.g AND a.doc_id < b.doc_id
+       |  GROUP BY a.doc_id, b.doc_id)""".stripMargin
+
   val queries: Seq[QueryDef] = Seq(
 
     // SimHash: 16-bit sign-aggregated sketch of the gram hashes
@@ -51,42 +91,13 @@ object TextAnalysis {
     // exact Jaccard over each doc's distinct rare-gram set, top-100 pairs
     QueryDef.sql(
       "q_dedup_ngram_jaccard",
-      s"""WITH $gramsSql,
-         |dg AS (SELECT DISTINCT doc_id, g FROM grams),
-         |rare AS (SELECT g FROM dg GROUP BY g HAVING COUNT(*) <= 20),
-         |rdg AS (SELECT dg.doc_id, dg.g FROM dg JOIN rare USING (g)),
-         |sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM rdg GROUP BY doc_id),
-         |inter AS (
-         |  SELECT a.doc_id AS doc1, b.doc_id AS doc2, CAST(COUNT(*) AS BIGINT) AS shared
-         |  FROM rdg a JOIN rdg b ON a.g = b.g AND a.doc_id < b.doc_id
-         |  GROUP BY a.doc_id, b.doc_id)
+      s"""WITH $rareGramPairsSql
          |SELECT doc1, doc2, shared,
          |  CAST(FLOOR(shared * CAST(1000000.0 AS DOUBLE) / (s1.n + s2.n - shared)) AS BIGINT) AS jaccard_q6
          |FROM inter JOIN sizes s1 ON s1.doc_id = doc1
          |           JOIN sizes s2 ON s2.doc_id = doc2
          |ORDER BY jaccard_q6 DESC, doc1, doc2 LIMIT 100""".stripMargin) { (s, d) =>
-      // the shared materialized distinct gram table feeds the df aggregate
-      // and the semi-join probe side (at 100 TB this materialization is
-      // mandatory, not an optimization)
-      val dgAll = distinctGrams(s, d).select(col("doc_id"), col("g"))
-      // document frequency via groupBy+semi-join, NOT count().over(
-      // partitionBy(g)): the window has no map-side combine, so the hottest
-      // gram's full row set serializes onto one reducer — the one true
-      // straggler at 100 TB. groupBy combines map-side; the semi-join back
-      // onto the persisted distinct set keeps only rare grams.
-      val rareGrams = dgAll.groupBy(col("g")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= 20).select(col("g"))
-      // rdg feeds the candidate self-join AND both size lookups — persist
-      val rdg = dgAll.join(rareGrams, Seq("g"), "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val sizes = rdg.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val inter = rdg.as("a")
-        .join(rdg.as("b"), col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
-        .agg(count(lit(1)).as("shared"))
-      inter
-        .join(sizes.select(col("doc_id").as("doc1"), col("n").as("n1")), Seq("doc1"))
-        .join(sizes.select(col("doc_id").as("doc2"), col("n").as("n2")), Seq("doc2"))
+      rareGramPairs(s, d)
         .select(col("doc1"), col("doc2"), col("shared"),
           floor(col("shared") * lit(1000000.0) / (col("n1") + col("n2") - col("shared")))
             .cast("long").as("jaccard_q6"))
@@ -100,15 +111,7 @@ object TextAnalysis {
     // bound as the Jaccard query; both directions reported per pair
     QueryDef.sql(
       "q_ngram_containment",
-      s"""WITH $gramsSql,
-         |dg AS (SELECT DISTINCT doc_id, g FROM grams),
-         |rare AS (SELECT g FROM dg GROUP BY g HAVING COUNT(*) <= 20),
-         |rdg AS (SELECT dg.doc_id, dg.g FROM dg JOIN rare USING (g)),
-         |sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM rdg GROUP BY doc_id),
-         |inter AS (
-         |  SELECT a.doc_id AS doc1, b.doc_id AS doc2, CAST(COUNT(*) AS BIGINT) AS shared
-         |  FROM rdg a JOIN rdg b ON a.g = b.g AND a.doc_id < b.doc_id
-         |  GROUP BY a.doc_id, b.doc_id)
+      s"""WITH $rareGramPairsSql
          |SELECT doc1, doc2, shared,
          |  CAST(FLOOR(shared * CAST(1000000.0 AS DOUBLE) / s1.n) AS BIGINT) AS cont12_q6,
          |  CAST(FLOOR(shared * CAST(1000000.0 AS DOUBLE) / s2.n) AS BIGINT) AS cont21_q6
@@ -118,21 +121,9 @@ object TextAnalysis {
          |    CAST(FLOOR(shared * CAST(1000000.0 AS DOUBLE) / s1.n) AS BIGINT),
          |    CAST(FLOOR(shared * CAST(1000000.0 AS DOUBLE) / s2.n) AS BIGINT)) DESC, doc1, doc2
          |LIMIT 100""".stripMargin) { (s, d) =>
-      val dgAll = distinctGrams(s, d).select(col("doc_id"), col("g"))
-      val rareGrams = dgAll.groupBy(col("g")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= 20).select(col("g"))
-      val rdg = dgAll.join(rareGrams, Seq("g"), "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val sizes = rdg.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val inter = rdg.as("a")
-        .join(rdg.as("b"), col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
-        .agg(count(lit(1)).as("shared"))
       val c12 = floor(col("shared") * lit(1000000.0) / col("n1")).cast("long")
       val c21 = floor(col("shared") * lit(1000000.0) / col("n2")).cast("long")
-      inter
-        .join(sizes.select(col("doc_id").as("doc1"), col("n").as("n1")), Seq("doc1"))
-        .join(sizes.select(col("doc_id").as("doc2"), col("n").as("n2")), Seq("doc2"))
+      rareGramPairs(s, d)
         .select(col("doc1"), col("doc2"), col("shared"),
           c12.as("cont12_q6"), c21.as("cont21_q6"))
         .orderBy(greatest(col("cont12_q6"), col("cont21_q6")).desc,
@@ -234,17 +225,7 @@ object TextAnalysis {
     // Language ID: marker-word occurrence scoring with a fixed priority argmax
     QueryDef.sql(
       "q_text_langid",
-      """WITH scored AS (
-        |  SELECT doc_id, lang,
-        |    CAST((LENGTH(p) - LENGTH(REPLACE(p, ' the ', ''))) / 5
-        |       + (LENGTH(p) - LENGTH(REPLACE(p, ' and ', ''))) / 5 AS BIGINT) AS s_en,
-        |    CAST((LENGTH(p) - LENGTH(REPLACE(p, ' der ', ''))) / 5
-        |       + (LENGTH(p) - LENGTH(REPLACE(p, ' und ', ''))) / 5 AS BIGINT) AS s_de,
-        |    CAST((LENGTH(p) - LENGTH(REPLACE(p, ' le ', ''))) / 4
-        |       + (LENGTH(p) - LENGTH(REPLACE(p, ' et ', ''))) / 4 AS BIGINT) AS s_fr,
-        |    CAST((LENGTH(p) - LENGTH(REPLACE(p, ' el ', ''))) / 4
-        |       + (LENGTH(p) - LENGTH(REPLACE(p, ' y ', ''))) / 3 AS BIGINT) AS s_es
-        |  FROM (SELECT doc_id, lang, ' ' || LOWER(text) || ' ' AS p FROM documents) x)
+      s"""WITH ${Eval.scoredSql}
         |SELECT doc_id, lang, s_en, s_de, s_fr, s_es,
         |  CASE WHEN s_en + s_de + s_fr + s_es = 0 THEN 'unknown'
         |       WHEN s_en >= GREATEST(s_de, s_fr, s_es) THEN 'en'
@@ -252,22 +233,7 @@ object TextAnalysis {
         |       WHEN s_fr >= s_es THEN 'fr'
         |       ELSE 'es' END AS pred_lang
         |FROM scored ORDER BY doc_id""".stripMargin) { (s, d) =>
-      def occ(p: Column, kw: String): Column =
-        ((length(p) - length(expr(s"replace(p, '$kw', '')"))) / kw.length).cast("long")
-      val base = Tables.documents(s, d).select(col("doc_id"), col("lang"),
-        concat(lit(" "), lower(col("text")), lit(" ")).as("p"))
-      base.select(col("doc_id"), col("lang"),
-          (occ(col("p"), " the ") + occ(col("p"), " and ")).as("s_en"),
-          (occ(col("p"), " der ") + occ(col("p"), " und ")).as("s_de"),
-          (occ(col("p"), " le ") + occ(col("p"), " et ")).as("s_fr"),
-          (occ(col("p"), " el ") + occ(col("p"), " y ")).as("s_es"))
-        .withColumn("pred_lang",
-          when(col("s_en") + col("s_de") + col("s_fr") + col("s_es") === 0, "unknown")
-            .when(col("s_en") >= greatest(col("s_de"), col("s_fr"), col("s_es")), "en")
-            .when(col("s_de") >= greatest(col("s_fr"), col("s_es")), "de")
-            .when(col("s_fr") >= col("s_es"), "fr")
-            .otherwise("es"))
-        .orderBy(col("doc_id"))
+      Eval.predicted(Eval.scored(Tables.documents(s, d))).orderBy(col("doc_id"))
     },
 
     // Document fingerprint: rolling-hash sketch of the gram stream

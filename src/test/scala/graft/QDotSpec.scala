@@ -53,6 +53,13 @@ class QDotSpec extends SparkSpec {
     assert(plan.contains("qdot"), plan)
   }
 
+  test("q_ann_native_dot and q_ann_zipwith share one oracle text") {
+    // q_ann_native_dot's hash match proves the native dot bit-exact only
+    // while both queries are checked against the same SQL
+    val native = SparkEntry.oracleSql("q_ann_native_dot")
+    assert(native == SparkEntry.oracleSql("q_ann_zipwith"))
+  }
+
   test("length mismatch uses the common prefix; null elements contribute 0") {
     val df = Seq((Array(1f, 2f, 3f), Array(2f, 2f))).toDF("a", "b")
     val got = df.select(QDot.qdot($"a", $"b")).as[Long].head()

@@ -11,6 +11,8 @@ in COVERAGE.md, then reports:
     (stale code references), and path-qualified `dir/Name` references to
     a class or object src/main no longer defines; Spark's own classes (`Trigger`,
     `DataFrameWriter`) are not objects of src/main and are skipped
+  - a table row id (`A2`, `W5`: one capital letter and digits opening the
+    row's first cell) listed twice in one `## ` section
 Exit 1 on any of them, so the round close-out catches inventory drift.
 """
 import os
@@ -73,6 +75,20 @@ def stale_code_refs(text, members, types):
     return sorted(set(stale))
 
 
+def duplicate_row_ids(text):
+    """`<section>: <id> (lines a, b)` for each row id listed more than once
+    within one `## ` section."""
+    rows, section = {}, ""
+    for n, line in enumerate(text.splitlines(), 1):
+        if line.startswith("## "):
+            section = line[3:].strip()
+        m = re.match(r"\|\s*([A-Z]\d+)\s", line)
+        if m:
+            rows.setdefault((section, m.group(1)), []).append(n)
+    return [f"{sec}: {rid} (lines {', '.join(map(str, lines))})"
+            for (sec, rid), lines in rows.items() if len(lines) > 1]
+
+
 def covered_names():
     text = open(os.path.join(REPO, "COVERAGE.md")).read()
     return set(re.findall(r"\b(q_\w+)\b", text))
@@ -82,8 +98,9 @@ def main():
     reg, cov = registry_names(), covered_names()
     undocumented = sorted(reg - cov)
     stale = sorted(cov - reg)
-    stale_code = stale_code_refs(
-        open(os.path.join(REPO, "COVERAGE.md")).read(), *main_code())
+    text = open(os.path.join(REPO, "COVERAGE.md")).read()
+    stale_code = stale_code_refs(text, *main_code())
+    dup_rows = duplicate_row_ids(text)
     print(f"registry: {len(reg)} queries; COVERAGE.md mentions: {len(cov)}")
     if undocumented:
         print(f"UNDOCUMENTED ({len(undocumented)}): {', '.join(undocumented)}")
@@ -91,9 +108,12 @@ def main():
         print(f"STALE MENTIONS ({len(stale)}): {', '.join(stale)}")
     if stale_code:
         print(f"STALE CODE REFERENCES ({len(stale_code)}): {', '.join(stale_code)}")
-    if not undocumented and not stale and not stale_code:
+    if dup_rows:
+        print(f"DUPLICATED ROW IDS ({len(dup_rows)}): {'; '.join(dup_rows)}")
+    failed = undocumented or stale or stale_code or dup_rows
+    if not failed:
         print("COVERAGE.md, the registry and the code are reconciled")
-    sys.exit(1 if (undocumented or stale or stale_code) else 0)
+    sys.exit(1 if failed else 0)
 
 
 if __name__ == "__main__":
