@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.pipeline.SparseProduct
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,15 +18,15 @@ object Commerce {
 
     // Market-basket lift on the FACT table (co-purchased parts within an
     // order, lift = P(ab)/(P(a)P(b))): per-order distinct-part degree is
-    // capped at GREATEST(64, 4·⌊√|parts|⌋) (Graphs.capItemsPerKey, same
-    // truncation in the oracle), so the within-order self-join fans out
+    // capped at GREATEST(64, 4·⌊√|parts|⌋) (SparseProduct.capItemsPerKey,
+    // same truncation in the oracle), so the within-order self-join fans out
     // at most (cap choose 2) pairs per basket even if a synthetic or
     // adversarial basket holds the whole part vocabulary — then one
     // combiner-backed pair aggregate, frequency joins keyed by part, and
     // a single shared IEEE lift division. Top 50 by (lift, pair).
     QueryDef.sql(
       "q_copurchase_lift",
-      """WITH items0 AS (
+      s"""WITH items0 AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
         |vocab AS (SELECT CAST(COUNT(DISTINCT pk) AS BIGINT) AS nv FROM items0),
         |items AS (
@@ -33,7 +34,7 @@ object Commerce {
         |    SELECT ok, pk,
         |      ROW_NUMBER() OVER (PARTITION BY ok ORDER BY pk) AS rn
         |    FROM items0) r CROSS JOIN vocab
-        |  WHERE r.rn <= GREATEST(64, 4 * CAST(FLOOR(SQRT(CAST(nv AS DOUBLE))) AS BIGINT))),
+        |  WHERE r.rn <= ${SparseProduct.capSql("nv")}),
         |n AS (SELECT CAST(COUNT(DISTINCT ok) AS BIGINT) AS n_orders FROM items),
         |freq AS (SELECT pk, CAST(COUNT(*) AS BIGINT) AS c FROM items GROUP BY pk),
         |pairs AS (
@@ -49,26 +50,18 @@ object Commerce {
         |JOIN freq fb ON fb.pk = p.p2
         |CROSS JOIN n
         |ORDER BY lift_q6 DESC, p1, p2 LIMIT 50""".stripMargin) { (s, d) =>
-      // items feeds four consumers (n, freq, both self-join probes) and is
-      // NOT exchange-reused across them — unpersisted, the distinct + cap
-      // window re-ran per consumer (r15; released by the runner's
-      // clearCache contract)
-      val items = graft.pipeline.Graphs.capItemsPerKey(
+      // items feeds four consumers (n, the part degrees, both self-join
+      // probes) and is NOT exchange-reused across them — unpersisted, the
+      // distinct + cap window re-ran per consumer (r15; released by the
+      // runner's clearCache contract)
+      val items = SparseProduct.capItemsPerKey(
         Tables.lineitem(s, d)
           .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
           .distinct(), "ok", "pk")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val n = items.agg(countDistinct(col("ok")).as("n_orders"))
-      val freq = items.groupBy(col("pk")).agg(count(lit(1)).as("c"))
-      val pairs = items.as("a")
-        .join(items.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .groupBy(col("a.pk").as("p1"), col("b.pk").as("p2"))
-        .agg(count(lit(1)).as("n_ab"))
-        .filter(col("n_ab") >= 3)
-      pairs
-        .join(freq.select(col("pk").as("p1"), col("c").as("c1")), Seq("p1"))
-        .join(freq.select(col("pk").as("p2"), col("c").as("c2")), Seq("p2"))
+      SparseProduct.product(items, Seq("ok"), "pk",
+          SparseProduct.Names("p1", "p2", "n_ab", "c1", "c2"), min = Some(3L))
         .crossJoin(broadcast(n))
         .select(col("p1"), col("p2"), col("n_ab"), col("c1"), col("c2"),
           floor(col("n_ab") * lit(1000000.0) * col("n_orders")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.pipeline.SparseProduct
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -621,16 +622,8 @@ object EventAnalytics {
         .persist()
       val nb = basket.select(col("user_id"), col("sn")).distinct()
         .agg(count(lit(1)).as("n"))
-      val item = basket.groupBy(col("event_type")).agg(count(lit(1)).as("c"))
-      val pair = basket.as("a")
-        .join(basket.as("b"),
-          col("a.user_id") === col("b.user_id") && col("a.sn") === col("b.sn") &&
-            col("a.event_type") < col("b.event_type"))
-        .groupBy(col("a.event_type").as("a"), col("b.event_type").as("b"))
-        .agg(count(lit(1)).as("n_ab"))
-      pair
-        .join(broadcast(item.select(col("event_type").as("a"), col("c").as("n_a"))), Seq("a"))
-        .join(broadcast(item.select(col("event_type").as("b"), col("c").as("n_b"))), Seq("b"))
+      SparseProduct.product(basket, Seq("user_id", "sn"), "event_type",
+          SparseProduct.Names("a", "b", "n_ab", "n_a", "n_b"))
         .crossJoin(broadcast(nb))
         .select(col("a"), col("b"), col("n_ab"), col("n_a"), col("n_b"),
           floor(col("n_ab") * lit(1000000.0) / col("n")).cast("long").as("support_q6"),

@@ -52,6 +52,27 @@ object Corpus {
           .as("s"))
   }
 
+  /** Oracle twin of [[bm25TermScores]]: CTEs up to `scored` (doc_id, s)
+    * over the tokens that pass the SQL predicate `terms`. */
+  private[pipeline] def bm25TermScoresSql(terms: String): String =
+    s"""$toksSql,
+       |dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM tok GROUP BY doc_id),
+       |g AS (SELECT CAST(SUM(dl) AS BIGINT) AS sumdl,
+       |             CAST(COUNT(*) AS BIGINT) AS n FROM dl),
+       |tf AS (
+       |  SELECT doc_id, t, CAST(COUNT(*) AS BIGINT) AS tf FROM tok
+       |  WHERE $terms GROUP BY doc_id, t),
+       |df AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY t),
+       |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
+       |scored AS (
+       |  SELECT tf.doc_id,
+       |    CAST(FLOOR((nn.n_docs - df.df + 0.5) * CAST(1000000.0 AS DOUBLE)
+       |               / (df.df + 0.5)) AS BIGINT)
+       |      * ((22 * tf.tf * g.sumdl * 1000000)
+       |         // (10 * g.sumdl * tf.tf + 3 * g.sumdl + 9 * d2.dl * g.n)) AS s
+       |  FROM tf JOIN df USING (t) JOIN dl d2 ON d2.doc_id = tf.doc_id
+       |  CROSS JOIN nn CROSS JOIN g)""".stripMargin
+
   /** Per-(doc, token) count and token length: the Gopher signals' base. */
   private val tokenCountsSql =
     s"""$toksSql,
@@ -152,19 +173,8 @@ object Corpus {
     val norms = vec.groupBy(col("rep")).agg(sum(col("tf") * col("tf")).as("nsq"))
 
     // rep-level dots: postings join over DISTINCT vectors only
-    // (r15 negative result, kept for the record: carrying nsq on the
-    // posting rows via a rep-keyed window removed the two norm joins of
-    // the pair table but ADDED two shuffles of vec — by rep for the
-    // window and back by t for the postings join — and measured ~0.5 s
-    // SLOWER at sf0.1; the norm joins stay)
-    val dotsRep = vec.as("a")
-      .join(vec.as("b"),
-        col("a.t") === col("b.t") && col("a.rep") < col("b.rep"))
-      .groupBy(col("a.rep").as("rep1"), col("b.rep").as("rep2"))
-      .agg(sum(col("a.tf") * col("b.tf")).as("dot"))
-    val scoredRep = dotsRep
-      .join(norms.select(col("rep").as("rep1"), col("nsq").as("n1")), Seq("rep1"))
-      .join(norms.select(col("rep").as("rep2"), col("nsq").as("n2")), Seq("rep2"))
+    val scoredRep = SparseProduct.product(vec, Seq("t"), "rep",
+      SparseProduct.Names("rep1", "rep2", "dot"), weight = Some("tf"))
 
     // expand cross-rep verdicts through the doc sets of both reps
     val cross = scoredRep
@@ -237,17 +247,8 @@ object Corpus {
           explode(transform(sequence(lit(1), size(col("tk")) - 7),
             i => concat_ws(" ", slice(col("tk"), i, lit(8))))).as("gram"))
         .distinct()
-      val sizes = g.groupBy(col("source")).agg(count(lit(1)).as("n"))
-      val common = g.as("a")
-        .join(g.as("b"),
-          col("a.gram") === col("b.gram") && col("a.source") < col("b.source"))
-        .groupBy(col("a.source").as("src_a"), col("b.source").as("src_b"))
-        .agg(count(lit(1)).as("n_common"))
-      common
-        .join(broadcast(sizes.select(col("source").as("src_a"), col("n").as("n_a"))),
-          Seq("src_a"))
-        .join(broadcast(sizes.select(col("source").as("src_b"), col("n").as("n_b"))),
-          Seq("src_b"))
+      SparseProduct.product(g, Seq("gram"), "source",
+          SparseProduct.Names("src_a", "src_b", "n_common", "n_a", "n_b"))
         .select(col("src_a"), col("src_b"), col("n_a"), col("n_b"), col("n_common"),
           floor(col("n_common") * lit(1000000.0)
             / (col("n_a") + col("n_b") - col("n_common"))).cast("long").as("jaccard_q6"),
@@ -337,18 +338,8 @@ object Corpus {
          |SELECT doc_id, CAST(rk AS BIGINT) AS rk, nbr, cos_q6
          |FROM ranked WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      // both orientations of each pair come from ONE explode instead of a
-      // union of two scored subtrees: profiled at r15, the union's two
-      // branches did NOT get exchange reuse and the whole postings join
-      // ran twice (two identical 6.4 MB dot shuffles); the explode
-      // evaluates scored once and is a narrow row-doubling (guide §2.4)
       val scored = sparseCosScored(s, d)
-      val sym = scored.select(explode(array(
-          struct(col("doc1").as("doc_id"), col("doc2").as("nbr"), col("cos_q6")),
-          struct(col("doc2").as("doc_id"), col("doc1").as("nbr"), col("cos_q6"))))
-          .as("e"))
-        .select(col("e.doc_id").as("doc_id"), col("e.nbr").as("nbr"),
-          col("e.cos_q6").as("cos_q6"))
+      val sym = SparseProduct.symmetric(scored, "doc1", "doc2", "doc_id", "nbr", "cos_q6")
       val w = Window.partitionBy(col("doc_id")).orderBy(col("cos_q6").desc, col("nbr"))
       sym.withColumn("rk", row_number().over(w).cast("long"))
         .filter(col("rk") <= 3)
@@ -411,23 +402,7 @@ object Corpus {
     // distributed search head.
     QueryDef.sql(
       "q_bm25_search",
-      s"""WITH $toksSql,
-         |dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM tok GROUP BY doc_id),
-         |g AS (SELECT CAST(SUM(dl) AS BIGINT) AS sumdl,
-         |             CAST(COUNT(*) AS BIGINT) AS n FROM dl),
-         |tf AS (
-         |  SELECT doc_id, t, CAST(COUNT(*) AS BIGINT) AS tf FROM tok
-         |  WHERE t IN ('table', 'hash', 'stream') GROUP BY doc_id, t),
-         |df AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY t),
-         |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
-         |scored AS (
-         |  SELECT tf.doc_id,
-         |    CAST(FLOOR((nn.n_docs - df.df + 0.5) * CAST(1000000.0 AS DOUBLE)
-         |               / (df.df + 0.5)) AS BIGINT)
-         |      * ((22 * tf.tf * g.sumdl * 1000000)
-         |         // (10 * g.sumdl * tf.tf + 3 * g.sumdl + 9 * d2.dl * g.n)) AS s
-         |  FROM tf JOIN df USING (t) JOIN dl d2 ON d2.doc_id = tf.doc_id
-         |  CROSS JOIN nn CROSS JOIN g)
+      s"""WITH ${bm25TermScoresSql("t IN ('table', 'hash', 'stream')")}
          |SELECT doc_id, CAST(SUM(s) AS BIGINT) AS score,
          |  CAST(COUNT(*) AS BIGINT) AS n_terms
          |FROM scored GROUP BY doc_id

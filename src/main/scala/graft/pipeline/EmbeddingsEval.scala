@@ -450,28 +450,8 @@ object EmbeddingsEval {
     // are pure integer arithmetic: 10^6 div (60 + rank), absent leg = 0.
     QueryDef.sql(
       "q_hybrid_rrf",
-      s"""WITH tok AS (
-         |  SELECT doc_id, UNNEST(REGEXP_EXTRACT_ALL(LOWER(text), '[a-z0-9]+')) AS t
-         |  FROM documents),
-         |dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM tok GROUP BY doc_id),
-         |g AS (SELECT CAST(SUM(dl) AS BIGINT) AS sumdl,
-         |             CAST(COUNT(*) AS BIGINT) AS n FROM dl),
-         |tf AS (
-         |  SELECT doc_id, t, CAST(COUNT(*) AS BIGINT) AS tf FROM tok
-         |  WHERE t IN ('table', 'hash', 'stream') AND doc_id <> 0
-         |  GROUP BY doc_id, t),
-         |df AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY t),
-         |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
-         |bm AS (
-         |  SELECT tf.doc_id,
-         |    CAST(SUM(
-         |      CAST(FLOOR((nn.n_docs - df.df + 0.5) * CAST(1000000.0 AS DOUBLE)
-         |                 / (df.df + 0.5)) AS BIGINT)
-         |      * ((22 * tf.tf * g.sumdl * 1000000)
-         |         // (10 * g.sumdl * tf.tf + 3 * g.sumdl + 9 * d2.dl * g.n)))
-         |      AS BIGINT) AS score
-         |  FROM tf JOIN df USING (t) JOIN dl d2 ON d2.doc_id = tf.doc_id
-         |  CROSS JOIN nn CROSS JOIN g GROUP BY tf.doc_id),
+      s"""WITH ${Corpus.bm25TermScoresSql("t IN ('table', 'hash', 'stream') AND doc_id <> 0")},
+         |bm AS (SELECT doc_id, CAST(SUM(s) AS BIGINT) AS score FROM scored GROUP BY doc_id),
          |lex AS (
          |  SELECT doc_id,
          |    CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS r_lex

@@ -17,12 +17,12 @@ import org.apache.spark.sql.functions._
   *   - Common-neighbor counting enumerates a wedge per (center, u, w)
   *     triple, which is quadratic in the hub's degree. There is no exact
   *     escape (the hub genuinely HAS ~deg²/2 wedges), so the operator is
-  *     DEFINED over degree-capped neighborhoods — [[Graphs.capItemsPerKey]]
-  *     truncates every center to its GREATEST(64, 4·⌊√|V|⌋) smallest
-  *     neighbors, applied identically in the DuckDB oracle, the same
-  *     contract the bipartite-projection family uses. Per-center fanout
-  *     is then cap² ≤ max(64², 16·|V|) — linear in vocabulary growth,
-  *     under any skew (see the capItemsPerKey scale contract).
+  *     DEFINED over degree-capped neighborhoods —
+  *     [[SparseProduct.capItemsPerKey]] truncates every center to its
+  *     GREATEST(64, 4·⌊√|V|⌋) smallest neighbors, applied identically in
+  *     the DuckDB oracle, the same contract the bipartite-projection
+  *     family uses. Per-center fanout is then cap² ≤ max(64², 16·|V|) —
+  *     linear in vocabulary growth, under any skew (see its scale contract).
   *   - Per-vertex triangle counting reuses the degree-ordered orientation
   *     (every edge directed from its lower-(deg, id) endpoint): out-degree
   *     is O(√m) on any graph, the hub's edges all point INTO it, and each
@@ -45,7 +45,7 @@ object GraphMining {
        |    SELECT v, u,
        |      ROW_NUMBER() OVER (PARTITION BY v ORDER BY u) AS rn_cap
        |    FROM adj0) x CROSS JOIN nv
-       |  WHERE x.rn_cap <= ${Graphs.capSql("nv.nv")})""".stripMargin
+       |  WHERE x.rn_cap <= ${SparseProduct.capSql("nv.nv")})""".stripMargin
 
   val queries: Seq[QueryDef] = Seq(
 
@@ -80,21 +80,16 @@ object GraphMining {
       val docs = Tables.documents(s, d)
       val ue = Graphs.skewedUndirectedEdges(docs)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val adj = Graphs.capItemsPerKey(
+      val adj = SparseProduct.capItemsPerKey(
           ue.select(col("a").as("v"), col("b").as("u"))
             .unionAll(ue.select(col("b").as("v"), col("a").as("u"))),
           "v", "u", k = 64L, mult = 4L)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val deg = adj.groupBy(col("u").as("x")).agg(count(lit(1)).as("d"))
-      val cand = adj.as("x")
-        .join(adj.as("y"), col("y.v") === col("x.v") && col("x.u") < col("y.u"))
-        .groupBy(col("x.u").as("p"), col("y.u").as("q"))
-        .agg(count(lit(1)).as("cn"))
-      val nonEdge = cand.join(ue,
-          col("a") === col("p") && col("b") === col("q"), "left_anti")
-      nonEdge
-        .join(deg.select(col("x").as("p"), col("d").as("dp")), Seq("p"))
-        .join(deg.select(col("x").as("q"), col("d").as("dq")), Seq("q"))
+      // the pairs that already are edges leave before the degree joins
+      val names = SparseProduct.Names("p", "q", "cn", "dp", "dq")
+      val nonEdge = SparseProduct.pairs(adj, Seq("v"), "u", names)
+        .join(ue, col("a") === col("p") && col("b") === col("q"), "left_anti")
+      SparseProduct.withDiagonal(nonEdge, adj, "u", names)
         .select(col("p"), col("q"), col("cn"),
           expr("(cn * 1000000) div (dp + dq - cn)").as("jaccard_q6"))
         .orderBy(col("cn").desc, col("jaccard_q6").desc, col("p"), col("q"))

@@ -87,41 +87,6 @@ object Graphs {
           .as("dst"))
   }
 
-  /** Deterministic per-key degree cap for bipartite projections: keep
-    * each key's GREATEST(k, mult·⌊√|itemVocab|⌋) smallest item ids (one
-    * row_number window partitioned by the key — an order-free, engine-
-    * portable truncation). Without it, a single adversarial power key
-    * holding a large share of the vocabulary makes the per-key pair
-    * self-join quadratic in the vocabulary.
-    *
-    * Scale contract (exact, not "bounded at any scale"): per-key pair
-    * fanout is cap² = max(k, mult·√|V|)² ≤ max(k², mult²·|V|) — LINEAR
-    * in vocabulary growth, under ANY per-key inflation or skew. The
-    * earlier |V|/c law kept per-key *skew* bounded but let the per-key
-    * output grow quadratically with the corpus (cap² = |V|²/c²); the
-    * √|V| law makes hub output track total-vocabulary growth instead,
-    * which is the right asymptote for a co-occurrence projection whose
-    * global cell count is itself Θ(|V|·avg-degree). isqrt is computed as
-    * FLOOR(SQRT(CAST(nv AS DOUBLE))): IEEE sqrt is correctly rounded in
-    * both the JVM and DuckDB, so the truncation is bit-identical in both
-    * engines and the differential hashes stay meaningful. */
-  def capItemsPerKey(ui: DataFrame, keyCol: String, itemCol: String,
-                     k: Long = 64L, mult: Long = 4L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val vocab = ui.agg(countDistinct(col(itemCol)).as("nv"))
-    ui.withColumn("rn_cap",
-        row_number().over(Window.partitionBy(col(keyCol)).orderBy(col(itemCol))))
-      .crossJoin(broadcast(vocab))
-      .filter(col("rn_cap") <= greatest(lit(k),
-        (lit(mult) * floor(sqrt(col("nv").cast("double")))).cast("long")))
-      .drop("rn_cap", "nv")
-  }
-
-  /** The SQL twin of [[capItemsPerKey]]'s cap bound, for oracle CTEs:
-    * `GREATEST(k, mult * CAST(FLOOR(SQRT(CAST(<nvExpr> AS DOUBLE))) AS BIGINT))`. */
-  def capSql(nvExpr: String, k: Long = 64L, mult: Long = 4L): String =
-    s"GREATEST($k, $mult * CAST(FLOOR(SQRT(CAST($nvExpr AS DOUBLE))) AS BIGINT))"
-
   /** `iters` integer-exact PageRank rounds, uniform out-degree 3.
     * Returns (doc_id, rank_q6).
     *
@@ -579,23 +544,14 @@ object Graphs {
 
   /** Item pairs i < j co-held by ≥ 5 users of the capped (user_id, item)
     * set `ui`, with n_both and both items' degrees d_i, d_j. */
-  private def cooccurPairs(ui: DataFrame): DataFrame = {
-    val deg = ui.groupBy(col("item")).agg(count(lit(1)).as("d"))
-    val pair = ui.as("a")
-      .join(ui.as("b"),
-        col("a.user_id") === col("b.user_id") && col("a.item") < col("b.item"))
-      .groupBy(col("a.item").as("i"), col("b.item").as("j"))
-      .agg(count(lit(1)).as("n_both"))
-      .filter(col("n_both") >= 5)
-    pair
-      .join(deg.select(col("item").as("i"), col("d").as("d_i")), Seq("i"))
-      .join(deg.select(col("item").as("j"), col("d").as("d_j")), Seq("j"))
-  }
+  private def cooccurPairs(ui: DataFrame): DataFrame =
+    SparseProduct.product(ui, Seq("user_id"), "item",
+      SparseProduct.Names("i", "j", "n_both", "d_i", "d_j"), min = Some(5L))
 
-  /** Oracle twin of [[userItems]] → [[capItemsPerKey]] → [[cooccurPairs]]
-    * (before the degree joins): CTEs ui0, vocab, ui, deg and pair. */
+  /** Oracle twin of [[userItems]] → [[SparseProduct.capItemsPerKey]] →
+    * [[cooccurPairs]] (before the degree joins): CTEs ui0, vocab, ui, deg and pair. */
   private val cooccurPairsSql: String =
-    """WITH ui0 AS (
+    s"""WITH ui0 AS (
       |  SELECT DISTINCT user_id, CAST(props->>'k' AS BIGINT) AS item
       |  FROM events),
       |vocab AS (SELECT CAST(COUNT(DISTINCT item) AS BIGINT) AS nv FROM ui0),
@@ -604,7 +560,7 @@ object Graphs {
       |    SELECT user_id, item,
       |      ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY item) AS rn
       |    FROM ui0) r CROSS JOIN vocab
-      |  WHERE r.rn <= GREATEST(64, 4 * CAST(FLOOR(SQRT(CAST(nv AS DOUBLE))) AS BIGINT))),
+      |  WHERE r.rn <= ${SparseProduct.capSql("nv")}),
       |deg AS (SELECT item, CAST(COUNT(*) AS BIGINT) AS d FROM ui GROUP BY item),
       |pair AS (
       |  SELECT a.item AS i, b.item AS j, CAST(COUNT(*) AS BIGINT) AS n_both
@@ -629,9 +585,9 @@ object Graphs {
     // Jaccard): the standard collaborative-filtering / co-view graph
     // build. Per-user distinct-item degree is CAPPED at
     // GREATEST(64, 4·⌊√|vocab|⌋) via a deterministic smallest-item-id
-    // truncation (capItemsPerKey) applied identically in both engines,
-    // so the per-user self-join's fanout is bounded even under an
-    // adversarial power user holding the whole vocabulary; the
+    // truncation (SparseProduct.capItemsPerKey) applied identically in
+    // both engines, so the per-user self-join's fanout is bounded even
+    // under an adversarial power user holding the whole vocabulary; the
     // projection then reduces to one combiner-backed groupBy over
     // (i, j) cells. Degree marginals (computed over the SAME capped
     // set, keeping Jaccard internally consistent) join back per cell.
@@ -645,7 +601,7 @@ object Graphs {
         |JOIN deg da ON da.item = p.i
         |JOIN deg db ON db.item = p.j
         |ORDER BY p.i, p.j""".stripMargin) { (s, d) =>
-      cooccurPairs(capItemsPerKey(userItems(s, d), "user_id", "item"))
+      cooccurPairs(SparseProduct.capItemsPerKey(userItems(s, d), "user_id", "item"))
         .select(col("i"), col("j"), col("n_both"), col("d_i"), col("d_j"),
           floor(col("n_both") * lit(1000000.0)
             / (col("d_i") + col("d_j") - col("n_both"))).cast("long").as("jac_q6"))
@@ -658,9 +614,9 @@ object Graphs {
     // with a deterministic (score DESC, item) rank. Every stage is keyed:
     // the similarity table comes from the q_bipartite_cooccur projection
     // (per-user distinct-degree capped at GREATEST(64, 4·⌊√|vocab|⌋) — see
-    // capItemsPerKey; history/scoring/anti-join all use the capped set),
-    // scoring is one (item-keyed)
-    // join + per-user aggregate, the rank window partitions by user.
+    // SparseProduct.capItemsPerKey; history/scoring/anti-join all use the
+    // capped set), scoring is one (item-keyed) join + per-user aggregate,
+    // the rank window partitions by user.
     QueryDef.sql(
       "q_item_cf_recs",
       s"""$cooccurPairsSql,
@@ -687,19 +643,13 @@ object Graphs {
         |  FROM filtered)
         |SELECT user_id, CAST(rk AS BIGINT) AS rk, item, score, n_neighbors
         |FROM top WHERE rk <= 3 ORDER BY user_id, rk""".stripMargin) { (s, d) =>
-      val ui = capItemsPerKey(userItems(s, d), "user_id", "item")
+      val ui = SparseProduct.capItemsPerKey(userItems(s, d), "user_id", "item")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val simh = cooccurPairs(ui)
         .select(col("i"), col("j"),
           floor(col("n_both") * lit(1000000.0)
             / (col("d_i") + col("d_j") - col("n_both"))).cast("long").as("w"))
-      // one explode instead of a union of two simh subtrees: the union's
-      // branches are not exchange-reused, so the pair join + degree joins
-      // ran twice (r15 profile); the explode evaluates simh once
-      val sim = simh.select(explode(array(
-          struct(col("i"), col("j"), col("w")),
-          struct(col("j").as("i"), col("i").as("j"), col("w")))).as("e"))
-        .select(col("e.i").as("i"), col("e.j").as("j"), col("e.w").as("w"))
+      val sim = SparseProduct.symmetric(simh, "i", "j", "i", "j", "w")
       val score = ui.join(sim, ui("item") === sim("i"))
         .groupBy(col("user_id"), col("j").as("ritem"))
         .agg(sum(col("w")).as("score"), count(lit(1)).as("n_neighbors"))

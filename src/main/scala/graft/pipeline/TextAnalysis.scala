@@ -20,7 +20,7 @@ object TextAnalysis {
   /** Doc pairs doc1 < doc2 sharing a rare gram (df ≤ 20), with `shared`
     * and each doc's rare-gram count n1, n2: the candidates of the n-gram
     * near-dup queries. */
-  private def rareGramPairs(s: org.apache.spark.sql.SparkSession, d: String) = {
+  private[pipeline] def rareGramPairs(s: org.apache.spark.sql.SparkSession, d: String) = {
     // the shared materialized distinct gram table feeds the df aggregate
     // and the semi-join probe side (at 100 TB this materialization is
     // mandatory, not an optimization)
@@ -35,14 +35,8 @@ object TextAnalysis {
     // rdg feeds the candidate self-join AND both size lookups — persist
     val rdg = dgAll.join(rareGrams, Seq("g"), "left_semi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = rdg.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = rdg.as("a")
-      .join(rdg.as("b"), col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
-      .agg(count(lit(1)).as("shared"))
-    inter
-      .join(sizes.select(col("doc_id").as("doc1"), col("n").as("n1")), Seq("doc1"))
-      .join(sizes.select(col("doc_id").as("doc2"), col("n").as("n2")), Seq("doc2"))
+    SparseProduct.product(rdg, Seq("g"), "doc_id",
+      SparseProduct.Names("doc1", "doc2", "shared"))
   }
 
   /** Oracle twin of [[rareGramPairs]]: CTEs up to `sizes` and `inter`. */

@@ -175,7 +175,8 @@ object TextPipeline {
   val LshBands = 4
   val LshRowsPerBand = 4
 
-  /** (doc_id, b, sig_key) band rows from a (doc_id, h0..h15) signature. */
+  /** (doc_id, b, sig_key) band rows from a (doc_id, h0..h15) signature:
+    * exactly one row per (doc, band). */
   def bandRows(sig: DataFrame, bands: Int = LshBands,
       rowsPerBand: Int = LshRowsPerBand): DataFrame = {
     require(bands >= 1 && rowsPerBand >= 1 && bands * rowsPerBand <= 16,
@@ -192,17 +193,16 @@ object TextPipeline {
   /** LSH candidate pairs: (doc1 < doc2, n_bands agreeing). The band table
     * is persisted once (Spark does not reuse exchanges across self-join
     * sides even under AQE) and the join key is (b, sig_key) — candidates
-    * only within equal full-band signatures, never an all-pairs scan. */
+    * only within equal full-band signatures, never an all-pairs scan.
+    * [[bandRows]] emits exactly one row per (doc, band), so two documents
+    * meet at most once per band and the pair count is the number of
+    * distinct agreeing bands. */
   def lshCandidatePairs(sig: DataFrame, bands: Int = LshBands,
       rowsPerBand: Int = LshRowsPerBand): DataFrame = {
     val bandTable = bandRows(sig, bands, rowsPerBand)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = bandTable.as("a")
-    val c = bandTable.as("c")
-    a.join(c, col("a.b") === col("c.b") && col("a.sig_key") === col("c.sig_key") &&
-        col("a.doc_id") < col("c.doc_id"))
-      .groupBy(col("a.doc_id").as("doc1"), col("c.doc_id").as("doc2"))
-      .agg(countDistinct(col("a.b")).as("n_bands"))
+    SparseProduct.pairs(bandTable, Seq("b", "sig_key"), "doc_id",
+      SparseProduct.Names("doc1", "doc2", "n_bands"))
   }
 
   /** Star-reduced edge set for CLUSTERING over the same LSH geometry:
@@ -674,27 +674,8 @@ object TextPipeline {
            |             JOIN sig b ON b.doc_id = e.doc2
            |ORDER BY e.jaccard_q6 DESC, e.doc1, e.doc2""".stripMargin
       }) { (s, d) =>
-      // the shared materialized DISTINCT (doc_id, g, hm) table — one
-      // shingle pass per run, served as parquet scans below (min is
-      // multiplicity-invariant so signatures are unchanged)
-      val d0 = distinctGrams(s, d)
-      // document frequency via groupBy (map-side combine), NOT a window:
-      // a window over partitionBy(g) has no partial aggregation, so every
-      // row of the hottest gram lands on one reducer — a straggler at
-      // 100 TB. The semi-join keeps only rare grams (df ≤ 20); AQE's
-      // skew-join splitting handles any residual hot key.
-      val rareGrams = d0.groupBy(col("g")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= 20).select(col("g"))
-      val dg = d0.select(col("doc_id"), col("g"))
-        .join(rareGrams, Seq("g"), "left_semi") // rare-gram candidate bound
-      val sizes = dg.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val inter = dg.as("a")
-        .join(dg.as("b"), col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
-        .agg(count(lit(1)).as("shared"))
-      val exact = inter
-        .join(sizes.select(col("doc_id").as("doc1"), col("n").as("n1")), Seq("doc1"))
-        .join(sizes.select(col("doc_id").as("doc2"), col("n").as("n2")), Seq("doc2"))
+      // the exact side is q_dedup_ngram_jaccard's rare-gram candidate set
+      val exact = TextAnalysis.rareGramPairs(s, d)
         .select(col("doc1"), col("doc2"),
           floor(col("shared") * lit(1000000.0) / (col("n1") + col("n2") - col("shared")))
             .cast("long").as("jaccard_q6"))

@@ -122,38 +122,6 @@ class GraphsSpec extends SparkSpec {
     assert(merged.toSeq == full.toSeq)
   }
 
-  test("capItemsPerKey bounds an adversarial power user") {
-    // vocab of 1000 items; a power user holding ALL of them plus 50
-    // normal users with 5 items each. cap = max(64, 4·⌊√1000⌋=124) = 124.
-    val power = (1L to 1000L).map(i => ("power", i))
-    val normal = for (u <- 1 to 50; i <- 1 to 5)
-      yield (s"u$u", (u * 13 + i * 7).toLong % 1000L + 1L)
-    val ui = (power ++ normal).toDF("user_id", "item").distinct()
-    val capped = Graphs.capItemsPerKey(ui, "user_id", "item")
-    val byUser = capped.groupBy("user_id").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(byUser("power") == 124L)          // truncated to the cap
-    assert(byUser.filter(_._1 != "power").values.forall(_ <= 5L)) // untouched
-    // the deterministic truncation keeps the SMALLEST item ids
-    assert(capped.filter(col("user_id") === "power")
-      .agg(max(col("item"))).collect().head.getLong(0) == 124L)
-    // pair fanout is now (124 choose 2), not (1000 choose 2)
-    val pairs = capped.as("a").join(capped.as("b"),
-      col("a.user_id") === col("b.user_id") && col("a.item") < col("b.item"))
-    val powerPairs = pairs.filter(col("a.user_id") === "power").count()
-    assert(powerPairs == 124L * 123L / 2L)
-  }
-
-  test("capItemsPerKey cap scales sublinearly with the vocabulary") {
-    // 3200 distinct items -> cap = max(64, 4·⌊√3200⌋=224) = 224
-    val ui = (1L to 3200L).map(i => ("u", i)).toDF("user_id", "item")
-    assert(Graphs.capItemsPerKey(ui, "user_id", "item").count() == 224L)
-    // quadruple the vocabulary -> the cap only doubles (√ law):
-    // 12800 items -> cap = 4·⌊√12800⌋ = 4·113 = 452
-    val ui4 = (1L to 12800L).map(i => ("u", i)).toDF("user_id", "item")
-    assert(Graphs.capItemsPerKey(ui4, "user_id", "item").count() == 452L)
-  }
-
   test("skewedEdges is deterministic with a genuine hot vertex") {
     val docs = Tables.documents(spark, sf())
     val e1 = Graphs.skewedEdges(docs).collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -167,29 +135,5 @@ class GraphsSpec extends SparkSpec {
     // and the in-degree tail is heavy: > 10x the median in-degree
     val inDeg = e1.groupBy(_._2).view.mapValues(_.length).values.toSeq.sorted
     assert(hubIn > 10L * inDeg(inDeg.size / 2))
-  }
-
-  test("capItemsPerKey equals the per-key model and is idempotent") {
-    val rnd = new scala.util.Random(4242)
-    val rows = (0 until 4000).map { _ =>
-      (s"u${rnd.nextInt(40)}", rnd.nextInt(900).toLong)
-    }.distinct
-    val ui = rows.toDF("user_id", "item")
-    val capped = Graphs.capItemsPerKey(ui, "user_id", "item")
-      .as[(String, Long)].collect().toSet
-    // model: per key keep the max(64, 4·⌊√nv⌋) smallest items
-    val nv = rows.map(_._2).distinct.size
-    val cap = math.max(64L, 4L * math.floor(math.sqrt(nv.toDouble)).toLong)
-    val model = rows.groupBy(_._1).toSeq.flatMap { case (u, rs) =>
-      rs.map(_._2).distinct.sorted.take(cap.toInt).map(u -> _)
-    }.toSet
-    assert(capped == model,
-      s"sizes spark=${capped.size} model=${model.size}")
-    assert(capped.subsetOf(rows.toSet))
-    // idempotence: capping a capped set changes nothing
-    val twice = Graphs.capItemsPerKey(
-      Graphs.capItemsPerKey(ui, "user_id", "item"), "user_id", "item")
-      .as[(String, Long)].collect().toSet
-    assert(twice == capped)
   }
 }
