@@ -1,5 +1,6 @@
 package graft.domain
 
+import graft.sources.Io
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -93,15 +94,15 @@ object BurstCatalog {
         col("burst_id_jpl").as("burst_id"),
         col("sensing_time").cast("date").as("date"),
         col("sensing_time")))
-    val rows = selected
+    // final small document assembly only (§7.5 risk 6): the rows are
+    // joined into one string on the driver, so they are ordered there too
+    val rows = Io.collectOrdered(selected
       .select(col("frame_id"),
         to_json(struct(
           col("burst_id_list"),
           transform(col("sensing_time_list"),
             t => date_format(t, "yyyy-MM-dd'T'HH:mm:ss")).as("sensing_time_list")))
-          .as("j"))
-      .orderBy(col("frame_id"))
-      .collect() // final small document assembly only (§7.5 risk 6)
+          .as("j")), "frame_id")
     val data = rows
       .map(r => s""""${r.getAs[Long]("frame_id")}": ${r.getAs[String]("j")}""")
       .mkString("{", ", ", "}")

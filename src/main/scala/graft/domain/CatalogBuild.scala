@@ -109,11 +109,13 @@ object CatalogBuild {
     *
     * The persisted triplets stay cached until [[BuildResult.unpersist]].
     * The frame assignment (per-track DP plus the global-id window) feeds
-    * both frames and frames_bursts and is computed for each: a persist
-    * saved 5 of a warm `create`'s 20 jobs, but alternating runs showed no
-    * time gain, and the cached relation's size statistics plan the
-    * frames_bursts join as a broadcast that writes one file per burst-map
-    * split, which adds a job to every `lookup` of the catalog. */
+    * both frames and frames_bursts and is computed once for each write;
+    * `Main.create` runs the two writes at once, so the two computations
+    * run side by side instead of one after the other. A persist of the
+    * assignment saved 5 of a warm `create`'s 20 jobs, but alternating runs
+    * showed no time gain, and the cached relation's size statistics plan
+    * the frames_bursts join as a broadcast that writes one file per
+    * burst-map split, which adds a job to every `lookup` of the catalog. */
   def build(burstIdMapRaw: DataFrame, landWkt: String,
       marginM: Double = 5000.0, snapM: Double = 30.0,
       polarOverrideWkt: Option[String] = None): BuildResult = {

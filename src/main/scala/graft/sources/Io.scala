@@ -4,7 +4,9 @@ import java.io.{ByteArrayOutputStream, FileInputStream, FileOutputStream}
 import java.nio.charset.StandardCharsets
 import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
 import org.apache.spark.sql.functions._
 
 /** Sources/sinks beyond plain parquet/CSV (SURVEY.md §2.1).
@@ -62,15 +64,29 @@ object Io {
     * "metadata": {...}}. `frames` needs (fid, epsg, is_land,
     * is_north_america, xmin, ymin, xmax, ymax, burst_ids). */
   def frameToBurstJson(frames: DataFrame, metadata: Map[String, String]): String = {
-    val rows = frames.select(col("fid"),
+    // final small document assembly only: the rows are joined into one
+    // string on the driver anyway, so they are ordered there too
+    val rows = collectOrdered(frames.select(col("fid"),
         to_json(struct(col("epsg"), col("is_land"), col("is_north_america"),
           col("xmin"), col("ymin"), col("xmax"), col("ymax"),
-          col("burst_ids"))).as("j"))
-      .orderBy(col("fid"))
-      .collect() // final small document assembly only
+          col("burst_ids"))).as("j")), "fid")
     val data = rows.map(r => s"${jsonEscape(String.valueOf(r.getAs[Any]("fid")))}: ${r.getAs[String]("j")}")
       .mkString("{", ", ", "}")
     s"""{"data": $data, "metadata": ${metaJson(metadata)}}"""
+  }
+
+  /** `df`'s rows in the order `df.orderBy(col(key))` gives them: Spark's
+    * ascending order for the key's type, nulls first (so strings in UTF-8
+    * byte order, which differs from `String.compareTo` for supplementary
+    * characters). For a document's rows, which are collected and joined
+    * into one string on the driver anyway: sorting them there saves the
+    * distributed sort's range-partition sample job and its shuffle. */
+  private[graft] def collectOrdered(df: DataFrame, key: String): Array[Row] = {
+    val i = df.schema.fieldIndex(key)
+    val dt = df.schema(i).dataType
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    df.collect().map(r => (InternalRow(toCatalyst(r.get(i))), r))
+      .sortBy(_._1)(InterpretedOrdering.forSchema(Seq(dt))).map(_._2)
   }
 
   private def metaJson(m: Map[String, String]): String =

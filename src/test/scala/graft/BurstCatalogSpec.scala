@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.domain.BurstCatalog
 import org.apache.spark.sql.functions._
 
@@ -14,6 +17,10 @@ class BurstCatalogSpec extends SparkSpec {
   private def granule(track: Int, esa: Int, iw: Int, ts: String, pol: String) =
     f"OPERA_L2_CSLC-S1_T$track%03d-$esa%06d-IW$iw%d_${ts}Z_20240101T000000Z_S1A_${pol}_v1.0"
 
+  private val dates = Seq("20240101T060000" -> "2024-01-01 06:00:00",
+    "20240113T060000" -> "2024-01-13 06:00:00",
+    "20240125T060000" -> "2024-01-25 06:00:00")
+
   test("make-burst-catalog end-to-end") {
     val tmp = Files.createTempDirectory("graft-cat").toString
     val csv = new StringBuilder("Granule ID,Temporal Time,Revision Time,revision-id\n")
@@ -21,9 +28,6 @@ class BurstCatalogSpec extends SparkSpec {
     // date 3 → consistent set {1,2} keeps dates 1,2
     // granule timestamps use the compact 15-char SAFE form (yyyyMMddTHHmmss)
     // so the fixed polarization slice at chars 72-73 lines up
-    val dates = Seq("20240101T060000" -> "2024-01-01 06:00:00",
-      "20240113T060000" -> "2024-01-13 06:00:00",
-      "20240125T060000" -> "2024-01-25 06:00:00")
     for (((gts, ts), di) <- dates.zipWithIndex; esa <- 1 to 2
          if !(esa == 2 && di == 2)) {
       csv ++= s"${granule(1, esa, 1, gts, "VV")},$ts,$ts,1\n"
@@ -71,5 +75,37 @@ class BurstCatalogSpec extends SparkSpec {
       .as[(Long, Long, Long, Long)].head()
     // 5 (date,burst) combos × (VV+VH) + 1 duplicate VV + 1 broken = 12 rows
     assert(q == ((12L, 11L, 6L, 1L)))
+  }
+
+  test("a multi-frame document lists its frames in ascending frame id") {
+    val tmp = Files.createTempDirectory("graft-cat-order").toString
+    val csv = new StringBuilder("Granule ID,Temporal Time,Revision Time,revision-id\n")
+    for (esa <- 1 to 12; (gts, ts) <- dates)
+      csv ++= s"${granule(1, esa, 1, gts, "VV")},$ts,$ts,1\n"
+    Files.writeString(Paths.get(s"$tmp/survey.csv"), csv.toString)
+    val burstIdMap = (1 to 12).map(e => (e, f"t001_$e%06d_iw1")).toDF("OGC_FID", "burst_id_jpl")
+    // two bursts per frame; as strings the ids would sort 1, 10, 100, 2, 20, 3
+    val fids = Seq(100L, 3L, 20L, 1L, 10L, 2L)
+    val framesBursts = fids.zipWithIndex
+      .flatMap { case (f, i) => Seq((f, 2 * i + 1), (f, 2 * i + 2)) }
+      .toDF("frame_fid", "burst_ogc_fid")
+    def make() = BurstCatalog.makeBurstCatalog(spark, s"$tmp/survey.csv", burstIdMap,
+      framesBursts, None, Map("version" -> "test"))
+    var doc = ""
+    val jobs = jobsOf { doc = make() }
+    // 7 jobs; a distributed sort before the collect adds its sample job
+    // and its shuffle (9)
+    assert(jobs <= 7, s"make-burst-catalog launched $jobs jobs")
+    // AQE coalesces this small input into one partition, which reaches the
+    // collect already in key order; uncoalesced, the four shuffle
+    // partitions arrive in hash order, and only the driver's sort orders them
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    val spread = try make() finally spark.conf.unset(coalesce)
+    assert(spread == doc)
+    val data = new ObjectMapper().readTree(doc).get("data")
+    assert(data.fieldNames().asScala.toSeq == fids.sorted.map(_.toString))
+    assert(data.get("20").get("burst_id_list").elements().asScala.map(_.asText).toSeq ==
+      Seq("t001_000005_iw1", "t001_000006_iw1"))
   }
 }

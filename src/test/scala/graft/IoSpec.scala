@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 
 import graft.sources.Io
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 class IoSpec extends SparkSpec {
   import spark.implicits._
@@ -28,6 +30,49 @@ class IoSpec extends SparkSpec {
     // parse back via Spark to prove it is valid JSON
     val parsed = spark.read.json(Seq(doc).toDS())
     assert(parsed.select("data.1.epsg").as[Long].head() == 32631L)
+  }
+
+  /** The frame-to-burst document as a distributed `orderBy(col("fid"))`
+    * assembles it: the order the driver-side sort must reproduce. */
+  private def sortedInSpark(frames: DataFrame, meta: Map[String, String]): String = {
+    val data = frames.select(col("fid"), to_json(struct(col("epsg"), col("is_land"),
+        col("is_north_america"), col("xmin"), col("ymin"), col("xmax"), col("ymax"),
+        col("burst_ids"))).as("j"))
+      .orderBy(col("fid")).collect()
+      .map(r => s"${Io.jsonEscape(String.valueOf(r.get(0)))}: ${r.getString(1)}")
+      .mkString("{", ", ", "}")
+    val m = meta.toSeq.sorted.map { case (k, v) => s"${Io.jsonEscape(k)}: ${Io.jsonEscape(v)}" }
+    s"""{"data": $data, "metadata": ${m.mkString("{", ", ", "}")}}"""
+  }
+
+  /** `fids` as frames spread over three parquet files, read back the way
+    * the catalog tables are. */
+  private def framesOf(fids: DataFrame): DataFrame = {
+    val path = Files.createTempDirectory("graft-io-order").toString + "/frames"
+    fids.select(col("fid"), (length(col("fid").cast("string")) + 32600).as("epsg"),
+        lit(false).as("is_land"), lit(true).as("is_north_america"),
+        lit(0L).as("xmin"), lit(0L).as("ymin"), lit(1L).as("xmax"), lit(1L).as("ymax"),
+        array(concat(lit("t001_"), col("fid").cast("string"))).as("burst_ids"))
+      .repartition(3).write.parquet(path)
+    Tables.read(spark, path)
+  }
+
+  test("the document orders int and string fids as orderBy does, in one job") {
+    val meta = Map("version" -> "0.1.2")
+    val ints = framesOf(Seq(10, 2, 33, 1, 100, -5, 7, 21).toDF("fid"))
+    // UTF-8 byte order puts U+FF21 before U+1F600; String.compareTo (UTF-16
+    // code units) puts the surrogate pair first
+    val strs = Seq("Ａ", "😀", "b", "B", "10", "9", "é", "a😀", "aＡ").toDF("fid")
+    assert(strs.as[String].collect().sorted.toSeq !=
+      strs.orderBy(col("fid")).as[String].collect().toSeq)
+    val strings = framesOf(strs)
+    Seq(ints, strings).foreach { frames =>
+      var doc = ""
+      val jobs = jobsOf { doc = Io.frameToBurstJson(frames, meta) }
+      assert(doc == sortedInSpark(frames, meta))
+      // the scan alone: a distributed sort adds its sample job and shuffle
+      assert(jobs == 1, s"the document launched $jobs jobs")
+    }
   }
 
   test("JSON documents escape quotes/backslashes/control chars in ids and metadata") {

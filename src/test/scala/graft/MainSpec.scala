@@ -5,7 +5,9 @@ import graft.functions.GeoFunctions
 import graft.plans.SpatialExpressions
 import graft.sources.Io
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 
 /** End-to-end CLI test (cli.py:28-44 surface): create a catalog from a
@@ -162,6 +164,69 @@ class MainSpec extends SparkSpec {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     Main.run(spark, List("create", burstMap, land, s"$tmp/catalog"))
     assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
+  test("create writes its three tables at once") {
+    val (tmp, burstMap, land) = createInputs("graft-cli-parallel")
+    // start and end of every SQL execution while `create` runs
+    val spans = new java.util.concurrent.ConcurrentHashMap[Long, (Long, Long)]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => spans.put(s.executionId, (s.time, Long.MaxValue))
+        case f: SparkListenerSQLExecutionEnd =>
+          spans.computeIfPresent(f.executionId, (_, v) => (v._1, f.time))
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val executions = try jobExecutions(
+        Main.run(spark, List("create", burstMap, land, s"$tmp/catalog"))).flatten.distinct
+    finally spark.sparkContext.removeSparkListener(listener)
+    // the writes' jobs carry the job group `jobExecutions` sets only if
+    // the write threads inherit the caller's local properties.
+    // One execution per table write, all three begun before a second one
+    // ended; one after another, the last would begin only after the other
+    // two had ended (the burst map's write, one small job, may end before
+    // the frames write is planned)
+    val writes = executions.map(spans.get)
+    assert(writes.size == 3, s"jobs of ${writes.size} executions")
+    val (starts, ends) = writes.unzip
+    assert(starts.max < ends.sorted.apply(1), s"write spans $writes")
+  }
+
+  test("repeated creates write the same part files per table") {
+    // lookup's job count follows frames_bursts's file count, which the
+    // join plan sets; the concurrent writes must not move it
+    val (tmp, burstMap, land) = createInputs("graft-cli-files")
+    val counts = Seq("first", "second").map { out =>
+      Main.run(spark, List("create", burstMap, land, s"$tmp/$out"))
+      Seq("frames", "frames_bursts", "burst_id_map").map(t =>
+        t -> new java.io.File(s"$tmp/$out/$t").list().count(_.startsWith("part-"))).toMap
+    }
+    assert(counts == Seq.fill(2)(Map("frames" -> 1, "frames_bursts" -> 1, "burst_id_map" -> 4)),
+      s"part files per create: $counts")
+  }
+
+  test("inParallel waits for every task, then rethrows the first failure") {
+    val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    val finished = new java.util.concurrent.atomic.AtomicInteger()
+    def task(ms: Long, failure: Option[String]): () => Unit = () => {
+      threads.add(Thread.currentThread)
+      Thread.sleep(ms)
+      failure.foreach(m => throw new IllegalStateException(m))
+      finished.incrementAndGet()
+    }
+    // one task fails early: the other two still run to their end
+    val one = intercept[IllegalStateException](
+      Main.inParallel(Seq(task(300, None), task(10, Some("write failed")), task(300, None))))
+    assert(one.getMessage == "write failed" && one.getSuppressed.isEmpty)
+    assert(finished.get == 2 && threads.size == 3)
+    // two fail: the first in task order surfaces although the later failed sooner
+    val two = intercept[IllegalStateException](
+      Main.inParallel(Seq(task(200, Some("first")), task(10, Some("second")), task(50, None))))
+    assert(two.getMessage == "first" && two.getSuppressed.map(_.getMessage).toSeq == Seq("second"))
+    assert(finished.get == 3 && threads.size == 6)
+    assert(threads.stream.allMatch(!_.isAlive), "a task thread outlived the call")
   }
 
   test("a repeated catalog build and serve compiles no generated class") {

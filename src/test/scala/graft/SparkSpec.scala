@@ -1,6 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -15,14 +17,19 @@ trait SparkSpec extends AnyFunSuite {
   /** Jobs that `body` launches: a listener counts the job starts tagged
     * with a job group set around the call (broadcast jobs inherit it), and
     * the listener bus is drained before the count is read. */
-  def jobsOf(body: => Unit): Int = {
+  def jobsOf(body: => Unit): Int = jobExecutions(body).size
+
+  /** The root SQL execution id of each job that `body` launches (the jobs
+    * [[jobsOf]] counts), in job-id order. */
+  def jobExecutions(body: => Unit): Seq[Option[Long]] = {
     val sc = spark.sparkContext
     val group = s"job-budget-${java.util.UUID.randomUUID}"
-    val jobs = new AtomicInteger()
+    val jobs = new ConcurrentHashMap[Int, Option[Long]]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
+          jobs.put(e.jobId, Option(e.properties.getProperty("spark.sql.execution.root.id"))
+            .orElse(Option(e.properties.getProperty("spark.sql.execution.id"))).map(_.toLong))
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "job budget")
@@ -32,7 +39,7 @@ trait SparkSpec extends AnyFunSuite {
       ListenerBusDrain(sc)
       sc.removeSparkListener(listener)
     }
-    jobs.get
+    jobs.asScala.toSeq.sortBy(_._1).map(_._2)
   }
 }
 

@@ -11,11 +11,13 @@ Usage:
 
 Normalization drops what changes between JVMs or edits but not the plan:
 expression and plan ids, checkpoint RDD ids and call sites, lambda class
-names, object identity hashes and random temp-directory names. It also
-puts the groups of a distinct aggregate's `Expand` in one order. Spark
-numbers those groups by iterating a hash map keyed on expressions that
-carry expression ids, so the same query can list them in another order in
-another run (q_dedup_exact, q_new_item_share). The groups are sorted by
+names, object identity hashes, random temp-directory names and the numbers
+of lambda variables (`lambda x_77`: Spark takes them from a JVM-wide
+counter, so they depend on how many queries the dump built before this
+one). It also puts the groups of a distinct aggregate's `Expand` in one
+order. Spark numbers those groups by iterating a hash map keyed on
+expressions that carry expression ids, so the same query can list them in
+another order in another run (q_dedup_exact, q_new_item_share). The groups are sorted by
 their output columns' names, the `gid` values renumbered to match, and the
 columns reordered everywhere the Expand's output list appears.
 """
@@ -30,6 +32,7 @@ RULES = [
     (re.compile(r"\$\$Lambda\$[0-9]+/0x[0-9a-f]+@[0-9a-f]+"), "$$Lambda"),
     (re.compile(r"([A-Za-z]\$?[A-Za-z]+)@[0-9a-f]+"), r"\1@"),
     (re.compile(r"[a-z-]+[0-9]{6,}"), "TMP"),
+    (re.compile(r"\blambda ([A-Za-z][A-Za-z0-9]*)_[0-9]+"), r"lambda \1_"),
 ]
 GID = re.compile(r"\(gid = ([0-9]+)\)")
 

@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Meta-test: tools/plan_diff.py must call two runs of one distinct
 aggregate identical although Spark ordered their Expand groups
-differently, and must still report a changed plan. Dev tool only.
+differently, and two dumps of one query identical although Spark numbered
+their lambda variables differently; it must still report a changed plan.
+Dev tool only.
 
 Usage: python3 tools/test_plan_diff.py
 """
@@ -27,6 +29,14 @@ Keys [4]: [text#14671, lang#14672, lower(substring(text, 1, 40))#14673, gid#1467
 Functions [4]: [partial_first(count(1)#14674L, true) FILTER (WHERE (gid#14670 = 0)), partial_count(text#14671) FILTER (WHERE (gid#14670 = 1)), partial_count(lower(substring(text, 1, 40))#14673) FILTER (WHERE (gid#14670 = 3)), partial_count(lang#14672) FILTER (WHERE (gid#14670 = 2))]
 """
 
+# q_knn_graph's lambda, from a dump of all queries and from a dump of a few:
+# Spark numbers lambda variables from a JVM-wide counter
+LAMBDA_FULL = """(7) Project
+Output [2]: [id#812L, transform(nbrs#790, lambdafunction(lambda x_77#815.dst, lambda x_77#815, false)) AS nbrs#813]
+"""
+LAMBDA_SUBSET = LAMBDA_FULL.replace("x_77#815", "x_3#98").replace("#812L", "#95L") \
+    .replace("#790", "#91").replace("#813", "#96")
+
 
 def diff(a, b):
     with tempfile.TemporaryDirectory() as tmp:
@@ -46,6 +56,11 @@ def main():
                             "partial_count(text#14671) FILTER (WHERE (gid#14670 = 2))")
     rc, out = diff(RUN_A, changed)
     assert rc == 1 and "plan changed: q.txt" in out, f"changed plan reported identical\n{out}"
+    rc, out = diff(LAMBDA_FULL, LAMBDA_SUBSET)
+    assert rc == 0 and "identical 1/1" in out, f"renumbered lambda reported as a change\n{out}"
+    # another field under the same lambda is a real change
+    rc, out = diff(LAMBDA_FULL, LAMBDA_SUBSET.replace("x_3#98.dst", "x_3#98.src"))
+    assert rc == 1 and "plan changed: q.txt" in out, f"changed lambda reported identical\n{out}"
     print("test_plan_diff: OK")
 
 
