@@ -15,9 +15,8 @@ import org.apache.spark.sql.functions._
   *   fetch-granules <bursts.parquet> <frameToBurst.json.zip> <fids> <start> <end>
   *
   * `create` persists the catalog as three parquet tables under <outDir>
-  * (frames / frames_bursts / burst_id_map); frames additionally carry the
-  * 4326-degree bbox columns (bb_*) so `intersect`'s coarse stage is plain
-  * int/double column predicates that parquet row-group stats can skip on.
+  * (frames / frames_bursts / burst_id_map), each as `CatalogBuild.build`
+  * returns it; the optional North-America file holds one WKT per line.
   * The three writes run at once ([[inParallel]]): a warm build is a chain
   * of small jobs whose length the driver's gaps between jobs set, not
   * executor work, and the tables depend on nothing but the built plans.
@@ -92,46 +91,20 @@ object Main {
     case _ => usage()
   }
 
-  /** §3.1 build → persisted catalog. The NA flag is a spatial-join flag
-    * exactly like the land flag (build_frame_db.py:653-655 loads a
-    * multi-shape North-America boundary); the boundary file holds one WKT
-    * per line and routes through the broadcast STRtree join — the same J7
-    * path the land flag uses — so a many-polygon coastline probes an index
-    * instead of paying shapes×frames exact intersect calls. Absent a
-    * North-America file the flag is false (it never gates the build). */
+  /** §3.1 build → persisted catalog. */
   private def create(spark: SparkSession, burstMap: String, landWktFile: String,
       outDir: String, naWktFile: Option[String]): Unit = {
-    def readWkt(p: String): String =
-      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-    val r = CatalogBuild.build(Tables.read(spark, burstMap), readWkt(landWktFile))
-    val framesNa = naWktFile match {
-      case Some(p) =>
-        val shapes = readWkt(p).split('\n').map(_.trim).filter(_.nonEmpty)
-          .zipWithIndex.map { case (w, i) => (i.toLong, w) }.toSeq
-        val naFids = graft.operators.SpatialJoin.broadcastSpatialJoin(
-            r.frames.select(col("fid").as("id"), col("geom").as("wkt")), shapes)
-          .select(col("id").as("fid")).distinct()
-          .withColumn("is_north_america", lit(true))
-        // frame set is ≤46k rows and the hit set smaller — broadcast the flag
-        r.frames.join(broadcast(naFids), Seq("fid"), "left")
-          .withColumn("is_north_america",
-            coalesce(col("is_north_america"), lit(false)))
-      case None => r.frames.withColumn("is_north_america", lit(false))
-    }
-    try {
-      val frames = framesNa
-        .withColumn("e", GeoFunctions.stEnvelope(col("geom")))
-        .withColumn("bb_xmin", col("e._1")).withColumn("bb_ymin", col("e._2"))
-        .withColumn("bb_xmax", col("e._3")).withColumn("bb_ymax", col("e._4"))
-        .drop("e")
-      // the three tables are independent once built: write them at once;
-      // the triplets are unpersisted only after every write has returned
-      inParallel(Seq(
-        () => frames.write.mode("overwrite").parquet(s"$outDir/frames"),
+    def readWkt(p: String): String = java.nio.file.Files.readString(java.nio.file.Paths.get(p)).trim
+    val naWkts = naWktFile.toSeq.flatMap(
+      readWkt(_).split('\n').map(_.trim).filter(_.nonEmpty))
+    val r = CatalogBuild.build(Tables.read(spark, burstMap), readWkt(landWktFile), naWkts)
+    // the three tables are independent once built: write them at once;
+    // the triplets are unpersisted only after every write has returned
+    try inParallel(Seq(
+        () => r.frames.write.mode("overwrite").parquet(s"$outDir/frames"),
         () => r.framesBursts.write.mode("overwrite").parquet(s"$outDir/frames_bursts"),
         () => r.burstIdMap.write.mode("overwrite").parquet(s"$outDir/burst_id_map")))
-    } finally r.unpersist()
+    finally r.unpersist()
   }
 
   /** Runs `tasks` at once, one thread each, and returns once every thread

@@ -106,8 +106,6 @@ object BurstCatalog {
     val data = rows
       .map(r => s""""${r.getAs[Long]("frame_id")}": ${r.getAs[String]("j")}""")
       .mkString("{", ", ", "}")
-    val meta = metadata.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k": "$v"""" }.mkString("{", ", ", "}")
-    s"""{"metadata": $meta, "data": $data}"""
+    s"""{"metadata": ${Io.metaJson(metadata)}, "data": $data}"""
   }
 }

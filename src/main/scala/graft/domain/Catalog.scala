@@ -64,7 +64,7 @@ object Catalog {
       .filter(col("bb_xmin") <= qxmax && col("bb_xmax") >= qxmin &&
         col("bb_ymin") <= qymax && col("bb_ymax") >= qymin) // coarse: data-skips
       // exact refine via the native expression: the literal query geometry
-      // is parsed+prepared once per executor (plans/SpatialExpressions)
+      // is parsed+prepared once per task (plans/SpatialExpressions)
       .filter(graft.plans.SpatialExpressions.stIntersectsNative(col("geom"), queryWkt))
   }
 

@@ -1,7 +1,8 @@
 package graft.domain
 
 import graft.functions.GeoFunctions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.plans.SpatialExpressions
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,17 +11,21 @@ import org.apache.spark.sql.functions._
   * hops collapse into a single Spark plan.
   *
   * Stages: jpl-id derivation → triplet dissolve (geometry-union agg) → land
-  * flag (spatial predicate vs a broadcast land geometry) → per-track DP
-  * frame optimization (flatMapGroups) → frame assembly (union + majority
-  * track + first orbit_pass) → EPSG assignment (dateline-aware centroid) →
-  * UTM bbox snap → minimal/denormalized projections.
+  * flag → per-track DP frame optimization (flatMapGroups) → frame assembly
+  * (union + majority track + first orbit_pass) → EPSG assignment
+  * (dateline-aware centroid) → UTM bbox snap, North-America flag, degree
+  * bbox → minimal/denormalized projections. The three shape flags (land,
+  * North America, polar override) are one predicate, [[intersectsShape]].
   *
   * Scale: everything keys on burst_id/track/frame — the only shuffles are
-  * the dissolve groupBy, the per-track solve, and the frame groupBy; land
-  * geometry is broadcast (small polygon side, J7); nothing collects to the
-  * driver.
+  * the dissolve groupBy, the per-track solve, and the frame groupBy; each
+  * shape is a WKT literal in the plan; nothing collects to the driver.
   */
 object CatalogBuild {
+
+  /** UTM bbox margin and snap grid in metres (build_frame_db.py:409-451). */
+  private val BboxMarginM = 5000.0
+  private val BboxSnapM = 30.0
 
   /** burst_id_jpl = t{track:03d}_{esa_id:06d}_{iw} (build_frame_db.py:37-47,
     * D1 — built-in format_string, no UDF). */
@@ -45,18 +50,16 @@ object CatalogBuild {
         array_join(array_sort(array_distinct(collect_list(col("burst_id_jpl")))), ",")
           .as("jpl_ids"))
 
-  /** Land flag (J7): exact intersects against a broadcast land WKT. At the
-    * reference's scale the land polygon side is a few MB → literal/broadcast;
-    * the bbox prefilter keeps the JTS predicate off most rows. */
-  def withLandFlag(triplets: DataFrame, landWkt: String): DataFrame = {
-    val env = GeoFunctions.parseWkt(landWkt).getEnvelopeInternal
-    val pre = triplets.withColumn("e", GeoFunctions.stEnvelope(col("geom")))
-    pre.withColumn("is_land",
-        col("e._1") <= env.getMaxX && col("e._3") >= env.getMinX &&
-          col("e._2") <= env.getMaxY && col("e._4") >= env.getMinY &&
-          GeoFunctions.stIntersects(col("geom"), lit(landWkt)))
-      .drop("e")
-  }
+  /** `geom` intersects `wkt` (one shape, or a `GEOMETRYCOLLECTION` of
+    * several: any member); a null geometry is false. The shape is prepared
+    * once per task, and a prepared geometry tests envelopes first. */
+  private def intersectsShape(geom: Column, wkt: String): Column =
+    coalesce(SpatialExpressions.stIntersectsNative(geom, wkt), lit(false))
+
+  /** Land flag (J7). The reference's land polygon is a few MB and spans
+    * the globe: no envelope test rules a row out, the prepared index does. */
+  def withLandFlag(triplets: DataFrame, landWkt: String): DataFrame =
+    triplets.withColumn("is_land", intersectsShape(col("geom"), landWkt))
 
   /** Per-track DP frame optimization (D2) → (track, frame-in-track, burst
     * id span, is_land). Sequential per key → flatMapGroups. */
@@ -99,13 +102,19 @@ object CatalogBuild {
   }
 
   /** Full build: burst_id_map (with geom WKT) + land WKT → frames +
-    * frames_bursts + enriched burst map (§3.1 steps 2-7).
+    * frames_bursts + enriched burst map (§3.1 steps 2-7), as `create`
+    * writes them; frames end with `is_north_america` and the degree bbox
+    * `bb_*` that `Catalog.intersect`'s coarse stage (and parquet row-group
+    * stats) filter on.
+    *
+    * `naWkts`: the North-America boundary, one WKT per shape
+    * (build_frame_db.py:653-655); a frame is `is_north_america` when it
+    * intersects any of them, and with none the flag is false.
     *
     * `polarOverrideWkt`: the reference forces every frame intersecting the
     * Greenland shape to EPSG:3413 regardless of its centroid latitude
     * (build_frame_db.py:251-257). The shape itself is a downloaded
-    * artifact; pass it here when available — the override is the same
-    * bbox-prefilter + exact-intersects plan as the land flag.
+    * artifact; pass it here when available.
     *
     * The persisted triplets stay cached until [[BuildResult.unpersist]].
     * The frame assignment (per-track DP plus the global-id window) feeds
@@ -116,8 +125,7 @@ object CatalogBuild {
     * showed no time gain, and the cached relation's size statistics plan
     * the frames_bursts join as a broadcast that writes one file per
     * burst-map split, which adds a job to every `lookup` of the catalog. */
-  def build(burstIdMapRaw: DataFrame, landWkt: String,
-      marginM: Double = 5000.0, snapM: Double = 30.0,
+  def build(burstIdMapRaw: DataFrame, landWkt: String, naWkts: Seq[String] = Nil,
       polarOverrideWkt: Option[String] = None): BuildResult = {
     val bursts = withJplId(burstIdMapRaw)
     // triplets feed the DP solver AND frame assembly — materialize once
@@ -155,20 +163,12 @@ object CatalogBuild {
       .withColumn("c", GeoFunctions.stCentroidDateline(col("geom")))
       .withColumn("geom", GeoFunctions.stDatelineSplit(col("geom")))
       .withColumn("epsg", GeoFunctions.utmEpsg(col("c._1"), col("c._2")))
-    // polar-shape override (build_frame_db.py:251-257): bbox prefilter
-    // keeps the exact JTS predicate off frames nowhere near the shape
-    val withEpsg = polarOverrideWkt match {
-      case None => withEpsg0
-      case Some(wkt) =>
-        val env = GeoFunctions.parseWkt(wkt).getEnvelopeInternal
-        withEpsg0
-          .withColumn("e", GeoFunctions.stEnvelope(col("geom")))
-          .withColumn("epsg",
-            when(col("e._1") <= env.getMaxX && col("e._3") >= env.getMinX &&
-                col("e._2") <= env.getMaxY && col("e._4") >= env.getMinY &&
-                GeoFunctions.stIntersects(col("geom"), lit(wkt)), lit(3413))
-              .otherwise(col("epsg")))
-          .drop("e")
+    // polar-shape override (build_frame_db.py:251-257)
+    val withEpsg = polarOverrideWkt.fold(withEpsg0)(wkt => withEpsg0.withColumn("epsg",
+      when(intersectsShape(col("geom"), wkt), lit(3413)).otherwise(col("epsg"))))
+    val isNorthAmerica = naWkts match {
+      case Nil => lit(false)
+      case shapes => intersectsShape(col("geom"), shapes.mkString("GEOMETRYCOLLECTION (", ", ", ")"))
     }
 
     // UTM bbox, snapped (build_frame_db.py:409-451): project → envelope →
@@ -176,14 +176,18 @@ object CatalogBuild {
     val frames = withEpsg
       .withColumn("utm", GeoFunctions.stEnvelope(
         GeoFunctions.stProject(col("geom"), col("epsg"))))
+      .withColumn("bb", GeoFunctions.stEnvelope(col("geom")))
       .select(
         col("frame_fid").as("fid"), col("epsg"), col("is_land"),
         col("relative_orbit_number"), col("orbit_pass"), col("n_bursts"),
         col("geom"),
-        GeoFunctions.snapLo(col("utm._1"), marginM, snapM).as("xmin"),
-        GeoFunctions.snapLo(col("utm._2"), marginM, snapM).as("ymin"),
-        GeoFunctions.snapHi(col("utm._3"), marginM, snapM).as("xmax"),
-        GeoFunctions.snapHi(col("utm._4"), marginM, snapM).as("ymax"))
+        GeoFunctions.snapLo(col("utm._1"), BboxMarginM, BboxSnapM).as("xmin"),
+        GeoFunctions.snapLo(col("utm._2"), BboxMarginM, BboxSnapM).as("ymin"),
+        GeoFunctions.snapHi(col("utm._3"), BboxMarginM, BboxSnapM).as("xmax"),
+        GeoFunctions.snapHi(col("utm._4"), BboxMarginM, BboxSnapM).as("ymax"),
+        isNorthAmerica.as("is_north_america"),
+        col("bb._1").as("bb_xmin"), col("bb._2").as("bb_ymin"),
+        col("bb._3").as("bb_xmax"), col("bb._4").as("bb_ymax"))
 
     BuildResult(frames, fb, bursts)(triplets)
   }

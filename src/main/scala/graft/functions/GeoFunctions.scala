@@ -58,8 +58,8 @@ object GeoFunctions {
     * EPSG:3031). The reference additionally forces every frame intersecting
     * the Greenland shape to 3413 (build_frame_db.py:251-257); that shape is
     * a downloaded artifact unavailable offline — documented gap in
-    * COVERAGE.md (the polygon override is expressible via
-    * SpatialJoin.broadcastSpatialJoin when the shape is provided).
+    * COVERAGE.md (`CatalogBuild.build` applies the override when the shape
+    * is passed as `polarOverrideWkt`).
     * The reference leaves lat == 75 / lat == -60 unassigned (epsg 0);
     * we make the function total by giving the exact boundary to UTM. */
   def utmEpsg(lon: Column, lat: Column): Column =
@@ -147,6 +147,8 @@ object GeoFunctions {
   // ------------------------------------------------------------------
   // JTS UDFs (the exact-refine stage; never the prefilter)
 
+  /** Unprepared intersects: the reference that specs and perfbench compare
+    * the engine's native `plans.StIntersectsExpr` against. */
   val stIntersects = udf((a: String, b: String) =>
     if (a == null || b == null) false else parseWkt(a).intersects(parseWkt(b)))
 

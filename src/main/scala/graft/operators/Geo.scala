@@ -627,7 +627,7 @@ object Geo {
     // boundary-inclusive and no %.1f-formatted endpoint lands ON a
     // non-integer boundary) so the oracle derives land0 = (q/27 ≤ 5 AND
     // q%27 BETWEEN 6 AND 18) arithmetically — a drift anywhere in the
-    // WKT→union→envelope-prefilter→intersects path breaks the hash. The
+    // WKT→union→prepared-intersects path breaks the hash. The
     // smoothing + per-run DP CTEs are the q_frame_dp machinery keyed by
     // track; n_subswath_rows cross-checks the frames_bursts expansion
     // join (3 subswath rows per burst).

@@ -89,7 +89,8 @@ object Io {
       .sortBy(_._1)(InterpretedOrdering.forSchema(Seq(dt))).map(_._2)
   }
 
-  private def metaJson(m: Map[String, String]): String =
+  /** A document's metadata object: keys in order, keys and values escaped. */
+  private[graft] def metaJson(m: Map[String, String]): String =
     m.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${jsonEscape(k)}: ${jsonEscape(v)}" }.mkString("{", ", ", "}")
 }

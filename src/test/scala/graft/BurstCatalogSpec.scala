@@ -108,4 +108,25 @@ class BurstCatalogSpec extends SparkSpec {
     assert(data.get("20").get("burst_id_list").elements().asScala.map(_.asText).toSeq ==
       Seq("t001_000005_iw1", "t001_000006_iw1"))
   }
+
+  test("the document's metadata is escaped JSON") {
+    val tmp = Files.createTempDirectory("graft-cat-meta").toString
+    val csv = new StringBuilder("Granule ID,Temporal Time,Revision Time,revision-id\n")
+    for (esa <- 1 to 2; (gts, ts) <- dates)
+      csv ++= s"${granule(1, esa, 1, gts, "VV")},$ts,$ts,1\n"
+    Files.writeString(Paths.get(s"$tmp/survey.csv"), csv.toString)
+    val burstIdMap = Seq((1, "t001_000001_iw1"), (2, "t001_000002_iw1"))
+      .toDF("OGC_FID", "burst_id_jpl")
+    val framesBursts = Seq((1L, 1), (1L, 2)).toDF("frame_fid", "burst_ogc_fid")
+    def make(meta: Map[String, String]) = BurstCatalog.makeBurstCatalog(spark,
+      s"$tmp/survey.csv", burstIdMap, framesBursts, None, meta)
+    // a quote and a backslash: written raw, either breaks the document
+    val quoted = "a\"b\\c"
+    val meta = new ObjectMapper().readTree(make(Map("version" -> quoted, "k\"" -> "v")))
+      .get("metadata")
+    assert(meta.get("version").asText == quoted && meta.get("k\"").asText == "v")
+    // plain metadata keeps its bytes
+    assert(make(Map("version" -> "perfbench"))
+      .startsWith("""{"metadata": {"version": "perfbench"}, "data": {"1": """))
+  }
 }

@@ -106,20 +106,37 @@ class CatalogBuildSpec extends SparkSpec {
   test("lookup and JSON documents work off the built catalog") {
     val r = CatalogBuild.build(grid(), landWkt)
     val someFid = r.frames.select($"fid").orderBy($"fid").as[Int].head()
-    val lk = Catalog.lookup(
-      r.frames.withColumn("is_north_america", lit(false)),
-      r.framesBursts, r.burstIdMap, someFid)
+    val lk = Catalog.lookup(r.frames, r.framesBursts, r.burstIdMap, someFid)
     val row = lk.collect().head
     val burstIds = row.getSeq[String](row.fieldIndex("burst_ids"))
     assert(burstIds.nonEmpty && burstIds.forall(_.matches("t\\d{3}_\\d{6}_iw[123]")))
 
     // frame-to-burst JSON doc round-trips
-    val summaries = Catalog.frameSummaries(
-      r.frames.withColumn("is_north_america", lit(false)),
-      r.framesBursts, r.burstIdMap)
+    val summaries = Catalog.frameSummaries(r.frames, r.framesBursts, r.burstIdMap)
     val doc = Io.frameToBurstJson(summaries, Map("version" -> "test"))
     val parsed = spark.read.json(Seq(doc).toDS())
     assert(parsed.columns.contains("data"))
+  }
+
+  test("build returns the frames table that create writes") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-build-cols").toString
+    grid().write.parquet(s"$tmp/burst_map")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$tmp/land.wkt"), landWkt)
+    Main.run(spark, List("create", s"$tmp/burst_map", s"$tmp/land.wkt", s"$tmp/catalog"))
+    val written = spark.read.parquet(s"$tmp/catalog/frames").columns.toSeq
+    assert(CatalogBuild.build(grid(), landWkt).frames.columns.toSeq == written)
+    assert(written == Seq("fid", "epsg", "is_land", "relative_orbit_number", "orbit_pass",
+      "n_bursts", "geom", "xmin", "ymin", "xmax", "ymax", "is_north_america",
+      "bb_xmin", "bb_ymin", "bb_xmax", "bb_ymax"))
+  }
+
+  test("the land flag is false for a null geometry") {
+    val trip = Seq((1L, Some("POLYGON ((10 8, 11 8, 11 9, 10 9, 10 8))")), (2L, None))
+      .toDF("burst_id", "geom")
+    val flagged = CatalogBuild.withLandFlag(trip, landWkt)
+    assert(!flagged.schema("is_land").nullable)
+    assert(flagged.orderBy($"burst_id").select($"is_land").as[Boolean].collect().toSeq ==
+      Seq(true, false))
   }
 
   test("antimeridian frame gets split geometry and a sane epsg") {

@@ -135,7 +135,7 @@ class MainSpec extends SparkSpec {
     assert(all.size == nFrames)
   }
 
-  test("create routes a multi-shape North-America boundary through the STRtree join") {
+  test("create flags the frames that meet any shape of a multi-shape North-America boundary") {
     val (tmp, burstMapDir, land) = createInputs("graft-cli-na")
     // two disjoint shapes, one WKT per line (build_frame_db.py:653-655
     // loads a multi-shape NA boundary): one over track 1's lon band
@@ -145,7 +145,7 @@ class MainSpec extends SparkSpec {
       """POLYGON ((9 0, 14 0, 14 20, 9 20, 9 0))
         |POLYGON ((19 0, 24 0, 24 3, 19 3, 19 0))""".stripMargin)
     val catDir = s"$tmp/catalog"
-    Main.run(spark, List("create", burstMapDir, land, catDir, naFile.toString))
+    val jobs = jobsOf(Main.run(spark, List("create", burstMapDir, land, catDir, naFile.toString)))
     val frames = spark.read.parquet(s"$catDir/frames")
     // every track-1 frame intersects shape 1; track-2 frames only if their
     // bbox dips below lat 3 (burst rows start at y = 0.8) — both shapes
@@ -157,6 +157,9 @@ class MainSpec extends SparkSpec {
       .select($"fid").as[Int].collect().toSet
     assert(t1.nonEmpty && t2low.nonEmpty)
     assert(na == (t1 ++ t2low))
+    // the flag is one projected predicate, so the file adds no job to the
+    // 22 of a create without it
+    assert(jobs <= 22, s"create with a North-America file launched $jobs jobs")
   }
 
   test("create frees what it persists") {

@@ -23,6 +23,22 @@ class SpatialPlanSpec extends SparkSpec {
     assert(nat == udf && nat.nonEmpty)
   }
 
+  test("a GEOMETRYCOLLECTION literal matches when any member intersects") {
+    val df = framesDf()
+    // two disjoint shapes: the first over frame 1; the second touches
+    // frame 43's east edge (x = 38) and overlaps frame 44
+    val first = "POLYGON ((11 1, 15 1, 15 5, 11 5, 11 1))"
+    val second = "POLYGON ((38 43, 42 43, 42 46, 38 46, 38 43))"
+    val both = s"GEOMETRYCOLLECTION ($first, $second)"
+    def fids(c: org.apache.spark.sql.Column) =
+      df.filter(c).select($"fid").as[Int].collect().sorted.toSeq
+    val nat = fids(SpatialExpressions.stIntersectsNative($"geom", both))
+    val anyMember = fids(GeoFunctions.stIntersects($"geom", lit(first)) ||
+      GeoFunctions.stIntersects($"geom", lit(second)))
+    assert(nat == Seq(1, 43, 44) && nat == anyMember)
+    assert(fids(GeoFunctions.stIntersects($"geom", lit(both))) == nat)
+  }
+
   test("native st_intersects non-literal fallback (column vs column)") {
     // both sides are columns → no prepared-geometry cache; fallback path
     val df = framesDf().withColumn("other",
