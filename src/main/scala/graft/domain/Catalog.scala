@@ -60,11 +60,13 @@ object Catalog {
   def intersect(frames: DataFrame, queryWkt: String,
       bbox4326: (Double, Double, Double, Double)): DataFrame = {
     val (qxmin, qymin, qxmax, qymax) = bbox4326
+    // the coarse stage is written by hand although `BboxPrefilterRule`
+    // derives it, because perfbench compiles against `bbox4326`
     frames
       .filter(col("bb_xmin") <= qxmax && col("bb_xmax") >= qxmin &&
         col("bb_ymin") <= qymax && col("bb_ymax") >= qymin) // coarse: data-skips
       // exact refine via the native expression: the literal query geometry
-      // is parsed+prepared once per task (plans/SpatialExpressions)
+      // is parsed and prepared once per JVM (plans/PreparedShapes)
       .filter(graft.plans.SpatialExpressions.stIntersectsNative(col("geom"), queryWkt))
   }
 

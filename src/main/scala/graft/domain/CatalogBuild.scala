@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * Stages: jpl-id derivation → triplet dissolve (geometry-union agg) → land
   * flag → per-track DP frame optimization (flatMapGroups) → frame assembly
   * (union + majority track + first orbit_pass) → EPSG assignment
-  * (dateline-aware centroid) → UTM bbox snap, North-America flag, degree
-  * bbox → minimal/denormalized projections. The three shape flags (land,
-  * North America, polar override) are one predicate, [[intersectsShape]].
+  * (dateline-aware centroid) → polar-shape override → UTM bbox snap,
+  * North-America flag, degree bbox. The three shape flags (land, North
+  * America, polar override) are one predicate, [[intersectsShape]].
   *
   * Scale: everything keys on burst_id/track/frame — the only shuffles are
   * the dissolve groupBy, the per-track solve, and the frame groupBy; each
@@ -52,7 +52,8 @@ object CatalogBuild {
 
   /** `geom` intersects `wkt` (one shape, or a `GEOMETRYCOLLECTION` of
     * several: any member); a null geometry is false. The shape is prepared
-    * once per task, and a prepared geometry tests envelopes first. */
+    * and indexed once per JVM (`plans.PreparedShapes`), and the index tests
+    * envelopes first. */
   private def intersectsShape(geom: Column, wkt: String): Column =
     coalesce(SpatialExpressions.stIntersectsNative(geom, wkt), lit(false))
 
@@ -191,25 +192,4 @@ object CatalogBuild {
 
     BuildResult(frames, fb, bursts)(triplets)
   }
-
-  /** Minimal projection (build_frame_db.py:453-480): the 7-column serving
-    * artifact, int-snapped coordinates. */
-  def minimal(r: BuildResult): DataFrame =
-    r.frames.select(col("fid"), col("epsg"), col("xmin"), col("ymin"),
-      col("xmax"), col("ymax"), col("is_land"))
-
-  /** Denormalized burst view (export_denormalized_db.py:68-146): per burst
-    * the frame-id range and count — the materialization that kills
-    * query-time joins (§4). */
-  def denormalized(r: BuildResult): DataFrame =
-    r.burstIdMap
-      .join(r.framesBursts, col("OGC_FID") === col("burst_ogc_fid"))
-      .join(r.frames.select(col("fid"), col("epsg").as("f_epsg")),
-        col("frame_fid") === col("fid"))
-      .groupBy(col("burst_id_jpl"))
-      .agg(min(col("fid")).as("min_frame_id"),
-        max(col("fid")).as("max_frame_id"),
-        min_by(col("f_epsg"), col("fid")).as("min_frame_epsg"),
-        max_by(col("f_epsg"), col("fid")).as("max_frame_epsg"),
-        countDistinct(col("fid")).as("num_frames"))
 }

@@ -441,7 +441,7 @@ object Geo {
         val x0 = k * 25 - 150; val y0 = (k % 4) * 30 - 60
         (k, s"POLYGON (($x0 $y0, ${x0 + 30} $y0, ${x0 + 30} ${y0 + 35}, $x0 ${y0 + 35}, $x0 $y0))")
       }
-      graft.operators.SpatialJoin.broadcastSpatialJoin(pts, polys, "intersects")
+      graft.operators.SpatialJoin.broadcastSpatialJoin(pts, polys)
         .groupBy(col("poly_id"))
         .agg(count(lit(1)).as("n_points"), sum(col("id")).cast("long").as("sum_ids"))
         .orderBy(col("poly_id"))

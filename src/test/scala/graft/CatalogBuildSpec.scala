@@ -33,7 +33,7 @@ class CatalogBuildSpec extends SparkSpec {
   // land: a box over track 1, bursts ~8..20
   private val landWkt = "POLYGON ((9 6.5, 14 6.5, 14 16.5, 9 16.5, 9 6.5))"
 
-  test("full build: frames, join table, bbox, epsg, minimal, denormalized") {
+  test("full build: frames, join table, bbox, epsg, frame overlap") {
     val r = CatalogBuild.build(grid(), landWkt)
     val frames = r.frames.orderBy($"fid").collect()
     assert(frames.nonEmpty)
@@ -72,14 +72,9 @@ class CatalogBuildSpec extends SparkSpec {
     assert(frames.filter(_.getAs[Int]("relative_orbit_number") == 2)
       .forall(_.getAs[String]("orbit_pass") == "DESCENDING"))
 
-    // minimal projection is 7 columns
-    assert(CatalogBuild.minimal(r).columns.toSeq ==
-      Seq("fid", "epsg", "xmin", "ymin", "xmax", "ymax", "is_land"))
-
-    // denormalized: overlap bursts belong to 2 frames
-    val denorm = CatalogBuild.denormalized(r)
-    val counts = denorm.groupBy($"num_frames").count()
-      .as[(Long, Long)].collect().toMap
+    // overlap bursts belong to 2 frames, every other burst to 1
+    val counts = r.framesBursts.groupBy($"burst_ogc_fid").count()
+      .groupBy($"count").count().as[(Long, Long)].collect().toMap
     assert(counts.keySet.subsetOf(Set(1L, 2L)))
     assert(counts.getOrElse(2L, 0L) > 0) // overlap bursts exist
   }

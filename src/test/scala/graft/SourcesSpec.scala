@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import graft.domain.BurstId
+import graft.domain.{BurstId, CatalogBuild}
 import graft.operators.SpatialJoin
+import graft.plans.PreparedShapes
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -42,8 +43,9 @@ class SourcesSpec extends SparkSpec {
     val polys = Seq(
       (1L, "POLYGON ((0.5 0.5, 3.5 0.5, 3.5 3.5, 0.5 3.5, 0.5 0.5))"),
       (2L, "POLYGON ((6.5 6.5, 9.5 6.5, 9.5 9.5, 6.5 9.5, 6.5 6.5))"))
-    val joined = SpatialJoin.broadcastSpatialJoin(points, polys, "contains")
+    val joined = SpatialJoin.broadcastSpatialJoin(points, polys)
       .as[(Long, Long)].collect().toSet
+    // no point lies on a polygon edge, so intersects reads as contains:
     // poly 1 contains x∈[1,3], y∈[1,3] → ids 11..13, 21..23, 31..33
     val want1 = (for { y <- 1 to 3; x <- 1 to 3 } yield (y * 10 + x).toLong -> 1L).toSet
     val want2 = (for { y <- 7 to 9; x <- 7 to 9 } yield (y * 10 + x).toLong -> 2L).toSet
@@ -51,17 +53,30 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("STRtree is built once per executor JVM, not once per task") {
+    // local[N] is a single JVM = a single "executor": exactly one build per
+    // distinct shape, whatever the task count, on both paths that share
+    // `PreparedShapes`
+    def builds[T](body: => T): (T, Long) = {
+      val before = PreparedShapes.buildCount
+      val out = body
+      (out, PreparedShapes.buildCount - before)
+    }
     val polys = Seq((1L, "POLYGON ((0 0, 50 0, 50 50, 0 50, 0 0))"))
     val points = (0 until 1000).map(i => (i.toLong, s"POINT (${i % 40} ${i % 40})"))
       .toDF("id", "wkt")
       .repartition(16) // 16 tasks probing the same broadcast index
-    val before = SpatialJoin.treeBuildCount
-    val n = SpatialJoin.broadcastSpatialJoin(points, polys, "intersects").count()
+    val (n, joinBuilds) = builds(SpatialJoin.broadcastSpatialJoin(points, polys).count())
     assert(n == 1000)
-    // local[32] is a single JVM = a single "executor": exactly one build
-    // regardless of task count (the per-JVM cache keyed by broadcast id)
-    assert(SpatialJoin.treeBuildCount - before == 1,
-      s"expected 1 tree build across 16 tasks, got ${SpatialJoin.treeBuildCount - before}")
+    assert(joinBuilds == 1, s"expected 1 tree build across 16 tasks, got $joinBuilds")
+
+    // the expression path: a land-flag projection over 16 partitions, its
+    // shape a literal no other test uses
+    val land = "POLYGON ((0.25 0.25, 20.25 0.25, 20.25 20.25, 0.25 20.25, 0.25 0.25))"
+    val (onLand, exprBuilds) = builds(
+      CatalogBuild.withLandFlag(points.withColumnRenamed("wkt", "geom"), land)
+        .filter($"is_land").count())
+    assert(onLand == (0 until 1000).count(i => i % 40 >= 1 && i % 40 <= 20))
+    assert(exprBuilds == 1, s"expected 1 shape build across 16 tasks, got $exprBuilds")
   }
 
   test("burst-id physics: Eq. 9-89/9-91 (D9)") {
