@@ -29,12 +29,12 @@ object Bench {
       .getOrElse(if (only.isDefined) 1 else 3)
     val spark = RegistryRunner.session()
 
-    // the elapsed time is captured BEFORE the cache is cleared, so cache
-    // cleanup is harness hygiene between queries, not billed work. (An
+    // the elapsed time is captured BEFORE the scope frees what the run
+    // materialized, so the freeing is harness hygiene, not billed work. (An
     // explicit System.gc() here was tried against r03's 13 s cross-query
     // outlier and REGRESSED every query ~2× — the forced full GC shrinks
     // the heap and the next query pays re-expansion; leave GC to the JVM.)
-    def timeOnce(df: => DataFrame): Double = RegistryRunner.isolated(spark) {
+    def timeOnce(df: => DataFrame): Double = QueryScope {
       val t0 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9

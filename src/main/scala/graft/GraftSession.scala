@@ -101,7 +101,9 @@ object GraftSession {
     * started with (Spark's default is 100, which a warm catalog build
     * outgrows; see [[conf]]). Nor can a live session gain a columnar rule,
     * so an attached session lacks `plans.ParamLiteralRule`: there a
-    * request whose filter literals are new compiles new classes. */
+    * request whose filter literals are new compiles new classes. A
+    * registry run or CLI subcommand on it frees only what its own queries
+    * materialized ([[QueryScope]]); the session's other caches survive. */
   def attach(spark: SparkSession): SparkSession = {
     plans.GraftExtensions.register(spark)
     Seq(TimeZone, NanosAsLong).foreach { case (k, v) => spark.conf.set(k, v) }

@@ -59,8 +59,10 @@ object Main {
     finally spark.stop()
   }
 
-  /** Dispatch, separated from main so specs drive it on a shared session. */
-  def run(spark: SparkSession, args: List[String]): Unit = args match {
+  /** Dispatch, separated from main so specs drive it on a shared session.
+    * Each subcommand runs in its own [[QueryScope]], which frees what it
+    * materialized (create's triplets) once it returns. */
+  def run(spark: SparkSession, args: List[String]): Unit = QueryScope(args match {
     case "create" :: burstMap :: landWkt :: outDir :: rest =>
       create(spark, burstMap, landWkt, outDir, rest.headOption)
     case "lookup" :: catalogDir :: frameId :: Nil =>
@@ -89,7 +91,7 @@ object Main {
       printJson(Catalog.fetchGranules(spark, Tables.read(spark, bursts), jsonZip,
         fids.split(',').map(_.trim.toLong).toSeq, start, end))
     case _ => usage()
-  }
+  })
 
   /** §3.1 build → persisted catalog. */
   private def create(spark: SparkSession, burstMap: String, landWktFile: String,
@@ -98,13 +100,11 @@ object Main {
     val naWkts = naWktFile.toSeq.flatMap(
       readWkt(_).split('\n').map(_.trim).filter(_.nonEmpty))
     val r = CatalogBuild.build(Tables.read(spark, burstMap), readWkt(landWktFile), naWkts)
-    // the three tables are independent once built: write them at once;
-    // the triplets are unpersisted only after every write has returned
-    try inParallel(Seq(
-        () => r.frames.write.mode("overwrite").parquet(s"$outDir/frames"),
-        () => r.framesBursts.write.mode("overwrite").parquet(s"$outDir/frames_bursts"),
-        () => r.burstIdMap.write.mode("overwrite").parquet(s"$outDir/burst_id_map")))
-    finally r.unpersist()
+    // the three tables are independent once built: write them at once
+    inParallel(Seq(
+      () => r.frames.write.mode("overwrite").parquet(s"$outDir/frames"),
+      () => r.framesBursts.write.mode("overwrite").parquet(s"$outDir/frames_bursts"),
+      () => r.burstIdMap.write.mode("overwrite").parquet(s"$outDir/burst_id_map")))
   }
 
   /** Runs `tasks` at once, one thread each, and returns once every thread

@@ -14,17 +14,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - no non-deterministic FIRST/collect order — window row_number with a
   *     full tie-break instead (SURVEY.md §7.5 risk 5).
   *
-  * Runner contract: a built plan may `persist()` intermediates that feed
-  * several downstream branches (e.g. q_dedup_embedding's equality-class
-  * reps). The plan is lazy, so the query function cannot unpersist them
-  * itself. [[RegistryRunner]] is the one place that runs registry queries
-  * and the one place that calls `spark.catalog.clearCache()` after each.
-  * That frees what a query `persist()`ed, but not a `localCheckpoint`:
-  * a checkpointed RDD is not in the CacheManager and keeps its blocks
-  * until a GC lets the ContextCleaner drop it. A spark-shell probe
-  * (local[4], sf0.01) still saw 2–9 checkpointed RDDs registered after
-  * `clearCache()` while the 10 single-shot eager builders ran. Freeing
-  * them needs a per-query scope (ROADMAP items 3 and 7).
+  * Runner contract: a builder persists and checkpoints only through
+  * [[QueryScope]], and never frees what it materialized: the plan is lazy.
+  * The runner's scope around the query frees exactly that when it ends.
   */
 final case class QueryDef(
     name: String,

@@ -5,8 +5,8 @@ import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** The one harness behind the registry mains (Bench, Verify, PlanDump):
-  * the engine session, query selection by name, and per-query cache
-  * isolation with failures collected instead of swallowed.
+  * the engine session, query selection by name, and one [[QueryScope]] per
+  * query with failures collected instead of swallowed.
   */
 object RegistryRunner {
 
@@ -40,16 +40,12 @@ object RegistryRunner {
     }
   }
 
-  /** Run `f`, then drop the session's cached blocks whether or not it
-    * threw (see QueryDef's runner contract). */
-  def isolated[A](spark: SparkSession)(f: => A): A =
-    try f finally spark.catalog.clearCache()
-
-  /** `body` on each query in turn, isolated. A query that throws is logged
-    * under `tag` and listed in `failed`; the sweep goes on. */
+  /** `body` on each query in turn, each in its own [[QueryScope]]. A query
+    * that throws is logged under `tag` and listed in `failed`; the sweep
+    * goes on. */
   def run[A](spark: SparkSession, queries: Seq[QueryDef], tag: String)(body: QueryDef => A): Outcome[A] = {
     val (ok, failed) = queries.partitionMap { q =>
-      try Left(q.name -> isolated(spark)(body(q)))
+      try Left(q.name -> QueryScope(body(q)))
       catch { case e: Throwable =>
         System.err.println(s"[$tag] ${q.name} failed: ${e.getMessage}")
         Right(q.name)

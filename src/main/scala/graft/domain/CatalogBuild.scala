@@ -1,5 +1,6 @@
 package graft.domain
 
+import graft.QueryScope
 import graft.functions.GeoFunctions
 import graft.plans.SpatialExpressions
 import org.apache.spark.sql.{Column, DataFrame}
@@ -95,12 +96,9 @@ object CatalogBuild {
     trackFrames.join(broadcast(ids), Seq("track", "frame_in_track"))
   }
 
-  /** The built tables, plus the triplets `build` persisted for them: call
-    * [[unpersist]] once the tables are written. */
+  /** The built tables. */
   final case class BuildResult(frames: DataFrame, framesBursts: DataFrame,
-      burstIdMap: DataFrame)(triplets: DataFrame) {
-    def unpersist(): Unit = triplets.unpersist()
-  }
+      burstIdMap: DataFrame)
 
   /** Full build: burst_id_map (with geom WKT) + land WKT → frames +
     * frames_bursts + enriched burst map (§3.1 steps 2-7), as `create`
@@ -117,7 +115,8 @@ object CatalogBuild {
     * (build_frame_db.py:251-257). The shape itself is a downloaded
     * artifact; pass it here when available.
     *
-    * The persisted triplets stay cached until [[BuildResult.unpersist]].
+    * The triplets are persisted through [[QueryScope]]: the caller's scope
+    * frees them once the tables are written.
     * The frame assignment (per-track DP plus the global-id window) feeds
     * both frames and frames_bursts and is computed once for each write;
     * `Main.create` runs the two writes at once, so the two computations
@@ -132,8 +131,7 @@ object CatalogBuild {
     // triplets feed the DP solver AND frame assembly — materialize once
     // (the dissolve runs the JTS union aggregator; recomputing it per
     // consumer doubles the most expensive stage)
-    val triplets = withLandFlag(dissolveTriplets(bursts), landWkt)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val triplets = QueryScope.persisted(withLandFlag(dissolveTriplets(bursts), landWkt))
     val frameBursts = withGlobalFrameIds(solveTrackFrames(triplets))
 
     // frames_bursts join table: expand triplets back to subswath rows
@@ -190,6 +188,6 @@ object CatalogBuild {
         col("bb._1").as("bb_xmin"), col("bb._2").as("bb_ymin"),
         col("bb._3").as("bb_xmax"), col("bb._4").as("bb_ymax"))
 
-    BuildResult(frames, fb, bursts)(triplets)
+    BuildResult(frames, fb, bursts)
   }
 }

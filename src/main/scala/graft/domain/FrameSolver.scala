@@ -67,6 +67,18 @@ object FrameSolver {
       }
     })
 
+  /** Maximal runs of equal values in `a`, as (value, start, end exclusive). */
+  private def runs(a: Array[Boolean]): Seq[(Boolean, Int, Int)] = {
+    val out = Seq.newBuilder[(Boolean, Int, Int)]
+    var s = 0
+    var i = 1
+    while (i <= a.length) {
+      if (i == a.length || a(i) != a(s)) { out += ((a(s), s, i)); s = i }
+      i += 1
+    }
+    out.result()
+  }
+
   /** Land-run smoothing (frames.py:214-236): grow land runs shorter than
     * minF, then iteratively absorb water runs shorter than minF, so the DP
     * only ever sees slices ≥ minF. (Divergence note: the reference mutates
@@ -74,16 +86,6 @@ object FrameSolver {
     * which reaches the same fixpoint deterministically.) */
   def smoothIndicator(isLand: Array[Boolean], minF: Int = 5): Array[Boolean] = {
     val ind = isLand.clone()
-    def runs(a: Array[Boolean]): Seq[(Boolean, Int, Int)] = {
-      val out = Seq.newBuilder[(Boolean, Int, Int)]
-      var s = 0
-      var i = 1
-      while (i <= a.length) {
-        if (i == a.length || a(i) != a(s)) { out += ((a(s), s, i)); s = i }
-        i += 1
-      }
-      out.result()
-    }
     def smear(endExclusive: Int): Unit = {
       val lo = math.max(0, endExclusive - minF / 2)
       val hi = math.min(ind.length, endExclusive + minF / 2 + 1)
@@ -106,15 +108,7 @@ object FrameSolver {
   def landOptimizedSlices(isLand: Array[Boolean], target: Double = 9.0,
       minF: Int = 5, maxF: Int = 10): Seq[FrameSlice] = {
     if (isLand.isEmpty) return Nil
-    val ind = smoothIndicator(isLand, minF)
-    val runs = Seq.newBuilder[(Boolean, Int, Int)]
-    var s = 0
-    var i = 1
-    while (i <= ind.length) {
-      if (i == ind.length || ind(i) != ind(s)) { runs += ((ind(s), s, i)); s = i }
-      i += 1
-    }
-    runs.result().flatMap { case (land, start, end) =>
+    runs(smoothIndicator(isLand, minF)).flatMap { case (land, start, end) =>
       solve(end - start, target, minF, maxF).map { case (a, b) =>
         FrameSlice(start + a, start + b, land)
       }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, QueryScope, Tables}
 import graft.pipeline.SparseProduct
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -52,13 +52,12 @@ object Commerce {
         |ORDER BY lift_q6 DESC, p1, p2 LIMIT 50""".stripMargin) { (s, d) =>
       // items feeds four consumers (n, the part degrees, both self-join
       // probes) and is NOT exchange-reused across them — unpersisted, the
-      // distinct + cap window re-ran per consumer (r15; released by the
-      // runner's clearCache contract)
-      val items = SparseProduct.capItemsPerKey(
+      // distinct + cap window re-ran per consumer (r15; freed by the
+      // runner's QueryScope)
+      val items = QueryScope.persisted(SparseProduct.capItemsPerKey(
         Tables.lineitem(s, d)
           .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct(), "ok", "pk")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .distinct(), "ok", "pk"))
       val n = items.agg(countDistinct(col("ok")).as("n_orders"))
       SparseProduct.product(items, Seq("ok"), "pk",
           SparseProduct.Names("p1", "p2", "n_ab", "c1", "c2"), min = Some(3L))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, QueryScope, Tables}
 import graft.pipeline.SparseProduct
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -609,7 +609,7 @@ object EventAnalytics {
         |ORDER BY p.a, p.b""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val basket = Tables.events(s, d)
+      val basket = QueryScope.persisted(Tables.events(s, d)
         .withColumn("prev_us", unix_micros(lag(col("ts"), 1).over(w)))
         .withColumn("new_session",
           when(col("prev_us").isNull ||
@@ -618,8 +618,7 @@ object EventAnalytics {
         .withColumn("sn",
           sum(col("new_session")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
         .select(col("user_id"), col("sn"), col("event_type"))
-        .distinct()
-        .persist()
+        .distinct())
       val nb = basket.select(col("user_id"), col("sn")).distinct()
         .agg(count(lit(1)).as("n"))
       SparseProduct.product(basket, Seq("user_id", "sn"), "event_type",

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, QueryScope, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -25,20 +25,19 @@ object EventJourneys {
         .orderBy(col("ts"), col("event_id"))).as("b"))
     val tc = seq.filter(col("b").isNotNull && col("a") =!= "purchase")
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("c"))
-    tc.withColumn("p", expr("(c * 1000000) div sum(c) over (partition by a)"))
+    QueryScope.checkpointed(tc
+      .withColumn("p", expr("(c * 1000000) div sum(c) over (partition by a)"))
       .select(col("a"), col("b"), col("p"))
       .unionByName(s.range(1)
-        .select(lit("purchase").as("a"), lit("purchase").as("b"), lit(1000000L).as("p")))
-      .localCheckpoint(true)
+        .select(lit("purchase").as("a"), lit("purchase").as("b"), lit(1000000L).as("p"))))
   }
 
   /** `m`⁸ by three squarings, each exact Σ(p·p) div 10⁶ and checkpointed. */
   private def pow8(m: DataFrame): DataFrame =
     (1 to 3).foldLeft(m) { (t, _) =>
-      t.as("x").join(t.as("y"), col("y.a") === col("x.b"))
+      QueryScope.checkpointed(t.as("x").join(t.as("y"), col("y.a") === col("x.b"))
         .groupBy(col("x.a").as("a"), col("y.b").as("b"))
-        .agg(expr("sum(x.p * y.p) div 1000000").as("p"))
-        .localCheckpoint(true)
+        .agg(expr("sum(x.p * y.p) div 1000000").as("p")))
     }
 
   /** Oracle twin of [[transitionMatrix]]: CTEs seq, tc and t1. */

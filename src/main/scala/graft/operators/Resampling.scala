@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, QueryScope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -217,11 +217,10 @@ object Resampling {
       val reps = pu.crossJoin(repSpine(s))
         .groupBy(col("g"), col("b"))
         .agg(sum(signCol * col("dd")).as("t_b"))
-      val pv = reps.join(obs, Seq("g"))
+      val pv = QueryScope.checkpointed(reps.join(obs, Seq("g"))
         .groupBy(col("g"), col("n_users"), col("t_obs"))
         .agg((sum(when(abs(col("t_b")) >= abs(col("t_obs")), 1L).otherwise(0L)) + 1)
-          .as("p_num"))
-        .localCheckpoint(true)
+          .as("p_num")))
       val mm = pv.agg(count(lit(1)).as("m"))
       // global rank over the m-row p-value table (event_type vocabulary)
       val rk = pv.select(col("g"), col("n_users"), col("t_obs"), col("p_num"),
@@ -302,11 +301,10 @@ object Resampling {
         .select(col("b"), col("su"), col("cu"), poissonCaseCol(h2Col).cast("long").as("w"))
       val reps = drawn.groupBy(col("b"))
         .agg(sum(col("w") * col("su")).as("ws"), sum(col("w") * col("cu")).as("wn"))
-      val means = reps.filter(col("wn") > 0)
+      val means = QueryScope.checkpointed(reps.filter(col("wn") > 0)
         .select(col("b"),
           expr("CAST((CAST(ws AS DECIMAL(38,0)) * 1000000) div wn AS BIGINT)")
-            .as("mean_q6"))
-        .localCheckpoint(true)
+            .as("mean_q6")))
       val nv = means.agg(count(lit(1)).as("n_valid"))
       // global rank over the <=B-row replicate-mean table
       val rkd = means.select(col("mean_q6"),

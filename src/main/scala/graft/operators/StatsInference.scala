@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, QueryScope, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -398,9 +398,9 @@ object StatsInference {
       val base = Tables.events(s, d).select(
         col("event_type").as("g"),
         floor(col("value") * 1000).cast("long").as("vq"))
-      val m = base.groupBy(col("g")).agg(
+      val m = QueryScope.checkpointed(base.groupBy(col("g")).agg(
         count(lit(1)).as("n"), sum(col("vq")).as("s1"),
-        sum((col("vq") * col("vq")).cast(dec)).as("s2")).localCheckpoint(true)
+        sum((col("vq") * col("vq")).cast(dec)).as("s2")))
       val tot = m.select(col("n"), col("s1"),
           floor(col("s2").cast("double")
             - col("s1").cast("double") * (col("s1").cast("double") / col("n").cast("double")))
@@ -515,10 +515,9 @@ object StatsInference {
         |      * 1000000.0) AS BIGINT) END AS ks_q6
         |FROM tot CROSS JOIN mx""".stripMargin) { (s, d) =>
       val base = cohorts(s, d)
-      val hist = base.groupBy(col("vq")).agg(
+      val hist = QueryScope.checkpointed(base.groupBy(col("vq")).agg(
         sum(when(col("coh") === 0, 1L).otherwise(0L)).as("c0"),
-        sum(when(col("coh") === 1, 1L).otherwise(0L)).as("c1"))
-        .localCheckpoint(true)
+        sum(when(col("coh") === 1, 1L).otherwise(0L)).as("c1")))
       val tot = hist.agg(sum(col("c0")).as("n0"), sum(col("c1")).as("n1"))
       // domain-bounded global window: one row per centi-unit value cell
       val w = Window.orderBy(col("vq")).rowsBetween(Window.unboundedPreceding, 0)

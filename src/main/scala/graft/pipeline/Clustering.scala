@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, QueryScope, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -72,7 +72,7 @@ object Clustering {
     var members = assign(qv, cent)
     for (_ <- 1 until iters) {
       // k·dim longs: eager checkpoint cuts the per-round plan nesting
-      cent = recompute(members, qv).localCheckpoint(true)
+      cent = QueryScope.checkpointed(recompute(members, qv))
       members = assign(qv, cent)
     }
     (members, recompute(members, qv))
@@ -214,12 +214,11 @@ object Clustering {
       val cent = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("embedding").as("ce"))
       val wAssign = Window.partitionBy(col("vec_id")).orderBy(col("dot").desc, col("cid"))
-      val members = emb.crossJoin(broadcast(cent))
+      val members = QueryScope.persisted(emb.crossJoin(broadcast(cent))
         .select(col("vec_id"), col("cid"), qdot(col("embedding"), col("ce")).as("dot"))
         .withColumn("rn", row_number().over(wAssign))
         .filter(col("rn") === 1)
-        .select(col("vec_id"), col("cid").as("cluster"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("vec_id"), col("cid").as("cluster")))
       // each member row carries its own squared norm (one codegen'd pass,
       // computed once per vector, never joined or broadcast — a norm
       // TABLE would grow with the corpus)

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, QueryScope, Tables}
 import org.apache.spark.sql.functions._
 
 /** Corpus-shaping operators a large-scale training-data pipeline runs
@@ -680,13 +680,12 @@ object Corpus {
       // exploded first_seen build) and the gram-string construction is the
       // CPU hog — without the cache Catalyst evaluates the subtree once
       // per branch (measured 2.6x slower than the old distinct()-reuse
-      // plan at sf0.1). Released by the runner's clearCache (QueryDef
-      // runner contract). At 100 TB this is the materialize-the-inverted-
-      // index-once pattern of the shared gram tables.
-      val docGrams = toks.select(col("doc_id"),
+      // plan at sf0.1). Freed by the runner's QueryScope. At 100 TB this
+      // is the materialize-the-inverted-index-once pattern of the shared
+      // gram tables.
+      val docGrams = QueryScope.persisted(toks.select(col("doc_id"),
         array_distinct(transform(sequence(lit(1), size(col("tk")) - 7),
-          i => concat_ws(" ", slice(col("tk"), i, lit(8))))).as("garr"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          i => concat_ws(" ", slice(col("tk"), i, lit(8))))).as("garr")))
       val nGrams = docGrams.select(col("doc_id"),
         size(col("garr")).cast("long").as("n_grams"))
       val firstSeen = docGrams

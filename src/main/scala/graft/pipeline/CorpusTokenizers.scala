@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, QueryScope, Tables}
 import org.apache.spark.sql.functions._
 
 /** Tokenizer-induction and string-distance operators of the corpus family:
@@ -33,10 +33,9 @@ object CorpusTokenizers {
     // pairs feeds best AND applied — persist or the lineage (hence plan
     // size + recompute) multiplies ~4× per round, the 2^rounds blowup
     // q_hits hit
-    val pairs = toks
+    val pairs = QueryScope.persisted(toks
       .withColumn("nt", lead(col("t"), 1).over(w))
-      .withColumn("rn", row_number().over(w))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("rn", row_number().over(w)))
     val best = pairs.filter(col("nt").isNotNull)
       .groupBy(col("t"), col("nt")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("t"), col("nt")).limit(1)
@@ -45,8 +44,8 @@ object CorpusTokenizers {
     // rn − (running max rn of the last NON-match) − 1
     // applied feeds BOTH the n_tokens_after count and the next round's
     // windows — unpersisted, the 3-window apply pass ran twice per round
-    // (r15; released by the runner's clearCache contract)
-    val applied = pairs
+    // (r15; freed by the runner's QueryScope)
+    val applied = QueryScope.persisted(pairs
       .crossJoin(broadcast(best))
       .withColumn("isM",
         (col("nt").isNotNull && col("t") === col("bt") && col("nt") === col("bnt")).cast("int"))
@@ -59,8 +58,7 @@ object CorpusTokenizers {
       .withColumn("pm", lag(col("mrg"), 1, 0).over(w))
       .filter(col("pm") === 0)
       .select(col("doc_id"), col("i"),
-        when(col("mrg") === 1, concat(col("t"), col("nt"))).otherwise(col("t")).as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        when(col("mrg") === 1, concat(col("t"), col("nt"))).otherwise(col("t")).as("t")))
     val stat = best
       .crossJoin(broadcast(applied.agg(count(lit(1)).as("n_tokens_after"))))
       .select(lit(r.toLong).as("round"), col("bt").as("lhs"), col("bnt").as("rhs"),
@@ -112,11 +110,9 @@ object CorpusTokenizers {
     * (wf: (w, c) word frequencies, pm: (w, piece, mult) segmentation). */
   private def wordPieceTables(s: org.apache.spark.sql.SparkSession,
       d: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    import org.apache.spark.storage.StorageLevel
-    val wf = tokRows(s, d)
+    val wf = QueryScope.persisted(tokRows(s, d)
       .filter(length(col("t")) <= 20)
-      .groupBy(col("t").as("w")).agg(count(lit(1)).as("c"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("t").as("w")).agg(count(lit(1)).as("c")))
     val thr = wf.agg(greatest(lit(20L), expr("sum(c) div 5000")).as("thr"))
     val vw = wf.crossJoin(broadcast(thr))
       .filter(col("c") >= col("thr") && length(col("w")) <= 10)
@@ -132,28 +128,25 @@ object CorpusTokenizers {
           least(lit(10), length(col("w")) - col("pos") + 1))).as("L"))
       .select(col("w"), col("pos").cast("long").as("pos"),
         col("L").cast("long").as("L"), expr("substring(w, pos, L)").as("sub"))
-    val best = cand.join(vocab, Seq("sub"))
-      .groupBy(col("w"), col("pos")).agg(max(col("L")).as("L"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val best = QueryScope.persisted(cand.join(vocab, Seq("sub"))
+      .groupBy(col("w"), col("pos")).agg(max(col("L")).as("L")))
     // greedy chain: bounded rounds over the vocabulary-sized word set,
     // each round eagerly materialized (the kCore census lesson).
     // (r15 negative result: replacing checkpoint+isEmpty with
     // persist+count — one action per round instead of two — measured
     // ~0.5 s SLOWER per wordpiece query; the checkpoint's plan
     // truncation beats the saved job.)
-    var cur = best.filter(col("pos") === 1)
+    var cur = QueryScope.checkpointed(best.filter(col("pos") === 1)
       .select(col("w"), (lit(1L) + col("L")).as("npos"),
-        expr("substring(w, 1, L)").as("piece"))
-      .localCheckpoint(true)
+        expr("substring(w, 1, L)").as("piece")))
     val acc = scala.collection.mutable.ListBuffer(
       cur.select(col("w"), col("piece")))
     var round = 1
     while (round < 20 && !cur.isEmpty) {
-      cur = cur.select(col("w"), col("npos").as("pos"))
+      cur = QueryScope.checkpointed(cur.select(col("w"), col("npos").as("pos"))
         .join(best, Seq("w", "pos"))
         .select(col("w"), (col("pos") + col("L")).as("npos"),
-          expr("substring(w, pos, L)").as("piece"))
-        .localCheckpoint(true)
+          expr("substring(w, pos, L)").as("piece")))
       acc += cur.select(col("w"), col("piece"))
       round += 1
     }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, QueryScope, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -269,11 +269,10 @@ object Embeddings {
         .withColumn("rn", row_number().over(wCls.orderBy(col("vec_id"))))
         .withColumn("csize", count(lit(1)).over(wCls))
       // persisted because five branches read it (members, repElems, the
-      // bucket self-join's two sides, intraCls, repVec); released by the
-      // runner's post-materialization clearCache (QueryDef runner contract)
-      val reps = classed.filter(col("rn") === 1)
-        .select(col("rep"), col("embedding"), col("csize"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // bucket self-join's two sides, intraCls, repVec); freed by the
+      // runner's QueryScope once the query has run
+      val reps = QueryScope.persisted(classed.filter(col("rn") === 1)
+        .select(col("rep"), col("embedding"), col("csize")))
       val members = classed.filter(col("rn") <= 201)
         .groupBy(col("rep")).agg(sort_array(collect_list(col("vec_id"))).as("mem"))
       // bucketing, candidate join, and the exact quantized cosine all run
@@ -366,10 +365,9 @@ object Embeddings {
       val dots = emb.crossJoin(broadcast(cent))
         .select(col("vec_id"), col("cid"), qdot(col("embedding"), col("ce")).as("dot"))
       val wAssign = Window.partitionBy(col("vec_id")).orderBy(col("dot").desc, col("cid"))
-      val members = dots.withColumn("rn", row_number().over(wAssign))
+      val members = QueryScope.persisted(dots.withColumn("rn", row_number().over(wAssign))
         .filter(col("rn") === 1)
-        .select(col("vec_id"), col("cid").as("cluster"), col("dot"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("vec_id"), col("cid").as("cluster"), col("dot")))
       val occ = members.groupBy(col("cluster")).agg(count(lit(1)).as("n_members"))
       val wRank = Window.partitionBy(col("cluster")).orderBy(col("dot").desc, col("vec_id"))
       members.filter(col("vec_id") >= 8)

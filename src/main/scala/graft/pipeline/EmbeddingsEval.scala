@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, QueryScope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -378,7 +378,7 @@ object EmbeddingsEval {
       import graft.functions.QDot.qdot
       val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       // two independent 4-bit tables from the same 8 hyperplane signs
-      val tbls = qelems(s, d)
+      val tbls = QueryScope.checkpointed(qelems(s, d)
         .select(col("vec_id"), col("i"), col("qe"),
           explode(sequence(lit(0), lit(LshPlanes - 1))).as("p"))
         .withColumn("r",
@@ -388,13 +388,12 @@ object EmbeddingsEval {
         .agg(sum(col("qe") * col("r")).as("s"))
         .groupBy(col("vec_id"), expr("p div 4").as("tbl"))
         .agg(sum(when(col("s") >= 0, pow(lit(2), pmod(col("p"), lit(4))).cast("long"))
-          .otherwise(0L)).cast("long").as("bucket"))
-        .localCheckpoint(true)
+          .otherwise(0L)).cast("long").as("bucket")))
       val norms = emb.select(col("vec_id"),
         qdot(col("embedding"), col("embedding")).as("n2"))
       val probe = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("qid"), col("embedding").as("pe"))
-      val scored = emb.withColumnRenamed("vec_id", "cand_id")
+      val scored = QueryScope.checkpointed(emb.withColumnRenamed("vec_id", "cand_id")
         .crossJoin(broadcast(probe))
         .filter(col("qid") =!= col("cand_id"))
         .select(col("qid"), col("cand_id"),
@@ -405,13 +404,12 @@ object EmbeddingsEval {
           Seq("cand_id"))
         .select(col("qid"), col("cand_id"),
           floor(col("dot_q") / sqrt(col("qn2").cast("double") * col("cn2")) * 1000000)
-            .cast("long").as("cos_q6"))
-        .localCheckpoint(true)
+            .cast("long").as("cos_q6")))
       val w = Window.partitionBy(col("qid")).orderBy(col("cos_q6").desc, col("cand_id"))
       val gt = scored.withColumn("rk", row_number().over(w))
         .filter(col("rk") <= 5).select(col("qid"), col("cand_id"))
       // the either-table OR as an equi-join on (vector, tbl) + distinct
-      val cand = scored
+      val cand = QueryScope.checkpointed(scored
         .join(broadcast(tbls.filter(col("vec_id") < 8)
           .select(col("vec_id").as("qid"), col("tbl"), col("bucket").as("qb"))),
           Seq("qid"))
@@ -419,8 +417,7 @@ object EmbeddingsEval {
           col("bucket").as("cb")), Seq("cand_id", "tbl"))
         .filter(col("qb") === col("cb"))
         .select(col("qid"), col("cand_id"), col("cos_q6"))
-        .distinct()
-        .localCheckpoint(true)
+        .distinct())
       val ann = cand.withColumn("rk", row_number().over(w))
         .filter(col("rk") <= 5).select(col("qid"), col("cand_id"))
       val nc = cand.groupBy(col("qid")).agg(count(lit(1)).as("c"))

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, QueryScope, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -80,11 +80,10 @@ object Eval {
     * histogram is checkpointed: the totals and the query's window both
     * read it. */
   private def scoreHistogram(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val hist = scored(Tables.documents(s, d))
+    val hist = QueryScope.checkpointed(scored(Tables.documents(s, d))
       .groupBy(col("s_en").as("sc"))
       .agg(count(lit(1)).as("t"),
-        sum(when(col("lang") === "en", 1L).otherwise(0L)).as("c1"))
-      .localCheckpoint(true)
+        sum(when(col("lang") === "en", 1L).otherwise(0L)).as("c1")))
     (hist, hist.agg(sum(col("t")).as("n"), sum(col("c1")).as("p")))
   }
 
@@ -182,8 +181,8 @@ object Eval {
          |    AS BIGINT) AS f1_q6
          |FROM m ORDER BY class""".stripMargin) { (s, d) =>
       val pred = predicted(scored(Tables.documents(s, d)))
-      val cm = pred.groupBy(col("lang"), col("pred_lang"))
-        .agg(count(lit(1)).as("c")).localCheckpoint(true)
+      val cm = QueryScope.checkpointed(pred.groupBy(col("lang"), col("pred_lang"))
+        .agg(count(lit(1)).as("c")))
       val cls = cm.select(col("lang").as("class"))
         .union(cm.select(col("pred_lang").as("class"))).distinct()
       val tp = cm.filter(col("lang") === col("pred_lang"))
@@ -247,9 +246,9 @@ object Eval {
          |    * ((ABS(tot.n * tot.agree - pe.pe_num) * 1000000)
          |       // (tot.n * tot.n - pe.pe_num)) END AS kappa_q6
          |FROM tot CROSS JOIN pe""".stripMargin) { (s, d) =>
-      val cm = predicted(scored(Tables.documents(s, d)))
+      val cm = QueryScope.checkpointed(predicted(scored(Tables.documents(s, d)))
         .groupBy(col("lang"), col("pred_lang"))
-        .agg(count(lit(1)).as("c")).localCheckpoint(true)
+        .agg(count(lit(1)).as("c")))
       val tot = cm.agg(sum(col("c")).as("n"),
         sum(when(col("lang") === col("pred_lang"), col("c")).otherwise(0L)).as("agree"))
       val rm = cm.groupBy(col("lang").as("cls")).agg(sum(col("c")).as("r"))

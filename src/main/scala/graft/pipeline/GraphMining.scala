@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, QueryScope, Tables}
 import org.apache.spark.sql.functions._
 
 /** Neighborhood-structure mining over the power-law document graph
@@ -76,15 +76,12 @@ object GraphMining {
          |JOIN deg dp ON dp.x = ne.p
          |JOIN deg dq ON dq.x = ne.q
          |ORDER BY cn DESC, jaccard_q6 DESC, p, q LIMIT 50""".stripMargin) { (s, d) =>
-      import org.apache.spark.storage.StorageLevel
       val docs = Tables.documents(s, d)
-      val ue = Graphs.skewedUndirectedEdges(docs)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val adj = SparseProduct.capItemsPerKey(
+      val ue = QueryScope.persisted(Graphs.skewedUndirectedEdges(docs))
+      val adj = QueryScope.persisted(SparseProduct.capItemsPerKey(
           ue.select(col("a").as("v"), col("b").as("u"))
             .unionAll(ue.select(col("b").as("v"), col("a").as("u"))),
-          "v", "u", k = 64L, mult = 4L)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+          "v", "u", k = 64L, mult = 4L))
       // the pairs that already are edges leave before the degree joins
       val names = SparseProduct.Names("p", "q", "cn", "dp", "dq")
       val nonEdge = SparseProduct.pairs(adj, Seq("v"), "u", names)
@@ -135,27 +132,22 @@ object GraphMining {
          |FROM deg LEFT JOIN pertri p ON p.v = deg.v
          |WHERE deg.d >= 2
          |ORDER BY lcc_q6 DESC, n_tri DESC, deg.v LIMIT 50""".stripMargin) { (s, d) =>
-      import org.apache.spark.storage.StorageLevel
-      val ue = Graphs.skewedUndirectedEdges(Tables.documents(s, d))
-        .localCheckpoint(true)
-      val deg = ue.select(col("a").as("v"))
+      val ue = QueryScope.checkpointed(Graphs.skewedUndirectedEdges(Tables.documents(s, d)))
+      val deg = QueryScope.checkpointed(ue.select(col("a").as("v"))
         .unionAll(ue.select(col("b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("d"))
-        .localCheckpoint(true)
+        .groupBy(col("v")).agg(count(lit(1)).as("d")))
       // localCheckpoint (not persist): the wedge join references `oriented`
       // three times and the credit union references `tri` three times, so a
       // cached-but-lineaged plan serializes the ue/deg subtree 9+ ways into
       // every task binary (observed 6-9 MiB tasks). Truncating lineage here
       // keeps the final stages' closures kilobyte-sized.
-      val oriented = Graphs.orientByDegree(ue, deg, "d")
-        .localCheckpoint(true)
-      val tri = oriented.as("e1")
+      val oriented = QueryScope.checkpointed(Graphs.orientByDegree(ue, deg, "d"))
+      val tri = QueryScope.checkpointed(oriented.as("e1")
         .join(oriented.as("e2"),
           col("e2.u") === col("e1.u") && col("e1.w") =!= col("e2.w"))
         .join(oriented.as("e3"),
           col("e3.u") === col("e1.w") && col("e3.w") === col("e2.w"))
-        .select(col("e1.u").as("x"), col("e1.w").as("y"), col("e2.w").as("z"))
-        .localCheckpoint(true)
+        .select(col("e1.u").as("x"), col("e1.w").as("y"), col("e2.w").as("z")))
       val perTri = tri.select(col("x").as("v"))
         .unionAll(tri.select(col("y").as("v")))
         .unionAll(tri.select(col("z").as("v")))
@@ -166,7 +158,7 @@ object GraphMining {
       // yet it keeps ~every vertex (an edge endpoint with d = 1 is rare),
       // so the runtime filter can never prune anything. One extra |V|-row
       // materialization buys bloom-free kilobyte task closures.
-      val degF = deg.filter(col("d") >= 2).localCheckpoint(true)
+      val degF = QueryScope.checkpointed(deg.filter(col("d") >= 2))
       degF.join(perTri, Seq("v"), "left")
         .select(col("v"), col("d").as("degree"),
           coalesce(col("n_tri"), lit(0L)).as("n_tri"),
@@ -202,8 +194,7 @@ object GraphMining {
         |SELECT CAST(MIN(v) AS BIGINT) AS component,
         |  CAST(COUNT(*) AS BIGINT) AS size
         |FROM isl GROUP BY g ORDER BY component""".stripMargin) { (s, d) =>
-      val ids = Tables.documents(s, d).select(col("doc_id"))
-        .localCheckpoint(true)
+      val ids = QueryScope.checkpointed(Tables.documents(s, d).select(col("doc_id")))
       val fwd = ids.filter(pmod(col("doc_id") + 1, lit(97)) =!= 0)
         .select(col("doc_id").as("doc1"), (col("doc_id") + 1).as("doc2"))
         .join(ids.select(col("doc_id").as("doc2")), Seq("doc2"), "left_semi")
@@ -314,16 +305,15 @@ object GraphMining {
       // every round's register join probes the edges by dst
       val edges = Graphs.keyed(Graphs.syntheticEdges(docs), "dst")
       val (bCol, rhoCol) = Sketches.rhoOf(Sketches.hllMix(col("doc_id")))
-      val r0 = docs.select(col("doc_id").as("v"), bCol.as("b"), rhoCol.as("rho"))
-        .localCheckpoint(true)
+      val r0 = QueryScope.checkpointed(
+        docs.select(col("doc_id").as("v"), bCol.as("b"), rhoCol.as("rho")))
       // the readout reads every round, so each round is checkpointed
       (1 to 3).scanLeft(r0) { (cur, _) =>
-        cur
+        QueryScope.checkpointed(cur
           .unionAll(edges
             .join(cur.select(col("v").as("dst"), col("b"), col("rho")), Seq("dst"))
             .select(col("src").as("v"), col("b"), col("rho")))
-          .groupBy(col("v"), col("b")).agg(max(col("rho")).as("rho"))
-          .localCheckpoint(true)
+          .groupBy(col("v"), col("b")).agg(max(col("rho")).as("rho")))
       }.zipWithIndex.map { case (regs, i) =>
         regs.groupBy(col("v"))
           .agg(count(lit(1)).as("np"), sum(col("rho")).as("srho"),

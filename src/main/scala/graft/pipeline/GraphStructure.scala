@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, QueryScope, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -180,11 +180,9 @@ object GraphStructure {
          |  CAST(FLOOR(s.num * CAST(1000000.0 AS DOUBLE) / (4 * mm.m * mm.m))
          |    AS BIGINT) AS q_q6
          |FROM s CROSS JOIN mm""".stripMargin) { (s, d) =>
-      import org.apache.spark.storage.StorageLevel
       val docs = Tables.documents(s, d)
-      val ue = undirectedEdges(docs).persist(StorageLevel.MEMORY_AND_DISK)
-      val lbl = labelPropagation(docs, rounds = 2)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val ue = QueryScope.persisted(undirectedEdges(docs))
+      val lbl = QueryScope.persisted(labelPropagation(docs, rounds = 2))
       val deg = ue.select(col("a").as("v"))
         .unionAll(ue.select(col("b").as("v")))
         .groupBy(col("v")).agg(count(lit(1)).as("dg"))
@@ -326,27 +324,23 @@ object GraphStructure {
            |  ON nc.i = s3.i
            |ORDER BY strength_q6 DESC, l_partkey LIMIT 50""".stripMargin
       }) { (s, d) =>
-      import org.apache.spark.storage.StorageLevel
       // the self-join consumes op twice — materialize the per-(order,
       // part) reduction once instead of re-aggregating the fact table
       // per side (and let both probes reuse its orderkey partitioning)
-      val op = Tables.lineitem(s, d)
+      val op = QueryScope.persisted(Tables.lineitem(s, d)
         .groupBy(col("l_orderkey"), col("l_partkey"))
         .agg(sum(col("l_quantity").cast("long")).as("q"))
-        .repartition(col("l_orderkey"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .repartition(col("l_orderkey")))
       val pairs = op.as("a").join(op.as("b"),
           col("b.l_orderkey") === col("a.l_orderkey")
             && col("a.l_partkey") =!= col("b.l_partkey")
             && col("a.q") =!= col("b.q"))
         .select(col("a.l_partkey").as("i"), col("b.l_partkey").as("j"),
           (col("a.q") > col("b.q")).cast("long").as("win"))
-      val cn = pairs.groupBy(col("i"), col("j"))
+      val cn = QueryScope.persisted(pairs.groupBy(col("i"), col("j"))
         .agg(count(lit(1)).as("n"), sum(col("win")).as("wdir"))
-        .repartition(col("i"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val wi = cn.groupBy(col("i")).agg(sum(col("wdir")).as("w"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .repartition(col("i")))
+      val wi = QueryScope.persisted(cn.groupBy(col("i")).agg(sum(col("wdir")).as("w")))
       var st = cn.select(col("i")).distinct()
         .select(col("i"), lit(1000000L).as("s"))
       for (_ <- 1 to 3) {
@@ -363,11 +357,10 @@ object GraphStructure {
           .join(broadcast(st.select(col("i").as("j"), col("s").as("sj"))), Seq("j"))
           .groupBy(col("i"))
           .agg(sum(expr("(n * 1000000000000) div (si + sj)")).as("dd"))
-        st = dsum.join(wi, Seq("i"), "left")
+        st = QueryScope.checkpointed(dsum.join(wi, Seq("i"), "left")
           .select(col("i"),
             greatest(floor(coalesce(col("w"), lit(0L)) * lit(1.0e12)
-              / col("dd")).cast("long"), lit(1L)).as("s"))
-          .localCheckpoint(true)
+              / col("dd")).cast("long"), lit(1L)).as("s")))
       }
       val nc = cn.groupBy(col("i")).agg(sum(col("n")).as("n_contests"))
       st.join(wi, Seq("i"), "left").join(nc, Seq("i"))

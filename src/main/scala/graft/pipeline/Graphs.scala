@@ -1,9 +1,8 @@
 package graft.pipeline
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, QueryScope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Link-graph scoring for corpus curation: PageRank-style authority over a
   * deterministic synthetic link graph (each document links to its 3
@@ -48,7 +47,7 @@ object Graphs {
     * [[iterParts]]). Partition count never affects results: every
     * per-round aggregate here is an exact integer sum/min/max/count. */
   def keyed(df: DataFrame, key: String): DataFrame =
-    df.repartition(iterParts(df), col(key)).persist(StorageLevel.MEMORY_AND_DISK)
+    QueryScope.persisted(df.repartition(iterParts(df), col(key)))
 
   /** Scale-adaptive partition count for [[keyed]].
     *
@@ -193,15 +192,11 @@ object Graphs {
     * (n_vertices, n_edges, n_wedges, n_triangles, clustering_q6) where
     * clustering_q6 = floor(3e6 · triangles / wedges). */
   def triangleStats(edges: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val ue = edges.select(col("a"), col("b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = ue.select(col("a").as("v"))
+    val ue = QueryScope.persisted(edges.select(col("a"), col("b")))
+    val deg = QueryScope.persisted(ue.select(col("a").as("v"))
       .unionAll(ue.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val oriented = orientByDegree(ue, deg, "deg")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("v")).agg(count(lit(1)).as("deg")))
+    val oriented = QueryScope.persisted(orientByDegree(ue, deg, "deg"))
     val e1 = oriented.as("e1")
     val e2 = oriented.as("e2")
     val e3 = oriented.as("e3")
@@ -302,10 +297,9 @@ object Graphs {
       // persist the raw sums: they feed BOTH the normalizing max and the
       // score join — unpersisted, each half-round would recompute the
       // whole prior recursion twice (2^rounds plan blowup)
-      val raw = edges
+      val raw = QueryScope.persisted(edges
         .join(scores.select(col("doc_id").as(joinKey), col("s")), Seq(joinKey))
-        .groupBy(col(outKey).as("doc_id")).agg(sum(col("s")).as("raw"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .groupBy(col(outKey).as("doc_id")).agg(sum(col("s")).as("raw")))
       val m = raw.agg(max(col("raw")).as("m"))
       nodes.join(raw, Seq("doc_id"), "left").crossJoin(broadcast(m))
         .select(col("doc_id"),
@@ -418,20 +412,18 @@ object Graphs {
     require(k >= 1 && rounds >= 1)
     // every round's first semi join probes ue by a
     val ue = keyed(ueIn, "a")
-    val surv0 = ue.select(col("a").as("v"))
+    val surv0 = QueryScope.checkpointed(ue.select(col("a").as("v"))
       .unionAll(ue.select(col("b").as("v")))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     (1 to rounds).scanLeft(surv0) { (surv, _) =>
       val induced = ue
         .join(surv.select(col("v").as("a")), Seq("a"), "left_semi")
         .join(surv.select(col("v").as("b")), Seq("b"), "left_semi")
-      induced.select(col("a").as("v"))
+      QueryScope.checkpointed(induced.select(col("a").as("v"))
         .unionAll(induced.select(col("b").as("v")))
         .groupBy(col("v")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
-        .select(col("v"))
-        .localCheckpoint(true)
+        .select(col("v")))
     }.zipWithIndex.map { case (surv, r) =>
       surv.agg(count(lit(1)).as("n_core"), sum(col("v")).as("sum_ids"))
         .select(lit(r.toLong).as("round"), col("n_core"),
@@ -643,8 +635,8 @@ object Graphs {
         |  FROM filtered)
         |SELECT user_id, CAST(rk AS BIGINT) AS rk, item, score, n_neighbors
         |FROM top WHERE rk <= 3 ORDER BY user_id, rk""".stripMargin) { (s, d) =>
-      val ui = SparseProduct.capItemsPerKey(userItems(s, d), "user_id", "item")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val ui = QueryScope.persisted(
+        SparseProduct.capItemsPerKey(userItems(s, d), "user_id", "item"))
       val simh = cooccurPairs(ui)
         .select(col("i"), col("j"),
           floor(col("n_both") * lit(1000000.0)

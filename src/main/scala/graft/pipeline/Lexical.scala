@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, QueryScope, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -152,13 +152,12 @@ object Lexical {
       // one groupBy(text) collapses clones map-side, the histogram keys on
       // the compact rep id, and verdicts fan back out through the carried
       // doc-id list. Clone-heavy growth then scales with distinct texts.
-      val reps = Tables.documents(s, d)
+      val reps = QueryScope.persisted(Tables.documents(s, d)
         .groupBy(col("text"))
         .agg(min(col("doc_id")).as("r"), collect_list(col("doc_id")).as("ids"))
         .select(col("r"), col("ids"),
           regexp_extract_all(lower(col("text")), lit(tokPat), lit(0)).as("tk"))
-        .filter(size(col("tk")) >= 3)
-        .persist()
+        .filter(size(col("tk")) >= 3))
       val tri = reps.select(col("r"),
           explode(sequence(lit(1), size(col("tk")) - 2)).as("i"), col("tk"))
         .select(col("r"),
@@ -201,8 +200,7 @@ object Lexical {
       // weights each rep histogram by its clone count (clone-weighted ==
       // the naive per-doc semantics), and per-doc coverage fans back out
       // through the carried doc-id list.
-      val reps = textReps(s, d)
-        .persist()
+      val reps = QueryScope.persisted(textReps(s, d))
       val dt = reps.select(col("r"), col("w"), explode(col("tk")).as("t"))
         .groupBy(col("r"), col("w"), col("t")).agg(count(lit(1)).as("c"))
       val freq = dt.groupBy(col("t")).agg(sum(col("c") * col("w")).as("cf"))
@@ -241,13 +239,12 @@ object Lexical {
       // rep-collapse (naive DuckDB oracle above, collapsed engine): the
       // histogram is a pure function of the text, so it reduces once per
       // DISTINCT text and fans back out through the carried doc-id list.
-      val reps = Tables.documents(s, d)
+      val reps = QueryScope.persisted(Tables.documents(s, d)
         .groupBy(col("text"))
         .agg(min(col("doc_id")).as("r"), collect_list(col("doc_id")).as("ids"))
         .select(col("r"), col("ids"),
           regexp_extract_all(lower(col("text")), lit(tokPat), lit(0)).as("tk"))
-        .filter(size(col("tk")) >= 1)
-        .persist()
+        .filter(size(col("tk")) >= 1))
       val hist = reps.select(col("r"), explode(col("tk")).as("t"))
         .groupBy(col("r"), col("t")).agg(count(lit(1)).as("c"))
       val g = hist.groupBy(col("r"))
@@ -300,18 +297,16 @@ object Lexical {
       // lists. Model joins are keyed by bigram/word — vocabulary-sized
       // shuffle joins, never broadcast (a 100 TB corpus's bigram table
       // is dictionary-scale but not provably driver-sized).
-      val reps = textReps(s, d)
-        .filter(size(col("tk")) >= 2)
-        .persist()
-      val rb = reps
+      val reps = QueryScope.persisted(textReps(s, d)
+        .filter(size(col("tk")) >= 2))
+      val rb = QueryScope.persisted(reps
         .select(col("r"), col("w"),
           explode(sequence(lit(1), size(col("tk")) - 1)).as("i"), col("tk"))
         .select(col("r"), col("w"),
           element_at(col("tk"), col("i")).as("w1"),
           element_at(col("tk"), col("i") + 1).as("w2"))
         .groupBy(col("r"), col("w"), col("w1"), col("w2"))
-        .agg(count(lit(1)).as("c"))
-        .persist()
+        .agg(count(lit(1)).as("c")))
       val cbg = rb.groupBy(col("w1"), col("w2")).agg(sum(col("c") * col("w")).as("c_bg"))
       val cu = rb.groupBy(col("w1")).agg(sum(col("c") * col("w")).as("c_u"))
       val p = cbg.join(cu, Seq("w1"))
@@ -615,25 +610,23 @@ object Lexical {
         |  CAST(SUM(is_oov) AS BIGINT) AS n_oov,
         |  CAST(SUM(s_q6) // COUNT(*) AS BIGINT) AS lm_q6
         |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
-      val reps = Tables.documents(s, d)
+      val reps = QueryScope.persisted(Tables.documents(s, d)
         .groupBy(col("text"))
         .agg(min(col("doc_id")).as("r"),
           sum(when(pmod(col("doc_id"), lit(2)) === 0, 1L).otherwise(0L)).as("wt"),
           collect_list(when(pmod(col("doc_id"), lit(2)) === 1, col("doc_id")))
             .as("test_ids"))
         .select(col("r"), col("wt"), col("test_ids"),
-          regexp_extract_all(lower(col("text")), lit(tokPat), lit(0)).as("tk"))
-        .persist()
+          regexp_extract_all(lower(col("text")), lit(tokPat), lit(0)).as("tk")))
       // per-rep bigram histogram (the clone-collapse)
-      val rb = reps.filter(size(col("tk")) >= 2)
+      val rb = QueryScope.persisted(reps.filter(size(col("tk")) >= 2)
         .select(col("r"), col("wt"),
           explode(sequence(lit(1), size(col("tk")) - 1)).as("i"), col("tk"))
         .select(col("r"), col("wt"),
           element_at(col("tk"), col("i")).as("w1"),
           element_at(col("tk"), col("i") + 1).as("w2"))
         .groupBy(col("r"), col("wt"), col("w1"), col("w2"))
-        .agg(count(lit(1)).as("c"))
-        .persist()
+        .agg(count(lit(1)).as("c")))
       val cbg = rb.groupBy(col("w1"), col("w2"))
         .agg(sum(col("c") * col("wt")).as("c_bg")).filter(col("c_bg") > 0)
       val ctx = rb.groupBy(col("w1"))
@@ -830,11 +823,10 @@ object Lexical {
         |  CAST(SUM(t_q6) AS BIGINT) AS bc_q6,
         |  1000000 - CAST(SUM(t_q6) AS BIGINT) AS h2_q6
         |FROM term GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
-      val cs = Tables.documents(s, d)
+      val cs = QueryScope.persisted(Tables.documents(s, d)
         .select(col("source"),
           explode(regexp_extract_all(lower(col("text")), lit(tokPat), lit(0))).as("w"))
-        .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
-        .persist()
+        .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c")))
       val ns = cs.groupBy(col("source")).agg(sum(col("c")).as("n"))
       val cg = cs.groupBy(col("w")).agg(sum(col("c")).as("cgl"))
       val ng = cg.agg(sum(col("cgl")).as("ng"))

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, QueryScope, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -33,8 +33,7 @@ object TextAnalysis {
     val rareGrams = dgAll.groupBy(col("g")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= 20).select(col("g"))
     // rdg feeds the candidate self-join AND both size lookups — persist
-    val rdg = dgAll.join(rareGrams, Seq("g"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rdg = QueryScope.persisted(dgAll.join(rareGrams, Seq("g"), "left_semi"))
     SparseProduct.product(rdg, Seq("g"), "doc_id",
       SparseProduct.Names("doc1", "doc2", "shared"))
   }
@@ -253,9 +252,8 @@ object TextAnalysis {
       val m = Tables.documents(s, d)
         .select(col("doc_id"), normText(col("text")).as("t"))
         .filter(length(col("t")) >= 5)
-      val reps = m.groupBy(col("t"))
-        .agg(min(col("doc_id")).as("rep"), collect_list(col("doc_id")).as("ids"))
-        .persist()
+      val reps = QueryScope.persisted(m.groupBy(col("t"))
+        .agg(min(col("doc_id")).as("rep"), collect_list(col("doc_id")).as("ids")))
       val fps = reps.select(col("rep"), col("t"))
         .select(col("rep"), explode(sequence(lit(1), length(col("t")) - 4)).as("i"),
           col("t"))

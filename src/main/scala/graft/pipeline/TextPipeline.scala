@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, QueryScope, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -79,8 +79,8 @@ object TextPipeline {
   // it per query repeats the most expensive stage of the family; a 100 TB
   // pipeline materializes the shingle table once and runs every dedup
   // operator over it. Written once per (session, dataset) to a temp
-  // parquet table — durable across the per-query clearCache() isolation
-  // in Verify/Bench, and the downstream plans become plain parquet scans
+  // parquet table — it outlives each query's QueryScope in
+  // Verify/Bench, and the downstream plans become plain parquet scans
   // with pushdown. (SimHash and the fingerprint need the raw multiset and
   // keep their inline scans.)
   // WeakHashMap keyed by the session OBJECT (not its identity hash: a
@@ -199,8 +199,7 @@ object TextPipeline {
     * distinct agreeing bands. */
   def lshCandidatePairs(sig: DataFrame, bands: Int = LshBands,
       rowsPerBand: Int = LshRowsPerBand): DataFrame = {
-    val bandTable = bandRows(sig, bands, rowsPerBand)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bandTable = QueryScope.persisted(bandRows(sig, bands, rowsPerBand))
     SparseProduct.pairs(bandTable, Seq("b", "sig_key"), "doc_id",
       SparseProduct.Names("doc1", "doc2", "n_bands"))
   }
@@ -216,8 +215,7 @@ object TextPipeline {
     * product (similarity scoring); use this to feed [[dedupClusters]]. */
   def lshClusterEdges(sig: DataFrame, bands: Int = LshBands,
       rowsPerBand: Int = LshRowsPerBand): DataFrame = {
-    val bandTable = bandRows(sig, bands, rowsPerBand)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bandTable = QueryScope.persisted(bandRows(sig, bands, rowsPerBand))
     val roots = bandTable.groupBy(col("b"), col("sig_key"))
       .agg(min(col("doc_id")).as("doc1"))
     bandTable.join(roots, Seq("b", "sig_key"))
@@ -256,12 +254,10 @@ object TextPipeline {
     * exercise the multi-partition quotient path on small graphs). */
   def dedupClusters(docs: DataFrame, pairs: DataFrame, maxIters: Int = 30,
       partsOverride: Option[Int] = None): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val sess = docs.sparkSession
     import sess.implicits._
-    val edges = pairs.select(col("doc1").as("a"), col("doc2").as("b"))
-      .union(pairs.select(col("doc2").as("a"), col("doc1").as("b")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = QueryScope.persisted(pairs.select(col("doc1").as("a"), col("doc2").as("b"))
+      .union(pairs.select(col("doc2").as("a"), col("doc1").as("b"))))
     // CONTRACTION width sized by the DATA, via a count that doubles as the
     // cache materialization. Contraction quality is how much of a component
     // lands in one partition: a tiny edge set scattered 32 ways contracts
@@ -328,17 +324,16 @@ object TextPipeline {
       }.toDF("doc_id", "lroot")
     // a vertex seen in several partitions gets one candidate root each;
     // φ(x) = the smallest — still inside x's component, still ≥ its min
-    val phi = localRoot.groupBy(col("doc_id")).agg(min(col("lroot")).as("lroot"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val phi = QueryScope.persisted(
+      localRoot.groupBy(col("doc_id")).agg(min(col("lroot")).as("lroot")))
     // quotient edges: original edges mapped through φ, self-loops dropped.
     // Connectivity is preserved (each original path maps to a φ-path), so
     // quotient components are exactly the images of original components.
-    val qEdges0 = edges
+    val qEdges0 = QueryScope.persisted(edges
       .join(phi.select(col("doc_id").as("a"), col("lroot").as("ra")), Seq("a"))
       .join(phi.select(col("doc_id").as("b"), col("lroot").as("rb")), Seq("b"))
       .filter(col("ra") =!= col("rb"))
-      .select(col("ra").as("a"), col("rb").as("b")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select(col("ra").as("a"), col("rb").as("b")).distinct())
     // LOOP width from the quotient SIZE: each propagation round is several
     // chained tiny jobs whose latency — not data — dominates when its
     // partitions are near-empty, and after contraction the quotient is
@@ -350,10 +345,9 @@ object TextPipeline {
     val qEdges = qEdges0.repartition(loopParts, col("a"))
 
     // PHASE 2 — min-label propagation over the quotient graph only.
-    var labels = qEdges.select(col("a").as("doc_id")).distinct()
+    var labels = QueryScope.checkpointed(qEdges.select(col("a").as("doc_id")).distinct()
       .repartition(loopParts, col("doc_id"))
-      .select(col("doc_id"), col("doc_id").as("lbl"), lit(false).as("chg"))
-      .localCheckpoint(true)
+      .select(col("doc_id"), col("doc_id").as("lbl"), lit(false).as("chg")))
     var iter = 0
     var converged = labels.isEmpty // fully-local graph: nothing to propagate
     while (!converged && iter < maxIters) {
@@ -369,13 +363,12 @@ object TextPipeline {
         .groupBy(col("b").as("doc_id")).agg(min(col("albl")).as("nlbl"))
       // the `chg` flag rides along into the checkpoint so convergence is a
       // scan of the just-materialized blocks — no extra join-action per round
-      val next = labels.select(col("doc_id"), col("lbl"))
+      val next = QueryScope.checkpointed(labels.select(col("doc_id"), col("lbl"))
         .join(neighborMin, Seq("doc_id"), "left")
         .select(col("doc_id"),
           least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"),
           (least(col("lbl"), coalesce(col("nlbl"), col("lbl"))) =!= col("lbl")).as("chg"))
-        .repartition(loopParts, col("doc_id"))
-        .localCheckpoint(true)
+        .repartition(loopParts, col("doc_id")))
       converged = next.filter(col("chg")).isEmpty
       labels = next
       iter += 1
@@ -391,12 +384,9 @@ object TextPipeline {
     val vertexLabels = phi
       .join(labels.select(col("doc_id").as("lroot"), col("lbl")), Seq("lroot"), "left")
       .select(col("doc_id"), coalesce(col("lbl"), col("lroot")).as("lbl"))
-    val out = docs.select(col("doc_id"))
+    docs.select(col("doc_id"))
       .join(vertexLabels, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("canonical_id"))
-      .localCheckpoint(true) // pin the result before releasing the caches
-    edges.unpersist(); phi.unpersist(); qEdges0.unpersist()
-    out
   }
 
   /** Oracle CTE (`bands`) mirroring [[bandRows]] over `sig`. */

@@ -48,8 +48,7 @@ object Io {
 
   /** JSON string escape (backslash, quote, all control chars) for the
     * hand-assembled document keys/metadata — an id or metadata value
-    * containing a quote must not produce a malformed document (same guard
-    * Verify.scala applies to oracle_sql.json). */
+    * containing a quote must not produce a malformed document. */
   private[graft] def jsonEscape(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"

@@ -10,33 +10,36 @@ package graft
 class BuilderJobsSpec extends SparkSpec {
 
   private val eager: Map[String, String] = Map(
-    "q_anf" -> "localCheckpoint per round at GraphMining.scala:331",
-    "q_ann_recall_at_k" -> "localCheckpoint at EmbeddingsEval.scala:404",
-    "q_bh_fdr" -> "localCheckpoint at Resampling.scala:241",
-    "q_bloom_semi_join" -> "head of the Bloom sketch at BloomJoin.scala:35",
-    "q_bootstrap_ci" -> "localCheckpoint at Resampling.scala:326",
-    "q_bradley_terry" -> "localCheckpoint per round at GraphStructure.scala:395",
-    "q_cohens_kappa" -> "localCheckpoint at Eval.scala:226",
-    "q_connected_components" -> "localCheckpoint at GraphMining.scala:219, label propagation's count at TextPipeline.scala:285",
-    "q_dbscan_cells" -> "label propagation: count at TextPipeline.scala:285, isEmpty at :358",
-    "q_decontaminate" -> "head of the eval grams' Bloom sketch at BloomJoin.scala:35",
-    "q_dedup_clusters" -> "label propagation: count at TextPipeline.scala:285, isEmpty at :358",
-    "q_dedup_incremental" -> "the streaming runs' start at TextPipeline.scala:537",
-    "q_jdbc_roundtrip" -> "the jdbc write at EmbeddedDb.scala:52",
-    "q_kcore" -> "localCheckpoint per peel round at Graphs.scala:452",
-    "q_kcore_skew" -> "localCheckpoint per peel round at Graphs.scala:452",
-    "q_kmeans" -> "localCheckpoint per Lloyd round at Clustering.scala:75",
-    "q_ks_test" -> "localCheckpoint at StatsInference.scala:505",
-    "q_langid_confusion" -> "localCheckpoint at Eval.scala:160",
-    "q_lift_gain" -> "localCheckpoint at Eval.scala:333",
-    "q_local_clustering" -> "localCheckpoint at GraphMining.scala:145 (five in all)",
-    "q_markov_attribution" -> "localCheckpoint at EventJourneys.scala:693",
-    "q_markov_conversion" -> "localCheckpoint per step at EventJourneys.scala:581",
-    "q_pr_auc" -> "localCheckpoint at Eval.scala:441",
-    "q_tukey_hsd" -> "localCheckpoint at StatsInference.scala:382",
-    "q_wordpiece_apply" -> "merge rounds: localCheckpoint at CorpusTokenizers.scala:147, isEmpty at :151",
-    "q_wordpiece_fertility" -> "merge rounds: localCheckpoint at CorpusTokenizers.scala:147, isEmpty at :151",
-    "q_youden_threshold" -> "localCheckpoint at Eval.scala:391")
+    "q_anf" -> "QueryScope.checkpointed per round in GraphMining's q_anf builder",
+    "q_ann_recall_at_k" -> "QueryScope.checkpointed (three) in EmbeddingsEval's q_ann_recall_at_k builder",
+    "q_bh_fdr" -> "QueryScope.checkpointed in Resampling's q_bh_fdr builder",
+    "q_bloom_semi_join" -> "head of the Bloom sketch in BloomJoin.bloomOf",
+    "q_bootstrap_ci" -> "QueryScope.checkpointed in Resampling's q_bootstrap_ci builder",
+    "q_bradley_terry" -> "QueryScope.checkpointed per round in GraphStructure's q_bradley_terry builder",
+    "q_cohens_kappa" -> "QueryScope.checkpointed in Eval's q_cohens_kappa builder",
+    "q_connected_components" -> ("QueryScope.checkpointed in GraphMining's q_connected_components " +
+      "builder, then TextPipeline.dedupClusters' count"),
+    "q_dbscan_cells" -> "TextPipeline.dedupClusters: its count, and isEmpty per round",
+    "q_decontaminate" -> "head of the eval grams' Bloom sketch in BloomJoin.bloomOf",
+    "q_dedup_clusters" -> "TextPipeline.dedupClusters: its count, and isEmpty per round",
+    "q_dedup_incremental" -> "the streaming runs' start in TextPipeline.incrementalDedupEdges",
+    "q_jdbc_roundtrip" -> "the jdbc write in EmbeddedDb.writeTable",
+    "q_kcore" -> "QueryScope.checkpointed per peel round in Graphs.kCoreCensusOn",
+    "q_kcore_skew" -> "QueryScope.checkpointed per peel round in Graphs.kCoreCensusOn",
+    "q_kmeans" -> "QueryScope.checkpointed per Lloyd round in Clustering.kmeans",
+    "q_ks_test" -> "QueryScope.checkpointed in StatsInference's q_ks_test builder",
+    "q_langid_confusion" -> "QueryScope.checkpointed in Eval's q_langid_confusion builder",
+    "q_lift_gain" -> "QueryScope.checkpointed in Eval.scoreHistogram",
+    "q_local_clustering" -> "QueryScope.checkpointed (five) in GraphMining's q_local_clustering builder",
+    "q_markov_attribution" -> "QueryScope.checkpointed in EventJourneys.transitionMatrix and pow8",
+    "q_markov_conversion" -> "QueryScope.checkpointed in EventJourneys.transitionMatrix and pow8",
+    "q_pr_auc" -> "QueryScope.checkpointed in Eval.scoreHistogram",
+    "q_tukey_hsd" -> "QueryScope.checkpointed in StatsInference's q_tukey_hsd builder",
+    "q_wordpiece_apply" -> ("merge rounds in CorpusTokenizers.wordPieceTables: " +
+      "QueryScope.checkpointed, then isEmpty"),
+    "q_wordpiece_fertility" -> ("merge rounds in CorpusTokenizers.wordPieceTables: " +
+      "QueryScope.checkpointed, then isEmpty"),
+    "q_youden_threshold" -> "QueryScope.checkpointed in Eval.scoreHistogram")
 
   test("every builder exempted as eager is registered") {
     val unknown = eager.keySet -- SparkEntry.registry.map(_.name)
@@ -49,7 +52,7 @@ class BuilderJobsSpec extends SparkSpec {
     // outside any query, as Bench's warm-up does
     pipeline.TextPipeline.minhashSignatures(spark, d)
     val launched = SparkEntry.registry.filterNot(q => eager.contains(q.name)).sortBy(_.name)
-      .map(q => q.name -> RegistryRunner.isolated(spark)(jobsOf(q.build(spark, d))))
+      .map(q => q.name -> QueryScope(jobsOf(q.build(spark, d))))
       .filter(_._2 > 0)
     assert(launched.isEmpty, launched.map { case (q, n) => s"$q: $n jobs" }.mkString(", "))
   }
